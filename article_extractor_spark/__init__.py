@@ -19,3 +19,10 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from .shipping import guard_zipimport_invalidation
+
+# reused Spark Python workers import the package while deserializing
+# their first task's command; every later task then skips re-reading
+# pyspark.zip & co. (a no-op in the driver and on CPython >= 3.13)
+guard_zipimport_invalidation()

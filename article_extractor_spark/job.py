@@ -289,8 +289,6 @@ def _run_waves(
     else:
         corpus = tableio.with_bucket(corpus, "doc_id", n_buckets)
         pre_ok = False
-    if preshuffled is not None:
-        pre_ok = preshuffled
     if "html" not in corpus.columns:
         corpus = render_spans_to_html(corpus)
     if "url" not in corpus.columns:
@@ -316,6 +314,9 @@ def _run_waves(
 
     run_regs: list[int] = [0] * _HLL_M
     waves = max(1, min(waves, len(todo))) if todo else 0
+    # True only if EVERY wave took the exchange-free write (the gate
+    # can pass while a wave planning < cores partitions falls back)
+    all_aligned = waves > 0
     cores = spark.sparkContext.defaultParallelism
     for wave_idx in range(waves):
         wave_buckets = todo[wave_idx::waves]
@@ -341,6 +342,7 @@ def _run_waves(
             if preshuffled is not None
             else pre_ok and wave_df.rdd.getNumPartitions() >= cores
         )
+        all_aligned = all_aligned and aligned
         extracted = extract_articles(
             wave_df,
             min_word_count=min_word_count,
@@ -511,7 +513,7 @@ def _run_waves(
         else 0.0,
         # which write path / skew strategy actually ran (A/B harnesses
         # and the ADVICE no-contrast check read these)
-        "preshuffled": pre_ok,
+        "preshuffled": all_aligned,
         "giant_threshold": giant_threshold
         if isinstance(giant_threshold, int)
         else None,

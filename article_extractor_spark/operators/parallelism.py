@@ -27,8 +27,12 @@ from pyspark.sql import DataFrame
 # batching stays efficient.
 _WAVES = 4
 
-# Minimum compressed bytes a re-spread task should carry.  Task launch
-# costs ~5-10 ms of pure scheduling; on a small table the full
+# Minimum compressed bytes a re-spread task should carry.  A Python
+# task has a fixed cost of ~100 ms of scheduling plus worker setup: an
+# identity mapInArrow over 32 partitions takes ~0.8 s on local[4]
+# (~2.2 s, ~270 ms a task, before shipping.guard_zipimport_invalidation
+# stopped reused workers re-reading pyspark.zip per task); on a small
+# table the full
 # cores*_WAVES width is all overhead (measured +0.84 s at 128 tasks vs
 # +0.27 s at 32 on a sub-second query over a 6 MB table), and
 # ITERATIVE consumers (PageRank, connected components, k-means) pay

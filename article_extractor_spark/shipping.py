@@ -6,11 +6,15 @@ notebook) the workers may not share the driver's sys.path.
 ``ensure_shipped`` zips the package once per process and registers it
 via ``SparkContext.addPyFile`` — idempotent, cheap, and works in
 local and cluster mode alike.
+
+``guard_zipimport_invalidation`` keeps reused Python workers from
+re-reading every zip archive on ``sys.path`` at the start of each task.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 import zipfile
 from pathlib import Path
@@ -50,3 +54,69 @@ def ensure_shipped(spark) -> None:
         return
     sc.addPyFile(str(_build_zip()))
     _SHIPPED_APPS.add(key)
+
+
+# archive path -> (st_ino, st_size, st_mtime_ns) at its last directory read
+_ARCHIVE_STATS: dict[str, tuple[int, int, int]] = {}
+
+
+def _archive_stat(path: str) -> tuple[int, int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+def guard_zipimport_invalidation() -> bool:
+    """Make ``zipimporter.invalidate_caches`` skip unchanged archives.
+
+    Spark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (``worker_util.setup_spark_files``).  On CPython <=
+    3.12 each ``zipimporter`` then re-reads its archive's whole central
+    directory at once — a reused worker holds ~16 of them into
+    pyspark.zip, the py4j zip and the spark-core jar, which cost
+    0.18-0.30 s of CPU per task on a 4-core box, more than the kernel
+    spends on a small partition.  The guarded method re-reads an archive
+    only when its ``(st_ino, st_size, st_mtime_ns)`` differs from the
+    stat taken before its last guarded read, and otherwise reuses the
+    shared ``_zip_directory_cache`` entry, so a changed or replaced
+    archive is still picked up (the first importer of that archive
+    re-reads it, the rest share the result).
+
+    Installed only in reused workers (``SPARK_REUSE_WORKER``, which
+    Spark sets for them alone) on CPython < 3.13, where the stdlib
+    method already defers the re-read.  Idempotent; returns whether the
+    guard is in place.
+    """
+    if sys.version_info >= (3, 13) or not os.environ.get("SPARK_REUSE_WORKER"):
+        return False
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if getattr(cls.invalidate_caches, "_stat_guarded", False):
+        return True
+    reread = cls.invalidate_caches
+    cache = zipimport._zip_directory_cache
+
+    def invalidate_caches(self):
+        stat = _archive_stat(self.archive)
+        files = cache.get(self.archive)
+        if (
+            stat is not None
+            and files is not None
+            and _ARCHIVE_STATS.get(self.archive) == stat
+        ):
+            self._files = files
+            return
+        # stat BEFORE the read: a write racing the read leaves the old
+        # stat recorded, so the next call reads again
+        reread(self)
+        if stat is None:
+            _ARCHIVE_STATS.pop(self.archive, None)
+        else:
+            _ARCHIVE_STATS[self.archive] = stat
+
+    invalidate_caches._stat_guarded = True
+    cls.invalidate_caches = invalidate_caches
+    return True

@@ -39,6 +39,8 @@ def first_diff(a: list[dict], b: list[dict]) -> str:
 
 
 def main() -> None:
+    if not CORPUS.is_dir():
+        sys.exit(f"golden corpus not found: {CORPUS} (nothing to run)")
     only = sys.argv[1] if len(sys.argv) > 1 else ""
     passed = failed = 0
     t0 = time.time()

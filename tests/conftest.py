@@ -57,6 +57,11 @@ def load_golden_cases() -> list[GoldenCase]:
 
 GOLDEN_CASES = load_golden_cases()
 
+requires_golden = pytest.mark.skipif(
+    not GOLDEN_ROOT.is_dir(),
+    reason=f"reference golden corpus not present at {GOLDEN_ROOT}",
+)
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from article_extractor_spark.dom import parse_html
+from conftest import GOLDEN_ROOT, requires_golden
 
 
 def test_basic_tree_and_query():
@@ -193,21 +194,15 @@ def test_fast_parser_differential_curated():
         ), case[:80]
 
 
+@requires_golden
 def test_fast_parser_differential_fixtures():
     """Byte-identical trees on all real golden-fixture pages."""
-    import glob
-
     from article_extractor_spark.dom.parser import (
         parse_html,
         parse_html_stdlib,
     )
 
-    raws = sorted(
-        glob.glob(
-            "/root/reference/tests/fixtures/fullpage_to_article_html/"
-            "*/*/raw.html"
-        )
-    )
+    raws = sorted(str(p) for p in GOLDEN_ROOT.glob("*/*/raw.html"))
     assert len(raws) >= 27
     for raw in raws:
         html = open(raw, encoding="utf-8", errors="replace").read()

@@ -12,7 +12,9 @@ import pytest
 
 from article_extractor_spark.extract import extract_document, html_fragment_to_spans
 
-from conftest import GOLDEN_CASES
+from conftest import GOLDEN_CASES, requires_golden
+
+pytestmark = requires_golden
 
 
 def span_tuples(spans: list[dict]) -> list[tuple]:

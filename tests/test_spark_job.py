@@ -675,6 +675,25 @@ def test_preshuffled_gate_on_for_aligned_path_corpus(
     assert stats["giant_threshold"] is None
 
 
+def test_preshuffled_reports_path_taken_not_gate(
+    spark, corpus_path, tmp_path
+):
+    """The gate passes for an aligned path corpus, but with one bucket
+    per wave each wave's scan plans fewer partitions than there are
+    cores, so every wave falls back to the shuffled write — and the
+    stat must say so."""
+    stats = run_extraction_job(
+        spark,
+        corpus_path,
+        str(tmp_path / "out-narrow"),
+        n_buckets=N_BUCKETS,
+        waves=N_BUCKETS,
+    )
+    assert spark.sparkContext.defaultParallelism > 1
+    assert stats["preshuffled"] is False
+    assert stats["docs_processed"] == N_DOCS
+
+
 def test_preshuffled_gate_off_for_dataframe_corpus(
     spark, corpus_path, tmp_path
 ):
