@@ -4,7 +4,7 @@ A from-scratch, Spark-first re-expression of the capabilities of
 pankaj28843/article-extractor (readability-style main-content extraction):
 the per-document semantics (DOM scoring, cleaning, sanitization, title
 cascade) live in pure-Python modules executed inside vectorized Arrow
-`mapInPandas` stages, while all corpus-level dataflow (scan, dedup,
+`mapInArrow` stages, while all corpus-level dataflow (scan, dedup,
 filtering, aggregation, lineage, resume) is declarative DataFrame/SQL so
 Catalyst can optimize it.
 

@@ -7,9 +7,9 @@ Dataflow (one map stage + one tiny metrics shuffle; SURVEY.md §3.1/§4):
     read corpus (doc_id, spans)        # bucketed Parquet / Iceberg scan
       → skip committed buckets         # resume: lineage anti-join
       → render spans → html            # JVM-side, whole-stage codegen
-      → mapInPandas extraction         # the single vectorized UDF stage
-      → write bucketed output          # dynamic partition overwrite
-      → aggregate + append lineage     # per-bucket metrics commit
+      → mapInArrow extraction          # the single vectorized UDF stage
+      → write bucketed output          # append into wiped bucket dirs
+      → pruned read-back → lineage     # per-bucket metrics commit
 
 Wave execution: buckets are processed in ``waves`` groups, each wave
 committing its lineage after its output lands — a killed job resumes at
@@ -25,6 +25,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.sketches import HLL_M, estimate_from_registers, hll_rho
+from .functions.text import md5_int
 from .operators.extraction import (
     extract_articles,
     render_spans_to_html,
@@ -45,49 +47,43 @@ def run_extraction_job(
     waves: int = 4,
     min_word_count: int = 150,
     resume: bool = True,
-    lineage_mode: str = "readback",
     emit_html: bool = False,
     emit_markdown: bool = False,
     emit_metadata: bool = False,
     markdown_dir: str | None = None,
-    giant_threshold: int | str | None = "auto",
-    preshuffled: bool | None = None,
 ) -> dict:
     """Run (or resume) extraction over a corpus table.
 
-    Returns job stats: buckets processed/skipped, docs, wall seconds.
+    Returns job stats: buckets processed/skipped, docs, wall seconds,
+    plus the write path and skew strategy that actually ran.
 
-    ``giant_threshold`` routes documents above the threshold (bytes of
-    HTML) through a salted extraction branch so several multi-MB giants
-    can't pile onto one straggler task (2.45× measured on a skewed
-    corpus, scripts/giant_bench.py).  The default ``"auto"`` derives
-    the threshold — or declines to salt — from the first wave's own
-    size distribution (``resolve_giant_threshold``; buckets are
-    hash-random, so wave 0 is an unbiased sample and later waves reuse
-    its answer for free).  Pass an int from ingest-time stats at scale,
-    or ``None`` to disable.
-
-    ``preshuffled`` overrides the bucket-aligned exchange-free write
-    heuristic: ``None`` (default) auto-detects — the fast path engages
-    only when the corpus came from a ``bucket=k``-partitioned PATH
-    (physical task↔bucket alignment) AND a sampled check confirms its
-    bucket values equal ``pmod(xxhash64(CAST(doc_id AS STRING)), N)``
-    (a corpus bucketed with a different N, a foreign bucket column, or
-    a native-numeric id hash all fail it — each would make the
-    exchange-free write fan out tasks×buckets small files, ADVICE r4).
-    ``True``/``False`` force the path (A/B harnesses).
-
-    ``lineage_mode`` selects how per-bucket lineage metrics + the
-    distinct-doc HLL are computed: ``"readback"`` (default) re-reads
-    each wave's written output COLUMN-PRUNED (metric ints + short
+    Lineage: each wave's bucket rows are computed from a COLUMN-PRUNED
+    read-back of the output the wave just wrote (metric ints + short
     strings, ~1% of output bytes — parquet never materializes
-    spans/html here) and aggregates with codegen'd hash aggregates,
-    doubling as a write verification; ``"observe"`` rides the write
-    action with per-bucket conditional aggregates — zero extra jobs,
-    but CollectMetrics evaluates its expressions INTERPRETED, and the
-    measured cost (~1.9 core-ms/doc at 240k docs, more than extraction
-    itself) Amdahl-caps core-count scaling.  Both modes are pinned
-    equal by test.
+    spans/html here), aggregated by codegen'd hash aggregates.  The
+    read-back doubles as a write verification: a bucket commits only
+    if its rows are readable.  The run's distinct-document HLL
+    registers come from the same pruned read-back.
+
+    The job decides its skew strategy and write path from what it
+    observes; no caller overrides either:
+
+    * giant salting — wave 0's own size distribution picks the
+      threshold above which documents (bytes of HTML) go through a
+      salted extraction branch, or declines to salt
+      (``resolve_giant_threshold``; buckets are hash-random, so wave 0
+      is an unbiased sample and later waves reuse its answer).  Salting
+      keeps several multi-MB giants off one straggler task (2.45×
+      measured on a skewed corpus, scripts/giant_bench.py).
+    * write path — the bucket-aligned exchange-free write engages only
+      when the corpus came from a ``bucket=k``-partitioned PATH
+      (physical task↔bucket alignment), a sampled check confirms its
+      bucket values equal ``pmod(xxhash64(CAST(doc_id AS STRING)), N)``
+      (a corpus bucketed with a different N, a foreign bucket column,
+      or a native-numeric id hash all fail it — each would make the
+      exchange-free write fan out tasks×buckets small files, ADVICE
+      r4), and the wave's scan plans >= cores partitions.  Otherwise
+      the classic repartition write runs.
 
     ``emit_html`` / ``emit_markdown`` populate the rendered-output
     columns in the result table.  ``markdown_dir`` additionally runs the
@@ -120,7 +116,7 @@ def run_extraction_job(
         prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
         corpus = tableio.read_table(spark, corpus)
-        # provenance half of the preshuffled gate: the corpus is
+        # provenance half of the aligned-write gate: the corpus is
         # PHYSICALLY laid out as bucket=k dirs (a DataFrame corpus, or
         # a path with a mere bucket data column, never qualifies —
         # task splits there span buckets and the exchange-free write
@@ -140,117 +136,15 @@ def run_extraction_job(
             waves=waves,
             min_word_count=min_word_count,
             resume=resume,
-            lineage_mode=lineage_mode,
             emit_html=emit_html,
             emit_markdown=emit_markdown,
             emit_metadata=emit_metadata,
             markdown_dir=markdown_dir,
-            giant_threshold=giant_threshold,
-            preshuffled=preshuffled,
             bucket_provenance=bucket_provenance,
         )
     finally:
         if prev_mpb is not None:
             spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-
-
-_METRIC_COLS = (
-    "docs_in",
-    "docs_ok",
-    "parse_failures",
-    "nodes_scored",
-    "spans_emitted",
-    "proc_us",
-)
-
-
-def _bucket_metrics(wave_buckets: list[int]) -> list:
-    """Per-bucket conditional aggregates for one wave's Observation —
-    lineage metrics ride the write action for free (D21 analog:
-    observability.py counters), no second pass over the output."""
-    metrics = []
-    for b in wave_buckets:
-        cond = F.col("bucket") == b
-        metrics.extend(
-            [
-                F.sum(cond.cast("long")).alias(f"b{b}_docs_in"),
-                F.sum(
-                    F.when(cond, F.col("success").cast("long")).otherwise(0)
-                ).alias(f"b{b}_docs_ok"),
-                F.sum(
-                    F.when(cond, (~F.col("success")).cast("long")).otherwise(0)
-                ).alias(f"b{b}_parse_failures"),
-                F.sum(F.when(cond, F.col("nodes_scored")).otherwise(0)).alias(
-                    f"b{b}_nodes_scored"
-                ),
-                F.sum(F.when(cond, F.col("spans_emitted")).otherwise(0)).alias(
-                    f"b{b}_spans_emitted"
-                ),
-                F.sum(F.when(cond, F.col("proc_us")).otherwise(0)).alias(
-                    f"b{b}_proc_us"
-                ),
-                F.min(F.when(cond, F.col("doc_id"))).alias(
-                    f"b{b}_doc_id_min"
-                ),
-                F.max(F.when(cond, F.col("doc_id"))).alias(
-                    f"b{b}_doc_id_max"
-                ),
-            ]
-        )
-    return metrics
-
-
-def _hll_metrics() -> list:
-    """Wave-level HLL register maxima riding the SAME write-side
-    Observation as the bucket metrics (one pass, zero extra jobs):
-    one conditional ``max`` per register over the precomputed
-    ``_hll_reg``/``_hll_rho`` columns.  Registers merge across waves
-    driver-side by ``max`` (the standard HLL union — the same merge
-    the streaming variant's GroupState does), giving the job a
-    running distinct-document estimate in its stats without ever
-    shuffling content keys."""
-    from .functions.sketches import HLL_M
-
-    return [
-        F.max(
-            F.when(F.col("_hll_reg") == j, F.col("_hll_rho"))
-        ).alias(f"hllr_{j}")
-        for j in range(HLL_M)
-    ]
-
-
-def _lineage_rows_from_observation(
-    vals: dict, wave_buckets: list[int], run_id: str
-) -> list[tuple]:
-    from datetime import datetime, timezone
-
-    now = datetime.now(timezone.utc)
-    rows = []
-    for b in wave_buckets:
-        if not vals[f"b{b}_docs_in"]:
-            # no docs seen for this bucket: do NOT commit it.  The wave
-            # filter can't distinguish "bucket genuinely empty" from
-            # "bucket missing from a partial/filtered corpus" (e.g. a
-            # killed job's remnant), so an absent bucket stays
-            # uncommitted and resume re-examines it — same contract as
-            # the read-back path, which only saw written buckets.
-            continue
-        rows.append(
-            (
-                run_id,
-                b,
-                vals[f"b{b}_doc_id_min"],
-                vals[f"b{b}_doc_id_max"],
-                int(vals[f"b{b}_docs_in"] or 0),
-                int(vals[f"b{b}_docs_ok"] or 0),
-                int(vals[f"b{b}_parse_failures"] or 0),
-                int(vals[f"b{b}_nodes_scored"] or 0),
-                int(vals[f"b{b}_spans_emitted"] or 0),
-                int(vals[f"b{b}_proc_us"] or 0) // 1000,
-                now,
-            )
-        )
-    return rows
 
 
 def _run_waves(
@@ -263,14 +157,11 @@ def _run_waves(
     waves: int,
     min_word_count: int,
     resume: bool,
-    lineage_mode: str,
-    emit_html: bool = False,
-    emit_markdown: bool = False,
-    emit_metadata: bool = False,
-    markdown_dir: str | None = None,
-    giant_threshold: int | str | None = "auto",
-    preshuffled: bool | None = None,
-    bucket_provenance: bool = False,
+    emit_html: bool,
+    emit_markdown: bool,
+    emit_metadata: bool,
+    markdown_dir: str | None,
+    bucket_provenance: bool,
 ) -> dict:
     if "bucket" in corpus.columns:
         # The wave/lineage protocol needs corpus buckets to equal the
@@ -310,18 +201,26 @@ def _run_waves(
     t0 = time.time()
     docs_done = 0
     observed: list[dict] = []
-    from .functions.sketches import HLL_M as _HLL_M
-
-    run_regs: list[int] = [0] * _HLL_M
+    run_regs: list[int] = [0] * HLL_M
+    giant_threshold: int | None = None
     waves = max(1, min(waves, len(todo))) if todo else 0
     # True only if EVERY wave took the exchange-free write (the gate
     # can pass while a wave planning < cores partitions falls back)
     all_aligned = waves > 0
     cores = spark.sparkContext.defaultParallelism
+    # (title, excerpt, word_count) fingerprint feeding the run's HLL
+    fingerprint = md5_int(
+        F.concat_ws(
+            "\x1f",
+            F.col("title"),
+            F.col("excerpt"),
+            F.col("word_count").cast("string"),
+        )
+    )
     for wave_idx in range(waves):
         wave_buckets = todo[wave_idx::waves]
         wave_df = corpus.where(F.col("bucket").isin(wave_buckets))
-        if giant_threshold == "auto":
+        if wave_idx == 0:
             # derive the salting threshold from wave 0's own size
             # distribution (buckets are hash-random → an unbiased
             # sample of the corpus); later waves reuse the answer, so
@@ -333,15 +232,11 @@ def _run_waves(
         # no-ops (same predicate), every stage below is narrow, and
         # each task's rows lie inside one bucket directory's splits —
         # so the clustered write needs NO distribution and the whole
-        # wave (scan → render → extract → observe → write) runs as one
+        # wave (scan → render → extract → write) runs as one
         # exchange-free stage.  Below the floor the respread breaks
         # alignment and the classic repartition write keeps file
         # counts bounded.  See tableio.write_bucketed(preshuffled=).
-        aligned = (
-            preshuffled
-            if preshuffled is not None
-            else pre_ok and wave_df.rdd.getNumPartitions() >= cores
-        )
+        aligned = pre_ok and wave_df.rdd.getNumPartitions() >= cores
         all_aligned = all_aligned and aligned
         extracted = extract_articles(
             wave_df,
@@ -351,40 +246,9 @@ def _run_waves(
             emit_metadata=emit_metadata,
             giant_threshold=giant_threshold,
         )
-        # re-derive bucket from doc_id (mapInPandas output dropped it);
+        # re-derive bucket from doc_id (mapInArrow output dropped it);
         # same hash → same bucket, no join needed
         extracted = tableio.with_bucket(extracted, "doc_id", n_buckets)
-        from .functions.sketches import HLL_M, hll_rho
-        from .functions.text import md5_int
-
-        _h = md5_int(
-            F.concat_ws(
-                "\x1f",
-                F.col("title"),
-                F.col("excerpt"),
-                F.col("word_count").cast("string"),
-            )
-        )
-        obs = None
-        if lineage_mode == "observe":
-            # opt-in: lineage metrics piggyback on the write action via
-            # per-bucket conditional aggregates + per-register HLL
-            # maxes.  "Free" in job count but NOT in CPU: CollectMetrics
-            # evaluates its aggregates INTERPRETED (no codegen), and the
-            # ~8·buckets + 256 expressions cost ~1.9 core-ms/doc at
-            # 240k docs — MORE than extraction itself (~1.0 core-ms) —
-            # which Amdahl-capped 8→32 scaling until round 4 flipped
-            # the default to the columnar read-back below.
-            from pyspark.sql import Observation
-
-            obs = Observation(f"wave-{wave_idx}")
-            extracted = extracted.withColumn(
-                "_hll_reg", _h.bitwiseAND(F.lit(HLL_M - 1))
-            ).withColumn("_hll_rho", hll_rho(_h))
-            extracted = extracted.observe(
-                obs, *_bucket_metrics(wave_buckets), *_hll_metrics()
-            )
-            extracted = extracted.drop("_hll_reg", "_hll_rho")
         written_schema = extracted.schema
         tableio.write_bucketed(
             extracted,
@@ -394,48 +258,37 @@ def _run_waves(
             n_buckets=n_buckets,
             preshuffled=aligned,
         )
-        if obs is not None:
-            vals = obs.get
-            lineage_rows = _lineage_rows_from_observation(
-                vals, wave_buckets, run_id
-            )
-        else:
-            # default: lineage + HLL from a COLUMN-PRUNED read-back of
-            # the wave just written.  Parquet is columnar, so the two
-            # aggregations below scan only the metric ints + short
-            # strings (~1% of output bytes; spans/html never
-            # materialize), both run as codegen'd hash aggregates, and
-            # the read-back doubles as a write verification — the
-            # bucket only commits if its rows are READABLE.  Measured
-            # at 240k docs / local[32]: the interpreted write-side
-            # observation cost ~14.5 s per wave; this path's two
-            # pruned aggregations cost well under a second.
-            # explicit schema: a wave that wrote ZERO rows to a fresh
-            # output leaves only _SUCCESS, and schema inference would
-            # throw 'Unable to infer schema' (ADVICE r4) — the schema
-            # is known (it was just written), so the empty-dir read
-            # degrades to an empty frame instead
-            readback = spark.read.schema(written_schema).parquet(
-                output_path
-            ).where(F.col("bucket").isin(wave_buckets))
-            # the readback scan inherits the job's compute-sized (tiny)
-            # maxPartitionBytes, planning hundreds of ~1 MB splits for a
-            # few MB of pruned metric columns — coalesce to core count
-            # so the two aggregations below aren't task-launch-bound
-            # (no shuffle: coalesce merges scan partitions in place)
-            readback = readback.coalesce(cores)
-            lineage_rows = [
-                tuple(r)
-                for r in tableio.build_lineage(readback, run_id).collect()
-            ]
-            vals = None
+        # Lineage + HLL from a COLUMN-PRUNED read-back of the wave just
+        # written.  A write-side Observation would evaluate its
+        # ~8·buckets + 256 aggregates INTERPRETED — measured ~14.5 s per
+        # wave at 240k docs / local[32], more CPU than extraction
+        # itself; the two pruned aggregations below cost well under a
+        # second.
+        # explicit schema: a wave that wrote ZERO rows to a fresh
+        # output leaves only _SUCCESS, and schema inference would
+        # throw 'Unable to infer schema' (ADVICE r4) — the schema
+        # is known (it was just written), so the empty-dir read
+        # degrades to an empty frame instead
+        readback = spark.read.schema(written_schema).parquet(
+            output_path
+        ).where(F.col("bucket").isin(wave_buckets))
+        # the readback scan inherits the job's compute-sized (tiny)
+        # maxPartitionBytes, planning hundreds of ~1 MB splits for a
+        # few MB of pruned metric columns — coalesce to core count
+        # so the two aggregations below aren't task-launch-bound
+        # (no shuffle: coalesce merges scan partitions in place)
+        readback = readback.coalesce(cores)
+        lineage_rows = [
+            tuple(r)
+            for r in tableio.build_lineage(readback, run_id).collect()
+        ]
         if markdown_dir:
             # D4 sink fed from the WRITTEN output (column-pruned read of
             # url/title/markdown/word_count — parquet never materializes
             # the span column here), not a second extraction pass.
-            # Runs BEFORE append_lineage: lineage is the commit record,
-            # and a crash between sink and commit must leave the bucket
-            # uncommitted so resume redoes it (md file writes are
+            # Runs BEFORE the lineage commit: lineage is the commit
+            # record, and a crash between sink and commit must leave the
+            # bucket uncommitted so resume redoes it (md file writes are
             # idempotent overwrites; the manifest partition is
             # dynamically overwritten per bucket, so a redo converges
             # instead of accumulating duplicate rows).
@@ -461,29 +314,21 @@ def _run_waves(
         # wave — see tableio.append_lineage_rows
         tableio.append_lineage_rows(spark, lineage_rows, output_path)
         docs_done += sum(r[4] for r in lineage_rows)  # docs_in ordinal
-        if vals is not None:
-            for j in range(HLL_M):
-                v = vals.get(f"hllr_{j}")
-                if v is not None and int(v) > run_regs[j]:
-                    run_regs[j] = int(v)
-        else:
-            # register maxes as ONE codegen'd hash aggregate over the
-            # pruned read-back (title/excerpt/word_count fingerprint —
-            # identical expression to the observe path, so the two
-            # modes produce the same registers)
-            reg_rows = (
-                readback.select(
-                    _h.bitwiseAND(F.lit(HLL_M - 1)).alias("reg"),
-                    hll_rho(_h).alias("rho"),
-                )
-                .groupBy("reg")
-                .agg(F.max("rho").alias("mx"))
-                .collect()
+        # register maxes as ONE codegen'd hash aggregate over the
+        # pruned read-back
+        reg_rows = (
+            readback.select(
+                fingerprint.bitwiseAND(F.lit(HLL_M - 1)).alias("reg"),
+                hll_rho(fingerprint).alias("rho"),
             )
-            for r in reg_rows:
-                j = int(r["reg"])
-                if int(r["mx"]) > run_regs[j]:
-                    run_regs[j] = int(r["mx"])
+            .groupBy("reg")
+            .agg(F.max("rho").alias("mx"))
+            .collect()
+        )
+        for r in reg_rows:
+            j = int(r["reg"])
+            if int(r["mx"]) > run_regs[j]:
+                run_regs[j] = int(r["mx"])
         # wave-level stats from the committed lineage rows themselves
         # (schema ordinals: 4=docs_in, 6=parse_failures, 8=spans)
         observed.append(
@@ -494,8 +339,6 @@ def _run_waves(
                 "spans": sum(int(r[8]) for r in lineage_rows),
             }
         )
-
-    from .functions.sketches import estimate_from_registers
 
     return {
         "observed_metrics": observed,
@@ -511,12 +354,10 @@ def _run_waves(
         "distinct_docs_est": estimate_from_registers(run_regs)
         if any(run_regs)
         else 0.0,
-        # which write path / skew strategy actually ran (A/B harnesses
-        # and the ADVICE no-contrast check read these)
+        # which write path / skew strategy actually ran (the ADVICE
+        # no-contrast check reads these)
         "preshuffled": all_aligned,
-        "giant_threshold": giant_threshold
-        if isinstance(giant_threshold, int)
-        else None,
+        "giant_threshold": giant_threshold,
         "wall_sec": round(time.time() - t0, 2),
     }
 
@@ -524,7 +365,7 @@ def _run_waves(
 def write_manifest(stats: dict, path: str) -> None:
     """D5 manifest.json sink (reference crawler.py:549-571): the job's
     fold of per-page outcomes as a JSON file.  Counts come from the
-    write-side observation (the distributed fold); this is the
+    committed lineage rows (the distributed fold); this is the
     driver-side serialization of ~10 scalars, not a data pass."""
     import json
     import os

@@ -120,7 +120,6 @@ _META_FIELD_NAMES = (
 def _batch_extract(
     batches,
     min_word_count: int,
-    safe_output: bool,
     emit_html: bool,
     emit_markdown: bool,
     emit_metadata: bool = False,
@@ -137,7 +136,6 @@ def _batch_extract(
 
     opts = ExtractOptions(
         min_word_count=min_word_count,
-        safe_output=safe_output,
         emit_html=emit_html,
         emit_markdown=emit_markdown,
         emit_metadata=emit_metadata,
@@ -229,11 +227,7 @@ def resolve_giant_threshold(pruned: DataFrame) -> int | None:
 def extract_articles(
     df: DataFrame,
     *,
-    id_col: str = "doc_id",
-    url_col: str = "url",
-    html_col: str = "html",
     min_word_count: int = 150,
-    safe_output: bool = True,
     emit_html: bool = False,
     emit_markdown: bool = False,
     emit_metadata: bool = False,
@@ -248,7 +242,7 @@ def extract_articles(
     provenance; running ``page_metadata`` separately would parse every
     document twice.
 
-    Input needs (id, url, html) columns; everything else is pruned
+    Input needs (doc_id, url, html) columns; everything else is pruned
     before the Arrow exchange so giant non-consumed columns never cross
     the JVM→Python boundary.
 
@@ -270,9 +264,9 @@ def extract_articles(
 
     ensure_shipped(df.sparkSession)
     pruned = df.select(
-        F.col(id_col).cast("string").alias("doc_id"),
-        F.col(url_col).cast("string").alias("url"),
-        F.col(html_col).cast("string").alias("html"),
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.col("url").cast("string").alias("url"),
+        F.col("html").cast("string").alias("html"),
     )
 
     # Resolve the auto threshold BEFORE the parallelism floor: the
@@ -291,7 +285,6 @@ def extract_articles(
         return _batch_extract(
             batches,
             min_word_count,
-            safe_output,
             emit_html,
             emit_markdown,
             emit_metadata,

@@ -393,6 +393,22 @@ def _state_marker(out: str, epoch: int) -> str:
     return f"{out}/state/_epoch_{int(epoch)}_committed"
 
 
+def _marker_chunk_tokens(
+    spark: SparkSession, out: str, epoch: int
+) -> int | None:
+    """The ``chunk_tokens`` an epoch was packed with, read from its
+    commit marker; ``None`` for an empty (legacy) marker."""
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(_state_marker(out, epoch))
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    stream = fs.open(path)
+    try:
+        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return int(json.loads(text)["chunk_tokens"]) if text.strip() else None
+
+
 def committed_epochs(spark: SparkSession, out: str) -> list[int]:
     """Epochs whose state commit marker exists — the marker is written
     LAST in a wave, so a killed wave resumes into the same epoch
@@ -562,12 +578,17 @@ def _pack_bases(
 
 
 def _update_dedup_state(
-    spark: SparkSession, docs: DataFrame, out: str, epoch: int
+    spark: SparkSession,
+    docs: DataFrame,
+    out: str,
+    epoch: int,
+    chunk_tokens: int,
 ) -> None:
     """Append the wave's content keys and capped band rows to the
-    persisted state, then write the epoch's commit marker.  First-seen
-    keys only (a key already in state keeps its stored canonical);
-    marker-guarded so a retried wave cannot double-append."""
+    persisted state, then write the epoch's commit marker, which records
+    the epoch's ``chunk_tokens``.  First-seen keys only (a key already in
+    state keeps its stored canonical); marker-guarded so a retried wave
+    cannot double-append."""
     from .functions import dedup as D
 
     state = f"{out}/state"
@@ -595,9 +616,14 @@ def _update_dedup_state(
         .partitionBy("shard")
         .parquet(f"{state}/band_index")
     )
-    fs.create(
+    marker = fs.create(
         jvm.org.apache.hadoop.fs.Path(_state_marker(out, epoch)), True
-    ).close()
+    )
+    try:
+        payload = json.dumps({"chunk_tokens": chunk_tokens}).encode()
+        marker.write(bytearray(payload))
+    finally:
+        marker.close()
 
 
 def run_pipeline_wave(
@@ -629,7 +655,12 @@ def run_pipeline_wave(
     ``epoch`` pins the epoch number explicitly — the streaming funnel
     passes its micro-batch id so a REPLAYED batch (crash between state
     commit and stream checkpoint) is recognized by its marker and
-    skipped instead of re-ingesting as a fresh wave (exactly-once)."""
+    skipped instead of re-ingesting as a fresh wave (exactly-once).
+
+    ``chunk_tokens`` must match the latest committed epoch's (recorded
+    in its commit marker): the token base continues that epoch's chunk
+    grid, so a different size raises ``ValueError`` before anything
+    is written."""
     from .job import run_extraction_job
     from .queries import curation_verdicts
     from .sources import tableio
@@ -643,6 +674,15 @@ def run_pipeline_wave(
     elif epoch in done:
         return {"epoch": epoch, "skipped": True}
     prior = [e for e in done if e < epoch]
+    if prior:
+        # base_tok counts whole chunks of the committed stream: packing
+        # this wave with another chunk size would misalign every offset
+        committed = _marker_chunk_tokens(spark, out, prior[-1])
+        if committed is not None and committed != chunk_tokens:
+            raise ValueError(
+                f"chunk_tokens={chunk_tokens} differs from "
+                f"chunk_tokens={committed} committed by epoch {prior[-1]}"
+            )
     base = _epoch_dir(out, epoch)
     run_id = run_id or f"wave-{epoch}"
 
@@ -704,7 +744,7 @@ def run_pipeline_wave(
     )
     chunks.write.mode("overwrite").parquet(f"{base}/examples")
 
-    _update_dedup_state(spark, docs, out, epoch)
+    _update_dedup_state(spark, docs, out, epoch, chunk_tokens)
 
     ex_agg = (
         spark.read.parquet(f"{base}/examples")

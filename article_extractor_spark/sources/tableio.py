@@ -338,16 +338,6 @@ def build_lineage(result: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-def append_lineage(lineage: DataFrame, output_path: str) -> None:
-    # lineage is <= n_buckets rows; without the coalesce,
-    # createDataFrame spreads them over defaultParallelism partitions
-    # and the append runs a 32-task write job for 32 rows (measured
-    # 1.5 s of pure task-launch overhead per wave at local[32])
-    lineage.coalesce(1).write.mode("append").parquet(
-        lineage_path(output_path)
-    )
-
-
 def append_lineage_rows(
     spark: SparkSession, rows: list[tuple], output_path: str
 ) -> None:
@@ -355,8 +345,8 @@ def append_lineage_rows(
     parquet file with pyarrow and stream it through the JVM Hadoop
     filesystem handle — zero Spark jobs, any Hadoop FS.
 
-    The Spark spelling (``append_lineage``) launches a full 1-task
-    write job per wave — measured 1.5-2.3 s of scheduler + committer
+    A Spark ``DataFrame.write`` here launches a full 1-task write job
+    per wave — measured 1.5-2.3 s of scheduler + committer
     fixed cost, a core-count-independent term that Amdahl-caps the
     N→4N executor scaling (the dynamic-partition-overwrite lesson one
     layer down).  A ~2 KB metadata record is driver work — the same

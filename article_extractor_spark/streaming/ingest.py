@@ -389,7 +389,7 @@ def _stream_commit_batch(
         .parquet(batch_path)
     )
     # lineage from a column-pruned read-back of the batch just written
-    # (the batch job's lineage_mode="readback" default): codegen'd hash
+    # (the same lineage path as the batch job): codegen'd hash
     # aggregate over the metric ints, and the commit only happens if
     # the written rows are readable.  Explicit schema: an EMPTY
     # micro-batch (zero-row input files) writes batch=<id>/ with no

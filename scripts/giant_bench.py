@@ -139,36 +139,6 @@ def main() -> int:
     salted = run(1_000_000)
     auto = run("auto")
 
-    # JOB-level arms: the flagship run_extraction_job defaults to
-    # giant_threshold="auto" (r4 verdict task #4 — zero caller
-    # knowledge), so the skewed corpus must engage salting through the
-    # production path, and disabling it must cost the straggler tail.
-    import shutil
-
-    from article_extractor_spark.job import run_extraction_job
-
-    def run_job(threshold, tag):
-        best, stats = float("inf"), None
-        for trial in range(args.trials):
-            out = f"/tmp/giant-job-{tag}"
-            shutil.rmtree(out, ignore_errors=True)
-            t0 = time.monotonic()
-            stats = run_extraction_job(
-                spark,
-                path,
-                out,
-                run_id=f"giant-{tag}-{trial}",
-                waves=1,
-                resume=False,
-                min_word_count=10,
-                giant_threshold=threshold,
-            )
-            best = min(best, time.monotonic() - t0)
-        return best, stats
-
-    job_off, _ = run_job(None, "off")
-    job_auto, auto_stats = run_job("auto", "auto")
-
     print(
         json.dumps(
             {
@@ -182,10 +152,6 @@ def main() -> int:
                 "auto_threshold": auto_threshold,
                 "speedup": round(baseline / salted, 3),
                 "auto_speedup": round(baseline / auto, 3),
-                "job_off_sec": round(job_off, 3),
-                "job_auto_sec": round(job_auto, 3),
-                "job_auto_threshold": auto_stats["giant_threshold"],
-                "job_auto_speedup": round(job_off / job_auto, 3),
             }
         )
     )

@@ -7,6 +7,9 @@ never rewritten (VERDICT r4 task #3).
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -272,3 +275,39 @@ def test_compact_state_equals_from_scratch_index(spark, incremental_out):
         spark.read.parquet(f"{out}/state/band_index"),
     )
     assert pairs.count() > 0
+
+
+def test_wave_chunk_tokens_must_match_committed_epoch(
+    spark, wave_paths, incremental_out
+):
+    """Each epoch's commit marker records its chunk_tokens.  A later
+    wave with another size would pack on a misaligned token base, so it
+    raises — naming both sizes — before writing anything under its
+    epoch.  The same size passes (wave 2 of incremental_out)."""
+    _, w2 = wave_paths
+    out, _, m2, _ = incremental_out
+    assert m2["epoch"] == 1 and m2["chunk_tokens"] == CHUNK
+    for epoch in (0, 1):
+        with open(f"{out}/state/_epoch_{epoch}_committed") as fh:
+            assert json.load(fh) == {"chunk_tokens": CHUNK}
+
+    both = rf"chunk_tokens={2 * CHUNK}\b.*chunk_tokens={CHUNK}\b"
+    with pytest.raises(ValueError, match=both):
+        run_pipeline_wave(
+            spark, w2, out, n_buckets=N_BUCKETS, waves=2,
+            min_word_count=10, chunk_tokens=2 * CHUNK,
+        )
+    assert not os.path.exists(f"{out}/epochs/2")
+    assert committed_epochs(spark, out) == [0, 1]
+
+
+def test_empty_legacy_epoch_marker_is_accepted(spark, tmp_path):
+    """Markers written before chunk_tokens was recorded are empty files:
+    they carry no size, so no wave is refused on their account."""
+    from article_extractor_spark.pipeline import _marker_chunk_tokens
+
+    out = str(tmp_path / "legacy")
+    os.makedirs(f"{out}/state")
+    open(f"{out}/state/_epoch_0_committed", "w").close()
+    assert committed_epochs(spark, out) == [0]
+    assert _marker_chunk_tokens(spark, out, 0) is None

@@ -45,9 +45,10 @@ def test_job_end_to_end_span_equality(spark, corpus_path, tmp_path):
         spark, corpus_path, out, n_buckets=N_BUCKETS, waves=2
     )
     assert stats["docs_processed"] == N_DOCS
-    # the write-side HLL rode the waves' Observations: the run-level
-    # distinct-document estimate must track the (all-unique) corpus
-    # within the sketch's small-range band (linear counting at n=120)
+    # the HLL registers come from each wave's column-pruned read-back:
+    # the run-level distinct-document estimate must track the
+    # (all-unique) corpus within the sketch's small-range band (linear
+    # counting at n=120)
     assert abs(stats["distinct_docs_est"] - N_DOCS) / N_DOCS < 0.15
 
     result = spark.read.parquet(out)
@@ -133,34 +134,50 @@ def test_kill_and_resume_produces_identical_table(spark, corpus_path, tmp_path):
     assert h(full).exceptAll(h(resumed)).count() == 0
 
 
-def test_lineage_readback_matches_observation_mode(
+def test_lineage_matches_recount_of_written_output(
     spark, corpus_path, tmp_path
 ):
-    """The default lineage path (column-pruned read-back of the written
-    wave) must agree with the opt-in observe mode (write-side
-    conditional aggregates) on every metric except wall-clock cpu_ms —
-    same pin as before round 4, with the default flipped (the
-    interpreted CollectMetrics expressions cost more CPU than
-    extraction itself; see run_extraction_job docstring)."""
-    out_a = str(tmp_path / "obs")
-    out_b = str(tmp_path / "audit")
-    run_extraction_job(
-        spark,
-        corpus_path,
-        out_a,
-        n_buckets=N_BUCKETS,
-        waves=2,
-        lineage_mode="observe",
+    """Every committed lineage row equals an independent recount of the
+    rows written to its bucket, and the job's stats add up to the
+    lineage.  Empty pages join the synth corpus so the failure columns
+    are exercised (docs_ok < docs_in): min_word_count only adds a
+    warning, while a page with no content fails extraction."""
+    from pyspark.sql import types as T
+
+    from article_extractor_spark.operators.extraction import SPAN_TYPE
+
+    n_empty = 6
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.StringType()),
+            T.StructField("url", T.StringType()),
+            T.StructField("spans", SPAN_TYPE),
+        ]
     )
-    run_extraction_job(
-        spark,
-        corpus_path,
-        out_b,
-        n_buckets=N_BUCKETS,
-        waves=2,
+    empty = spark.createDataFrame(
+        [
+            (f"zempty-{i}", f"https://empty.example/{i}", [])
+            for i in range(n_empty)
+        ],
+        schema,
+    )
+    corpus = str(tmp_path / "corpus")
+    tableio.write_bucketed(
+        tableio.with_bucket(
+            spark.read.parquet(corpus_path)
+            .select("doc_id", "url", "spans")
+            .unionByName(empty),
+            "doc_id",
+            N_BUCKETS,
+        ),
+        corpus,
+        dynamic=False,
+    )
+    out = str(tmp_path / "out")
+    stats = run_extraction_job(
+        spark, corpus, out, n_buckets=N_BUCKETS, waves=2
     )
     cols = [
-        "bucket",
         "doc_id_min",
         "doc_id_max",
         "docs_in",
@@ -169,19 +186,41 @@ def test_lineage_readback_matches_observation_mode(
         "nodes_scored",
         "spans_emitted",
     ]
-    a = (
-        spark.read.parquet(tableio.lineage_path(out_a))
-        .select(cols)
-        .orderBy("bucket")
+    ok = F.when(F.col("success"), 1).otherwise(0)
+    recount = {
+        r["bucket"]: tuple(r[c] for c in cols)
+        for r in spark.read.parquet(out)
+        .groupBy("bucket")
+        .agg(
+            F.min("doc_id").alias("doc_id_min"),
+            F.max("doc_id").alias("doc_id_max"),
+            F.count(F.lit(1)).alias("docs_in"),
+            F.sum(ok).alias("docs_ok"),
+            F.sum(1 - ok).alias("parse_failures"),
+            F.sum("nodes_scored").alias("nodes_scored"),
+            F.sum("spans_emitted").alias("spans_emitted"),
+        )
         .collect()
-    )
-    b = (
-        spark.read.parquet(tableio.lineage_path(out_b))
-        .select(cols)
-        .orderBy("bucket")
-        .collect()
-    )
-    assert a == b
+    }
+    rows = spark.read.parquet(tableio.lineage_path(out)).collect()
+    lineage = {r["bucket"]: tuple(r[c] for c in cols) for r in rows}
+    assert len(rows) == len(lineage) == N_BUCKETS
+    assert lineage == recount
+
+    docs_in = sum(v[2] for v in lineage.values())
+    docs_ok = sum(v[3] for v in lineage.values())
+    failures = sum(v[4] for v in lineage.values())
+    spans = sum(v[6] for v in lineage.values())
+    assert docs_in == N_DOCS + n_empty
+    assert docs_ok == N_DOCS
+    assert failures == n_empty
+    assert stats["docs_processed"] == docs_in
+    assert stats["docs_failed"] == failures
+    waves = stats["observed_metrics"]
+    assert [w["wave"] for w in waves] == [0, 1]
+    assert sum(w["docs"] for w in waves) == docs_in
+    assert sum(w["failures"] for w in waves) == failures
+    assert sum(w["spans"] for w in waves) == spans
 
 
 def test_files_per_bucket_salt_splits_buckets(spark, tmp_path):
