@@ -18,8 +18,9 @@ differential tests (tests/test_dom.py).  On pathological random tag
 soup (unbalanced quotes inside half-open tags, interleaved ``</`` junk)
 the two tokenizers may segment garbage differently — both still return
 a tree and never raise, and the extraction pipeline's outer guard turns
-any downstream surprise into a ``success=false`` row.  Set
-``AES_STDLIB_PARSER=1`` to fall back to the stdlib tokenizer.
+any downstream surprise into a ``success=false`` row.
+``parser.parse_html_stdlib`` keeps the stdlib tokenizer as the
+differential reference.
 
 Tokenizer behaviors mirrored from stdlib HTMLParser
 (convert_charrefs=True):

@@ -10,7 +10,6 @@ builder rather than a streaming scraper.
 
 from __future__ import annotations
 
-import os
 from html.parser import HTMLParser
 
 from .node import TEXT, VOID_TAGS, Node
@@ -235,9 +234,6 @@ class _TreeBuilder(HTMLParser):
         return
 
 
-_USE_STDLIB_TOKENIZER = bool(os.environ.get("AES_STDLIB_PARSER"))
-
-
 def _decode(html: str | bytes) -> str:
     if isinstance(html, bytes):
         try:
@@ -264,10 +260,8 @@ def parse_html(html: str | bytes) -> Node:
     reference's input handling (extractor.py:279-283).  Tokenization
     uses the fast scanner (dom/fast_parser.py, ~2× less CPU on the
     50%-of-kernel parse stage) feeding this module's tree builder;
-    ``AES_STDLIB_PARSER=1`` selects the stdlib tokenizer instead.
+    ``parse_html_stdlib`` is the differential reference.
     """
-    if _USE_STDLIB_TOKENIZER:
-        return parse_html_stdlib(html)
     from .fast_parser import feed_fast
 
     builder = _TreeBuilder()

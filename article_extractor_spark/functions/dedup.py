@@ -85,7 +85,9 @@ def _hash_params(j: int) -> tuple[int, int]:
 
 
 def minhash_signature(col: Column, h: int = MINHASH_H) -> Column:
-    """Array of ``h`` min-hashes over the document's word shingles.
+    """Array of ``h`` min-hashes over the document's word shingles —
+    the Column-expression reference that tests pin the pipeline's
+    Arrow kernel (``minhash_signature_pudf``) against.
 
     Base hash: md5 → 60-bit int → mod (2^31-1); permutations are
     (a_j * base + c_j) mod (2^31-1) — all int64-safe, no overflow.
@@ -277,19 +279,18 @@ def capped_bucket_pairs(
     )
 
 
-def band_table(
-    docs: DataFrame, text_col: str = "text", kernel: str = "pandas"
-) -> DataFrame:
+def band_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """The MinHash band index ``(doc_id, band, band_hash)`` — the
     single source of the signature → band pipeline, shared by the
     batch pair generator (``minhash_lsh_pairs``) and the incremental
     probe (``incremental_minhash_pairs``), and the row shape the
     persisted index stores (``write_band_index``).
 
-    One scan computes signatures once (Arrow-batched kernel by
-    default); banding is a 4-way explode of JVM md5 folds.
+    One scan computes signatures once (the Arrow-batched
+    ``minhash_signature_pudf`` kernel); banding is a 4-way explode of
+    JVM md5 folds.
 
-    NULL text → NULL signature (both kernels) and concat_ws skips
+    NULL text → NULL signature and concat_ws skips
     NULL elements, so NULL signatures would all share band_hash =
     md5_int('') in every band and pair with each other.  Drop NULL
     TEXT before computing signatures (pinned by
@@ -298,17 +299,13 @@ def band_table(
     below the Project and evaluate the signature twice per row (the
     nullable-computed-column trap documented at
     similarity.lsh_bucket); NULL text is the only NULL-signature
-    source in both kernels, so the source-column filter is
-    equivalent and pushes down to the scan."""
-    if kernel == "pandas":
-        from ..shipping import ensure_shipped
+    source, so the source-column filter is equivalent and pushes down
+    to the scan."""
+    from ..shipping import ensure_shipped
 
-        ensure_shipped(docs.sparkSession)
-        sig_col = minhash_signature_pudf()(F.col(text_col))
-    else:
-        sig_col = minhash_signature(F.col(text_col))
+    ensure_shipped(docs.sparkSession)
     sig = docs.where(F.col(text_col).isNotNull()).select(
-        F.col("doc_id"), sig_col.alias("sig")
+        F.col("doc_id"), minhash_signature_pudf()(F.col(text_col)).alias("sig")
     )
     band_cols = []
     for b in range(LSH_BANDS):
@@ -335,7 +332,6 @@ def capped_band_index(
     docs: DataFrame,
     text_col: str = "text",
     bucket_cap: int = BUCKET_CAP,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """Band index with write-time bucket capping (``row_number`` ≤
     ``bucket_cap`` per (band, band_hash), smallest doc_ids kept — the
@@ -344,7 +340,7 @@ def capped_band_index(
     from pyspark.sql.window import Window
 
     return (
-        band_table(docs, text_col, kernel=kernel)
+        band_table(docs, text_col)
         .withColumn(
             "rn",
             F.row_number().over(
@@ -395,7 +391,6 @@ def write_band_index(
     text_col: str = "text",
     bucket_cap: int = BUCKET_CAP,
     n_shards: int = 64,
-    kernel: str = "pandas",
 ) -> None:
     """Persist the corpus's MinHash band index for INCREMENTAL dedup.
 
@@ -411,9 +406,7 @@ def write_band_index(
     adversarial identical-doc flood is bounded ONCE, in the index —
     every future probe inherits the bound for free.  The cap rank
     compiles to WindowGroupLimit (map-side drop before the sort)."""
-    capped = capped_band_index(
-        docs, text_col, bucket_cap=bucket_cap, kernel=kernel
-    )
+    capped = capped_band_index(docs, text_col, bucket_cap=bucket_cap)
     (
         capped.withColumn("shard", F.pmod(F.col("band_hash"), F.lit(n_shards)))
         .repartition("shard")
@@ -427,7 +420,6 @@ def incremental_minhash_pairs(
     wave: DataFrame,
     index: DataFrame,
     text_col: str = "text",
-    kernel: str = "pandas",
 ) -> DataFrame:
     """Near-dup candidates of a NEW ingest wave against the stored
     corpus: band the wave (one scan of the new docs only), equi-join
@@ -439,7 +431,7 @@ def incremental_minhash_pairs(
     docs — a flood of identical NEW docs costs wave_rows × cap join
     rows, linear in the wave, never quadratic.  Wave-internal
     duplicates are ``minhash_lsh_pairs``'s job on the wave alone."""
-    wb = band_table(wave, text_col, kernel=kernel)
+    wb = band_table(wave, text_col)
     idx = index.select("doc_id", "band", "band_hash")
     return (
         wb.alias("w")
@@ -457,7 +449,6 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
     bucket_cap: int = BUCKET_CAP,
-    kernel: str = "pandas",
     drop_metrics=None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash-LSH.
@@ -489,7 +480,7 @@ def minhash_lsh_pairs(
     memberships dropped by the cap) and ``bucket_members`` (total).
     The metrics ride the existing job, zero extra passes.
     """
-    banded = band_table(docs, text_col, kernel=kernel).select(
+    banded = band_table(docs, text_col).select(
         F.struct(F.col("doc_id")).alias("m"), "band", "band_hash"
     )
     pairs = capped_bucket_pairs(
@@ -541,7 +532,8 @@ SIMHASH_BITS = 16
 
 
 def simhash16(col: Column) -> Column:
-    """16-bit SimHash over whitespace tokens (frequency-weighted).
+    """16-bit SimHash over whitespace tokens (frequency-weighted) — the
+    Column-expression reference for the pipeline's ``simhash16_pudf``.
 
     Per token: 16-bit md5-derived hash; per bit: majority vote
     (+1 if set, −1 if clear); output bit set iff vote > 0.
@@ -642,17 +634,13 @@ def simhash16_pudf():
     return pandas_udf(kernel, LongType())
 
 
-def simhash_table(
-    docs: DataFrame, text_col: str = "text", kernel: str = "pandas"
-) -> DataFrame:
-    if kernel == "pandas":
-        from ..shipping import ensure_shipped
+def simhash_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    from ..shipping import ensure_shipped
 
-        ensure_shipped(docs.sparkSession)
-        col = simhash16_pudf()(F.col(text_col))
-    else:
-        col = simhash16(F.col(text_col))
-    return docs.select(F.col("doc_id"), col.alias("simhash"))
+    ensure_shipped(docs.sparkSession)
+    return docs.select(
+        F.col("doc_id"), simhash16_pudf()(F.col(text_col)).alias("simhash")
+    )
 
 
 # Disjoint bit-bands (shift, width) covering all SIMHASH_BITS: 6+5+5.
@@ -667,7 +655,6 @@ def simhash_hamming_pairs(
     docs: DataFrame,
     max_hamming: int = SIMHASH_MAX_HAMMING,
     text_col: str = "text",
-    kernel: str = "pandas",
     bucket_cap: int = BUCKET_CAP,
     drop_metrics=None,
 ) -> DataFrame:
@@ -701,9 +688,7 @@ def simhash_hamming_pairs(
         raise ValueError(
             "pigeonhole banding needs max_hamming < number of bands"
         )
-    sim = simhash_table(
-        docs.where(F.col(text_col).isNotNull()), text_col, kernel
-    )
+    sim = simhash_table(docs.where(F.col(text_col).isNotNull()), text_col)
     bands = F.array(
         *[
             F.struct(

@@ -1,12 +1,20 @@
 """Similarity search over the embeddings table (array<float> column).
 
-Two paths:
+``cosine_topk`` is the exact brute-force cosine top-k, the reference
+the ANN families are tested against.  Each ANN family has ONE probe
+function: its candidate input is built inline from ``emb`` or, with
+``path=``, read from the layout a ``write_*`` function stored once (at
+100 TB the stored table).  Both inputs go through the same scoring,
+cut and rerank, so they are bit-identical and share one SQL oracle:
 
-- ``cosine_topk`` — brute-force exact cosine top-k (the baseline; one
-  broadcast of the query vector, a map-side score, a global top-k).
-- ``lsh_ann_topk`` — random-hyperplane LSH bucketing (the scale path:
-  the scan is pruned to one bucket before any scoring; at 100 TB the
-  bucket id is a partition column so Spark prunes at the source).
+- ``lsh_ann_topk`` ← ``write_bucket_partitioned``
+- ``ivf_ann_topk`` (``nprobe``, trained ``codebook``); its stored twin
+  ``ivf_ann_topk_pruned`` ← ``write_cell_partitioned`` keeps a
+  join-free plan
+- ``sq8_ann_topk`` ← ``write_sq8_codes``
+- ``pq_ann_topk`` ← ``write_pq_codes``
+
+BM25, the lexical family, lives in ``queries.py``.
 
 Determinism contract: embeddings are quantized to integers
 (``floor(v * 1000)``) before any arithmetic, so dot products and norms
@@ -46,13 +54,49 @@ def sq_norm(col: Column) -> Column:
     return int_dot(col, col)
 
 
+def sq_l2(a: Column, b: Column) -> Column:
+    """Exact integer squared L2 distance — the centroid argmin metric of
+    IVF assignment, the IVF cell ranking and PQ encoding."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+
+
+def _floor_means(assigned: DataFrame, keys: list[str], vec: str) -> list:
+    """One Lloyd's update, collected driver-side: per ``keys`` group the
+    per-dimension floor(mean) of the ``vec`` arrays, via
+    posexplode→groupBy(keys, pos) — two shuffles of SMALL data.  The
+    mean is EXACT integer floordiv of the exact bigint sum,
+    ``(s - pmod(s, n)) / n`` (the double division of an exactly
+    divisible pair is exact for |s| < 2^53), never a float avg, so
+    training is bit-reproducible under any partitioning and replays in
+    unrolled SQL CTEs."""
+    return (
+        assigned.select(*keys, F.posexplode(vec))
+        .groupBy(*keys, "pos")
+        .agg(F.sum("col").alias("s"), F.count("col").alias("n"))
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "s", "n"))),
+                lambda t: (
+                    (t["s"] - F.pmod(t["s"], t["n"])) / t["n"]
+                ).cast("long"),
+            ).alias("cvec")
+        )
+        .collect()
+    )
+
+
 def cosine_sim_prenorm(a: Column, b: Column, a_n2: Column, b_n2: Column) -> Column:
     """Cosine where both squared norms were precomputed PER VECTOR
     (``sq_norm``): one interpreted fold per pair instead of three.
     Norms are a per-vector quantity — computing them inside the
     pairwise expression redoes |pairs|/|vectors| times the work.
-    Bit-identical to ``cosine_sim``: same integer dot, same
-    ``sqrt(double)`` of the same integer, same rounding."""
+    ``cosine_sim`` is this function with the norms computed in place,
+    so the two are bit-identical."""
     dot = int_dot(a, b).cast("double")
     return F.round(
         dot / (F.sqrt(a_n2.cast("double")) * F.sqrt(b_n2.cast("double"))), 6
@@ -60,21 +104,21 @@ def cosine_sim_prenorm(a: Column, b: Column, a_n2: Column, b_n2: Column) -> Colu
 
 
 def cosine_sim(a: Column, b: Column) -> Column:
-    """Cosine over quantized vectors, rounded to 6 decimals.
+    """Cosine over quantized vectors, rounded to 6 decimals:
+    ``cosine_sim_prenorm`` with both norms computed in place.
 
     Both inputs are let-bound first: the dot + two norms reference each
     vector three times, and HOFs are interpreted with no CSE — an
     unbound ``quantized(col)`` argument would be re-evaluated per
     reference (and Catalyst's CollapseProject re-inlines projected
     columns, so pre-projecting doesn't protect either)."""
-
-    def _scored(av: Column, bv: Column) -> Column:
-        dot = int_dot(av, bv).cast("double")
-        na = F.sqrt(int_dot(av, av).cast("double"))
-        nb = F.sqrt(int_dot(bv, bv).cast("double"))
-        return F.round(dot / (na * nb), 6)
-
-    return let(a, lambda av: let(b, lambda bv: _scored(av, bv)))
+    return let(
+        a,
+        lambda av: let(
+            b,
+            lambda bv: cosine_sim_prenorm(av, bv, sq_norm(av), sq_norm(bv)),
+        ),
+    )
 
 
 def cosine_topk(
@@ -165,7 +209,7 @@ def write_bucket_partitioned(
     emb: DataFrame, path: str, vec_col: str = "embedding"
 ) -> None:
     """Materialize the embeddings table physically partitioned by LSH
-    bucket — the storage layout ``lsh_ann_topk_pruned`` probes.  At
+    bucket — the stored input of ``lsh_ann_topk(path=...)``.  At
     scale this is the Iceberg table's declared partitioning
     (``PARTITIONED BY (bucket)``); vectors are bucketed once at write
     time, not per query."""
@@ -176,36 +220,47 @@ def write_bucket_partitioned(
     ).write.mode("overwrite").partitionBy("bucket").parquet(path)
 
 
-def lsh_ann_topk_pruned(
-    spark,
-    table_path: str,
+def lsh_ann_topk(
     emb: DataFrame,
     query_id: int = 0,
     k: int = 10,
     vec_col: str = "embedding",
+    path: str | None = None,
 ) -> DataFrame:
-    """The 100-TB shape of ``lsh_ann_topk``: the table is STORED
-    partitioned by bucket (``write_bucket_partitioned``), so the probe
-    is (1) an O(1) index lookup computing the query vector's bucket,
-    then (2) a partition-PRUNED scan of that single bucket + exact
-    cosine + top-k.  The scan never touches the other 255 buckets —
-    check ``PartitionFilters`` in the plan.  The driver-side lookup is
-    one scalar per query (the literal partition predicate is what makes
-    static pruning certain), not a per-row collect."""
-    qrow = (
+    """ANN top-k: restrict to the query's LSH bucket, then exact cosine.
+
+    The query's bucket and quantized vector are ONE driver-side scalar
+    lookup, so the bucket restriction is a literal predicate.  The
+    candidates are either the buckets computed inline from ``emb`` or,
+    with ``path``, the table ``write_bucket_partitioned`` stored
+    partitioned by bucket — there the literal lands in
+    ``PartitionFilters`` and the scan never touches the other 255
+    buckets.  The bucket id is deliberately NOT in the output: on the
+    inline path projecting it would evaluate the interpreted bucket
+    fold a second time per row."""
+    qrows = (
         emb.where(F.col("vec_id") == query_id)
         .select(
             lsh_bucket(F.col(vec_col)).alias("b"),
             quantized(F.col(vec_col)).alias("qv"),
         )
-        .collect()[0]
+        .collect()
     )
+    if not qrows:
+        raise ValueError(f"query_id {query_id} not found in embeddings")
+    qrow = qrows[0]
     qvec = F.array(*[F.lit(int(v)).cast("long") for v in qrow["qv"]])
-    part = spark.read.parquet(table_path)
-    cand = part.where(
+    if path is None:
+        cand = emb.select(
+            F.col("vec_id"),
+            F.col(vec_col),
+            lsh_bucket(F.col(vec_col)).alias("bucket"),
+        )
+    else:
+        cand = emb.sparkSession.read.parquet(path)
+    scored = cand.where(
         (F.col("bucket") == int(qrow["b"])) & (F.col("vec_id") != query_id)
-    )
-    scored = cand.select(
+    ).select(
         F.col("vec_id"),
         cosine_sim(quantized(F.col(vec_col)), qvec).alias("cosine"),
     )
@@ -336,16 +391,12 @@ def assign_cells(
 
     if codebook is None:
         codebook = default_codebook(emb, vec_col)
-    cents = codebook
     qe = emb.select(F.col("vec_id"), quantized(F.col(vec_col)).alias("qv"))
-    sqdist = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cvec"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     return (
-        qe.join(F.broadcast(cents))
-        .select("vec_id", "qv", "cid", sqdist.alias("d2"))
+        qe.join(F.broadcast(codebook))
+        .select(
+            "vec_id", "qv", "cid", sq_l2(F.col("qv"), F.col("cvec")).alias("d2")
+        )
         .withColumn(
             "rn",
             F.row_number().over(
@@ -378,27 +429,27 @@ def write_cell_partitioned(
 
 
 def ivf_ann_topk_pruned(
-    spark,
-    table_path: str,
     emb: DataFrame,
     query_id: int = 0,
     k: int = 10,
-    vec_col: str = "embedding",
     nprobe: int = 1,
+    vec_col: str = "embedding",
+    *,
+    path: str,
 ) -> DataFrame:
-    """The 100-TB shape of ``ivf_ann_topk`` (mirror of
-    ``lsh_ann_topk_pruned``): the table is STORED partitioned by cell,
-    the probe computes the query's cell DRIVER-side against the tiny
-    codebook (N_CENTROIDS rows — one scalar lookup per query, not a
-    per-row collect), then scans ONLY that cell's partition with exact
-    cosine + top-k.  ``PartitionFilters: [(cell = …)]`` in the plan is
-    the quantity that scales — 1/N_CENTROIDS of the bytes."""
+    """The 100-TB shape of ``ivf_ann_topk``: the table at ``path`` is
+    STORED partitioned by cell (``write_cell_partitioned``), the probe
+    computes the query's cells DRIVER-side against the tiny codebook
+    (N_CENTROIDS rows — one scalar lookup per query, not a per-row
+    collect), then scans ONLY those cells' partitions with exact
+    cosine + top-k — no join at all in the plan.  ``PartitionFilters:
+    [(cell = …)]`` in the plan is the quantity that scales —
+    nprobe/N_CENTROIDS of the bytes."""
     # ONE driver collect fetches codebook + query vector together
-    # (they were two separate jobs, each scanning the source)
+    # (as two jobs, each would scan the source)
     rows = (
         emb.where(
-            (F.col("vec_id") < N_CENTROIDS)
-            | (F.col("vec_id") == query_id)
+            (F.col("vec_id") < N_CENTROIDS) | (F.col("vec_id") == query_id)
         )
         .select(
             F.col("vec_id").alias("cid"),
@@ -406,29 +457,20 @@ def ivf_ann_topk_pruned(
         )
         .collect()
     )
-    crows = [r for r in rows if r["cid"] < N_CENTROIDS]
     qrows = [r for r in rows if r["cid"] == query_id]
     if not qrows:
         raise ValueError(f"query_id {query_id} not found in embeddings")
     qv = [int(v) for v in qrows[0]["cvec"]]
-    # same ranking as assign_cells: exact integer L2, ties → smallest
-    # cid; the nprobe nearest cells become an IN partition filter
+    # ivf_ann_topk's ranking (exact integer L2, ties → smallest cid);
+    # the nprobe nearest cells become an IN partition filter
     ranked = sorted(
-        (
-            (
-                sum(
-                    (a - b) * (a - b)
-                    for a, b in zip(qv, [int(c) for c in r["cvec"]])
-                ),
-                r["cid"],
-            )
-            for r in crows
-        )
+        (sum((a - int(b)) ** 2 for a, b in zip(qv, r["cvec"])), r["cid"])
+        for r in rows
+        if r["cid"] < N_CENTROIDS
     )
     probe_cells = [int(cid) for _, cid in ranked[:nprobe]]
     qvec = F.array(*[F.lit(v).cast("long") for v in qv])
-    part = spark.read.parquet(table_path)
-    cand = part.where(
+    cand = emb.sparkSession.read.parquet(path).where(
         F.col("cell").isin(probe_cells) & (F.col("vec_id") != query_id)
     )
     scored = cand.select(
@@ -443,75 +485,46 @@ def ivf_ann_topk(
     emb: DataFrame,
     query_id: int = 0,
     k: int = 10,
+    nprobe: int = 1,
     vec_col: str = "embedding",
     codebook: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-style ANN: assign every vector to its nearest centroid
-    (default deterministic "codebook": the first N_CENTROIDS vectors;
-    pass a trained one from ``train_ivf_codebook``), then search only
-    the query's cell with exact cosine.
+    """IVF-style ANN: assign every vector to its nearest centroid, then
+    search only the ``nprobe`` cells nearest the query with exact
+    cosine.  The codebook defaults to the deterministic first
+    N_CENTROIDS vectors; pass a trained one from
+    ``train_ivf_codebook``.
 
     Relational argmin (cross join the tiny broadcast codebook → squared
-    integer L2 → row_number) keeps everything exact and oracle-able; at
-    scale the cell id is a partition column
-    (``write_cell_partitioned`` / ``ivf_ann_topk_pruned``), so probing
-    = partition pruning.
-    """
-    assigned = assign_cells(emb, vec_col, codebook=codebook)
-    q = assigned.where(F.col("vec_id") == query_id).select(
-        F.col("qv").alias("qvec"), F.col("cell").alias("qcell")
-    )
-    scored = (
-        assigned.join(F.broadcast(q), F.col("cell") == F.col("qcell"))
-        .where(F.col("vec_id") != query_id)
-        .select(
-            "vec_id",
-            F.col("cell"),
-            cosine_sim(F.col("qv"), F.col("qvec")).alias("cosine"),
-        )
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
-
-
-def ivf_ann_topk_nprobe(
-    emb: DataFrame,
-    query_id: int = 0,
-    k: int = 10,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-    codebook: DataFrame | None = None,
-) -> DataFrame:
-    """IVF probe over the ``nprobe`` cells nearest the query — the
-    standard ANN recall knob.  ``nprobe=1`` degenerates to
-    ``ivf_ann_topk``; ``nprobe=N_CENTROIDS`` probes everything and is
-    EXACTLY brute-force cosine top-k (pinned by test).  The probed
-    cell set is a tiny broadcast (≤ nprobe rows), so the scan-side
-    dataflow is identical to the single-cell probe — at scale each
-    extra probe is one more pruned partition read, linear in
-    nprobe."""
+    integer L2 → row_number) keeps everything exact and oracle-able.
+    ``nprobe`` is the standard recall knob: the probed cell set is a
+    tiny broadcast (≤ nprobe rows, same (d2, cid) ranking as the
+    assignment), and ``nprobe=N_CENTROIDS`` probes everything and is
+    EXACTLY brute-force cosine top-k (pinned by test).  At scale the
+    cell id is a partition column (``write_cell_partitioned`` /
+    ``ivf_ann_topk_pruned``), so each probe is one pruned partition
+    read."""
     if codebook is None:
         codebook = default_codebook(emb, vec_col)
     assigned = assign_cells(emb, vec_col, codebook=codebook)
+    # the probed cells rank by the same (d2, cid) order as
+    # assign_cells (and ivf_ann_topk_pruned), so they never drift from
+    # the assigned ones; the query vector rides along on each row
     q = emb.where(F.col("vec_id") == query_id).select(
         quantized(F.col(vec_col)).alias("qvec")
     )
-    sqd = F.aggregate(
-        F.zip_with(
-            F.col("qvec"), F.col("cvec"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     qcells = (
         codebook.join(F.broadcast(q))
-        .select("cid", sqd.alias("d2"))
-        .orderBy("d2", "cid")
+        .select(
+            F.col("cid").alias("qcell"),
+            "qvec",
+            sq_l2(F.col("qvec"), F.col("cvec")).alias("d2"),
+        )
+        .orderBy("d2", "qcell")
         .limit(nprobe)
-        .select(F.col("cid").alias("qcell"))
     )
     scored = (
         assigned.join(F.broadcast(qcells), F.col("cell") == F.col("qcell"))
-        .join(F.broadcast(q))
         .where(F.col("vec_id") != query_id)
         .select(
             "vec_id",
@@ -523,36 +536,23 @@ def ivf_ann_topk_nprobe(
 
 
 def train_ivf_codebook(
-    emb: DataFrame,
-    k: int = N_CENTROIDS,
-    iters: int = 3,
-    vec_col: str = "embedding",
+    emb: DataFrame, iters: int = 3, vec_col: str = "embedding"
 ) -> DataFrame:
     """Distributed Lloyd's (k-means) over the quantized vectors —
-    the trained codebook the IVF docstrings promise.
+    the trained codebook the IVF docstrings promise, seeded with
+    ``default_codebook`` (k = N_CENTROIDS).
 
     Per iteration: one broadcast-join assignment pass (the same argmin
-    as ``assign_cells``) + one per-dimension mean via
-    posexplode→groupBy(cell, pos) — two shuffles of SMALL data
-    (k×dim cells, never the corpus re-keyed).  Centroids live
-    DRIVER-side between iterations (k×dim integers), so lineage stays
-    flat — no iterative plan growth, the same discipline as the BFS
-    frontier's localCheckpoint.  New centroids are floor(mean)
-    computed as EXACT integer floordiv of the exact bigint sum —
-    ``(s - pmod(s, n)) / n`` (the double division of an exactly
-    divisible pair is exact for |s| < 2^53), never a float avg — so
-    training is bit-reproducible under any partitioning and the whole
-    iterative loop is SQL-oracle-able with unrolled CTEs; cell
-    assignment stays exact integer L2; empty cells keep their previous
-    centroid.  Returns a (cid, cvec:array<bigint>) DataFrame for
+    as ``assign_cells``) + one exact floor-mean update
+    (``_floor_means``, k×dim cells, never the corpus re-keyed).
+    Centroids live DRIVER-side between iterations (k×dim integers), so
+    lineage stays flat — no iterative plan growth, the same discipline
+    as the BFS frontier's localCheckpoint.  Cell assignment stays
+    exact integer L2; empty cells keep their previous centroid.
+    Returns a (cid, cvec:array<bigint>) DataFrame for
     ``assign_cells``."""
     spark = emb.sparkSession
-    init = (
-        emb.where(F.col("vec_id") < k)
-        .select("vec_id", quantized(F.col(vec_col)).alias("cvec"))
-        .orderBy("vec_id")
-        .collect()
-    )
+    init = default_codebook(emb, vec_col).orderBy("cid").collect()
     cents: list[list[int]] = [[int(v) for v in r["cvec"]] for r in init]
 
     def codebook_df() -> DataFrame:
@@ -563,97 +563,13 @@ def train_ivf_codebook(
 
     for _ in range(iters):
         assigned = assign_cells(emb, vec_col, codebook=codebook_df())
-        means = (
-            assigned.select("cell", F.posexplode("qv"))
-            .groupBy("cell", "pos")
-            .agg(F.sum("col").alias("s"), F.count("col").alias("n"))
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("pos", "s", "n"))
-                    ),
-                    lambda t: (
-                        (t["s"] - F.pmod(t["s"], t["n"])) / t["n"]
-                    ).cast("long"),
-                ).alias("cvec")
-            )
-            .collect()
-        )
-        for r in means:
+        for r in _floor_means(assigned, ["cell"], "qv"):
             cents[int(r["cell"])] = [int(v) for v in r["cvec"]]
     return codebook_df()
 
 
-def ivf_ann_topk_trained(
-    emb: DataFrame,
-    query_id: int = 0,
-    k: int = 10,
-    iters: int = 3,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """``ivf_ann_topk`` with a k-means codebook from
-    ``train_ivf_codebook`` — identical probe dataflow, better-balanced
-    cells than the first-N seed.  Training is exact integer
-    arithmetic, so the full train+probe chain has an unrolled-CTE SQL
-    oracle (queries._ivf_ann_trained_sql); tests additionally pin
-    (a) non-increasing within-cell SSE over iterations and (b) the
-    probe returning exactly the brute-force cosine ranking restricted
-    to the query's cell."""
-    codebook = train_ivf_codebook(emb, N_CENTROIDS, iters, vec_col)
-    return ivf_ann_topk(emb, query_id, k, vec_col, codebook=codebook)
-
-
-def lsh_ann_topk(
-    emb: DataFrame, query_id: int = 0, k: int = 10, vec_col: str = "embedding"
-) -> DataFrame:
-    """ANN top-k: restrict to the query's LSH bucket, then exact cosine.
-
-    At scale the bucket id is precomputed as a partition column so this
-    becomes a partition-pruned scan + small top-k; here it's computed
-    inline from the same deterministic planes."""
-    with_bucket = emb.select(
-        F.col("vec_id"),
-        F.col(vec_col),
-        lsh_bucket(F.col(vec_col)).alias("bucket"),
-    )
-    q = with_bucket.where(F.col("vec_id") == query_id).select(
-        quantized(F.col(vec_col)).alias("qvec"),
-        F.col("bucket").alias("qbucket"),
-    )
-    scored = (
-        with_bucket.join(F.broadcast(q), F.col("bucket") == F.col("qbucket"))
-        .where(F.col("vec_id") != query_id)
-        .select(
-            F.col("vec_id"),
-            cosine_sim(quantized(F.col(vec_col)), F.col("qvec")).alias("cosine"),
-        )
-    )
-    # NB: the bucket id is deliberately NOT in the output — projecting
-    # it would re-evaluate the interpreted bucket expression a second
-    # time per row (CollapseProject inlines the projection into both the
-    # join key and the output, and CodegenFallback HOFs get no CSE);
-    # measured ~2× the whole query's scoring cost.
-    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
-
-
 SQ8_LEVELS = 255  # 8-bit code range [0, 255]
 SQ8_RERANK_FACTOR = 4  # stage-1 candidates per requested neighbor
-
-
-def sq8_codes(col: Column, lo: int, rng: int) -> Column:
-    """Scalar-quantize a quantized (bigint) vector to 8-bit codes:
-    ``c_i = floor((q_i - lo) * 255 / rng)`` over the corpus-global
-    range — exact integer/floor arithmetic shared bit-for-bit with the
-    DuckDB oracle ((q - lo) ≥ 0, so the double division's floor equals
-    the rational floor: numerator < 2^21 keeps the quotient well clear
-    of representability edges)."""
-    return F.transform(
-        col,
-        lambda v: F.floor(
-            ((v - F.lit(lo)) * SQ8_LEVELS).cast("double") / F.lit(rng)
-        ).cast("long"),
-    )
 
 
 def sq8_range(emb: DataFrame, vec_col: str = "embedding") -> tuple[int, int]:
@@ -673,106 +589,82 @@ def sq8_range(emb: DataFrame, vec_col: str = "embedding") -> tuple[int, int]:
     return lo, max(int(row["hi"]) - lo, 1)
 
 
-def sq8_ann_topk(
-    emb: DataFrame, query_id: int = 0, k: int = 10, vec_col: str = "embedding"
+def sq8_code_table(
+    emb: DataFrame, lo: int, rng: int, vec_col: str = "embedding"
 ) -> DataFrame:
-    """Compressed-scan ANN (FAISS-style SQ8): score 8-bit codes first,
-    exact-rerank only the survivors.
+    """The SQ8 code table ``(vec_id, codes array<smallint>, n2)`` — the
+    ONE builder behind both the inline probe and ``write_sq8_codes``.
 
-    At 100 TB the codes are the STORED scan column — 4× smaller than
-    float32 (8× smaller than the quantized bigint form), so the
-    brute-force pass reads a quarter of the bytes; the full-precision
-    vectors are touched only for ``k × SQ8_RERANK_FACTOR`` rows.  Both
-    stages are map-side + TakeOrderedAndProject (k rows per partition
-    shuffle); the query row is a broadcast, never a shuffle of the big
-    side.  Candidate cut is deterministic ((code_cos desc, vec_id)), so
-    the whole query replays exactly in the SQL oracle."""
-    lo, rng = sq8_range(emb, vec_col)
-    base = emb.select(
-        F.col("vec_id"), quantized(F.col(vec_col)).alias("q")
+    Codes are ``c_i = floor((q_i - lo) * 255 / rng)`` over the
+    corpus-global range — exact integer/floor arithmetic shared
+    bit-for-bit with the DuckDB oracle ((q - lo) ≥ 0, so the double
+    division's floor equals the rational floor: numerator < 2^21 keeps
+    the quotient well clear of representability edges).  They are
+    stored smallint (the byte win: ~4× smaller on the wire than the
+    quantized bigint form); n2, the integer squared norm of the codes,
+    is stored WITH them FAISS-style, so the probe's scoring fold
+    computes only the dot product (``cosine_sim_prenorm``)."""
+    staged = emb.select(
+        F.col("vec_id"),
+        F.transform(
+            quantized(F.col(vec_col)),
+            lambda v: F.floor(
+                ((v - F.lit(lo)) * SQ8_LEVELS).cast("double") / F.lit(rng)
+            ).cast("long"),
+        ).alias("c"),
     )
-    q = base.where(F.col("vec_id") == query_id).select(
-        F.col("q").alias("qv")
-    )
-    cand = (
-        base.where(F.col("vec_id") != query_id)
-        .join(F.broadcast(q))
-        .select(
-            "vec_id",
-            "q",
-            "qv",
-            cosine_sim(
-                sq8_codes(F.col("q"), lo, rng),
-                sq8_codes(F.col("qv"), lo, rng),
-            ).alias("code_cos"),
-        )
-        .orderBy(F.desc("code_cos"), F.asc("vec_id"))
-        .limit(k * SQ8_RERANK_FACTOR)
-    )
-    return (
-        cand.select(
-            "vec_id", cosine_sim(F.col("q"), F.col("qv")).alias("cosine")
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
+    return staged.select(
+        "vec_id",
+        F.transform(F.col("c"), lambda v: v.cast("smallint")).alias("codes"),
+        sq_norm(F.col("c")).alias("n2"),
     )
 
 
 def write_sq8_codes(
     emb: DataFrame, path: str, vec_col: str = "embedding"
 ) -> tuple[int, int]:
-    """Materialize the SQ8 code table — the storage layout
-    ``sq8_ann_topk_stored`` scans.  At 100 TB this is written once at
-    ingest: (vec_id, codes array<smallint>) is ~4× smaller on the wire
-    than the quantized bigint form (and 2× smaller than float32), so
-    the brute-force candidate stage reads a fraction of the bytes while
-    the full-precision vectors stay in the base table, touched only for
-    the k×RERANK survivors.  Returns the corpus-global (lo, rng) the
-    codes were built with (at scale: ingest-time column stats persisted
-    with the table); the probe itself needs only the code table — the
-    query row's codes come from the same scan."""
+    """Materialize the SQ8 code table — the stored input of
+    ``sq8_ann_topk(path=...)``.  At 100 TB this is written once at
+    ingest, while the full-precision vectors stay in the base table,
+    touched only for the k×RERANK survivors.  Returns the
+    corpus-global (lo, rng) the codes were built with (at scale:
+    ingest-time column stats persisted with the table); the probe
+    itself needs only the code table."""
     lo, rng = sq8_range(emb, vec_col)
-    staged = emb.select(
-        F.col("vec_id"),
-        sq8_codes(quantized(F.col(vec_col)), lo, rng).alias("c"),
+    sq8_code_table(emb, lo, rng, vec_col).write.mode("overwrite").parquet(
+        path
     )
-    # n2 (the integer squared norm of the codes) is stored WITH the
-    # codes, FAISS-style: the probe's scoring fold then computes only
-    # the dot product (cosine_sim_prenorm) instead of three folds per
-    # row — norms are a per-vector quantity, not per-query work.
-    staged.select(
-        "vec_id",
-        F.transform(F.col("c"), lambda v: v.cast("smallint")).alias("codes"),
-        sq_norm(F.col("c")).alias("n2"),
-    ).write.mode("overwrite").parquet(path)
     return lo, rng
 
 
-def sq8_ann_topk_stored(
-    spark,
-    codes_path: str,
+def sq8_ann_topk(
     emb: DataFrame,
     query_id: int = 0,
     k: int = 10,
     vec_col: str = "embedding",
+    path: str | None = None,
 ) -> DataFrame:
-    """The 100-TB shape of ``sq8_ann_topk``: stage 1 brute-force-scans
-    the STORED code table (``write_sq8_codes`` — the small column),
-    never touching the full vectors; stage 2 point-looks-up only the
-    k×RERANK survivors in the base table for exact rerank.  The
-    survivor ids (k×4 rows of one int — metadata scale, the
-    IVF-codebook collect pattern) become a LITERAL ``In(vec_id)``
-    predicate, so the rerank scan is parquet-row-group-pruned AND the
-    quantize transform runs on exactly the survivor rows — a join-based
-    spelling would evaluate it under the join for every row of the base
-    table.  Result is bit-identical to the inline ``sq8_ann_topk``
-    (same codes, same deterministic cut), pinned by test and by sharing
-    its DuckDB oracle."""
-    # Codes are stored smallint (the byte win); arithmetic must widen
-    # first — smallint×smallint stays smallint in Spark and 255×255
-    # overflows it.
+    """Compressed-scan ANN (FAISS-style SQ8): score 8-bit codes first,
+    exact-rerank only the survivors.
+
+    Stage 1 brute-force-scans the code table — built inline
+    (``sq8_code_table``) or, with ``path``, the one ``write_sq8_codes``
+    stored — with a broadcast single-row query and a
+    TakeOrderedAndProject cut of ``k × SQ8_RERANK_FACTOR`` rows.
+    Stage 2 point-looks-up only those survivors in the base table: the
+    survivor ids (metadata scale, the IVF-codebook collect pattern)
+    become a LITERAL ``In(vec_id)`` predicate, so the rerank scan is
+    parquet-row-group-pruned and the quantize transform runs on exactly
+    the survivor rows.  The candidate cut is deterministic
+    ((code_cos desc, vec_id)), so the whole query replays exactly in
+    the SQL oracle."""
+    if path is None:
+        codes = sq8_code_table(emb, *sq8_range(emb, vec_col), vec_col)
+    else:
+        codes = emb.sparkSession.read.parquet(path)
+    # Codes are smallint; arithmetic must widen first — smallint×smallint
+    # stays smallint in Spark and 255×255 overflows it.
     widen = lambda col: F.transform(col, lambda c: c.cast("long"))  # noqa: E731
-    codes = spark.read.parquet(codes_path)
     q = codes.where(F.col("vec_id") == query_id).select(
         F.col("codes").alias("qc"), F.col("n2").alias("qn2")
     )
@@ -839,13 +731,7 @@ def _pq_assign(subvecs: DataFrame, codebook: DataFrame) -> DataFrame:
     smallest cid): broadcast the (M·K)-row codebook, join on m, and
     fold the argmin with a partial-aggregable min(struct) — K
     candidate rows per (vec, m) collapse map-side, no window."""
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("sv"), F.col("cvec"), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    d2 = sq_l2(F.col("sv"), F.col("cvec"))
     return (
         subvecs.join(F.broadcast(codebook), "m")
         .select("vec_id", "m", "sv", F.col("cid"), d2.alias("d2"))
@@ -865,8 +751,8 @@ def train_pq_codebook(
     two shuffles per iteration (assignment keyed by (vec, m), means
     keyed by (m, cell, pos)) — never M sequential corpus passes.
     Seed: subspace m's centroids are the first PQ_K vectors' m-th
-    slices.  Centroid update is the exact integer floordiv of exact
-    bigint sums (train_ivf_codebook's rule), so training replays
+    slices.  Centroid update is ``_floor_means`` (train_ivf_codebook's
+    exact integer rule), so training replays
     bit-for-bit in unrolled SQL CTEs; empty cells keep their previous
     centroid.  Centroids live driver-side between iterations
     (M·K·(dim/M) = K·dim integers — metadata), keeping the iterative
@@ -896,22 +782,7 @@ def train_pq_codebook(
     subvecs = _pq_subvectors(base, dim)
     for _ in range(iters):
         assigned = _pq_assign(subvecs, codebook_df())
-        means = (
-            assigned.select("m", "cell", F.posexplode("sv"))
-            .groupBy("m", "cell", "pos")
-            .agg(F.sum("col").alias("s"), F.count("col").alias("n"))
-            .groupBy("m", "cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "s", "n"))),
-                    lambda t: (
-                        (t["s"] - F.pmod(t["s"], t["n"])) / t["n"]
-                    ).cast("long"),
-                ).alias("cvec")
-            )
-            .collect()
-        )
-        for r in means:
+        for r in _floor_means(assigned, ["m", "cell"], "sv"):
             cents[(int(r["m"]), int(r["cell"]))] = [
                 int(v) for v in r["cvec"]
             ]
@@ -921,10 +792,11 @@ def train_pq_codebook(
 def pq_encode(
     emb: DataFrame, codebook: DataFrame, vec_col: str = "embedding"
 ) -> DataFrame:
-    """(vec_id, codes:array<bigint>): each vector's M per-subspace
-    centroid ids in subspace order — the M-byte compressed form a
-    100 TB deployment stores instead of the float vectors (16× smaller
-    than float32 at these parameters)."""
+    """(vec_id, codes:array<smallint>): each vector's M per-subspace
+    centroid ids in subspace order — the compressed form a 100 TB
+    deployment stores instead of the float vectors (16× smaller than
+    float32 at these parameters), and the ONE code builder behind both
+    the inline probe and ``write_pq_codes``."""
     base = emb.select(
         F.col("vec_id"), quantized(F.col(vec_col)).alias("qv")
     )
@@ -933,81 +805,8 @@ def pq_encode(
     return assigned.groupBy("vec_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("m", "cell"))),
-            lambda t: t["cell"],
+            lambda t: t["cell"].cast("smallint"),
         ).alias("codes")
-    )
-
-
-def pq_ann_topk(
-    emb: DataFrame,
-    query_id: int = 0,
-    k: int = 10,
-    iters: int = PQ_ITERS,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """PQ asymmetric-distance (ADC) ANN: train → encode → LUT scan →
-    exact rerank.
-
-    The query is NOT quantized to codes (that is the 'asymmetric' in
-    ADC): a per-subspace lookup table LUT[m][c] = ⟨q_m, centroid_{m,c}⟩
-    (M·K integers — built from the driver-side centroids and the
-    query's slices, baked as ONE literal array) turns the approximate
-    dot product into M array lookups per stored vector:
-    score(x) ≈ Σ_m LUT[m][code_m(x)].  Stage 1 scans only the M-entry
-    code arrays (map-side fold + TakeOrderedAndProject, zero corpus
-    shuffles beyond training's two metadata-bound aggregates); stage 2
-    exact-reranks the k·RERANK survivors with the shared full-precision
-    cosine.  Every stage is exact integer arithmetic until the final
-    cosine, so the whole train+encode+probe chain replays bit-for-bit
-    in the SQL oracle (queries._pq_ann_sql's unrolled CTEs)."""
-    codebook = train_pq_codebook(emb, iters, vec_col)
-    base = emb.select(
-        F.col("vec_id"), quantized(F.col(vec_col)).alias("qv")
-    )
-    dim = len(base.select("qv").first()["qv"])
-    d = dim // PQ_M
-    codes = pq_encode(emb, codebook, vec_col)
-
-    qv = [int(v) for v in base.where(F.col("vec_id") == query_id)
-          .first()["qv"]]
-    cb_rows = codebook.collect()
-    lut = [0] * (PQ_M * PQ_K)
-    for r in cb_rows:
-        m, c = int(r["m"]), int(r["cid"])
-        qs = qv[m * d : (m + 1) * d]
-        lut[m * PQ_K + c] = sum(a * b for a, b in zip(qs, r["cvec"]))
-    lut_lit = F.array(*[F.lit(v).cast("long") for v in lut])
-
-    adc = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-            lambda c, m: F.element_at(
-                lut_lit, (m * PQ_K + c + 1).cast("int")
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    cand = (
-        codes.where(F.col("vec_id") != query_id)
-        .select("vec_id", adc.alias("adc_score"))
-        .orderBy(F.desc("adc_score"), F.asc("vec_id"))
-        .limit(k * PQ_RERANK_FACTOR)
-    )
-    q = base.where(F.col("vec_id") == query_id).select(
-        F.col("qv").alias("qq")
-    )
-    return (
-        cand.join(base, "vec_id")
-        .join(F.broadcast(q))
-        .select(
-            "vec_id",
-            "adc_score",
-            cosine_sim(F.col("qv"), F.col("qq")).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
     )
 
 
@@ -1017,7 +816,7 @@ def write_pq_codes(
     iters: int = PQ_ITERS,
     vec_col: str = "embedding",
 ) -> None:
-    """Materialize the PQ layout ``pq_ann_topk_stored`` scans: the
+    """Materialize the PQ layout ``pq_ann_topk(path=...)`` scans: the
     M-entry smallint code arrays under ``path``/codes (at 100 TB the
     stored column — M·4 bits of code per vector vs 256 bytes of
     float32) and the trained (m, cid, cvec) codebook under
@@ -1025,30 +824,50 @@ def write_pq_codes(
     ingest beside the data like the SQ8 range stats)."""
     codebook = train_pq_codebook(emb, iters, vec_col)
     codebook.write.mode("overwrite").parquet(path + "/codebook")
-    pq_encode(emb, codebook, vec_col).select(
-        "vec_id",
-        F.transform(F.col("codes"), lambda c: c.cast("smallint")).alias(
-            "codes"
-        ),
-    ).write.mode("overwrite").parquet(path + "/codes")
+    pq_encode(emb, codebook, vec_col).write.mode("overwrite").parquet(
+        path + "/codes"
+    )
 
 
-def pq_ann_topk_stored(
-    spark,
-    path: str,
+def pq_ann_topk(
     emb: DataFrame,
     query_id: int = 0,
     k: int = 10,
+    iters: int | None = None,
     vec_col: str = "embedding",
+    path: str | None = None,
 ) -> DataFrame:
-    """The 100-TB shape of ``pq_ann_topk``: stage 1 brute-force-scans
-    ONLY the stored code table (M smallints per vector), folding the
-    broadcast literal LUT built from the STORED codebook and the query
-    vector — no training, no join on the scan; stage 2 broadcast-joins
-    the k·RERANK survivor ids back to the base table for the exact
-    rerank.  Bit-equal to the inline ``pq_ann_topk`` by construction
-    (same training determinism at write time, same encode, same ADC,
-    same rerank), so it shares that oracle."""
+    """PQ asymmetric-distance (ADC) ANN: LUT scan over the codes →
+    exact rerank.  The codebook and codes are trained and encoded
+    inline (``train_pq_codebook`` + ``pq_encode``, ``iters`` Lloyd's
+    iterations, default PQ_ITERS) or, with ``path``, read from the
+    ``write_pq_codes`` layout — no training, no join on the scan; the
+    layout fixed its iteration count when written, so ``iters`` with
+    ``path`` is an error.
+
+    The query is NOT quantized to codes (that is the 'asymmetric' in
+    ADC): a per-subspace lookup table LUT[m][c] = ⟨q_m, centroid_{m,c}⟩
+    (M·K integers — built from the driver-side centroids and the
+    query's slices, baked as ONE literal array) turns the approximate
+    dot product into M array lookups per stored vector:
+    score(x) ≈ Σ_m LUT[m][code_m(x)].  Stage 1 scans only the M-entry
+    code arrays (map-side fold + TakeOrderedAndProject); stage 2
+    broadcast-joins the k·RERANK survivor ids back to the base table
+    for the exact full-precision cosine.  Every stage is exact integer
+    arithmetic until the final cosine, so the whole chain replays
+    bit-for-bit in the SQL oracle (queries._pq_ann_sql's unrolled
+    CTEs) whichever input is used."""
+    if path is None:
+        codebook = train_pq_codebook(
+            emb, PQ_ITERS if iters is None else iters, vec_col
+        )
+        codes = pq_encode(emb, codebook, vec_col)
+    elif iters is not None:
+        raise ValueError("iters is fixed by the write_pq_codes layout")
+    else:
+        spark = emb.sparkSession
+        codebook = spark.read.parquet(path + "/codebook")
+        codes = spark.read.parquet(path + "/codes")
     base = emb.select(
         F.col("vec_id"), quantized(F.col(vec_col)).alias("qv")
     )
@@ -1058,7 +877,7 @@ def pq_ann_topk_stored(
     ]
     d = len(qv) // PQ_M
     lut = [0] * (PQ_M * PQ_K)
-    for r in spark.read.parquet(path + "/codebook").collect():
+    for r in codebook.collect():
         m, c = int(r["m"]), int(r["cid"])
         qs = qv[m * d : (m + 1) * d]
         lut[m * PQ_K + c] = sum(a * b for a, b in zip(qs, r["cvec"]))
@@ -1076,8 +895,7 @@ def pq_ann_topk_stored(
         lambda acc, v: acc + v,
     )
     cand = (
-        spark.read.parquet(path + "/codes")
-        .where(F.col("vec_id") != query_id)
+        codes.where(F.col("vec_id") != query_id)
         .select("vec_id", adc.alias("adc_score"))
         .orderBy(F.desc("adc_score"), F.asc("vec_id"))
         .limit(k * PQ_RERANK_FACTOR)

@@ -212,7 +212,7 @@ def resolve_giant_threshold(pruned: DataFrame) -> int | None:
 
     Cost: one column-pruned pass over html lengths.  At 100 TB prefer
     passing an explicit threshold from ingest-time stats (the lineage
-    table already records per-bucket size metrics); auto mode is for
+    table already records per-bucket size metrics); the probe is for
     corpora without one."""
     probe = pruned.select(F.length("html").cast("double").alias("_n"))
     qs = probe.approxQuantile("_n", [0.5, 1.0], GIANT_PROBE_REL_ERR)
@@ -231,7 +231,7 @@ def extract_articles(
     emit_html: bool = False,
     emit_markdown: bool = False,
     emit_metadata: bool = False,
-    giant_threshold: int | str | None = None,
+    giant_threshold: int | None = None,
 ) -> DataFrame:
     """Run main-content extraction over a corpus DataFrame.
 
@@ -255,9 +255,8 @@ def extract_articles(
     accumulates several of them.  Tradeoff: the split predicate cannot be
     pushed to parquet, so the scan runs twice — only worth it when the
     giant tail dominates the straggler profile (SURVEY.md §4 item 3).
-    Pass ``giant_threshold="auto"`` to derive the threshold (or decline
-    to salt at all) from the corpus's own size distribution — see
-    ``resolve_giant_threshold``.
+    ``resolve_giant_threshold`` derives the threshold (or declines to
+    salt at all) from the corpus's own size distribution.
     """
     from ..shipping import ensure_shipped
     from .parallelism import ensure_compute_parallelism
@@ -268,14 +267,6 @@ def extract_articles(
         F.col("url").cast("string").alias("url"),
         F.col("html").cast("string").alias("html"),
     )
-
-    # Resolve the auto threshold BEFORE the parallelism floor: the
-    # probe only reads html lengths, and running it on the pre-respread
-    # projection keeps the quantile job a column-pruned scan — placed
-    # after ensure_compute_parallelism it would shuffle every html body
-    # round-robin just to measure lengths (review r4).
-    if giant_threshold == "auto":
-        giant_threshold = resolve_giant_threshold(pruned)
 
     # Parallelism floor for the CPU-bound Arrow stage (no-op when the
     # scan already has >= cores partitions) — see operators/parallelism.
@@ -413,12 +404,7 @@ def _batch_metadata(batches):
         )
 
 
-def page_metadata(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    html_col: str = "html",
-) -> DataFrame:
+def page_metadata(df: DataFrame) -> DataFrame:
     """Page-declared provenance metadata (og:*, canonical, JSON-LD
     Article) for every document — extract.metadata over the shared DOM,
     Arrow-batched, input pruned to (doc_id, html) before the exchange.
@@ -435,8 +421,8 @@ def page_metadata(
 
     ensure_shipped(df.sparkSession)
     pruned = df.select(
-        F.col(id_col).cast("string").alias("doc_id"),
-        F.col(html_col).cast("string").alias("html"),
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.col("html").cast("string").alias("html"),
     )
     pruned = ensure_compute_parallelism(pruned)
     return pruned.mapInArrow(_batch_metadata, schema=METADATA_SCHEMA)

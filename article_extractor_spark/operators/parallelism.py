@@ -73,8 +73,8 @@ _FLOOR_WIDTH: dict[tuple[str, str], int] = {}
 def table_fingerprint(path: str) -> str:
     """Cheap stat signature (per-file mtime+size) of a parquet table —
     the memo-key component that invalidates ``_FLOOR_WIDTH`` entries
-    when a table is rewritten in place.  Same pattern as queries.py's
-    ``_layout_cache_path`` data fingerprint."""
+    when a table is rewritten in place, and the data tag of queries.py's
+    ``_layout_cache_path``."""
     import os
 
     try:

@@ -1048,6 +1048,39 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZPROBE_USER = 7  # the point-lookup user for the pruned z-scan probe
 
 
+def write_zorder_layout(ev: DataFrame, path: str) -> None:
+    """Materialize the events table partitioned by the z-key's top 8
+    bits (``file_id``), keeping only the probe's (xu, yh) columns —
+    the stored layout ``q_zorder_pruned_scan`` probes."""
+    from .functions.layout import zorder_key
+    from .functions.text import md5_int
+
+    x = md5_int(F.col("user_id").cast("string")).bitwiseAND(F.lit(1023))
+    secs = F.unix_timestamp(F.col("ts")) - F.unix_timestamp(
+        F.lit("2024-01-01 00:00:00")
+    )
+    y = F.least(F.floor(secs / F.lit(3600)).cast("long"), F.lit(1023))
+    z = zorder_key(x, y, bits=10)
+    ev.select(
+        x.alias("xu"), y.alias("yh"), F.shiftright(z, 12).alias("file_id")
+    ).write.partitionBy("file_id").mode("overwrite").parquet(path)
+
+
+def zorder_probe_files(user_id: int) -> tuple[int, list[int]]:
+    """(xu, file_ids) of one user's z-order probe: the user point
+    predicate fixes the 4 x-bits of the partition key and leaves the 4
+    y-bits free, so the probe reads 16 of 256 partitions."""
+    import hashlib
+
+    u = int(hashlib.md5(str(user_id).encode()).hexdigest()[:15], 16) & 1023
+    xhi = u >> 6
+    return u, [
+        sum(((xhi >> i) & 1) << (2 * i) for i in range(4))
+        + sum(((yhi >> i) & 1) << (2 * i + 1) for i in range(4))
+        for yhi in range(16)
+    ]
+
+
 def q_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PHYSICAL payoff of the Morton layout: events stored
     partitioned by the z-key's top 8 bits (the ``file_id`` of
@@ -1060,42 +1093,13 @@ def q_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     question.  Mirrors the lsh/ivf pruned-probe pattern: the
     partitioned table is materialized once per sf (at 100 TB it IS the
     stored table), the probe is the per-query cost."""
-    import hashlib
-    import os
-
-    from .functions.layout import zorder_key
-    from .functions.text import md5_int
-
-    path = _layout_cache_path(sf_dir, "ev_zorder", src_table="events")
-    if not os.path.exists(path + "/_SUCCESS"):
-        ev = load(spark, sf_dir, "events")
-        x = md5_int(F.col("user_id").cast("string")).bitwiseAND(
-            F.lit(1023)
-        )
-        secs = F.unix_timestamp(F.col("ts")) - F.unix_timestamp(
-            F.lit("2024-01-01 00:00:00")
-        )
-        y = F.least(
-            F.floor(secs / F.lit(3600)).cast("long"), F.lit(1023)
-        )
-        z = zorder_key(x, y, bits=10)
-        ev.select(
-            x.alias("xu"),
-            y.alias("yh"),
-            F.shiftright(z, 12).alias("file_id"),
-        ).write.partitionBy("file_id").mode("overwrite").parquet(path)
-    u = (
-        int(
-            hashlib.md5(str(ZPROBE_USER).encode()).hexdigest()[:15], 16
-        )
-        & 1023
+    path = _stored_layout(
+        sf_dir,
+        "ev_zorder",
+        lambda p: write_zorder_layout(load(spark, sf_dir, "events"), p),
+        src_table="events",
     )
-    xhi = u >> 6
-    probe_files = [
-        sum(((xhi >> i) & 1) << (2 * i) for i in range(4))
-        + sum(((yhi >> i) & 1) << (2 * i + 1) for i in range(4))
-        for yhi in range(16)
-    ]
+    u, probe_files = zorder_probe_files(ZPROBE_USER)
     part = spark.read.parquet(path)
     return (
         part.where(F.col("file_id").isin(probe_files))
@@ -2255,8 +2259,6 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant is interpolated into the oracle SQL via ``repr`` so both
     engines evaluate the same IEEE-754 expression tree, and the final
     score is rounded to 6 places (the ``cosine_topk`` convention)."""
-    import math
-
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", X.ws_tokens(F.lower(F.col("text"))).alias("toks")
@@ -2279,11 +2281,24 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(len(BM25_QUERY_TERMS))
         ],
     ).first()
-    n = stats["n"]
-    avgdl = stats["total_dl"] / n  # IEEE double division, as in the SQL
+    dfs = [stats[f"df{i}"] for i in range(len(BM25_QUERY_TERMS))]
+    return _bm25_topk(per_doc, stats["n"], stats["total_dl"], dfs, BM25_TOP_K)
+
+
+def _bm25_topk(
+    per_doc: DataFrame, n: int, total_dl: int, dfs: list[int], k: int
+) -> DataFrame:
+    """BM25 scoring + top-k shared by the inline scan and the stored
+    index: ``per_doc`` rows are (doc_id, dl, tf0, tf1, …), one tf
+    column per query term with ``dfs`` its document frequency.  Term
+    contributions are summed in the fixed term order, so both inputs
+    produce bit-identical floats (shared oracle)."""
+    import math
+
+    avgdl = total_dl / n  # IEEE double division, as in the SQL
     score = F.lit(0.0)
-    for i in range(len(BM25_QUERY_TERMS)):
-        idf = math.log((n - stats[f"df{i}"] + 0.5) / (stats[f"df{i}"] + 0.5) + 1.0)
+    for i, df_t in enumerate(dfs):
+        idf = math.log((n - df_t + 0.5) / (df_t + 0.5) + 1.0)
         tf = F.col(f"tf{i}")
         denom = tf + F.lit(BM25_K1) * (
             F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl)
@@ -2293,7 +2308,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.filter(F.col("bm25") > 0.0)
         .orderBy(F.desc("bm25"), F.asc("doc_id"))
-        .limit(BM25_TOP_K)
+        .limit(k)
     )
 
 
@@ -2348,12 +2363,11 @@ def bm25_topk_stored(
     of partitions, never the corpus — (3) takes per-term document
     frequencies from one metadata-scale aggregate over the pruned rows
     (postings hold tf>0 rows only, so COUNT(term) IS the df), and
-    (4) pivots each candidate doc's tfs into fixed columns so the
-    score sums term contributions in the SAME fixed order as the
-    inline query — bit-identical floats, shared oracle.  Docs matching
-    no query term score exactly 0.0 in the inline pass and are
-    filtered there; here they are simply never read."""
-    import math
+    (4) pivots each candidate doc's tfs into fixed columns for the
+    shared scorer (``_bm25_topk``) — bit-identical floats, shared
+    oracle.  Docs matching no query term score exactly 0.0 in the
+    inline pass and are filtered there; here they are simply never
+    read."""
     import zlib
 
     buckets = sorted(
@@ -2363,8 +2377,6 @@ def bm25_topk_stored(
         F.col("bucket").isin(buckets) & F.col("term").isin(list(terms))
     )
     stats = spark.read.parquet(path + "_stats").first()
-    n = stats["n"]
-    avgdl = stats["total_dl"] / n  # IEEE double division, as inline
     dfs = {
         r["term"]: r["cnt"]
         for r in pruned.groupBy("term")
@@ -2382,20 +2394,12 @@ def bm25_topk_stored(
             for i, t in enumerate(terms)
         ],
     )
-    score = F.lit(0.0)
-    for i, t in enumerate(terms):
-        df_t = dfs.get(t, 0)
-        idf = math.log((n - df_t + 0.5) / (df_t + 0.5) + 1.0)
-        tf = F.col(f"tf{i}")
-        denom = tf + F.lit(BM25_K1) * (
-            F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl)
-        )
-        score = score + F.lit(idf) * (tf * F.lit(BM25_K1 + 1.0)) / denom
-    scored = per_doc.select("doc_id", F.round(score, 6).alias("bm25"))
-    return (
-        scored.filter(F.col("bm25") > 0.0)
-        .orderBy(F.desc("bm25"), F.asc("doc_id"))
-        .limit(k)
+    return _bm25_topk(
+        per_doc,
+        stats["n"],
+        stats["total_dl"],
+        [dfs.get(t, 0) for t in terms],
+        k,
     )
 
 
@@ -2404,11 +2408,12 @@ def q_bm25_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     index — bit-equal to ``q_bm25_topk`` (shares its oracle).  The
     layout is written once per corpus (at 100 TB it IS the stored
     retrieval table); the probe reads only the query terms' buckets."""
-    path = _layout_cache_path(sf_dir, "doc_postings_v1", "documents")
-    import os
-
-    if not os.path.exists(path + "/_SUCCESS"):
-        write_postings(load(spark, sf_dir, "documents"), path)
+    path = _stored_layout(
+        sf_dir,
+        "doc_postings_v1",
+        lambda p: write_postings(load(spark, sf_dir, "documents"), p),
+        src_table="documents",
+    )
     return bm25_topk_stored(spark, path)
 
 
@@ -4407,64 +4412,47 @@ def q_sq8_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sq8_ann_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stored-codes SQ8 probe (similarity.sq8_ann_topk_stored):
-    stage 1 scans ONLY the materialized smallint code table (written
-    once per corpus — at 100 TB the stored column, ~4× fewer scan
-    bytes than the full vectors), stage 2 broadcast-joins the k×4
-    survivor ids back to the base table for exact rerank.  Bit-equal
-    to the inline sq8_ann_topk, so it shares that oracle."""
+    """The stored-codes SQ8 probe: ``similarity.sq8_ann_topk`` over the
+    materialized smallint code table (written once per corpus — at
+    100 TB the stored column, ~4× fewer scan bytes than the full
+    vectors).  Bit-equal to the inline probe, so it shares that
+    oracle."""
     emb = load(spark, sf_dir, "embeddings")
-    # prefix versions the layout SCHEMA (v2 = +n2 norm column): the
-    # cache fingerprint covers source data and engine params, not the
-    # written shape, so a schema change must rename or a cached v1
-    # table breaks the probe
-    path = _layout_cache_path(sf_dir, "emb_sq8codes_v2")
-    import os
-
-    if not os.path.exists(path + "/_SUCCESS"):
-        S.write_sq8_codes(emb, path)
-    return S.sq8_ann_topk_stored(spark, path, emb, query_id=0, k=10)
+    # v2 = +n2 norm column (the prefix versions the layout SCHEMA)
+    path = _stored_layout(
+        sf_dir, "emb_sq8codes_v2", lambda p: S.write_sq8_codes(emb, p)
+    )
+    return S.sq8_ann_topk(emb, query_id=0, k=10, path=path)
 
 
 def q_lsh_ann_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The partition-pruned ANN probe over the bucket-partitioned
-    storage layout (the at-scale path; see
-    similarity.lsh_ann_topk_pruned).  The partitioned table is
-    materialized once per sf under /tmp — at 100 TB it IS the stored
-    table (Iceberg bucket partitioning), not a per-query artifact."""
+    """The partition-pruned ANN probe: ``similarity.lsh_ann_topk`` over
+    the bucket-partitioned storage layout (the at-scale path) —
+    at 100 TB it IS the stored table (Iceberg bucket partitioning),
+    not a per-query artifact."""
     emb = load(spark, sf_dir, "embeddings")
-    path = _layout_cache_path(sf_dir, "emb_bucketed")
-    import os
-
-    if not os.path.exists(path + "/_SUCCESS"):
-        S.write_bucket_partitioned(emb, path)
-    return S.lsh_ann_topk_pruned(spark, path, emb, query_id=0, k=10)
+    path = _stored_layout(
+        sf_dir, "emb_bucketed", lambda p: S.write_bucket_partitioned(emb, p)
+    )
+    return S.lsh_ann_topk(emb, query_id=0, k=10, path=path)
 
 
 def _layout_cache_path(
     sf_dir: str, prefix: str, src_table: str = "embeddings"
 ) -> str:
     """Cache location for a materialized partitioned layout.  The tag
-    folds in a DATA fingerprint (mtime+size of the source parquet), not
-    just the path: regenerated test data at the same path must
-    invalidate the layout, or a probe silently reads stale vectors and
-    returns wrong neighbors.  Engine params (planes/quant/centroids) in
-    the name: a layout from an older engine version never satisfies a
-    newer probe."""
+    folds in a DATA fingerprint (``table_fingerprint``: per-file
+    mtime+size of the source parquet), not just the path: regenerated
+    test data at the same path must invalidate the layout, or a probe
+    silently reads stale vectors and returns wrong neighbors.  Engine
+    params (planes/quant/centroids) in the name: a layout from an
+    older engine version never satisfies a newer probe.  The prefix
+    names the layout's written SCHEMA — bump it when that changes."""
     import hashlib
-    import os
 
-    src = f"{sf_dir}/{src_table}.parquet"
-    stat_sig = ""
-    if os.path.isdir(src):
-        parts = sorted(e for e in os.listdir(src) if e.endswith(".parquet"))
-        stat_sig = ";".join(
-            f"{e}:{os.path.getmtime(os.path.join(src, e))}"
-            f":{os.path.getsize(os.path.join(src, e))}"
-            for e in parts
-        )
-    elif os.path.exists(src):
-        stat_sig = f"{os.path.getmtime(src)}:{os.path.getsize(src)}"
+    from .operators.parallelism import table_fingerprint
+
+    stat_sig = table_fingerprint(f"{sf_dir}/{src_table}.parquet")
     tag = hashlib.md5(f"{sf_dir}|{stat_sig}".encode()).hexdigest()[:10]
     return (
         f"/tmp/aes_cache/{prefix}_{tag}"
@@ -4472,12 +4460,30 @@ def _layout_cache_path(
     )
 
 
+def _stored_layout(
+    sf_dir: str,
+    prefix: str,
+    write: Callable[[str], object],
+    src_table: str = "embeddings",
+    done: str = "_SUCCESS",
+) -> str:
+    """Path of the cached layout ``prefix`` of ``src_table``, calling
+    ``write(path)`` first unless ``path/done`` exists (the marker of a
+    completed write)."""
+    import os
+
+    path = _layout_cache_path(sf_dir, prefix, src_table)
+    if not os.path.exists(f"{path}/{done}"):
+        write(path)
+    return path
+
+
 def q_ivf_ann_topk_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-cell IVF probe (nprobe=2, similarity.ivf_ann_topk_nprobe)
-    — the standard recall knob; probing all N_CENTROIDS cells is
-    exactly brute-force (pinned by test)."""
+    """Multi-cell IVF probe (``similarity.ivf_ann_topk``, nprobe=2) —
+    the standard recall knob; probing all N_CENTROIDS cells is exactly
+    brute-force (pinned by test)."""
     emb = load(spark, sf_dir, "embeddings")
-    return S.ivf_ann_topk_nprobe(emb, query_id=0, k=10, nprobe=2)
+    return S.ivf_ann_topk(emb, query_id=0, k=10, nprobe=2)
 
 
 def q_ivf_ann_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4489,17 +4495,19 @@ def q_ivf_ann_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests additionally pin non-increasing within-cell SSE and exact
     within-cell brute-force ranking (test_trained_ivf_codebook)."""
     emb = load(spark, sf_dir, "embeddings")
-    return S.ivf_ann_topk_trained(emb, query_id=0, k=10, iters=2)
+    return S.ivf_ann_topk(
+        emb, query_id=0, k=10, codebook=S.train_ivf_codebook(emb, iters=2)
+    )
 
 
 def q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC ANN (Jégou et al., TPAMI 2011) — the
     last rung of the ANN ladder (brute → LSH → IVF → SQ8 → PQ): train
-    M=4 per-subspace codebooks jointly (two metadata-bound shuffles
+    M=8 per-subspace codebooks jointly (two metadata-bound shuffles
     per Lloyd's iteration for ALL subspaces), encode every vector to M
     centroid ids (16× smaller than float32 at these parameters), scan
     only the codes with a broadcast M·K lookup table of exact integer
-    query-to-centroid dots, exact-rerank the k·4 survivors.  Training,
+    query-to-centroid dots, exact-rerank the k·16 survivors.  Training,
     encoding, and the ADC scan are integer-exact, so the full chain
     replays bit-for-bit as unrolled CTEs (_pq_ann_sql)."""
     emb = load(spark, sf_dir, "embeddings")
@@ -4507,20 +4515,19 @@ def q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pq_ann_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stored-codes PQ probe (similarity.pq_ann_topk_stored): stage 1
-    scans only the materialized M-smallint code table with the stored
-    codebook's broadcast LUT — at 100 TB the scan reads M·4 bits per
-    vector instead of 256 float32 bytes — stage 2 exact-reranks the
-    k·RERANK survivors against the base table.  Bit-equal to the
-    inline pq_ann_topk, so it shares that oracle (the bm25_topk_stored
-    precedent)."""
+    """Stored-codes PQ probe: ``similarity.pq_ann_topk`` over the
+    materialized M-smallint code table and stored codebook — at 100 TB
+    the scan reads M·4 bits per vector instead of 256 float32 bytes.
+    Bit-equal to the inline pq_ann_topk, so it shares that oracle (the
+    bm25_topk_stored precedent)."""
     emb = load(spark, sf_dir, "embeddings")
-    path = _layout_cache_path(sf_dir, "emb_pqcodes_v1")
-    import os
-
-    if not os.path.exists(path + "/codes/_SUCCESS"):
-        S.write_pq_codes(emb, path, iters=2)
-    return S.pq_ann_topk_stored(spark, path, emb, query_id=0, k=10)
+    path = _stored_layout(
+        sf_dir,
+        "emb_pqcodes_v1",
+        lambda p: S.write_pq_codes(emb, p, iters=2),
+        done="codes/_SUCCESS",
+    )
+    return S.pq_ann_topk(emb, query_id=0, k=10, path=path)
 
 
 def q_ivf_ann_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4528,12 +4535,10 @@ def q_ivf_ann_topk_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see similarity.ivf_ann_topk_pruned); same oracle as the inline
     IVF probe — identical results, 1/N_CENTROIDS of the scan."""
     emb = load(spark, sf_dir, "embeddings")
-    path = _layout_cache_path(sf_dir, "emb_cells")
-    import os
-
-    if not os.path.exists(path + "/_SUCCESS"):
-        S.write_cell_partitioned(emb, path)
-    return S.ivf_ann_topk_pruned(spark, path, emb, query_id=0, k=10)
+    path = _stored_layout(
+        sf_dir, "emb_cells", lambda p: S.write_cell_partitioned(emb, p)
+    )
+    return S.ivf_ann_topk_pruned(emb, query_id=0, k=10, path=path)
 
 
 # ---------------------------------------------------------------------------

@@ -137,7 +137,7 @@ def main() -> int:
 
     baseline = run(None)
     salted = run(1_000_000)
-    auto = run("auto")
+    auto = run(auto_threshold)
 
     print(
         json.dumps(

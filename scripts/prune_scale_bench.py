@@ -1,8 +1,9 @@
 """Probe-only A/B for the partition-pruned storage layouts at a scale
 where bytes-scanned shows up as wall time.
 
-The registry's pruned queries (`lsh_ann_topk_pruned`,
-`ivf_ann_topk_pruned`, `zorder_pruned_scan`) cache a partitioned layout
+The registry's stored-layout queries (`lsh_ann_topk_pruned`,
+`sq8_ann_topk_stored`, `ivf_ann_topk_pruned`, `zorder_pruned_scan`)
+cache a materialized layout
 per corpus and the sweep's first-call timing therefore includes the
 one-time materialization; and at sf-scale vector counts (2k-20k) fixed
 Spark overhead dominates the probe either way.  This bench isolates the
@@ -26,7 +27,6 @@ Usage: python scripts/prune_scale_bench.py [--emb-rep 500]
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
 import os
 import sys
@@ -94,9 +94,11 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from article_extractor_spark.functions import similarity as S
-    from article_extractor_spark.functions.layout import zorder_key
-    from article_extractor_spark.functions.text import md5_int
-    from article_extractor_spark.queries import ZPROBE_USER
+    from article_extractor_spark.queries import (
+        ZPROBE_USER,
+        write_zorder_layout,
+        zorder_probe_files,
+    )
     from article_extractor_spark.session import build_session
 
     spark = build_session(app_name="prune-bench")
@@ -117,16 +119,7 @@ def main() -> int:
     if not os.path.exists(sq8_path + "/_SUCCESS"):
         S.write_sq8_codes(emb, sq8_path)
     if not os.path.exists(zorder_path + "/_SUCCESS"):
-        ev = spark.read.parquet(ev_path)
-        x = md5_int(F.col("user_id").cast("string")).bitwiseAND(F.lit(1023))
-        secs = F.unix_timestamp(F.col("ts")) - F.unix_timestamp(
-            F.lit("2024-01-01 00:00:00")
-        )
-        y = F.least(F.floor(secs / F.lit(3600)).cast("long"), F.lit(1023))
-        z = zorder_key(x, y, bits=10)
-        ev.select(
-            x.alias("xu"), y.alias("yh"), F.shiftright(z, 12).alias("file_id")
-        ).write.partitionBy("file_id").mode("overwrite").parquet(zorder_path)
+        write_zorder_layout(spark.read.parquet(ev_path), zorder_path)
 
     # warmup (JVM + python workers)
     force(S.cosine_topk(emb.limit(1000)))
@@ -141,33 +134,27 @@ def main() -> int:
         lambda: force(S.lsh_ann_topk(emb)), args.trials
     )
     result["lsh_pruned_probe_sec"] = timed_min(
-        lambda: force(S.lsh_ann_topk_pruned(spark, bucket_path, emb)),
+        lambda: force(S.lsh_ann_topk(emb, path=bucket_path)),
         args.trials,
     )
     result["sq8_inline_sec"] = timed_min(
         lambda: force(S.sq8_ann_topk(emb)), args.trials
     )
     result["sq8_stored_probe_sec"] = timed_min(
-        lambda: force(S.sq8_ann_topk_stored(spark, sq8_path, emb)),
+        lambda: force(S.sq8_ann_topk(emb, path=sq8_path)),
         args.trials,
     )
     result["ivf_inline_sec"] = timed_min(
         lambda: force(S.ivf_ann_topk(emb)), args.trials
     )
     result["ivf_pruned_probe_sec"] = timed_min(
-        lambda: force(S.ivf_ann_topk_pruned(spark, cell_path, emb)),
+        lambda: force(S.ivf_ann_topk_pruned(emb, path=cell_path)),
         args.trials,
     )
 
     # --- zorder: identical predicate over the identical partitioned
     # files, with vs without the partition-pruning IN filter ---
-    u = int(hashlib.md5(str(ZPROBE_USER).encode()).hexdigest()[:15], 16) & 1023
-    xhi = u >> 6
-    probe_files = [
-        sum(((xhi >> i) & 1) << (2 * i) for i in range(4))
-        + sum(((yhi >> i) & 1) << (2 * i + 1) for i in range(4))
-        for yhi in range(16)
-    ]
+    u, probe_files = zorder_probe_files(ZPROBE_USER)
     part = spark.read.parquet(zorder_path)
 
     def zq(pruned: bool):

@@ -161,14 +161,16 @@ def mutate(rng: random.Random, s: str) -> str:
 
 
 def _spans_of(html: str, stdlib: bool):
-    from article_extractor_spark.dom import parser as parser_mod
+    from article_extractor_spark.dom.parser import parse_html_stdlib
+    from article_extractor_spark.extract import pipeline as pipeline_mod
 
-    prev = parser_mod._USE_STDLIB_TOKENIZER
-    parser_mod._USE_STDLIB_TOKENIZER = stdlib
+    prev = pipeline_mod.parse_html
+    if stdlib:
+        pipeline_mod.parse_html = parse_html_stdlib
     try:
         r = extract_document(html, url="https://fuzz.example/doc")
     finally:
-        parser_mod._USE_STDLIB_TOKENIZER = prev
+        pipeline_mod.parse_html = prev
     return (
         r["success"],
         [

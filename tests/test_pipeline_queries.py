@@ -234,7 +234,7 @@ def test_trained_ivf_codebook(spark):
             (F.col("cell") == qcell) & (F.col("vec_id") != 0)
         ).collect()
     }
-    got = S.ivf_ann_topk_trained(emb, query_id=0, k=10, iters=2).collect()
+    got = S.ivf_ann_topk(emb, query_id=0, k=10, codebook=codebook).collect()
     assert all(r["vec_id"] in cell_members for r in got)
     brute = {
         r["vec_id"]: r["cosine"]
@@ -325,7 +325,7 @@ def test_ivf_full_probe_equals_brute_force(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     full = [
         (r["vec_id"], r["cosine"])
-        for r in S.ivf_ann_topk_nprobe(
+        for r in S.ivf_ann_topk(
             emb, query_id=0, k=10, nprobe=S.N_CENTROIDS
         ).collect()
     ]
@@ -335,8 +335,8 @@ def test_ivf_full_probe_equals_brute_force(spark):
     ]
     assert full == brute
     # widening the probe can only improve (or keep) the top-k scores
-    p1 = [r["cosine"] for r in S.ivf_ann_topk_nprobe(emb, nprobe=1).collect()]
-    p2 = [r["cosine"] for r in S.ivf_ann_topk_nprobe(emb, nprobe=2).collect()]
+    p1 = [r["cosine"] for r in S.ivf_ann_topk(emb, nprobe=1).collect()]
+    p2 = [r["cosine"] for r in S.ivf_ann_topk(emb, nprobe=2).collect()]
     assert all(b >= a for a, b in zip(sorted(p1, reverse=True), sorted(p2, reverse=True)))
 
 
@@ -381,9 +381,7 @@ def test_sq8_stored_probe_matches_inline(spark, tmp_path):
     assert rng >= 1
     stored = [
         (r["vec_id"], r["cosine"])
-        for r in S.sq8_ann_topk_stored(
-            spark, path, emb, query_id=0, k=10
-        ).collect()
+        for r in S.sq8_ann_topk(emb, query_id=0, k=10, path=path).collect()
     ]
     inline = [
         (r["vec_id"], r["cosine"])
@@ -410,16 +408,73 @@ def test_ivf_pruned_nprobe_matches_inline(spark, tmp_path):
         pruned = [
             (r["vec_id"], r["cosine"])
             for r in S.ivf_ann_topk_pruned(
-                spark, path, emb, query_id=0, k=10, nprobe=np_
+                emb, query_id=0, k=10, nprobe=np_, path=path
             ).collect()
         ]
         inline = [
             (r["vec_id"], r["cosine"])
-            for r in S.ivf_ann_topk_nprobe(
+            for r in S.ivf_ann_topk(
                 emb, query_id=0, k=10, nprobe=np_
             ).collect()
         ]
         assert pruned == inline, np_
+
+
+def test_ann_probes_reject_missing_query(spark, tmp_path):
+    """A query_id absent from the embeddings is a ValueError naming it —
+    on the inline and the stored input alike — never an empty answer
+    or a bare IndexError; and the PQ stored layout fixed its Lloyd's
+    iteration count at write time, so passing ``iters`` with ``path``
+    is refused instead of silently ignored."""
+    from article_extractor_spark.functions import similarity as S
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    missing = emb.agg({"vec_id": "max"}).first()[0] + 1
+    buckets = str(tmp_path / "buckets")
+    S.write_bucket_partitioned(emb, buckets)
+    cells = str(tmp_path / "cells")
+    S.write_cell_partitioned(emb, cells)
+    for probe in (
+        lambda: S.lsh_ann_topk(emb, query_id=missing),
+        lambda: S.lsh_ann_topk(emb, query_id=missing, path=buckets),
+        lambda: S.ivf_ann_topk_pruned(emb, query_id=missing, path=cells),
+    ):
+        with pytest.raises(ValueError, match=f"query_id {missing} "):
+            probe()
+    with pytest.raises(ValueError, match="iters"):
+        S.pq_ann_topk(emb, iters=2, path=str(tmp_path / "pq"))
+
+
+def test_layout_cache_tracks_source_data(spark, tmp_path):
+    """The stored-layout cache path folds in a fingerprint of the source
+    table's DATA, not just its path: rewriting the table in place with
+    different rows must move the cache path, and the stored probe must
+    then answer for the new rows — a stale layout would silently
+    return the old neighbours."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from article_extractor_spark import queries as Q
+    from article_extractor_spark.functions import similarity as S
+
+    sf = str(tmp_path / "sf")
+    src = f"{sf}/embeddings.parquet"
+    full = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    paths, results = [], []
+    try:
+        for keep in (F.col("vec_id") % 2 == 0, F.col("vec_id") % 3 == 0):
+            full.where(keep).write.mode("overwrite").parquet(src)
+            paths.append(Q._layout_cache_path(sf, "emb_sq8codes_v2"))
+            stored = Q.QUERY_FNS["sq8_ann_topk_stored"](spark, sf).collect()
+            inline = S.sq8_ann_topk(spark.read.parquet(src)).collect()
+            assert [tuple(r) for r in stored] == [tuple(r) for r in inline]
+            results.append(stored)
+        assert paths[0] != paths[1]
+        assert results[0] != results[1]
+    finally:
+        for p in paths:
+            shutil.rmtree(p, ignore_errors=True)
 
 
 def test_sample_frames_rawv_unit(spark):
@@ -661,10 +716,10 @@ def test_minhash_lsh_recall_against_exact_ground_truth(spark):
 
 
 def test_null_text_produces_no_pairs(spark):
-    """Docs with NULL text must form NO LSH candidate pairs under
-    either kernel: their NULL signatures would otherwise all share
-    band_hash = md5_int('') (concat_ws skips NULL elements) and pair
-    with each other in every band."""
+    """Docs with NULL text must form NO LSH candidate pairs: their NULL
+    signatures would otherwise all share band_hash = md5_int('')
+    (concat_ws skips NULL elements) and pair with each other in every
+    band."""
     from article_extractor_spark.functions import dedup as D
 
     rows = [
@@ -674,12 +729,8 @@ def test_null_text_produces_no_pairs(spark):
         ("4", "real text body one two three"),
     ]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    for kernel in ("pandas", "jvm"):
-        pairs = {
-            (r.doc_a, r.doc_b)
-            for r in D.minhash_lsh_pairs(df, kernel=kernel).collect()
-        }
-        assert pairs == {("3", "4")}, (kernel, pairs)
+    pairs = {(r.doc_a, r.doc_b) for r in D.minhash_lsh_pairs(df).collect()}
+    assert pairs == {("3", "4")}, pairs
 
 
 def test_minhash_pandas_kernel_matches_jvm_expression(spark):
@@ -717,11 +768,6 @@ def test_minhash_pandas_kernel_matches_jvm_expression(spark):
         D.minhash_signature_pudf()(F.col("text")).alias("pd")
     ).collect()[0]
     assert null_sig["pd"] is None
-    # full-pipeline equality: identical candidate pairs either way
-    a = D.minhash_lsh_pairs(corpus, kernel="jvm").toPandas()
-    b = D.minhash_lsh_pairs(corpus, kernel="pandas").toPandas()
-    key = lambda df: sorted(map(tuple, df.values.tolist()))  # noqa: E731
-    assert key(a) == key(b)
     # simhash kernels likewise value-identical (null-safe compare)
     for docs in (battery, corpus.select("doc_id", "text")):
         sboth = docs.select(

@@ -599,7 +599,7 @@ def test_curate_benchmark_table_and_collision_free_ids(spark, tmp_path):
 
 
 def test_auto_giant_threshold_resolution_and_routing(spark):
-    """giant_threshold='auto' derives the salting threshold from the
+    """resolve_giant_threshold derives the salting threshold from the
     corpus size distribution: a uniform corpus resolves to None (single
     scan — no regression possible), a giant-tailed one picks a
     threshold that isolates the tail, and the salted output is
@@ -637,7 +637,9 @@ def test_auto_giant_threshold_resolution_and_routing(spark):
     thr = resolve_giant_threshold(skewed)
     assert thr is not None
     assert GIANT_MIN_BYTES <= thr <= len(giant_body) + 200
-    auto_out = extract_articles(skewed, giant_threshold="auto")
+    auto_out = extract_articles(
+        skewed, giant_threshold=resolve_giant_threshold(skewed)
+    )
     plain_out = extract_articles(skewed)
     cols = ["doc_id", "word_count", "success", "spans_emitted"]
     a = {tuple(r) for r in auto_out.select(cols).collect()}
