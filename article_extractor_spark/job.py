@@ -519,29 +519,16 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "curate":
+        from .pipeline import docs_from_extraction
         from .queries import curation_verdicts
 
-        result = tableio.read_table(spark, args.table)
-        # document text = its extracted text spans, in order (the
-        # curation attributes run over what extraction KEPT, not the
-        # raw HTML).  The funnel runs directly on the STRING doc_id —
-        # dup canonicals pick the lexicographic-min id, collision-free
-        # by construction (a derived digit-suffix ordinal collided
-        # across sources, e.g. 'siteA-42'/'siteB-42' — ADVICE r3) —
-        # and the benchmark slice is the explicit --benchmark-table,
-        # never inferred from low ids.
-        docs = result.select(
-            "doc_id",
-            F.array_join(
-                F.transform(
-                    F.filter(
-                        F.col("spans"), lambda s: s["kind"] == "text"
-                    ),
-                    lambda s: s["text"],
-                ),
-                " ",
-            ).alias("text"),
-        )
+        # The funnel runs directly on the STRING doc_id — dup
+        # canonicals pick the lexicographic-min id, collision-free by
+        # construction (a derived digit-suffix ordinal collided across
+        # sources, e.g. 'siteA-42'/'siteB-42' — ADVICE r3) — and the
+        # benchmark slice is the explicit --benchmark-table, never
+        # inferred from low ids.
+        docs = docs_from_extraction(tableio.read_table(spark, args.table))
         benchmark = (
             spark.read.parquet(args.benchmark_table)
             if args.benchmark_table

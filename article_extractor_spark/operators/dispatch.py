@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .extraction import SPAN_TYPE, pa_span_list
+
 MIXED_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -29,19 +31,7 @@ MIXED_SCHEMA = T.StructType(
         T.StructField("title", T.StringType()),
         T.StructField("word_count", T.IntegerType()),
         T.StructField("n_spans", T.IntegerType()),
-        T.StructField(
-            "spans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("kind", T.StringType()),
-                        T.StructField("text", T.StringType()),
-                        T.StructField("media_ref", T.StringType()),
-                        T.StructField("offset", T.IntegerType()),
-                    ]
-                )
-            ),
-        ),
+        T.StructField("spans", SPAN_TYPE),
         T.StructField("success", T.BooleanType()),
         T.StructField("error", T.StringType()),
     ]
@@ -50,8 +40,6 @@ MIXED_SCHEMA = T.StructType(
 
 def _pa_schema():
     import pyarrow as pa
-
-    from .pdf import pa_span_list
 
     return pa.schema(
         [

@@ -28,6 +28,25 @@ SPAN_TYPE = T.ArrayType(
     )
 )
 
+
+def pa_span_list():
+    """Arrow type of ``SPAN_TYPE``, the interleaved span model every
+    operator that emits spans through Arrow shares (this module,
+    ``operators.pdf`` and ``operators.dispatch``)."""
+    import pyarrow as pa
+
+    return pa.list_(
+        pa.struct(
+            [
+                ("kind", pa.string()),
+                ("text", pa.string()),
+                ("media_ref", pa.string()),
+                ("offset", pa.int32()),
+            ]
+        )
+    )
+
+
 ARTICLE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
@@ -58,22 +77,9 @@ ARTICLE_SCHEMA = T.StructType(
 )
 
 
-_PA_SPAN = None
-
-
 def _arrow_schema(emit_metadata: bool = False):
     import pyarrow as pa
 
-    span = pa.list_(
-        pa.struct(
-            [
-                ("kind", pa.string()),
-                ("text", pa.string()),
-                ("media_ref", pa.string()),
-                ("offset", pa.int32()),
-            ]
-        )
-    )
     fields = [
         ("doc_id", pa.string()),
         ("url", pa.string()),
@@ -81,7 +87,7 @@ def _arrow_schema(emit_metadata: bool = False):
         ("author", pa.string()),
         ("date_published", pa.string()),
         ("language", pa.string()),
-        ("spans", span),
+        ("spans", pa_span_list()),
         ("word_count", pa.int32()),
         ("excerpt", pa.string()),
         ("success", pa.bool_()),

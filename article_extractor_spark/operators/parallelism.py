@@ -65,8 +65,8 @@ _TARGET_ROWS_PER_TASK = 8192
 # decisions are memoized for repeated load() calls inside one session.
 # Callers fold a DATA fingerprint (table_fingerprint) into cache_key —
 # a bare path would keep a stale width after the table is rewritten at
-# the same location (make_bigsf / test fixtures regenerating /tmp
-# corpora mid-session, review r4).
+# the same location (scale-up replication or test fixtures regenerating
+# /tmp corpora mid-session, review r4).
 _FLOOR_WIDTH: dict[tuple[str, str], int] = {}
 
 

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .extraction import SPAN_TYPE, pa_span_list
+
 PDF_ARTICLE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -31,41 +33,11 @@ PDF_ARTICLE_SCHEMA = T.StructType(
         T.StructField("title", T.StringType()),
         T.StructField("word_count", T.IntegerType()),
         T.StructField("n_spans", T.IntegerType()),
-        T.StructField(
-            "spans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("kind", T.StringType()),
-                        T.StructField("text", T.StringType()),
-                        T.StructField("media_ref", T.StringType()),
-                        T.StructField("offset", T.IntegerType()),
-                    ]
-                )
-            ),
-        ),
+        T.StructField("spans", SPAN_TYPE),
         T.StructField("success", T.BooleanType()),
         T.StructField("error", T.StringType()),
     ]
 )
-
-
-def pa_span_list():
-    """Arrow type of the shared interleaved span model — single source
-    of truth for every operator that emits spans through Arrow (this
-    module and ``operators.dispatch``)."""
-    import pyarrow as pa
-
-    return pa.list_(
-        pa.struct(
-            [
-                ("kind", pa.string()),
-                ("text", pa.string()),
-                ("media_ref", pa.string()),
-                ("offset", pa.int32()),
-            ]
-        )
-    )
 
 
 def pdf_article_row(r: dict) -> dict:

@@ -274,37 +274,82 @@ def run_pipeline(
     re-executes its upstream (the ADVICE-r3 curate-summary lesson,
     applied between every stage).
     """
+    t0 = time.time()
+    _, stages = _run_stages(
+        spark,
+        corpus,
+        out,
+        None,
+        run_id=run_id,
+        n_buckets=n_buckets,
+        waves=waves,
+        min_word_count=min_word_count,
+        chunk_tokens=chunk_tokens,
+        benchmark_path=benchmark_path,
+        resume=resume,
+    )
+    return _finish_manifest({"run_id": run_id, **stages}, t0, manifest_path)
+
+
+def _run_stages(
+    spark: SparkSession,
+    corpus: DataFrame | str,
+    base: str,
+    state: str | None,
+    *,
+    run_id: str,
+    n_buckets: int | None,
+    waves: int,
+    min_word_count: int,
+    chunk_tokens: int,
+    benchmark_path: str | None,
+    resume: bool,
+    base_pos: int = 0,
+    base_tok: int = 0,
+) -> tuple[DataFrame, dict]:
+    """The stage body both pipelines run under ``base``: extraction →
+    verdicts → shuffled pack (offset by ``base_pos`` / ``base_tok``) →
+    examples, each stage reading back the parquet the previous one
+    wrote.  ``state`` is the committed dedup state directory the
+    verdicts probe (``curation_verdicts(stored_ck=, index=)``), or
+    ``None`` for the full funnel.  Returns the curated (doc_id, text)
+    documents and the stage counts of the manifest."""
     from .job import run_extraction_job
     from .queries import curation_verdicts
     from .sources import tableio
 
-    if n_buckets is None:
-        n_buckets = tableio.DEFAULT_BUCKETS
-    t0 = time.time()
     ex_stats = run_extraction_job(
         spark,
         corpus,
-        f"{out}/extracted",
+        f"{base}/extracted",
         run_id=run_id,
-        n_buckets=n_buckets,
+        n_buckets=(
+            tableio.DEFAULT_BUCKETS if n_buckets is None else n_buckets
+        ),
         waves=waves,
         min_word_count=min_word_count,
         resume=resume,
     )
 
-    extracted = tableio.read_table(spark, f"{out}/extracted").where(
+    extracted = tableio.read_table(spark, f"{base}/extracted").where(
         F.col("success")
     )
     docs = docs_from_extraction(extracted)
     benchmark = (
         spark.read.parquet(benchmark_path) if benchmark_path else None
     )
+    stored = {}
+    if state is not None:
+        stored = {
+            "stored_ck": spark.read.parquet(f"{state}/exact_keys"),
+            "index": spark.read.parquet(f"{state}/band_index"),
+        }
     verdicts = curation_verdicts(
-        docs, benchmark=benchmark, bench_ids_below=None
+        docs, benchmark=benchmark, bench_ids_below=None, **stored
     )
-    verdicts.write.mode("overwrite").parquet(f"{out}/verdicts")
+    verdicts.write.mode("overwrite").parquet(f"{base}/verdicts")
 
-    verdicts_rb = spark.read.parquet(f"{out}/verdicts")
+    verdicts_rb = spark.read.parquet(f"{base}/verdicts")
     status_counts = {
         r["status"]: r["n"]
         for r in verdicts_rb.groupBy("status")
@@ -318,25 +363,29 @@ def run_pipeline(
         "doc_id",
     )
 
-    pack = shuffled_pack(kept_docs, chunk_tokens=chunk_tokens)
-    pack.write.mode("overwrite").parquet(f"{out}/pack")
+    pack = shuffled_pack(
+        kept_docs,
+        chunk_tokens=chunk_tokens,
+        base_pos=base_pos,
+        base_tok=base_tok,
+    )
+    pack.write.mode("overwrite").parquet(f"{base}/pack")
 
-    pack_rb = spark.read.parquet(f"{out}/pack")
+    pack_rb = spark.read.parquet(f"{base}/pack")
     chunks = materialize_chunks(
         kept_docs, pack_rb, chunk_tokens=chunk_tokens
     )
-    chunks.write.mode("overwrite").parquet(f"{out}/examples")
+    chunks.write.mode("overwrite").parquet(f"{base}/examples")
 
     ex_agg = (
-        spark.read.parquet(f"{out}/examples")
+        spark.read.parquet(f"{base}/examples")
         .agg(
             F.count(F.lit(1)).alias("n_examples"),
             F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("tokens"),
         )
         .first()
     )
-    manifest = {
-        "run_id": run_id,
+    return docs, {
         "extraction": ex_stats,
         "curation": dict(sorted(status_counts.items())),
         "kept_docs": sum(
@@ -345,8 +394,13 @@ def run_pipeline(
         "chunk_tokens": chunk_tokens,
         "n_examples": int(ex_agg["n_examples"]),
         "packed_tokens": int(ex_agg["tokens"]),
-        "wall_sec": round(time.time() - t0, 2),
     }
+
+
+def _finish_manifest(
+    manifest: dict, t0: float, manifest_path: str | None
+) -> dict:
+    manifest["wall_sec"] = round(time.time() - t0, 2)
     if manifest_path:
         with open(manifest_path, "w") as fh:
             json.dump(manifest, fh, indent=2, sort_keys=True)
@@ -430,131 +484,6 @@ def committed_epochs(spark: SparkSession, out: str) -> list[int]:
         name = s.getPath().getName()
         out_epochs.append(int(name.split("_")[2]))
     return sorted(out_epochs)
-
-
-def incremental_verdicts(
-    spark: SparkSession,
-    docs: DataFrame,
-    out: str,
-    benchmark: DataFrame | None = None,
-) -> DataFrame:
-    """Curation verdicts for ONE new wave against the PERSISTED dedup
-    state under ``out/state`` — the file-backed wrapper of
-    ``incremental_verdict_frame`` used by ``run_pipeline_wave``."""
-    return incremental_verdict_frame(
-        docs,
-        spark.read.parquet(f"{out}/state/exact_keys"),
-        spark.read.parquet(f"{out}/state/band_index"),
-        benchmark=benchmark,
-    )
-
-
-def incremental_verdict_frame(
-    docs: DataFrame,
-    stored_ck: DataFrame,
-    index: DataFrame,
-    benchmark: DataFrame | None = None,
-) -> DataFrame:
-    """Curation verdicts for ONE new wave against dedup state — same
-    status vocabulary and priority as ``queries.curation_verdicts``
-    (quality:<reason> → exact_dup → near_dup → contaminated →
-    kept:<split>), but every corpus-sized input is the WAVE, never the
-    stored corpus:
-
-    - quality/split/decontamination are per-document (O(wave));
-    - exact dup: wave content keys probe ``stored_ck`` (ck, canon —
-      thin equi-join on the md5 key) and dedup within the wave;
-    - near dup: the wave is MinHash-signed once; its bands probe the
-      capped band ``index`` (``incremental_minhash_pairs``) for
-      stored matches, and ``minhash_lsh_pairs`` over the wave alone
-      catches wave-internal clusters.
-    """
-    from .functions import dedup as D
-    from .functions import text as X
-    from .queries import (
-        DECONTAM_N,
-        SPLIT_BUCKETS,
-        SPLIT_TRAIN_LT,
-        SPLIT_VAL_LT,
-        _quality_metrics,
-        _quality_reason_expr,
-    )
-
-    reason = _quality_reason_expr()
-    qf = _quality_metrics(docs).select(
-        "doc_id", reason.alias("reason"), (reason == "ok").alias("keep")
-    )
-
-    stored_ck = stored_ck.select(
-        "ck", F.col("canon").alias("stored_canon")
-    )
-    ck = docs.select(
-        "doc_id", F.md5(D.normalized_text(F.col("text"))).alias("ck")
-    )
-    wave_canon = ck.groupBy("ck").agg(F.min("doc_id").alias("wave_canon"))
-    ec = (
-        ck.join(stored_ck, "ck", "left")
-        .join(wave_canon, "ck")
-        .select(
-            "doc_id",
-            F.coalesce("stored_canon", "wave_canon").alias("exact_canon"),
-        )
-    )
-
-    cross = (
-        D.incremental_minhash_pairs(docs, index)
-        .groupBy("new_doc")
-        .agg(F.min("dup_of").alias("cross_canon"))
-        .withColumnRenamed("new_doc", "doc_id")
-    )
-    within = D.connected_components(D.minhash_lsh_pairs(docs))
-    nd = (
-        docs.select("doc_id")
-        .join(cross, "doc_id", "left")
-        .join(within, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("cross_canon", "label", "doc_id").alias("nd_canon"),
-        )
-    )
-
-    if benchmark is not None:
-        de = D.benchmark_overlap(docs, benchmark, n=DECONTAM_N).select(
-            "doc_id", F.lit(True).alias("contaminated")
-        )
-    else:
-        de = docs.select("doc_id").limit(0).select(
-            "doc_id", F.lit(True).alias("contaminated")
-        )
-
-    split_bucket = (
-        X.md5_int(F.concat(F.lit("split:"), F.col("doc_id").cast("string")))
-        % SPLIT_BUCKETS
-    )
-    sp = docs.select(
-        "doc_id",
-        F.when(split_bucket < SPLIT_TRAIN_LT, "train")
-        .when(split_bucket < SPLIT_VAL_LT, "val")
-        .otherwise("test")
-        .alias("split"),
-    )
-
-    joined = (
-        docs.select("doc_id")
-        .join(qf, "doc_id")
-        .join(ec, "doc_id")
-        .join(nd, "doc_id")
-        .join(de, "doc_id", "left")
-        .join(sp, "doc_id")
-    )
-    status = (
-        F.when(~F.col("keep"), F.concat(F.lit("quality:"), F.col("reason")))
-        .when(F.col("doc_id") != F.col("exact_canon"), F.lit("exact_dup"))
-        .when(F.col("doc_id") != F.col("nd_canon"), F.lit("near_dup"))
-        .when(F.col("contaminated").isNotNull(), F.lit("contaminated"))
-        .otherwise(F.concat(F.lit("kept:"), F.col("split")))
-    )
-    return joined.select("doc_id", status.alias("status"))
 
 
 def _pack_bases(
@@ -661,12 +590,6 @@ def run_pipeline_wave(
     in its commit marker): the token base continues that epoch's chunk
     grid, so a different size raises ``ValueError`` before anything
     is written."""
-    from .job import run_extraction_job
-    from .queries import curation_verdicts
-    from .sources import tableio
-
-    if n_buckets is None:
-        n_buckets = tableio.DEFAULT_BUCKETS
     t0 = time.time()
     done = committed_epochs(spark, out)
     if epoch is None:
@@ -683,97 +606,37 @@ def run_pipeline_wave(
                 f"chunk_tokens={chunk_tokens} differs from "
                 f"chunk_tokens={committed} committed by epoch {prior[-1]}"
             )
-    base = _epoch_dir(out, epoch)
     run_id = run_id or f"wave-{epoch}"
-
-    ex_stats = run_extraction_job(
+    base_pos, base_tok = _pack_bases(spark, out, prior, chunk_tokens)
+    # the first committed wave runs the full funnel (it IS the corpus)
+    # and seeds the dedup state; later waves probe it
+    docs, stages = _run_stages(
         spark,
         corpus,
-        f"{base}/extracted",
+        _epoch_dir(out, epoch),
+        f"{out}/state" if prior else None,
         run_id=run_id,
         n_buckets=n_buckets,
         waves=waves,
         min_word_count=min_word_count,
-        resume=resume,
-    )
-    extracted = tableio.read_table(spark, f"{base}/extracted").where(
-        F.col("success")
-    )
-    docs = docs_from_extraction(extracted)
-    benchmark = (
-        spark.read.parquet(benchmark_path) if benchmark_path else None
-    )
-    if not prior:
-        # first committed wave: the full funnel (it IS the corpus),
-        # seeding the dedup state below
-        verdicts = curation_verdicts(
-            docs, benchmark=benchmark, bench_ids_below=None
-        )
-    else:
-        verdicts = incremental_verdicts(
-            spark, docs, out, benchmark=benchmark
-        )
-    verdicts.write.mode("overwrite").parquet(f"{base}/verdicts")
-
-    verdicts_rb = spark.read.parquet(f"{base}/verdicts")
-    status_counts = {
-        r["status"]: r["n"]
-        for r in verdicts_rb.groupBy("status")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    kept_docs = docs.join(
-        verdicts_rb.where(F.col("status").startswith("kept:")).select(
-            "doc_id"
-        ),
-        "doc_id",
-    )
-
-    base_pos, base_tok = _pack_bases(spark, out, prior, chunk_tokens)
-    pack = shuffled_pack(
-        kept_docs,
         chunk_tokens=chunk_tokens,
+        benchmark_path=benchmark_path,
+        resume=resume,
         base_pos=base_pos,
         base_tok=base_tok,
     )
-    pack.write.mode("overwrite").parquet(f"{base}/pack")
-
-    pack_rb = spark.read.parquet(f"{base}/pack")
-    chunks = materialize_chunks(
-        kept_docs, pack_rb, chunk_tokens=chunk_tokens
-    )
-    chunks.write.mode("overwrite").parquet(f"{base}/examples")
-
     _update_dedup_state(spark, docs, out, epoch, chunk_tokens)
-
-    ex_agg = (
-        spark.read.parquet(f"{base}/examples")
-        .agg(
-            F.count(F.lit(1)).alias("n_examples"),
-            F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("tokens"),
-        )
-        .first()
+    return _finish_manifest(
+        {
+            "run_id": run_id,
+            "epoch": epoch,
+            **stages,
+            "base_train_pos": base_pos,
+            "base_token": base_tok,
+        },
+        t0,
+        manifest_path,
     )
-    manifest = {
-        "run_id": run_id,
-        "epoch": epoch,
-        "extraction": ex_stats,
-        "curation": dict(sorted(status_counts.items())),
-        "kept_docs": sum(
-            n for s, n in status_counts.items() if s.startswith("kept:")
-        ),
-        "chunk_tokens": chunk_tokens,
-        "base_train_pos": base_pos,
-        "base_token": base_tok,
-        "n_examples": int(ex_agg["n_examples"]),
-        "packed_tokens": int(ex_agg["tokens"]),
-        "wall_sec": round(time.time() - t0, 2),
-    }
-    if manifest_path:
-        with open(manifest_path, "w") as fh:
-            json.dump(manifest, fh, indent=2, sort_keys=True)
-            fh.write("\n")
-    return manifest
 
 
 def compact_state(spark: SparkSession, out: str) -> dict:

@@ -65,8 +65,9 @@ def load(
         )
 
         # fingerprint in the memo key: a table regenerated at the same
-        # path (make_bigsf, test fixtures) must re-derive its floor
-        # width, not inherit the stale decision (review r4)
+        # path (scale-up corpus replication, test fixtures) must
+        # re-derive its floor width, not inherit the stale decision
+        # (review r4)
         df = ensure_compute_parallelism(
             df,
             cache_key=f"{path}|{table_fingerprint(path)}",
@@ -531,6 +532,9 @@ def curation_verdicts(
     docs: DataFrame,
     benchmark: DataFrame | None = None,
     bench_ids_below: int | None = DECONTAM_BENCH_IDS,
+    *,
+    stored_ck: DataFrame | None = None,
+    index: DataFrame | None = None,
 ) -> DataFrame:
     """DataFrame-level curation funnel over any (doc_id, text) table —
     the form the job CLI's ``curate`` subcommand runs over extraction
@@ -547,6 +551,18 @@ def curation_verdicts(
       ``None`` (the job CLI does) to disable the id-slice convention;
       with both None, decontamination is skipped entirely.
 
+    Committed dedup state (``run_pipeline_wave``; epoch semantics in
+    pipeline.py) makes ``docs`` ONE new wave, and no input is
+    corpus-sized:
+
+    - ``stored_ck`` (ck, canon): the exact canonical is the stored
+      canon of a doc's content key, else the min wave id per key.
+    - ``index``: a capped band index (``dedup.capped_band_index``);
+      the near-dup canonical is the min stored band match
+      (``incremental_minhash_pairs``), else the within-wave label.
+
+    With neither, the plan is the one-shot funnel's.
+
     ``doc_id`` may be any orderable type — dup canonicals are the MIN
     id per duplicate group, so string ids pick the lexicographic
     smallest.  No numeric ordinal is derived (a digit-suffix ordinal
@@ -562,15 +578,31 @@ def curation_verdicts(
         F.md5(D.normalized_text(F.col("text"))).alias("ck"),
     )
     ec_canon = ec.groupBy("ck").agg(F.min("doc_id").alias("exact_canon"))
-    ec = ec.join(ec_canon, "ck").select("doc_id", "exact_canon")
-    labels = D.connected_components(D.minhash_lsh_pairs(docs))
-    nd = (
-        docs.select("doc_id")
-        .join(labels, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("label", "doc_id").alias("nd_canon"),
+    exact_canon = F.col("exact_canon")
+    if stored_ck is not None:
+        ec = ec.join(
+            stored_ck.select("ck", F.col("canon").alias("stored_canon")),
+            "ck",
+            "left",
         )
+        exact_canon = F.coalesce("stored_canon", "exact_canon")
+    ec = ec.join(ec_canon, "ck").select(
+        "doc_id", exact_canon.alias("exact_canon")
+    )
+    labels = D.connected_components(D.minhash_lsh_pairs(docs))
+    nd = docs.select("doc_id")
+    nd_canon = ["label", "doc_id"]
+    if index is not None:
+        cross = (
+            D.incremental_minhash_pairs(docs, index)
+            .groupBy("new_doc")
+            .agg(F.min("dup_of").alias("cross_canon"))
+            .withColumnRenamed("new_doc", "doc_id")
+        )
+        nd = nd.join(cross, "doc_id", "left")
+        nd_canon.insert(0, "cross_canon")
+    nd = nd.join(labels, "doc_id", "left").select(
+        "doc_id", F.coalesce(*nd_canon).alias("nd_canon")
     )
     if bench_ids_below is not None:
         corpus_side = docs.where(F.col("doc_id") >= bench_ids_below)
@@ -3288,8 +3320,6 @@ def q_pipeline_verdicts_incremental(
     clusters canonicalize by min label.  The oracle re-derives all of
     it — wave-side band probe, within-wave recursive-CTE components,
     stored-key coalescing — in SQL."""
-    from .pipeline import incremental_verdict_frame
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     is_wave = F.col("doc_id") % WAVE_MOD == 0
     corpus, wave = docs.where(~is_wave), docs.where(is_wave)
@@ -3302,8 +3332,8 @@ def q_pipeline_verdicts_incremental(
     )
     index = D.capped_band_index(corpus)
     bench = corpus.where(F.col("doc_id") < DECONTAM_BENCH_IDS)
-    return incremental_verdict_frame(
-        wave, stored_ck, index, benchmark=bench
+    return curation_verdicts(
+        wave, bench, None, stored_ck=stored_ck, index=index
     )
 
 
@@ -8685,7 +8715,8 @@ def _pipeline_verdicts_incremental_sql() -> str:
     probes it; within-wave components come from a recursive CTE over
     wave-only capped pairs; exact canonicals coalesce stored over
     within-wave; decontamination grams come from the STORED benchmark
-    docs only.  Mirrors ``pipeline.incremental_verdict_frame``."""
+    docs only.  Mirrors ``curation_verdicts`` with ``stored_ck`` and
+    ``index`` given."""
     norm = _NORM.format(c="text")
     return f"""
 WITH RECURSIVE {_minhash_sql()},
@@ -9203,6 +9234,11 @@ FROM agg a JOIN rel r ON a.qlabel = r.label
 ORACLE_SQL["retrieval_eval"] = _retrieval_eval_sql()
 
 QUERY_FNS: dict[str, Query] = {
+    "pipeline_verdicts_incremental": q_pipeline_verdicts_incremental,
+    "pipeline_pack_incremental": q_pipeline_pack_incremental,
+    "pipeline_chunks_incremental": q_pipeline_chunks_incremental,
+    "band_index_compact": q_band_index_compact,
+    "ivf_append_wave": q_ivf_append_wave,
     "manifest_fold": q_manifest_fold,
     "latest_event_per_user": q_latest_event_per_user,
     "asof_join": q_asof_join,
@@ -9282,11 +9318,6 @@ QUERY_FNS: dict[str, Query] = {
     "training_order": q_training_order,
     "pipeline_pack": q_pipeline_pack,
     "pipeline_chunks": q_pipeline_chunks,
-    "pipeline_pack_incremental": q_pipeline_pack_incremental,
-    "pipeline_chunks_incremental": q_pipeline_chunks_incremental,
-    "pipeline_verdicts_incremental": q_pipeline_verdicts_incremental,
-    "band_index_compact": q_band_index_compact,
-    "ivf_append_wave": q_ivf_append_wave,
     "chunk_windows": q_chunk_windows,
     "heavy_hitters": q_heavy_hitters,
     "winnow_fingerprints": q_winnow_fingerprints,

@@ -11,8 +11,7 @@ claim that matters at 100 TB: with the layout PRE-MATERIALIZED (it is
 the stored table), a probe that prunes partitions beats the identical
 probe that scans everything.
 
-Input: deterministic R-fold replication (make_bigsf pattern, key
-offsets, no RNG) of the sf0.1 embeddings/events tables — default 500x
+Input: deterministic R-fold replication (key offsets, no RNG) of the sf0.1 embeddings/events tables — default 500x
 -> 1,000,000 vectors and 3,000,000 events.  Replication preserves the
 bucket/cell distribution shape, so the pruned fraction is the same as
 the source corpus's.

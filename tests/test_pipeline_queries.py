@@ -1688,9 +1688,10 @@ def test_curation_verdicts_on_adversarial_corpus(spark):
     flood keeps only its min-id canonical, a near-dup of the flood
     text is cut by the cluster canonical, a doc sharing an 8-gram
     with the benchmark slice is contaminated, and junk fails
-    quality."""
+    quality.  Empty committed dedup state changes no status."""
     from pyspark.sql import functions as F
 
+    from article_extractor_spark.functions import dedup as D
     from article_extractor_spark.queries import (
         QUERY_FNS,
         curation_verdicts,
@@ -1730,18 +1731,25 @@ def test_curation_verdicts_on_adversarial_corpus(spark):
         + [(22, "tiny junk")]
     )
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r["status"]
-        for r in curation_verdicts(df).collect()
+    # the same corpus against EMPTY committed dedup state: a wave with
+    # nothing stored must get the state-free funnel's statuses
+    empty_state = {
+        "stored_ck": spark.createDataFrame([], "ck string, canon long"),
+        "index": D.capped_band_index(df.limit(0)),
     }
-    for i in range(0, 10):
-        assert got[i] == "benchmark", (i, got[i])
-    assert got[10].startswith("kept:"), got[10]  # flood canonical
-    for i in range(11, 20):
-        assert got[i] == "exact_dup", (i, got[i])
-    assert got[20] == "near_dup", got[20]
-    assert got[21] == "contaminated", got[21]
-    assert got[22].startswith("quality:"), got[22]
+    for state in ({}, empty_state):
+        got = {
+            r["doc_id"]: r["status"]
+            for r in curation_verdicts(df, **state).collect()
+        }
+        for i in range(0, 10):
+            assert got[i] == "benchmark", (i, got[i])
+        assert got[10].startswith("kept:"), got[10]  # flood canonical
+        for i in range(11, 20):
+            assert got[i] == "exact_dup", (i, got[i])
+        assert got[20] == "near_dup", got[20]
+        assert got[21] == "contaminated", got[21]
+        assert got[22].startswith("quality:"), got[22]
 
 
 def test_quality_lexical_matches_python_reference(spark):
