@@ -15,7 +15,7 @@ Layout:
     sources/    table IO (bucketed Parquet, Iceberg-ready) + synthetic corpus
     functions/  reusable pyspark Column helpers (URL/text functions)
     plans/      named query registry (used by __spark_entry__ and bench)
-    streaming/  Structured Streaming wrapper of the extraction stage
+    streaming/  AvailableNow streams whose micro-batches are batch-job epochs
 """
 
 __version__ = "0.1.0"

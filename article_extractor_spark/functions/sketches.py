@@ -138,23 +138,14 @@ def hll_estimate(
     )
 
 
-def rho_of(h: int) -> int:
-    """Pure-Python twin of ``hll_rho`` for driver/state-side updates
-    (streaming ingest): rank of the post-index bits of a 60-bit md5
-    int."""
-    w = h >> HLL_BITS
-    return _RHO_CAP if w == 0 else _RHO_CAP - w.bit_length()
-
-
 def estimate_from_registers(regs) -> float:
     """Pure-Python twin of the ``hll_estimate`` arithmetic over a full
     m-length register vector — shared constants, same raw/linear
-    branch, same pre-rounded table — used by the streaming operator so
-    a streaming sketch and the batch query agree on identical
-    registers.  (The one residual divergence surface is Python
-    round-half-even vs Spark round-half-up on the raw branch at an
-    exact 5e-7 boundary — measure-zero on real sums; tests compare
-    with 1e-6 tolerance.)"""
+    branch, same pre-rounded table — used by the extraction job to
+    estimate from its driver-side register maxes.  (The one residual
+    divergence surface is Python round-half-even vs Spark round-half-up
+    on the raw branch at an exact 5e-7 boundary — measure-zero on real
+    sums; tests compare with 1e-6 tolerance.)"""
     zero = sum(1 for r in regs if r == 0)
     sum_scaled = sum(1 << (_RHO_CAP - int(r)) for r in regs)
     raw = HLL_EST_NUM / sum_scaled

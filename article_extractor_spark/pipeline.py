@@ -473,10 +473,7 @@ def committed_epochs(spark: SparkSession, out: str) -> list[int]:
         f"{out}/state/_epoch_*_committed"
     )
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    try:
-        statuses = fs.globStatus(jpath)
-    except Exception:
-        return []
+    statuses = fs.globStatus(jpath)
     if statuses is None:
         return []
     out_epochs = []

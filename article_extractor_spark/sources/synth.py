@@ -15,6 +15,10 @@ import random
 import re
 from collections.abc import Iterator
 
+from pyspark.sql import types as T
+
+from ..operators.extraction import SPAN_TYPE
+
 _WORDS = (
     "analysis baseline cluster corpus dataset engine extraction feature "
     "gradient heuristic inference kernel latency metadata network outlier "
@@ -26,6 +30,16 @@ _WORDS = (
 
 _RX_IMG_TAG = re.compile(r"<img\b[^>]*>", re.IGNORECASE)
 _RX_IMG_SRC = re.compile(r'src="([^"]*)"', re.IGNORECASE)
+
+# the corpus table's columns: what ``corpus_dataframe`` generates and
+# what the streaming ingest reads without inferring a schema
+CORPUS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType()),
+        T.StructField("url", T.StringType()),
+        T.StructField("spans", SPAN_TYPE),
+    ]
+)
 
 TEMPLATE_WEIGHTS = (
     # (name, weight) — FIXTURES.md §5 mixture
@@ -297,20 +311,10 @@ def corpus_dataframe(spark, n: int, seed: int = 42, partitions: int | None = Non
     corpus never passes through the driver.
     """
     import pandas as pd
-    from pyspark.sql import types as T
 
-    from ..operators.extraction import SPAN_TYPE
     from ..shipping import ensure_shipped
 
     ensure_shipped(spark)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("spans", SPAN_TYPE),
-        ]
-    )
 
     def gen(batches):
         for batch in batches:
@@ -330,4 +334,4 @@ def corpus_dataframe(spark, n: int, seed: int = 42, partitions: int | None = Non
             yield pd.DataFrame(rows, columns=["doc_id", "url", "spans"])
 
     rng_df = spark.range(0, n, numPartitions=partitions or max(32, n // 2000))
-    return rng_df.mapInPandas(gen, schema=schema)
+    return rng_df.mapInPandas(gen, schema=CORPUS_SCHEMA)

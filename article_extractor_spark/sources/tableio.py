@@ -312,7 +312,9 @@ def read_committed_buckets(spark: SparkSession, output_path: str) -> set[int]:
     lpath = lineage_path(output_path)
     if not table_exists(spark, lpath):
         return set()
-    lineage = spark.read.parquet(lpath)
+    # explicit schema: a commit that died before its rename leaves
+    # only a hidden temp file, and inference over it would throw
+    lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(lpath)
     rows = lineage.select("bucket").distinct().collect()
     return {r["bucket"] for r in rows}
 
@@ -388,9 +390,12 @@ def append_lineage_rows(
     jdir = jvm.org.apache.hadoop.fs.Path(lineage_path(output_path))
     fs = jdir.getFileSystem(spark._jsc.hadoopConfiguration())
     fs.mkdirs(jdir)
-    out = fs.create(
-        jvm.org.apache.hadoop.fs.Path(f"{lineage_path(output_path)}/{name}"),
-        True,
-    )
+    # write under a hidden name (Spark's file listing skips "."-files),
+    # then rename into place: a crash mid-write leaves no truncated
+    # part file, so the bucket stays uncommitted and resumable
+    tmp = jvm.org.apache.hadoop.fs.Path(jdir, f".{name}")
+    out = fs.create(tmp, True)
     out.write(bytearray(buf.getvalue()))
     out.close()
+    if not fs.rename(tmp, jvm.org.apache.hadoop.fs.Path(jdir, name)):
+        raise OSError(f"lineage commit: rename of {tmp.toString()} failed")

@@ -273,7 +273,7 @@ def main() -> int:
         # processes (scripts/scaling_bench.py --cluster)
         ("scaling_cluster", "SCALING_CLUSTER.json"),
         # the box's own Spark-free multi-process ceiling at the same
-        # shape (scripts/control_bench.py)
+        # shape (a committed result; BASELINE.md gives its method)
         ("scaling_control", "CONTROL.json"),
     ):
         p = Path(__file__).resolve().parent / fname

@@ -349,6 +349,37 @@ def test_markdown_sink_failure_leaves_bucket_uncommitted(
     assert manifest.count() == N_DOCS
 
 
+def test_lineage_commit_crash_mid_write_leaves_bucket_uncommitted(
+    spark, corpus_path, tmp_path, monkeypatch
+):
+    """Lineage is the commit record, so a crash after its file is
+    opened and before it is closed must leave no truncated part file:
+    the buckets stay uncommitted, the lineage stays readable, and a
+    resume commits every document once."""
+    out = str(tmp_path / "out")
+
+    def crash(*_args):
+        raise OSError("injected crash mid-write")
+
+    # append_lineage_rows serializes the buffer with ``bytearray``
+    # between fs.create() and close()
+    monkeypatch.setattr(tableio, "bytearray", crash, raising=False)
+    with pytest.raises(OSError, match="injected"):
+        run_extraction_job(
+            spark, corpus_path, out, n_buckets=N_BUCKETS, waves=1
+        )
+    monkeypatch.undo()
+    assert tableio.read_committed_buckets(spark, out) == set()
+
+    stats = run_extraction_job(
+        spark, corpus_path, out, n_buckets=N_BUCKETS, waves=1
+    )
+    assert stats["buckets_skipped"] == 0
+    assert stats["docs_processed"] == N_DOCS
+    lineage = spark.read.parquet(tableio.lineage_path(out))
+    assert lineage.agg(F.sum("docs_in")).first()[0] == N_DOCS
+
+
 def test_manifest_rerun_converges_no_duplicates(
     spark, corpus_path, tmp_path
 ):

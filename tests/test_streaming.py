@@ -1,165 +1,21 @@
-"""Structured Streaming surfaces: incremental extraction with
-checkpointed resume, and watermarked windowed aggregation."""
+"""Structured Streaming surfaces: every micro-batch is one epoch of
+the batch extraction job or wave pipeline, and watermarked windowed
+aggregation."""
 
 from __future__ import annotations
 
-import pytest
+import os
+from functools import reduce
+
 from pyspark.sql import functions as F
 
+from article_extractor_spark.job import run_extraction_job
 from article_extractor_spark.sources import tableio
 from article_extractor_spark.sources.synth import corpus_dataframe
 from article_extractor_spark.streaming.ingest import (
-    streaming_exact_dedup,
-    streaming_extraction,
+    streaming_extraction_job,
     windowed_event_rates,
 )
-
-
-@pytest.fixture(scope="module")
-def stream_corpus(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("stream") / "corpus")
-    df = corpus_dataframe(spark, 60, seed=7, partitions=4)
-    df = tableio.with_bucket(df, "doc_id", 4)
-    tableio.write_bucketed(df, path, dynamic=False)
-    return path
-
-
-def test_streaming_extraction_drains_backlog(spark, stream_corpus, tmp_path):
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    q = streaming_extraction(
-        spark, stream_corpus, out, ckpt, min_word_count=10
-    )
-    q.awaitTermination(120)
-    result = spark.read.parquet(out)
-    assert result.count() == 60
-    assert result.where(~F.col("success")).count() == 0
-
-    # resume: no new files → a second AvailableNow run adds nothing
-    q2 = streaming_extraction(
-        spark, stream_corpus, out, ckpt, min_word_count=10
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == 60
-
-
-def test_streaming_extraction_picks_up_new_files(
-    spark, stream_corpus, tmp_path
-):
-    out = str(tmp_path / "out2")
-    ckpt = str(tmp_path / "ckpt2")
-    streaming_extraction(
-        spark, stream_corpus, out, ckpt, min_word_count=10
-    ).awaitTermination(120)
-
-    # land a new batch of corpus files, re-trigger
-    more = corpus_dataframe(spark, 20, seed=11, partitions=2)
-    more = tableio.with_bucket(more, "doc_id", 4)
-    more.write.mode("append").partitionBy("bucket").parquet(stream_corpus)
-
-    streaming_extraction(
-        spark, stream_corpus, out, ckpt, min_word_count=10
-    ).awaitTermination(120)
-    assert spark.read.parquet(out).count() == 80
-
-
-def _run_dedup_stream(spark, src, ckpt, out):
-    stream = (
-        spark.readStream.schema("doc_id string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        streaming_exact_dedup(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return {r["doc_id"] for r in spark.read.parquet(out).collect()}
-
-
-def test_streaming_dedup_drops_cross_batch_duplicates(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): a duplicate
-    arriving in a LATER micro-batch — or after a checkpointed restart —
-    is dropped; stateless dropDuplicates cannot do either."""
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ck")
-    spark.createDataFrame(
-        [("a1", "hello world"), ("a2", "unique one")], ["doc_id", "text"]
-    ).coalesce(1).write.parquet(src)
-    spark.createDataFrame(
-        [("b1", "HELLO   world"), ("b2", "another text")],
-        ["doc_id", "text"],
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    got = _run_dedup_stream(spark, src, ckpt, str(tmp_path / "dout"))
-    # exactly one of the two normalized-identical docs was admitted
-    assert len({"a1", "b1"} & got) == 1
-    assert {"a2", "b2"} <= got
-
-    # restart from the checkpoint with one more file: the old key is
-    # STILL remembered (state survives the restart), new content passes
-    spark.createDataFrame(
-        [("c1", " hello  WORLD"), ("c2", "fresh content")],
-        ["doc_id", "text"],
-    ).coalesce(1).write.mode("append").parquet(src)
-    got2 = _run_dedup_stream(spark, src, ckpt, str(tmp_path / "dout"))
-    assert "c2" in got2
-    assert "c1" not in got2
-
-
-def test_streaming_dedup_state_is_bounded_under_flood():
-    """The GroupState is a fixed-size Bloom filter: a repeated-key
-    flood (or any number of distinct keys) must leave the serialized
-    state at exactly BLOOM_BITS/8 bytes — the round-2 design held an
-    exact key set that grew without bound."""
-    import hashlib
-
-    import pandas as pd
-
-    from article_extractor_spark.streaming.ingest import (
-        BLOOM_BITS,
-        _dedup_state_fn,
-    )
-
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self.get = None
-
-        def update(self, value):
-            self.get = value
-            self.exists = True
-
-    state = FakeState()
-    sizes = []
-    admitted = 0
-    flood_key = hashlib.md5(b"the same doc").hexdigest()
-    for batch in range(5):
-        keys = [flood_key] * 20_000 + [
-            hashlib.md5(f"doc-{batch}-{i}".encode()).hexdigest()
-            for i in range(1_000)
-        ]
-        pdf = pd.DataFrame(
-            {
-                "doc_id": [f"d{batch}-{i}" for i in range(len(keys))],
-                "content_key": keys,
-            }
-        )
-        out = pd.concat(list(_dedup_state_fn(None, iter([pdf]), state)))
-        admitted += len(out)
-        sizes.append(len(state.get[0]))
-        # the flood key was admitted at most once ever
-        assert (out["content_key"] == flood_key).sum() == (
-            1 if batch == 0 else 0
-        )
-    assert set(sizes) == {BLOOM_BITS // 8}
-    # ~all distinct keys admitted (Bloom fp ≈ 0 at this fill level)
-    assert admitted >= 5_000 * 0.99 + 1
 
 
 def test_windowed_event_rates_matches_batch_semantics(spark):
@@ -198,163 +54,68 @@ def test_windowed_event_rates_runs_as_stream(spark, tmp_path):
     ]
 
 
-def _run_hll_stream(spark, src, ckpt, out):
-    from article_extractor_spark.streaming.ingest import (
-        streaming_distinct_counts,
-    )
-
-    stream = (
-        spark.readStream.schema("source string, item string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        streaming_distinct_counts(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.read.parquet(out).collect()
-    # latest emission per source = the one with the largest n_seen
-    latest = {}
-    for r in rows:
-        if (
-            r["source"] not in latest
-            or r["n_seen"] > latest[r["source"]]["n_seen"]
-        ):
-            latest[r["source"]] = r
-    return latest
+def _epochs(out):
+    path = os.path.join(out, "epochs")
+    if not os.path.isdir(path):
+        return []
+    return sorted(int(e) for e in os.listdir(path))
 
 
-def test_streaming_hll_matches_batch_sketch(spark, tmp_path):
-    """The streaming register update is the batch sketch's max-merge,
-    so after draining all batches (including across a checkpointed
-    restart) the streaming estimate equals the batch ``hll_estimate``
-    over the union of everything seen."""
-    from article_extractor_spark.functions.sketches import hll_estimate
-
-    src = str(tmp_path / "hsrc")
-    ckpt = str(tmp_path / "hck")
-    out = str(tmp_path / "hout")
-    b1 = [("s1", f"u{i}") for i in range(300)] + [
-        ("s2", f"v{i}") for i in range(50)
-    ]
-    b2 = [("s1", f"u{i}") for i in range(150, 450)]  # 150 overlap
-    spark.createDataFrame(b1, ["source", "item"]).coalesce(1).write.parquet(
-        src
-    )
-    spark.createDataFrame(b2, ["source", "item"]).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    latest = _run_hll_stream(spark, src, ckpt, out)
-
-    union = spark.createDataFrame(b1 + b2, ["source", "item"])
-    batch = {
-        r["source"]: r
-        for r in hll_estimate(
-            union, "item", group_cols=("source",)
-        ).collect()
-    }
-    for s in ("s1", "s2"):
-        assert (
-            abs(latest[s]["est_distinct"] - batch[s]["est_distinct"])
-            < 1e-6
-        ), s
-
-    # restart from the checkpoint with one more batch: state survives,
-    # the estimate keeps tracking the batch sketch over the full union
-    b3 = [("s2", f"w{i}") for i in range(200)]
-    spark.createDataFrame(b3, ["source", "item"]).coalesce(
-        1
-    ).write.mode("append").parquet(src)
-    latest2 = _run_hll_stream(spark, src, ckpt, out)
-    batch2 = {
-        r["source"]: r
-        for r in hll_estimate(
-            spark.createDataFrame(b1 + b2 + b3, ["source", "item"]),
-            "item",
-            group_cols=("source",),
-        ).collect()
-    }
-    assert (
-        abs(latest2["s2"]["est_distinct"] - batch2["s2"]["est_distinct"])
-        < 1e-6
+def _read_epochs(spark, out, suffix=""):
+    """Union of one read per epoch: Spark refuses one read over several
+    roots that each hold ``bucket=`` directories."""
+    return reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            spark.read.parquet(f"{out}/epochs/{e}/extracted{suffix}")
+            for e in _epochs(out)
+        ],
     )
 
 
-def test_streaming_hll_state_is_fixed_size():
-    """The GroupState is exactly HLL_M bytes however many items
-    arrive."""
-    import pandas as pd
+def _drain_extraction(spark, src, out, ckpt):
+    q = streaming_extraction_job(
+        spark, src, out, ckpt, n_buckets=4, min_word_count=10
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
 
-    from article_extractor_spark.functions.sketches import HLL_M
-    from article_extractor_spark.streaming.ingest import _hll_state_fn
 
-    class FakeState:
-        exists = False
-        get = None
-
-        def update(self, value):
-            self.get = value
-            self.exists = True
-
-    state = FakeState()
-    for wave in range(3):
-        pdf = pd.DataFrame(
-            {"item": [f"k{i % 7}-{wave}" for i in range(10_000)]}
-        )
-        list(_hll_state_fn(("s1",), iter([pdf]), state))
-        assert len(state.get[0]) == HLL_M
-    assert state.get[1] == 30_000
+def _land(df, path):
+    tableio.with_bucket(df, "doc_id", 4).write.mode("append").partitionBy(
+        "bucket"
+    ).parquet(path)
 
 
 def test_streaming_job_lineage_and_batch_equivalence(spark, tmp_path):
-    """End-to-end production shape: two crawl waves land as files; the
-    AvailableNow stream extracts each wave once, appends bucketed
-    output, and commits per-micro-batch lineage.  The final table must
-    be span-identical to a batch run_extraction_job over the same
-    corpus, and the lineage totals must account for every document."""
-    from article_extractor_spark.job import run_extraction_job
-    from article_extractor_spark.streaming.ingest import (
-        streaming_extraction_job,
-    )
-
+    """Stream == batch: two crawl waves land as files and each
+    AvailableNow run extracts only the new ones as one epoch of the
+    batch job; a third run with no new files adds nothing.  The epochs
+    are span-identical to one batch run_extraction_job over the same
+    corpus, and their lineage accounts for every document under one
+    run id per micro-batch."""
     corpus = str(tmp_path / "corpus")
-    w1 = corpus_dataframe(spark, 40, seed=3, partitions=2)
-    w1 = tableio.with_bucket(w1, "doc_id", 4)
-    tableio.write_bucketed(w1, corpus, dynamic=False)
-
     out = str(tmp_path / "stream_out")
     ckpt = str(tmp_path / "ckpt")
-    streaming_extraction_job(
-        spark, corpus, out, ckpt, n_buckets=4, min_word_count=10
-    ).awaitTermination(180)
-    lin1 = spark.read.parquet(tableio.lineage_path(out))
-    assert lin1.agg(F.sum("docs_in")).first()[0] == 40
-
-    # wave 2 lands (distinct ids), same checkpoint → only new files run
-    w2 = corpus_dataframe(spark, 15, seed=9, partitions=2).withColumn(
-        "doc_id", F.concat(F.lit("w2-"), F.col("doc_id"))
+    _land(corpus_dataframe(spark, 40, seed=3, partitions=2), corpus)
+    _drain_extraction(spark, corpus, out, ckpt)
+    _land(
+        corpus_dataframe(spark, 15, seed=9, partitions=2).withColumn(
+            "doc_id", F.concat(F.lit("w2-"), F.col("doc_id"))
+        ),
+        corpus,
     )
-    w2 = tableio.with_bucket(w2, "doc_id", 4)
-    w2.write.mode("append").partitionBy("bucket").parquet(corpus)
-    streaming_extraction_job(
-        spark, corpus, out, ckpt, n_buckets=4, min_word_count=10
-    ).awaitTermination(180)
+    _drain_extraction(spark, corpus, out, ckpt)
+    _drain_extraction(spark, corpus, out, ckpt)  # nothing new landed
 
-    stream_out = spark.read.parquet(out)
+    assert _epochs(out) == [0, 1]
+    stream_out = _read_epochs(spark, out)
     assert stream_out.count() == 55
-    lin = spark.read.parquet(tableio.lineage_path(out))
+    lin = _read_epochs(spark, out, "_lineage")
     assert lin.agg(F.sum("docs_in")).first()[0] == 55
     assert lin.agg(F.sum("docs_ok")).first()[0] == 55
-    # each wave committed under its own micro-batch run_id
-    assert lin.select("run_id").distinct().count() >= 2
+    assert lin.select("run_id").distinct().count() == 2
 
-    # batch equivalence: same corpus through the batch job
     batch_out = str(tmp_path / "batch_out")
     run_extraction_job(
         spark, corpus, batch_out, n_buckets=4, waves=2, min_word_count=10
@@ -369,56 +130,56 @@ def test_streaming_job_lineage_and_batch_equivalence(spark, tmp_path):
 
 
 def test_streaming_batch_replay_is_idempotent(spark, tmp_path):
-    """A micro-batch replayed after a crash-before-checkpoint (same
-    batch_id, same data) must REPLACE its own output, not append a
-    duplicate copy — each batch owns its batch=<id> partition dir."""
-    from article_extractor_spark.streaming.ingest import (
-        _stream_commit_batch,
-    )
-
-    docs = corpus_dataframe(spark, 12, seed=5, partitions=2)
+    """A micro-batch replayed after a crash between its write and its
+    checkpoint commit (same batch id, same files) resumes into its own
+    epoch: committed buckets are skipped, so the table and its lineage
+    hold one copy."""
+    src = str(tmp_path / "src")
     out = str(tmp_path / "out")
-    for _ in range(2):  # first attempt + crash replay
-        _stream_commit_batch(
-            docs, 0, output_path=out, n_buckets=4,
-            run_id="replay", min_word_count=10,
-        )
-    got = spark.read.parquet(out)
+    ckpt = str(tmp_path / "ckpt")
+    _land(corpus_dataframe(spark, 12, seed=5, partitions=2), src)
+    _drain_extraction(spark, src, out, ckpt)
+    # the crash: batch 0's offsets are logged, its commit is not
+    os.remove(os.path.join(ckpt, "commits", "0"))
+    os.remove(os.path.join(ckpt, "commits", ".0.crc"))
+    _drain_extraction(spark, src, out, ckpt)
+
+    assert _epochs(out) == [0]
+    got = _read_epochs(spark, out)
     assert got.count() == 12
     assert got.select("doc_id").distinct().count() == 12
-    lin = spark.read.parquet(tableio.lineage_path(out))
+    lin = _read_epochs(spark, out, "_lineage")
     assert lin.agg(F.sum("docs_in")).first()[0] == 12
 
 
 def test_streaming_job_empty_batch_does_not_fail_query(spark, tmp_path):
-    """An empty micro-batch (zero-row input file) writes batch=<id>/
-    with no part files; the lineage read-back must use the known
-    schema and commit zero rows instead of raising AnalysisException
-    and killing the whole streaming query (ADVICE r4)."""
-    from article_extractor_spark.streaming.ingest import (
-        streaming_extraction_job,
-    )
-
+    """The stream schema is a constant, so a stream starts on an empty
+    source directory; a zero-row file is an empty micro-batch that
+    writes no epoch; the next landed wave is one epoch."""
     src = str(tmp_path / "empty-src")
-    corpus_dataframe(spark, 4, seed=5, partitions=1).limit(0).write.parquet(
-        src
-    )
     out = str(tmp_path / "empty-out")
     ckpt = str(tmp_path / "empty-ckpt")
-    q = streaming_extraction_job(spark, src, out, ckpt, n_buckets=4)
-    q.awaitTermination(120)
-    assert q.exception() is None
-    # no lineage rows were committed for the empty batch
-    lpath = tableio.lineage_path(out)
-    if tableio.table_exists(spark, lpath):
-        assert spark.read.parquet(lpath).count() == 0
+    os.makedirs(src)
+    _drain_extraction(spark, src, out, ckpt)
+    assert _epochs(out) == []
+
+    corpus_dataframe(spark, 4, seed=5, partitions=1).limit(0).write.mode(
+        "append"
+    ).parquet(src)
+    _drain_extraction(spark, src, out, ckpt)
+    assert _epochs(out) == []
+
+    _land(corpus_dataframe(spark, 6, seed=5, partitions=1), src)
+    _drain_extraction(spark, src, out, ckpt)
+    assert len(_epochs(out)) == 1
+    assert _read_epochs(spark, out).count() == 6
 
 
 def _wave_span_df(spark, n, start, seed):
-    from pyspark.sql import types as T
-
-    from article_extractor_spark.operators.extraction import SPAN_TYPE
-    from article_extractor_spark.sources.synth import iter_documents
+    from article_extractor_spark.sources.synth import (
+        CORPUS_SCHEMA,
+        iter_documents,
+    )
 
     rows = [
         (
@@ -431,14 +192,7 @@ def _wave_span_df(spark, n, start, seed):
         )
         for d in iter_documents(n, seed=seed, start=start)
     ]
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("spans", SPAN_TYPE),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(rows, CORPUS_SCHEMA)
 
 
 def test_streaming_pipeline_matches_batch_waves(spark, tmp_path):
