@@ -10,10 +10,15 @@ Dataflow (one map stage + one tiny metrics shuffle; SURVEY.md §3.1/§4):
       → mapInArrow extraction          # the single vectorized UDF stage
       → write bucketed output          # append into wiped bucket dirs
       → pruned read-back → lineage     # per-bucket metrics commit
+                           + HLL       # one grouping-sets aggregate
 
 Wave execution: buckets are processed in ``waves`` groups, each wave
 committing its lineage after its output lands — a killed job resumes at
-wave granularity, re-running only uncommitted buckets.
+wave granularity, re-running only uncommitted buckets.  By default the
+wave count follows the input bytes: one wave per cores × 6 scan splits
+of at most 256 MiB, so a small corpus pays the per-wave fixed cost
+(a write job plus one read-back aggregate) once, and a huge one still
+commits in many resumable waves.
 """
 
 from __future__ import annotations
@@ -25,7 +30,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.sketches import HLL_M, estimate_from_registers, hll_rho
+from .functions.sketches import HLL_M, estimate_from_registers
 from .functions.text import md5_int
 from .operators.extraction import (
     extract_articles,
@@ -36,6 +41,21 @@ from .session import build_session
 from .sources import tableio
 from .sources.synth import corpus_dataframe
 
+# Scan-split sizing of a path corpus: about this many tasks per core
+# per wave, each split at most this many bytes.  The default wave
+# count is the number of such full-width rounds the corpus fills.
+_TASKS_PER_CORE = 6
+_MAX_SPLIT_BYTES = 256 << 20
+# What one file adds to a scan split when Spark packs files into
+# splits.  Spark's default (4 MB) exceeds the 1 MB split floor, which
+# makes every bucket file under 1 MB a task of its own: a 2,000-doc
+# corpus of 32 files of 50-110 KB would run 32 tasks of ~60 docs, each
+# paying more fixed scan/Arrow/commit cost than kernel time (6 packed
+# tasks measured ~1 s faster per run on 4 cores).  Small enough that
+# such files pack up to the split target; large enough that a file
+# this small is never cut into byte ranges.
+_FILE_OPEN_COST = 128 << 10
+
 
 def run_extraction_job(
     spark: SparkSession,
@@ -44,7 +64,7 @@ def run_extraction_job(
     *,
     run_id: str = "run-0",
     n_buckets: int = tableio.DEFAULT_BUCKETS,
-    waves: int = 4,
+    waves: int | None = None,
     min_word_count: int = 150,
     resume: bool = True,
     emit_html: bool = False,
@@ -57,13 +77,21 @@ def run_extraction_job(
     Returns job stats: buckets processed/skipped, docs, wall seconds,
     plus the write path and skew strategy that actually ran.
 
+    ``waves=None`` derives the wave count from the input: for a path
+    corpus ``ceil(total_bytes / (cores × 6 × 256 MiB))``, at least 1 —
+    each wave then holds about 6 scan splits per core, none larger than
+    256 MiB (the same sizing as the scan-split target below); a
+    DataFrame corpus has no known size and runs one wave.  An explicit
+    ``waves`` is used as given (capped at the uncommitted bucket count).
+
     Lineage: each wave's bucket rows are computed from a COLUMN-PRUNED
     read-back of the output the wave just wrote (metric ints + short
     strings, ~1% of output bytes — parquet never materializes
-    spans/html here), aggregated by codegen'd hash aggregates.  The
-    read-back doubles as a write verification: a bucket commits only
-    if its rows are readable.  The run's distinct-document HLL
-    registers come from the same pruned read-back.
+    spans/html here).  The run's distinct-document HLL registers come
+    from the SAME aggregate: one grouping-sets pass over the read-back
+    yields both the bucket rows and the register maxima
+    (``tableio.lineage_and_registers``).  The read-back doubles as a
+    write verification: a bucket commits only if its rows are readable.
 
     The job decides its skew strategy and write path from what it
     observes; no caller overrides either:
@@ -96,7 +124,7 @@ def run_extraction_job(
     """
     if markdown_dir:
         emit_markdown = True
-    prev_mpb: str | None = None
+    prev_conf: dict[str, str] = {}
     bucket_provenance = False
     if isinstance(corpus, str):
         corpus_path = corpus
@@ -104,17 +132,34 @@ def run_extraction_job(
         # With the default 128m maxPartitionBytes a small corpus
         # collapses to a handful of map tasks and extra cores idle
         # (measured: local[32] no faster than local[8] on 240 MB).
-        # Target ~6 waves of tasks per core (fine-grained enough that
+        # Target ~6 tasks per core per wave (fine-grained enough that
         # giant-document skew can't leave a long straggler tail),
         # clamped to [1m, 256m]; at 100 TB the clamp leaves the normal
-        # large-scan behavior.  The session-global override is restored
+        # large-scan behavior.  Files pack into splits at a small open
+        # cost (_FILE_OPEN_COST), so the target, not the file count,
+        # sets the task count.  The session-global overrides are restored
         # on exit (try/finally below) so later reads on a shared session
         # don't inherit tiny scan partitions.
         total_bytes = tableio.dir_size_bytes(spark, corpus)
         cores = spark.sparkContext.defaultParallelism
-        target = min(max(total_bytes // (cores * 6), 1 << 20), 256 << 20)
-        prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
+        target = min(
+            max(total_bytes // (cores * _TASKS_PER_CORE), 1 << 20),
+            _MAX_SPLIT_BYTES,
+        )
+        if waves is None:
+            # as many waves as the corpus fills full-width rounds of
+            # max-size splits: below cores × 1.5 GiB that is one wave
+            waves = max(
+                1,
+                -(-total_bytes // (cores * _TASKS_PER_CORE * _MAX_SPLIT_BYTES)),
+            )
+        scan_conf = {
+            "spark.sql.files.maxPartitionBytes": str(target),
+            "spark.sql.files.openCostInBytes": str(_FILE_OPEN_COST),
+        }
+        prev_conf = {k: spark.conf.get(k) for k in scan_conf}
+        for k, v in scan_conf.items():
+            spark.conf.set(k, v)
         corpus = tableio.read_table(spark, corpus)
         # provenance half of the aligned-write gate: the corpus is
         # PHYSICALLY laid out as bucket=k dirs (a DataFrame corpus, or
@@ -133,7 +178,7 @@ def run_extraction_job(
             output_path,
             run_id=run_id,
             n_buckets=n_buckets,
-            waves=waves,
+            waves=1 if waves is None else waves,
             min_word_count=min_word_count,
             resume=resume,
             emit_html=emit_html,
@@ -143,8 +188,8 @@ def run_extraction_job(
             bucket_provenance=bucket_provenance,
         )
     finally:
-        if prev_mpb is not None:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
+        for k, v in prev_conf.items():
+            spark.conf.set(k, v)
 
 
 def _run_waves(
@@ -262,8 +307,8 @@ def _run_waves(
         # written.  A write-side Observation would evaluate its
         # ~8·buckets + 256 aggregates INTERPRETED — measured ~14.5 s per
         # wave at 240k docs / local[32], more CPU than extraction
-        # itself; the two pruned aggregations below cost well under a
-        # second.
+        # itself; the one pruned grouping-sets aggregate below costs
+        # well under a second.
         # explicit schema: a wave that wrote ZERO rows to a fresh
         # output leaves only _SUCCESS, and schema inference would
         # throw 'Unable to infer schema' (ADVICE r4) — the schema
@@ -275,13 +320,12 @@ def _run_waves(
         # the readback scan inherits the job's compute-sized (tiny)
         # maxPartitionBytes, planning hundreds of ~1 MB splits for a
         # few MB of pruned metric columns — coalesce to core count
-        # so the two aggregations below aren't task-launch-bound
-        # (no shuffle: coalesce merges scan partitions in place)
+        # so the aggregate below isn't task-launch-bound (no shuffle:
+        # coalesce merges scan partitions in place)
         readback = readback.coalesce(cores)
-        lineage_rows = [
-            tuple(r)
-            for r in tableio.build_lineage(readback, run_id).collect()
-        ]
+        lineage_rows, wave_regs = tableio.lineage_and_registers(
+            readback, run_id, fingerprint
+        )
         if markdown_dir:
             # D4 sink fed from the WRITTEN output (column-pruned read of
             # url/title/markdown/word_count — parquet never materializes
@@ -314,21 +358,10 @@ def _run_waves(
         # wave — see tableio.append_lineage_rows
         tableio.append_lineage_rows(spark, lineage_rows, output_path)
         docs_done += sum(r[4] for r in lineage_rows)  # docs_in ordinal
-        # register maxes as ONE codegen'd hash aggregate over the
-        # pruned read-back
-        reg_rows = (
-            readback.select(
-                fingerprint.bitwiseAND(F.lit(HLL_M - 1)).alias("reg"),
-                hll_rho(fingerprint).alias("rho"),
-            )
-            .groupBy("reg")
-            .agg(F.max("rho").alias("mx"))
-            .collect()
-        )
-        for r in reg_rows:
-            j = int(r["reg"])
-            if int(r["mx"]) > run_regs[j]:
-                run_regs[j] = int(r["mx"])
+        # the committed wave's registers join the run's sketch
+        # (register-wise max, the HLL union)
+        for j, mx in wave_regs.items():
+            run_regs[j] = max(run_regs[j], mx)
         # wave-level stats from the committed lineage rows themselves
         # (schema ordinals: 4=docs_in, 6=parse_failures, 8=spans)
         observed.append(
@@ -431,7 +464,12 @@ def main(argv: list[str] | None = None) -> int:
     p_pipe.add_argument(
         "--buckets", type=int, default=tableio.DEFAULT_BUCKETS
     )
-    p_pipe.add_argument("--waves", type=int, default=4)
+    p_pipe.add_argument(
+        "--waves",
+        type=int,
+        default=None,
+        help="extraction waves (default: derived from the input bytes)",
+    )
     p_pipe.add_argument("--min-word-count", type=int, default=150)
     p_pipe.add_argument(
         "--chunk-tokens",
@@ -462,7 +500,12 @@ def main(argv: list[str] | None = None) -> int:
     p_wave.add_argument(
         "--buckets", type=int, default=tableio.DEFAULT_BUCKETS
     )
-    p_wave.add_argument("--waves", type=int, default=4)
+    p_wave.add_argument(
+        "--waves",
+        type=int,
+        default=None,
+        help="extraction waves (default: derived from the input bytes)",
+    )
     p_wave.add_argument("--min-word-count", type=int, default=150)
     p_wave.add_argument("--chunk-tokens", type=int, default=None)
     p_wave.add_argument("--benchmark-table", default=None)
@@ -474,7 +517,12 @@ def main(argv: list[str] | None = None) -> int:
     p_run.add_argument("--out", required=True)
     p_run.add_argument("--run-id", default="run-0")
     p_run.add_argument("--buckets", type=int, default=tableio.DEFAULT_BUCKETS)
-    p_run.add_argument("--waves", type=int, default=4)
+    p_run.add_argument(
+        "--waves",
+        type=int,
+        default=None,
+        help="extraction waves (default: derived from the input bytes)",
+    )
     p_run.add_argument("--no-resume", action="store_true")
     p_run.add_argument(
         "--emit-html",

@@ -216,10 +216,10 @@ def resolve_giant_threshold(pruned: DataFrame) -> int | None:
     condition guarantees threshold ≤ max, so the giant branch is never
     vacuously empty.
 
-    Cost: one column-pruned pass over html lengths.  At 100 TB prefer
-    passing an explicit threshold from ingest-time stats (the lineage
-    table already records per-bucket size metrics); the probe is for
-    corpora without one."""
+    Cost: one column-pruned pass over html lengths.  The extraction job
+    runs it once per run, on wave 0 (the whole input when the job runs
+    one wave), and reuses the answer for later waves; the job has no
+    threshold override."""
     probe = pruned.select(F.length("html").cast("double").alias("_n"))
     qs = probe.approxQuantile("_n", [0.5, 1.0], GIANT_PROBE_REL_ERR)
     if len(qs) != 2 or qs[1] is None:

@@ -248,7 +248,7 @@ def run_pipeline(
     *,
     run_id: str = "pipe-0",
     n_buckets: int | None = None,
-    waves: int = 4,
+    waves: int | None = None,
     min_word_count: int = 150,
     chunk_tokens: int = PIPE_CHUNK_TOKENS,
     benchmark_path: str | None = None,
@@ -299,7 +299,7 @@ def _run_stages(
     *,
     run_id: str,
     n_buckets: int | None,
-    waves: int,
+    waves: int | None,
     min_word_count: int,
     chunk_tokens: int,
     benchmark_path: str | None,
@@ -560,7 +560,7 @@ def run_pipeline_wave(
     epoch: int | None = None,
     run_id: str | None = None,
     n_buckets: int | None = None,
-    waves: int = 4,
+    waves: int | None = None,
     min_word_count: int = 150,
     chunk_tokens: int = PIPE_CHUNK_TOKENS,
     benchmark_path: str | None = None,

@@ -15,9 +15,11 @@ input buckets against committed lineage (SURVEY.md §4 item 5).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.sketches import HLL_M, hll_rho
 
 DEFAULT_BUCKETS = 32
 
@@ -191,16 +193,18 @@ def bucket_sample_aligned(
     arbitrary foreign bucket column) is SYSTEMATIC — each sampled row
     mismatches with probability ~(N-1)/N — so a first-rows sample of
     128 misses a misalignment with probability ~N^-128.  Cost: one
-    CollectLimit job over (id, bucket), a few row groups of one file.
+    CollectLimit job over (id, bucket), a few row groups of one file:
+    the comparison runs below the limit, so Spark scans partitions
+    only until it has the sample (a filter above the limit would
+    first gather every partition's first rows through an exchange).
     """
     expected = string_bucket_expr(n_buckets, id_col)
-    bad = (
-        df.select(F.col(id_col), F.col("bucket"))
+    rows = (
+        df.select((F.col("bucket") != expected).alias("bad"))
         .limit(sample_rows)
-        .where(F.col("bucket") != expected)
-        .take(1)
+        .collect()
     )
-    return not bad
+    return not any(r["bad"] for r in rows)
 
 
 def clear_buckets(spark: SparkSession, path: str, buckets) -> None:
@@ -319,12 +323,34 @@ def read_committed_buckets(spark: SparkSession, output_path: str) -> set[int]:
     return {r["bucket"] for r in rows}
 
 
-def build_lineage(result: DataFrame, run_id: str) -> DataFrame:
-    """Aggregate per-bucket extraction metrics from the result table.
-    Tiny shuffle (N_buckets rows) — the only shuffle in the job."""
-    return (
-        result.groupBy("bucket")
+def lineage_and_registers(
+    readback: DataFrame, run_id: str, item_hash: Column
+) -> tuple[list[tuple], dict[int, int]]:
+    """One aggregate over a wave's read-back of its written output:
+    the per-bucket lineage rows (``LINEAGE_SCHEMA`` order) and the
+    wave's HLL register maxima over ``item_hash`` (a 60-bit
+    ``md5_int`` column).
+
+    ``groupingSets([bucket], [reg])`` runs both groupings as ONE
+    codegen'd hash aggregate, and one ``collect()`` returns at most
+    n_buckets + ``HLL_M`` rows, told apart by ``grouping_id()``
+    (1 = bucket row, reg rolled up; 2 = register row).  A second
+    pass over the read-back would pay another job's fixed scheduler
+    cost every wave."""
+    rows = (
+        readback.select(
+            "bucket",
+            "doc_id",
+            "success",
+            "nodes_scored",
+            "spans_emitted",
+            "proc_us",
+            item_hash.bitwiseAND(F.lit(HLL_M - 1)).alias("reg"),
+            hll_rho(item_hash).alias("rho"),
+        )
+        .groupingSets([["bucket"], ["reg"]], "bucket", "reg")
         .agg(
+            F.grouping_id().alias("gid"),
             F.min("doc_id").alias("doc_id_min"),
             F.max("doc_id").alias("doc_id_max"),
             F.count(F.lit(1)).alias("docs_in"),
@@ -333,11 +359,16 @@ def build_lineage(result: DataFrame, run_id: str) -> DataFrame:
             F.sum("nodes_scored").alias("nodes_scored"),
             F.sum("spans_emitted").alias("spans_emitted"),
             (F.sum("proc_us") / 1000).cast("long").alias("cpu_ms"),
+            F.max("rho").alias("mx"),
         )
         .withColumn("run_id", F.lit(run_id))
         .withColumn("committed_at", F.current_timestamp())
-        .select([f.name for f in LINEAGE_SCHEMA.fields])
+        .select("gid", "reg", "mx", *[f.name for f in LINEAGE_SCHEMA.fields])
+        .collect()
     )
+    lineage = [tuple(r[3:]) for r in rows if r["gid"] == 1]
+    registers = {int(r["reg"]): int(r["mx"]) for r in rows if r["gid"] == 2}
+    return lineage, registers
 
 
 def append_lineage_rows(

@@ -8,9 +8,27 @@ Usage: python scripts/audit_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import re
 import sys
 
 sys.path.insert(0, ".")
+
+# Run-to-run noise in a plan's text: expression ids (``#123``),
+# DataFrame plan ids (``plan_id=12``) and the source fingerprint in
+# stored-layout cache paths (``/tmp/aes_cache/<name>_<10 hex>_…``).
+# Masked in the text PLANS.md records, so a rerun with no code change
+# leaves it byte-identical; never in the text the checks match.
+_PLAN_NOISE = (
+    (re.compile(r"#\d+"), "#_"),
+    (re.compile(r"plan_id=\d+"), "plan_id=_"),
+    (re.compile(r"(aes_cache/\w*?_)[0-9a-f]{10}_"), r"\1<fp>_"),
+)
+
+
+def _stable(plan: str) -> str:
+    for pattern, repl in _PLAN_NOISE:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 CHECKS = {
     # query -> (must_contain, must_not_contain, note)
@@ -844,7 +862,7 @@ def main() -> int:
                 if max_counts
                 else ""
             )
-            + f" — **{status}**\n\n```\n{plan[:3000]}\n```\n"
+            + f" — **{status}**\n\n```\n{_stable(plan)[:3000]}\n```\n"
         )
 
     with open("PLANS.md", "w") as fh:

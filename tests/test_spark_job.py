@@ -3,6 +3,7 @@ extraction job → span equality, lineage metrics, kill-and-resume."""
 
 from __future__ import annotations
 
+import glob
 import shutil
 
 import pytest
@@ -221,6 +222,99 @@ def test_lineage_matches_recount_of_written_output(
     assert sum(w["docs"] for w in waves) == docs_in
     assert sum(w["failures"] for w in waves) == failures
     assert sum(w["spans"] for w in waves) == spans
+
+
+def test_default_wave_count_follows_input_bytes(
+    spark, corpus_path, tmp_path, monkeypatch
+):
+    """Left at its default, ``waves`` is one per cores × 6 × 256 MiB of
+    path-corpus input (at least one), and one for a DataFrame corpus;
+    an explicit count is used as given.  Every run writes the same rows
+    and commits the same per-bucket docs_in."""
+    cols = [
+        "doc_id",
+        "title",
+        "word_count",
+        "success",
+        F.xxhash64(F.to_json("spans")).alias("spans_h"),
+    ]
+
+    def run(name, corpus, **kwargs):
+        out = str(tmp_path / name)
+        stats = run_extraction_job(
+            spark, corpus, out, n_buckets=N_BUCKETS, **kwargs
+        )
+        rows = sorted(
+            tuple(r) for r in spark.read.parquet(out).select(cols).collect()
+        )
+        docs_in = {
+            r["bucket"]: r["docs_in"]
+            for r in spark.read.parquet(tableio.lineage_path(out)).collect()
+        }
+        return len(stats["observed_metrics"]), rows, docs_in
+
+    runs = {"default": run("default", corpus_path)}
+    one_round = spark.sparkContext.defaultParallelism * 6 * (256 << 20)
+    with monkeypatch.context() as m:
+        m.setattr(tableio, "dir_size_bytes", lambda *_: one_round + 1)
+        runs["past-one-round"] = run("big", corpus_path)
+    runs["explicit"] = run("explicit", corpus_path, waves=2)
+    runs["dataframe"] = run("frame", spark.read.parquet(corpus_path))
+
+    assert {k: v[0] for k, v in runs.items()} == {
+        "default": 1,
+        "past-one-round": 2,
+        "explicit": 2,
+        "dataframe": 1,
+    }
+    _, rows, docs_in = runs["default"]
+    assert len(rows) == N_DOCS and sum(docs_in.values()) == N_DOCS
+    for name, (_, other_rows, other_docs_in) in runs.items():
+        assert other_rows == rows, name
+        assert other_docs_in == docs_in, name
+
+
+def test_hll_registers_equal_recount_of_written_output(
+    spark, corpus_path, tmp_path
+):
+    """The run's distinct-document estimate, merged across waves from
+    each wave's read-back aggregate, EQUALS the estimate of registers
+    recomputed in one independent pass over the written output with
+    the same (title, excerpt, word_count) fingerprint."""
+    from article_extractor_spark.functions.sketches import (
+        HLL_M,
+        estimate_from_registers,
+        hll_rho,
+    )
+    from article_extractor_spark.functions.text import md5_int
+
+    out = str(tmp_path / "out")
+    stats = run_extraction_job(
+        spark, corpus_path, out, n_buckets=N_BUCKETS, waves=2
+    )
+    assert len(stats["observed_metrics"]) == 2
+
+    fp = md5_int(
+        F.concat_ws(
+            "\x1f",
+            F.col("title"),
+            F.col("excerpt"),
+            F.col("word_count").cast("string"),
+        )
+    )
+    regs = [0] * HLL_M
+    for r in (
+        spark.read.parquet(out)
+        .select(
+            fp.bitwiseAND(F.lit(HLL_M - 1)).alias("reg"),
+            hll_rho(fp).alias("rho"),
+        )
+        .groupBy("reg")
+        .agg(F.max("rho").alias("mx"))
+        .collect()
+    ):
+        regs[r["reg"]] = r["mx"]
+    assert estimate_from_registers(regs) == stats["distinct_docs_est"]
 
 
 def test_files_per_bucket_salt_splits_buckets(spark, tmp_path):
@@ -764,6 +858,36 @@ def test_preshuffled_reports_path_taken_not_gate(
     assert spark.sparkContext.defaultParallelism > 1
     assert stats["preshuffled"] is False
     assert stats["docs_processed"] == N_DOCS
+
+
+def test_job_scan_packs_small_bucket_files(
+    spark, corpus_path, tmp_path, monkeypatch
+):
+    """Sub-MB bucket files share scan tasks instead of each being a
+    task of its own, the aligned write still engages, and the job
+    restores both session settings it overrides."""
+    planned = []
+    sample = tableio.bucket_sample_aligned
+
+    def spy(df, n_buckets, *args, **kwargs):
+        planned.append(df.rdd.getNumPartitions())  # under the job's conf
+        return sample(df, n_buckets, *args, **kwargs)
+
+    monkeypatch.setattr(tableio, "bucket_sample_aligned", spy)
+    keys = (
+        "spark.sql.files.maxPartitionBytes",
+        "spark.sql.files.openCostInBytes",
+    )
+    before = [spark.conf.get(k) for k in keys]
+    stats = run_extraction_job(
+        spark, corpus_path, str(tmp_path / "out-packed"), n_buckets=N_BUCKETS
+    )
+    n_files = len(glob.glob(f"{corpus_path}/bucket=*/*.parquet"))
+    assert n_files == N_BUCKETS
+    assert planned and planned[0] < n_files
+    assert stats["preshuffled"] is True
+    assert stats["docs_processed"] == N_DOCS
+    assert [spark.conf.get(k) for k in keys] == before
 
 
 def test_preshuffled_gate_off_for_dataframe_corpus(
