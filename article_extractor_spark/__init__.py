@@ -11,11 +11,15 @@ Catalyst can optimize it.
 Layout:
     dom/        stdlib-html.parser DOM kernel (parse, query, serialize)
     extract/    extraction pipeline semantics (scoring, sanitize, spans)
-    operators/  Spark operators: extraction stage, dedup, similarity, text stats
+    operators/  Spark operators: extraction stage, PDF, format dispatch, tables
     sources/    table IO (bucketed Parquet, Iceberg-ready) + synthetic corpus
-    functions/  reusable pyspark Column helpers (URL/text functions)
-    plans/      named query registry (used by __spark_entry__ and bench)
+    functions/  reusable pyspark Column helpers (text, dedup, similarity)
+    sinks/      Markdown files per document
     streaming/  AvailableNow streams whose micro-batches are batch-job epochs
+    job.py      the extraction job (bucketed, lineage-committed, resumable)
+    pipeline.py extraction → curation funnel → shuffled packing, per wave
+    queries.py  named query registry with DuckDB oracles (used by
+                __spark_entry__ and bench); no package module imports it
 """
 
 __version__ = "0.1.0"

@@ -3,7 +3,7 @@
 Re-expresses the readability-style extraction semantics of the reference
 (pankaj28843/article-extractor, see SURVEY.md §2.1 operators E1-E30) as a
 side-effect-free function ``extract_document(html, url) -> dict`` that
-runs unchanged inside a vectorized Spark ``mapInPandas`` batch or in a
+runs unchanged inside a vectorized Spark ``mapInArrow`` batch or in a
 plain pytest.
 """
 

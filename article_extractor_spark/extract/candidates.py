@@ -185,20 +185,3 @@ def refine_top(ranked: list[RankedCandidate]) -> RankedCandidate:
             break
         best = narrower
     return best
-
-
-def select_top_candidate(doc: Node, memo: DocMemo) -> Node | None:
-    """Full candidate stage: discover → (fallback body) → rank → refine
-    (candidate_finder.py:24-53)."""
-    candidates = discover_candidates(doc, memo)
-    if not candidates:
-        body = doc.query("body")
-        if body:
-            candidates = [body[0]]
-    if not candidates:
-        return None
-
-    ranked = rank(candidates, memo)
-    if not ranked:
-        return None
-    return refine_top(ranked).node

@@ -4,7 +4,7 @@ Mirrors the reference's extraction flow (extractor.py:268-386; SURVEY.md
 §3.1): parse → clean → title → candidate select → host adjust →
 absolutize → sanitize → safe-mode → serialize, but the primary output is
 the ordered span sequence instead of an HTML string.  Pure Python, no
-Spark imports: the same function runs inside an Arrow ``mapInPandas``
+Spark imports: the same function runs inside an Arrow ``mapInArrow``
 batch on an executor or directly under pytest.
 """
 

@@ -1,17 +1,14 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video are carried as ``binary`` columns with a metadata
-struct; the heavy steps (decode, resize, frame-sample) run as
-Arrow-batched ``mapInPandas`` stages.  The real codec libraries are not
-available in this container, so the decode kernel is STUBBED — but the
-Spark-side contract (schema, pruning, batch shape, partitioning) is real
-and tested:
+struct; the heavy steps (decode, frame-sample) run as Arrow-batched
+``mapInPandas`` stages.  No image codec is used, so the image decode is
+a deterministic stand-in — but the Spark-side contract (schema,
+pruning, batch shape, partitioning) is real and tested:
 
 - ``media_features``: deterministic fake "decode" producing byte-count,
   content digest, and fake dimensions — fully reproducible, so it has an
   exact SQL oracle.
-- ``decode_image``: the genuine Pillow kernel, gated behind a
-  capability probe; raises ``NotImplementedError`` in this container.
 - ``sample_frames``: REAL frame sampling over the uncompressed RAWV
   container (header parse + stride slicing, truncation-safe); only
   compressed-codec demuxing remains out of scope.
@@ -89,76 +86,6 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
     )
 
 
-DECODED_IMAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mode", T.StringType()),
-        T.StructField("decode_ok", T.BooleanType()),
-    ]
-)
-
-
-def has_image_codec() -> bool:
-    """Capability probe: True when Pillow is importable.  The decode
-    kernel activates automatically when a codec lib is dropped into the
-    environment — no code change needed (tests skip-unless-codec)."""
-    try:
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:  # pragma: no cover - environment-dependent
-        return False
-
-
-def _decode_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:  # pragma: no cover - needs codec lib
-    import io
-
-    from PIL import Image
-
-    for batch in batches:
-        rows = []
-        for payload in batch["payload"]:
-            try:
-                img = Image.open(io.BytesIO(payload or b""))
-                rows.append((img.width, img.height, img.mode, True))
-            except Exception:  # noqa: BLE001 - bad bytes → row, not crash
-                rows.append((None, None, None, False))
-        out = pd.DataFrame(
-            rows, columns=["width", "height", "mode", "decode_ok"]
-        )
-        out.insert(0, "doc_id", batch["doc_id"].values)
-        yield out
-
-
-def decode_image(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Real image decode (Pillow kernel), gated on ``has_image_codec``.
-
-    Identical Spark plumbing to ``media_features`` — prune to
-    (doc_id, payload), one Arrow-batched mapInPandas stage, bad bytes
-    become ``decode_ok=false`` rows instead of task deaths.  This
-    container ships no codec libs, so the call raises
-    ``NotImplementedError`` here; installing Pillow activates it with
-    no code change (tests/test_pipeline_queries.py documents the gate).
-    """
-    if not has_image_codec():
-        raise NotImplementedError(
-            "image decode requires Pillow; container has no codec libs — "
-            "use media_features() for the tested plumbing"
-        )
-    from ..shipping import ensure_shipped
-
-    ensure_shipped(df.sparkSession)
-    pruned = df.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col(payload_col).cast("binary").alias("payload"),
-    )
-    return pruned.mapInPandas(_decode_batches, schema=DECODED_IMAGE_SCHEMA)
-
-
 # ------------------------------------------------------------------
 # Video frame sampling over the RAWV container
 # ------------------------------------------------------------------
@@ -222,7 +149,7 @@ def _frame_sample_batches(every_n: int):
                 p = bytes(payload or b"")
                 if len(p) < RAWV_HEADER_LEN or p[:4] != RAWV_MAGIC:
                     # malformed container → diagnosable row, not a
-                    # task death (same contract as decode_image)
+                    # task death (same contract as media_features)
                     rows.append(
                         (doc_id, None, None, None, None, None, False)
                     )

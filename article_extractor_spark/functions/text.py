@@ -57,10 +57,6 @@ def _stopword_ratio_from(
     )
 
 
-def stopword_ratio(col: Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
-    return let(ws_tokens(col), lambda t: _stopword_ratio_from(t, stopwords))
-
-
 def punct_ratio(col: Column) -> Column:
     n = F.length(col)
     punct = F.length(col) - F.length(F.regexp_replace(col, "[.,;:!?]", ""))
@@ -281,26 +277,6 @@ def md5_int(col: Column) -> Column:
     """Deterministic 60-bit integer hash shared with DuckDB oracles:
     first 15 hex chars of md5 → bigint.  (60 bits: no int64 overflow.)"""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def token_count_pudf():
-    """Vectorized scalar pandas UDF equivalent of ``token_count``.
-
-    The JVM expression is the hot-path choice; this Arrow-batched form
-    exists for pipelines that need Python-side tokenizers (e.g. a real
-    BPE vocabulary) — swap the kernel, keep the call site.  Never
-    row-at-a-time.
-    """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _count(texts):
-        return texts.fillna("").str.split().str.len().astype("int32")
-
-    # real-object annotations (module uses `from __future__ import
-    # annotations`, whose string hints pandas_udf cannot resolve)
-    _count.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return pandas_udf("int")(_count)
 
 
 def nfc_normalize_pudf():

@@ -567,8 +567,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "curate":
-        from .pipeline import docs_from_extraction
-        from .queries import curation_verdicts
+        from .pipeline import curation_verdicts, docs_from_extraction
 
         # The funnel runs directly on the STRING doc_id — dup
         # canonicals pick the lexicographic-min id, collision-free by

@@ -138,7 +138,7 @@ def _mixed_corpus_batches(batches):
     import pyarrow as pa
 
     from ..extract.pdflayout import build_article_pdf
-    from ..queries import synth_page_html
+    from ..sources.synth import synth_page_html
 
     for batch in batches:
         doc_ids = batch.column("doc_id").to_pylist()

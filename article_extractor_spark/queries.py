@@ -30,7 +30,22 @@ from .operators.extraction import (
     render_spans_to_html,
     to_server_response,
 )
-from .pipeline import PIPE_SHUFFLE_SEED
+from .pipeline import (
+    DECONTAM_BENCH_IDS,
+    DECONTAM_N,
+    PIPE_SHUFFLE_SEED,
+    QF_MAX_TOP_WORD,
+    QF_MIN_QUALITY,
+    QF_MIN_TOKENS,
+    QF_MIN_TTR,
+    SPLIT_BUCKETS,
+    SPLIT_TRAIN_LT,
+    SPLIT_VAL_LT,
+    _quality_metrics,
+    _quality_reason_expr,
+    curation_verdicts,
+)
+from .sources.synth import _CLOSING_P
 
 Query = Callable[[SparkSession, str], DataFrame]
 
@@ -524,135 +539,6 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curation_verdicts(load(spark, sf_dir, "documents"))
 
 
-DECONTAM_N = 8
-DECONTAM_BENCH_IDS = 10  # doc_id < 10 stands in for the eval benchmark
-
-
-def curation_verdicts(
-    docs: DataFrame,
-    benchmark: DataFrame | None = None,
-    bench_ids_below: int | None = DECONTAM_BENCH_IDS,
-    *,
-    stored_ck: DataFrame | None = None,
-    index: DataFrame | None = None,
-) -> DataFrame:
-    """DataFrame-level curation funnel over any (doc_id, text) table —
-    the form the job CLI's ``curate`` subcommand runs over extraction
-    output (see q_curation_funnel for semantics and the at-scale
-    rationale).
-
-    The benchmark/eval slice for decontamination is EXPLICIT:
-
-    - ``benchmark``: a (text) table of benchmark documents to
-      decontaminate against (broadcast side of the n-gram overlap).
-    - ``bench_ids_below``: legacy stand-in used by the registry query
-      and its oracle — docs with numeric ``doc_id`` below this are
-      treated AS the benchmark and statused ``benchmark``.  Pass
-      ``None`` (the job CLI does) to disable the id-slice convention;
-      with both None, decontamination is skipped entirely.
-
-    Committed dedup state (``run_pipeline_wave``; epoch semantics in
-    pipeline.py) makes ``docs`` ONE new wave, and no input is
-    corpus-sized:
-
-    - ``stored_ck`` (ck, canon): the exact canonical is the stored
-      canon of a doc's content key, else the min wave id per key.
-    - ``index``: a capped band index (``dedup.capped_band_index``);
-      the near-dup canonical is the min stored band match
-      (``incremental_minhash_pairs``), else the within-wave label.
-
-    With neither, the plan is the one-shot funnel's.
-
-    ``doc_id`` may be any orderable type — dup canonicals are the MIN
-    id per duplicate group, so string ids pick the lexicographic
-    smallest.  No numeric ordinal is derived (a digit-suffix ordinal
-    collides across e.g. 'siteA-42'/'siteB-42' and fans out the
-    doc_id-keyed joins — ADVICE r3)."""
-    m = _quality_metrics(docs)
-    reason = _quality_reason_expr()
-    qf = m.select(
-        "doc_id", reason.alias("reason"), (reason == "ok").alias("keep")
-    )
-    ec = docs.select(
-        "doc_id",
-        F.md5(D.normalized_text(F.col("text"))).alias("ck"),
-    )
-    ec_canon = ec.groupBy("ck").agg(F.min("doc_id").alias("exact_canon"))
-    exact_canon = F.col("exact_canon")
-    if stored_ck is not None:
-        ec = ec.join(
-            stored_ck.select("ck", F.col("canon").alias("stored_canon")),
-            "ck",
-            "left",
-        )
-        exact_canon = F.coalesce("stored_canon", "exact_canon")
-    ec = ec.join(ec_canon, "ck").select(
-        "doc_id", exact_canon.alias("exact_canon")
-    )
-    labels = D.connected_components(D.minhash_lsh_pairs(docs))
-    nd = docs.select("doc_id")
-    nd_canon = ["label", "doc_id"]
-    if index is not None:
-        cross = (
-            D.incremental_minhash_pairs(docs, index)
-            .groupBy("new_doc")
-            .agg(F.min("dup_of").alias("cross_canon"))
-            .withColumnRenamed("new_doc", "doc_id")
-        )
-        nd = nd.join(cross, "doc_id", "left")
-        nd_canon.insert(0, "cross_canon")
-    nd = nd.join(labels, "doc_id", "left").select(
-        "doc_id", F.coalesce(*nd_canon).alias("nd_canon")
-    )
-    if bench_ids_below is not None:
-        corpus_side = docs.where(F.col("doc_id") >= bench_ids_below)
-        bench_side = docs.where(F.col("doc_id") < bench_ids_below)
-    else:
-        corpus_side, bench_side = docs, benchmark
-    if bench_side is not None:
-        de = D.benchmark_overlap(
-            corpus_side, bench_side, n=DECONTAM_N
-        ).select("doc_id", F.lit(True).alias("contaminated"))
-    else:
-        # no benchmark provided: nothing to decontaminate against
-        de = docs.select("doc_id").limit(0).select(
-            "doc_id", F.lit(True).alias("contaminated")
-        )
-    split_bucket = (
-        X.md5_int(F.concat(F.lit("split:"), F.col("doc_id").cast("string")))
-        % SPLIT_BUCKETS
-    )
-    sp = docs.select(
-        "doc_id",
-        F.when(split_bucket < SPLIT_TRAIN_LT, "train")
-        .when(split_bucket < SPLIT_VAL_LT, "val")
-        .otherwise("test")
-        .alias("split"),
-    )
-    joined = (
-        docs.select("doc_id")
-        .join(qf, "doc_id")
-        .join(ec, "doc_id")
-        .join(nd, "doc_id")
-        .join(de, "doc_id", "left")
-        .join(sp, "doc_id")
-    )
-    is_bench = (
-        F.col("doc_id") < bench_ids_below
-        if bench_ids_below is not None
-        else F.lit(False)
-    )
-    status = (
-        F.when(is_bench, F.lit("benchmark"))
-        .when(~F.col("keep"), F.concat(F.lit("quality:"), F.col("reason")))
-        .when(F.col("doc_id") != F.col("exact_canon"), F.lit("exact_dup"))
-        .when(F.col("doc_id") != F.col("nd_canon"), F.lit("near_dup"))
-        .when(F.col("contaminated").isNotNull(), F.lit("contaminated"))
-        .otherwise(F.concat(F.lit("kept:"), F.col("split")))
-    )
-    return joined.select("doc_id", status.alias("status"))
-
-
 def q_event_type_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT / EXCEPT over per-user event-type sets: which event
     types a user emitted in BOTH calendar months vs ONLY the first —
@@ -990,47 +876,6 @@ def q_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_bloom_seen_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter seen-URL probe (functions/bloom.py): build a
-    64 Kbit deterministic Bloom over the corpus URLs (one map-side
-    bit_or aggregate, ≤2048 word rows cross the shuffle), broadcast
-    the words as a literal array, and probe a candidate list — half
-    known URLs, half unseen — with pure bit arithmetic.  This is the
-    at-scale replacement for the D7 visited anti-join when the seen
-    set is a multi-billion-row crawl history: the probe side never
-    shuffles and the words are ~1000x smaller than the key set; FP
-    rate is quantified (never FN), pinned by
-    test_bloom_filter_fp_rate_and_no_false_negatives.  Exact SQL
-    oracle: md5 positions, 32-bit words, and the mask test replay
-    bit-for-bit."""
-    from .functions.bloom import bloom_probe, build_bloom_words
-
-    docs = load(spark, sf_dir, "documents", floor=False)
-    url = F.concat(
-        F.lit("https://"),
-        F.col("source"),
-        F.lit(".example.com/docs/"),
-        F.col("doc_id").cast("string"),
-    )
-    words = build_bloom_words(docs.select(url.alias("url")), "url")
-    probe = docs.select(
-        F.col("doc_id").alias("probe_id"),
-        F.when(F.pmod(F.col("doc_id"), F.lit(2)) == 0, url)
-        .otherwise(
-            F.concat(
-                F.lit("https://unseen.example.com/docs/"),
-                (F.col("doc_id") + 1000000).cast("string"),
-            )
-        )
-        .alias("url"),
-    )
-    return probe.select(
-        "probe_id",
-        "url",
-        bloom_probe(F.col("url"), words).alias("maybe_seen"),
-    )
-
-
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) layout for two-dimensional data skipping
     (functions/layout.py): interleave user bucket x hour index over
@@ -1263,38 +1108,6 @@ def q_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# C4/Gopher-style composite document filter thresholds, chosen so every
-# rule actually fires on the synthetic corpus (quality p25≈0.08,
-# ttr p5≈0.30, top-word p95≈0.17, tokens p5≈14 at sf0.001).
-QF_MIN_TOKENS = 25
-QF_MIN_QUALITY = 0.08
-QF_MIN_TTR = 0.35
-QF_MAX_TOP_WORD = 0.15
-
-
-def _quality_metrics(docs: DataFrame, *extra: Column) -> DataFrame:
-    """doc_id + the five filter metrics (plus any extra columns) —
-    one shared-tokenization struct per row, inline-expanded (29.2 s →
-    23.8 s over 500k docs vs per-column metrics, identical output)."""
-    return docs.select(
-        "doc_id",
-        *extra,
-        F.inline(F.array(X.quality_filter_metrics(F.col("text")))),
-    )
-
-
-def _quality_reason_expr() -> Column:
-    """First-failing-rule verdict over the metric columns."""
-    return (
-        F.when(F.col("lang") != "en", F.lit("non_english"))
-        .when(F.col("n_tokens") < QF_MIN_TOKENS, F.lit("too_short"))
-        .when(F.col("quality") < QF_MIN_QUALITY, F.lit("low_quality"))
-        .when(F.col("ttr") < QF_MIN_TTR, F.lit("low_diversity"))
-        .when(F.col("twf") > QF_MAX_TOP_WORD, F.lit("repetitive"))
-        .otherwise(F.lit("ok"))
-    )
-
-
 def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite training-data document filter (the C4/Gopher pattern:
     several cheap heuristics, first failing rule wins, verdict + reason
@@ -1489,12 +1302,6 @@ def q_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-
-
-# Train/val/test split: hash-bucket thresholds out of SPLIT_BUCKETS.
-SPLIT_BUCKETS = 100
-SPLIT_TRAIN_LT = 90  # buckets [0, 90)  -> train
-SPLIT_VAL_LT = 95    # buckets [90, 95) -> val; rest -> test
 
 
 def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4621,17 +4428,9 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.grouped import source_stats
-
-    return source_stats(load(spark, sf_dir, "documents"))
-
-
 # ---------------------------------------------------------------------------
 # Extraction engine end-to-end (the flagship)
 # ---------------------------------------------------------------------------
-
-_CLOSING_P = "End of synthetic document body."
 
 
 def documents_as_interleaved_corpus(docs: DataFrame) -> DataFrame:
@@ -4690,27 +4489,6 @@ def documents_as_interleaved_corpus(docs: DataFrame) -> DataFrame:
             span("media", F.lit(""), media_ref, 1),
             span("text", tail, F.lit(""), 2),
         ).alias("spans"),
-    )
-
-
-def synth_page_html(doc_id: str, text: str) -> str:
-    """Python-side twin of the synthetic page (JVM expressions in
-    ``documents_as_interleaved_corpus`` + ``render_spans_to_html``;
-    SQL twin ``_SQL_PAGE``).  Used by kernels that must build the page
-    inside an Arrow stage (``documents_as_mixed``).  The three
-    representations MUST stay byte-identical —
-    ``test_synth_page_templates_agree`` pins JVM == Python on real
-    corpus rows, and the oracles pin JVM == SQL."""
-    return (
-        f"<html><head><title>Doc {doc_id} - Synth</title></head><body>"
-        '<header class="site-header"><nav>'
-        '<a href="/">Home</a> <a href="/about">About</a></nav></header>'
-        f'<main><article class="post-content"><h1>Doc {doc_id}</h1>'
-        f"<p>{text}</p>\n"
-        f'<img src="https://cdn.example/img-{doc_id}.jpg" />\n'
-        f"<p>{_CLOSING_P}</p></article></main>"
-        '<footer class="site-footer"><p>Copyright 2026.</p></footer>'
-        "</body></html>"
     )
 
 
@@ -5964,49 +5742,6 @@ def _zorder_sql_expr() -> str:
     return zorder_sql("xu", "yh", bits=10)
 
 
-def _bloom_seen_sql() -> str:
-    """Replays functions/bloom.py build + probe: k seed-prefixed md5
-    positions, 32-bit words OR-folded, literal-array bit test."""
-    from .functions.bloom import K_HASHES, M_BITS
-
-    n_words = M_BITS // 32
-    pos_exprs = [
-        _MD5INT.format(expr=f"'{i}:' || url") + f" % {M_BITS}"
-        for i in range(K_HASHES)
-    ]
-    build_pos = ", ".join(pos_exprs)
-    checks = " AND ".join(
-        f"(a[(({p}) >> 5) + 1] & (1::BIGINT << (({p}) & 31))) != 0"
-        for p in pos_exprs
-    )
-    return f"""
-WITH urls AS (
-  SELECT doc_id,
-    'https://' || source || '.example.com/docs/' || doc_id AS url
-  FROM documents
-), pos AS (
-  SELECT unnest([{build_pos}]) AS pos FROM urls
-), words AS (
-  SELECT pos >> 5 AS widx,
-    bit_or(1::BIGINT << (pos & 31))::BIGINT AS word
-  FROM pos GROUP BY pos >> 5
-), dense AS (
-  SELECT r.range AS widx, COALESCE(w.word, 0) AS word
-  FROM range(0, {n_words}) r LEFT JOIN words w ON w.widx = r.range
-), arr AS (
-  SELECT list(word ORDER BY widx) AS a FROM dense
-), probe AS (
-  SELECT doc_id AS probe_id,
-    CASE WHEN doc_id % 2 = 0 THEN url
-    ELSE 'https://unseen.example.com/docs/' || (doc_id + 1000000)
-    END AS url
-  FROM urls
-)
-SELECT probe_id, url, ({checks}) AS maybe_seen
-FROM probe, arr
-"""
-
-
 def _minhash_sql() -> str:
     mins = []
     for j in range(D.MINHASH_H):
@@ -7225,7 +6960,6 @@ FROM documents
 """,
     "quality_scores": _quality_sql(),
     "gopher_filter": _gopher_sql(),
-    "bloom_seen_filter": _bloom_seen_sql(),
     # Morton interleave spelled out bit-by-bit (layout.zorder_sql emits
     # the identical expression the Spark Column tree builds)
     "zorder_layout": f"""
@@ -7846,18 +7580,6 @@ SELECT src AS doc_id, cur AS canonical_id, CAST(hops AS INTEGER) AS hops
 FROM walk WHERE cur % {REDIRECT_SPAN} = 0
 """,
     "link_pagerank": _pagerank_sql(),
-    "source_stats": f"""
-WITH slim AS (
-  SELECT source,
-    CAST(len({_TOKS.format(c='text')}) AS BIGINT) AS n_tokens,
-    CAST(length(text) AS BIGINT) AS n_chars
-  FROM documents
-)
-SELECT source, COUNT(*) AS n_docs,
-  round(quantile_cont(n_tokens, 0.5), 6) AS median_tokens,
-  round(quantile_cont(n_chars, 0.9), 6) AS p90_chars
-FROM slim GROUP BY source
-""",
     "media_features": """
 SELECT doc_id,
   CAST(octet_length(encode(text)) AS INT) AS n_bytes,
@@ -9266,7 +8988,6 @@ QUERY_FNS: dict[str, Query] = {
     "zorder_layout": q_zorder_layout,
     "zorder_pruned_scan": q_zorder_pruned_scan,
     "compaction_plan": q_compaction_plan,
-    "bloom_seen_filter": q_bloom_seen_filter,
     "curation_funnel": q_curation_funnel,
     "shipping_priority": q_shipping_priority,
     "local_supplier_volume": q_local_supplier_volume,
@@ -9344,7 +9065,6 @@ QUERY_FNS: dict[str, Query] = {
     "media_features": q_media_features,
     "frame_samples": q_frame_samples,
     "audio_features": q_audio_features,
-    "source_stats": q_source_stats,
     "transient_prefilter": q_transient_prefilter,
     "extract_excerpt": q_extract_excerpt,
     "extract_interleaved": q_extract_interleaved,

@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Rows per Arrow batch entering mapInPandas.  Documents average tens of
+# Rows per Arrow batch entering mapInArrow.  Documents average tens of
 # KB (golden corpus raw.html up to ~400 KB); 256 rows ≈ tens of MB per
 # batch, safely inside executor-python memory even with skewed docs.
 ARROW_BATCH_ROWS = 256

@@ -1,17 +1,9 @@
 """Sinks: materializing extraction results outside the bucketed table.
 
 ``markdown_sink`` reproduces the reference crawler's primary artifact —
-one frontmatter-headed Markdown file per document (crawler.py:354-423);
-``jsonl_sink`` ships the training-data interchange artifact (sharded
-JSONL with deterministic shard assignment and a manifest).
+one frontmatter-headed Markdown file per document (crawler.py:354-423).
 """
 
-from .jsonl_sink import (  # noqa: F401
-    jsonl_line,
-    shard_filename,
-    shard_of,
-    write_jsonl_shards,
-)
 from .markdown_sink import (  # noqa: F401
     markdown_document,
     markdown_filename,

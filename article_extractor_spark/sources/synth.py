@@ -335,3 +335,29 @@ def corpus_dataframe(spark, n: int, seed: int = 42, partitions: int | None = Non
 
     rng_df = spark.range(0, n, numPartitions=partitions or max(32, n // 2000))
     return rng_df.mapInPandas(gen, schema=CORPUS_SCHEMA)
+
+
+# The one-page-per-document-row template the registry's extraction
+# queries build from the testdata ``documents`` table.
+_CLOSING_P = "End of synthetic document body."
+
+
+def synth_page_html(doc_id: str, text: str) -> str:
+    """Python-side twin of the registry's synthetic page (JVM
+    expressions in ``queries.documents_as_interleaved_corpus`` +
+    ``render_spans_to_html``; SQL twin ``queries._SQL_PAGE``).  Used
+    by kernels that must build the page inside an Arrow stage
+    (``documents_as_mixed``).  The three representations MUST stay
+    byte-identical — ``test_synth_page_templates_agree`` pins JVM ==
+    Python on real corpus rows, and the oracles pin JVM == SQL."""
+    return (
+        f"<html><head><title>Doc {doc_id} - Synth</title></head><body>"
+        '<header class="site-header"><nav>'
+        '<a href="/">Home</a> <a href="/about">About</a></nav></header>'
+        f'<main><article class="post-content"><h1>Doc {doc_id}</h1>'
+        f"<p>{text}</p>\n"
+        f'<img src="https://cdn.example/img-{doc_id}.jpg" />\n'
+        f"<p>{_CLOSING_P}</p></article></main>"
+        '<footer class="site-footer"><p>Copyright 2026.</p></footer>'
+        "</body></html>"
+    )

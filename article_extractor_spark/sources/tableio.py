@@ -234,8 +234,8 @@ def clear_buckets(spark: SparkSession, path: str, buckets) -> None:
 
 def has_iceberg(spark: SparkSession) -> bool:
     """Capability probe: True when the Iceberg Spark runtime jar is on
-    the session classpath (``has_image_codec`` pattern — the real
-    branch activates when the jar is dropped in, no code change).
+    the session classpath — the real branch activates when the jar is
+    dropped in, no code change.
 
     Probes the JVM for the Spark-runtime entry class rather than
     importing anything Python-side: Iceberg support is a jar, not a
@@ -416,17 +416,30 @@ def append_lineage_rows(
     )
     buf = io.BytesIO()
     pq.write_table(table, buf)
+    # a crash mid-write leaves no truncated part file, so the bucket
+    # stays uncommitted and resumable
     name = f"part-{os.urandom(8).hex()}.parquet"
+    write_file_atomic(
+        spark, f"{lineage_path(output_path)}/{name}", buf.getvalue()
+    )
+
+
+def write_file_atomic(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write ``data`` to ``path`` through the JVM Hadoop filesystem so
+    that ``path`` holds all of it or does not exist: write a hidden
+    temp file beside it, then rename it into place.  The temp name
+    starts with ".", which Spark's file listing and the ``_``-prefixed
+    commit-marker globs both skip, so a crash mid-write leaves nothing
+    a reader or a resume can mistake for a commit."""
     jvm = spark._jvm
-    jdir = jvm.org.apache.hadoop.fs.Path(lineage_path(output_path))
-    fs = jdir.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(jdir)
-    # write under a hidden name (Spark's file listing skips "."-files),
-    # then rename into place: a crash mid-write leaves no truncated
-    # part file, so the bucket stays uncommitted and resumable
-    tmp = jvm.org.apache.hadoop.fs.Path(jdir, f".{name}")
+    dst = jvm.org.apache.hadoop.fs.Path(path)
+    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs.mkdirs(dst.getParent())
+    tmp = jvm.org.apache.hadoop.fs.Path(dst.getParent(), f".{dst.getName()}")
     out = fs.create(tmp, True)
-    out.write(bytearray(buf.getvalue()))
-    out.close()
-    if not fs.rename(tmp, jvm.org.apache.hadoop.fs.Path(jdir, name)):
-        raise OSError(f"lineage commit: rename of {tmp.toString()} failed")
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+    if not fs.rename(tmp, dst):
+        raise OSError(f"rename of {tmp.toString()} to {path} failed")

@@ -336,7 +336,7 @@ def documents_as_mixed_warc(docs: DataFrame) -> DataFrame:
 
     def body(doc_id: int, text: str) -> bytes:
         from ..extract.pdflayout import build_article_pdf
-        from ..queries import synth_page_html
+        from .synth import synth_page_html
 
         if doc_id % 2 == 0:
             return build_article_pdf(

@@ -80,7 +80,6 @@ BENCH_QUERIES = [
     "zorder_layout",
     "zorder_pruned_scan",
     "compaction_plan",
-    "bloom_seen_filter",
     "langid",
     "repetition_scores",
     "dup_ngram_stats",
@@ -104,7 +103,6 @@ BENCH_QUERIES = [
     "media_features",
     "frame_samples",
     "audio_features",
-    "source_stats",
     "lineage_rollup",
     "sitemap_locs",
     "sitemap_index_locs",

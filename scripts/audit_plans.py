@@ -717,14 +717,6 @@ CHECKS = {
         "CUBE via Expand + partial aggregation (one shuffle for all "
         "four grouping sets)",
     ),
-    "bloom_seen_filter": (
-        ["ReadSchema: struct<doc_id:bigint,source:string>"],
-        ["Join", "Exchange", "Generate"],
-        "Bloom probe: the words are a broadcast LITERAL array (built "
-        "once, metadata-sized), so the probe plan is scan → project "
-        "with zero joins and zero shuffles — the at-scale replacement "
-        "for the visited anti-join against a huge crawl history",
-    ),
     "compaction_plan": (
         ["Window", "Exchange SinglePartition"],
         ["SortMergeJoin", "CartesianProduct"],

@@ -7,7 +7,7 @@ computed in-process by ``extract_document`` (no Spark):
 * ``synth``: 1,000 ``sources.synth.generate_document`` pages (seed 42),
   default ``ExtractOptions`` — the template mix the job benches run.
 * ``sf0.001``: the 500 rows of ``documents.parquet`` rendered through
-  ``queries.synth_page_html`` (the page the oracle queries extract),
+  ``sources.synth.synth_page_html`` (the page the oracle queries extract),
   with the ``min_word_count=10`` those queries use.
 
 A refactor that keeps the snapshot keeps the kernel's output.  A change
@@ -64,7 +64,7 @@ def synth_digests() -> dict[str, str]:
 def sf_digests() -> dict[str, str]:
     import pyarrow.parquet as pq
 
-    from article_extractor_spark.queries import synth_page_html
+    from article_extractor_spark.sources.synth import synth_page_html
 
     opts = ExtractOptions(min_word_count=SF_MIN_WORD_COUNT)
     rows = pq.read_table(

@@ -111,36 +111,6 @@ def test_media_features_deterministic(spark):
     )
 
 
-def test_multimodal_codec_gate_raises():
-    """decode_image is the one remaining env-gated kernel (needs a
-    codec lib); sample_frames is real (RAWV container) and has its own
-    unit battery below."""
-    from article_extractor_spark.functions import multimodal
-
-    if not multimodal.has_image_codec():
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_image(None)
-
-
-@pytest.mark.skipif(
-    not __import__(
-        "article_extractor_spark.functions.multimodal",
-        fromlist=["has_image_codec"],
-    ).has_image_codec(),
-    reason="no image codec lib in this container (capability-gated)",
-)
-def test_decode_image_with_codec(spark):
-    """Runs only when Pillow is present: the real decode kernel over
-    binary payloads — garbage bytes become decode_ok=false rows."""
-    from article_extractor_spark.functions import multimodal
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(10)
-    out = multimodal.decode_image(multimodal.documents_as_media(docs))
-    rows = out.collect()
-    assert len(rows) == 10
-    assert all(r["decode_ok"] is False for r in rows)  # text ≠ image bytes
-
-
 def test_giant_split_branch_matches_default(spark):
     """extract_articles(giant_threshold=...) must produce identical
     results to the single-branch path — only the physical routing of
@@ -837,24 +807,6 @@ def test_embedding_neardup_adversarial_bucket_capped(spark):
     assert vals["bucket_members"] == n
 
 
-def test_pandas_udf_token_count_matches_jvm_expr(spark):
-    from article_extractor_spark.functions.text import (
-        token_count,
-        token_count_pudf,
-    )
-    from article_extractor_spark.shipping import ensure_shipped
-
-    ensure_shipped(spark)
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    from pyspark.sql import functions as F
-
-    both = docs.select(
-        token_count(F.col("text")).alias("jvm"),
-        token_count_pudf()(F.col("text")).alias("pudf"),
-    )
-    assert both.where(F.col("jvm") != F.col("pudf")).count() == 0
-
-
 def test_robots_eval_rfc_semantics(spark):
     """RFC 9309 behaviors the oracle-match alone could mask if the
     corpus shifted: all three verdict branches must actually occur
@@ -899,11 +851,11 @@ def test_synth_page_templates_agree(spark):
     pins JVM == Python so the mixed-corpus adapter can never drift."""
     from article_extractor_spark.queries import (
         documents_as_interleaved_corpus,
-        synth_page_html,
     )
     from article_extractor_spark.operators.extraction import (
         render_spans_to_html,
     )
+    from article_extractor_spark.sources.synth import synth_page_html
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(20)
     rendered = render_spans_to_html(
@@ -1692,9 +1644,9 @@ def test_curation_verdicts_on_adversarial_corpus(spark):
     from pyspark.sql import functions as F
 
     from article_extractor_spark.functions import dedup as D
+    from article_extractor_spark.pipeline import curation_verdicts
     from article_extractor_spark.queries import (
         QUERY_FNS,
-        curation_verdicts,
         load,
     )
 
@@ -1750,6 +1702,49 @@ def test_curation_verdicts_on_adversarial_corpus(spark):
         assert got[20] == "near_dup", got[20]
         assert got[21] == "contaminated", got[21]
         assert got[22].startswith("quality:"), got[22]
+
+
+def test_curation_verdicts_ignore_the_waves_own_state_rows(spark):
+    """A wave re-run after its state appends (killed before its commit
+    marker) probes a state that already holds the wave's own content
+    keys and band rows.  Those rows must not become canonicals: the
+    verdicts equal the state-free funnel's, flood canonical included."""
+    from pyspark.sql import functions as F
+
+    from article_extractor_spark.functions import dedup as D
+    from article_extractor_spark.pipeline import curation_verdicts
+    from article_extractor_spark.queries import QUERY_FNS, load
+
+    base = load(spark, SF_DIR, "documents").where(F.col("doc_id") < 40)
+    # flood a text the quality rules keep, so its copies reach the
+    # dedup arms
+    kept_id = (
+        QUERY_FNS["quality_filter"](spark, SF_DIR)
+        .where("keep AND doc_id >= 10 AND doc_id < 40")
+        .agg(F.min("doc_id"))
+        .first()[0]
+    )
+    flood_text = base.where(F.col("doc_id") == kept_id).first()["text"]
+    flood = spark.createDataFrame(
+        [(i, flood_text) for i in range(1000, 1005)],
+        "doc_id long, text string",
+    )
+    df = base.select("doc_id", "text").unionByName(flood)
+    own_state = {
+        "stored_ck": df.select(
+            "doc_id",
+            F.md5(D.normalized_text(F.col("text"))).alias("ck"),
+        )
+        .groupBy("ck")
+        .agg(F.min("doc_id").alias("canon")),
+        "index": D.capped_band_index(df),
+    }
+    want = sorted(map(tuple, curation_verdicts(df).collect()))
+    got = sorted(map(tuple, curation_verdicts(df, **own_state).collect()))
+    statuses = dict(want)
+    assert statuses[kept_id].startswith("kept:")
+    assert statuses[1001] == "exact_dup"
+    assert got == want
 
 
 def test_quality_lexical_matches_python_reference(spark):
@@ -1952,9 +1947,11 @@ def test_decontaminate_matches_brute_force(spark):
     the broadcast-join implementation exactly."""
     from pyspark.sql import functions as F
 
-    from article_extractor_spark.queries import (
+    from article_extractor_spark.pipeline import (
         DECONTAM_BENCH_IDS,
         DECONTAM_N,
+    )
+    from article_extractor_spark.queries import (
         QUERY_FNS,
         load,
     )
@@ -2318,29 +2315,13 @@ def test_line_dedup_matches_brute_force(spark):
 
 
 def test_sketch_family_degenerate_inputs(spark):
-    """Edge cases for the sketch/layout family: an empty build set
-    (Bloom must probe all-false — vacuous no-FN), a single-item HLL
+    """Edge cases for the sketch/layout family: a single-item HLL
     group (estimate near 1), and Z-order at the domain corners
     (clamped, bijective)."""
     from pyspark.sql import functions as F
 
-    from article_extractor_spark.functions.bloom import (
-        bloom_probe,
-        build_bloom_words,
-    )
     from article_extractor_spark.functions.layout import zorder_key
     from article_extractor_spark.functions.sketches import hll_estimate
-
-    empty = spark.createDataFrame([], "key string")
-    words = build_bloom_words(empty, "key", k=4, m_bits=1024)
-    assert words == [0] * (1024 // 32)
-    probes = (
-        spark.range(50)
-        .select(F.concat(F.lit("p"), F.col("id").cast("string")).alias("key"))
-        .select(bloom_probe(F.col("key"), words, k=4, m_bits=1024).alias("hit"))
-        .collect()
-    )
-    assert not any(r["hit"] for r in probes)
 
     one = spark.createDataFrame([("g", "solo")], "grp string, item string")
     est = hll_estimate(one, "item", group_cols=("grp",)).collect()[0]
@@ -2457,50 +2438,6 @@ def test_compaction_plan_group_size_bound(spark):
         cum += totals[g]
         if g != last:
             assert cum >= (g + 1) * target, (g, cum)
-
-
-def test_bloom_filter_fp_rate_and_no_false_negatives(spark):
-    """Bloom guarantees: every inserted key probes true (no FN — the
-    property that lets a Bloom pre-filter preserve anti-join
-    correctness), unseen keys probe true at ~the analytic FP rate
-    ((1-e^(-kn/m))^k ≈ 2.2% at n=500, m=4096, k=4), and word arrays
-    built from disjoint halves merge by OR into the full build."""
-    from pyspark.sql import functions as F
-
-    from article_extractor_spark.functions.bloom import (
-        bloom_probe,
-        build_bloom_words,
-    )
-
-    m, k = 4096, 4
-    seen = spark.range(500).select(
-        F.concat(F.lit("k"), F.col("id").cast("string")).alias("key")
-    )
-    words = build_bloom_words(seen, "key", k=k, m_bits=m)
-    hits = seen.select(
-        bloom_probe(F.col("key"), words, k=k, m_bits=m).alias("hit")
-    ).collect()
-    assert all(r["hit"] for r in hits)  # no false negatives
-
-    unseen = spark.range(2000).select(
-        F.concat(F.lit("u"), F.col("id").cast("string")).alias("key")
-    )
-    fp = sum(
-        r["hit"]
-        for r in unseen.select(
-            bloom_probe(F.col("key"), words, k=k, m_bits=m).alias("hit")
-        ).collect()
-    )
-    assert fp / 2000 < 0.06, fp  # ~2.2% analytic, 3-sigma headroom
-    assert fp > 0  # small filter chosen so FPs actually occur
-
-    half_a = build_bloom_words(
-        seen.where(F.col("key").substr(2, 1) < "3"), "key", k=k, m_bits=m
-    )
-    half_b = build_bloom_words(
-        seen.where(F.col("key").substr(2, 1) >= "3"), "key", k=k, m_bits=m
-    )
-    assert [a | b for a, b in zip(half_a, half_b)] == words
 
 
 def test_zorder_layout_prunes_both_dimensions(spark):

@@ -311,3 +311,66 @@ def test_empty_legacy_epoch_marker_is_accepted(spark, tmp_path):
     open(f"{out}/state/_epoch_0_committed", "w").close()
     assert committed_epochs(spark, out) == [0]
     assert _marker_chunk_tokens(spark, out, 0) is None
+
+
+def test_wave_killed_mid_marker_reruns_to_the_undisturbed_state(
+    spark, wave_paths, incremental_out, tmp_path, monkeypatch
+):
+    """Kill point: epoch 1 dies while writing its commit marker, after
+    both state appends.  The half-written marker must not commit the
+    epoch, and re-running the wave must leave the dedup state exactly
+    as an undisturbed run leaves it — no band row appended twice — and
+    reproduce that run's verdicts."""
+    from article_extractor_spark.functions import dedup as D
+    from article_extractor_spark.pipeline import docs_from_extraction
+
+    w1, w2 = wave_paths
+    ref_out = incremental_out[0]
+    out = str(tmp_path / "killed")
+    kw = dict(
+        n_buckets=N_BUCKETS, waves=2, min_word_count=10, chunk_tokens=CHUNK
+    )
+    run_pipeline_wave(spark, w1, out, **kw)
+
+    def crash_on_marker(data):
+        # the marker payload goes through the same write helper as the
+        # lineage files, so only the marker's write is killed
+        if b"chunk_tokens" in bytes(data):
+            raise OSError("injected crash mid-marker")
+        return bytearray(data)
+
+    monkeypatch.setattr(tableio, "bytearray", crash_on_marker, raising=False)
+    with pytest.raises(OSError, match="injected"):
+        run_pipeline_wave(spark, w2, out, **kw)
+    monkeypatch.undo()
+    assert committed_epochs(spark, out) == [0]
+
+    assert run_pipeline_wave(spark, w2, out, **kw)["epoch"] == 1
+    assert committed_epochs(spark, out) == [0, 1]
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    undisturbed_bands = None
+    for epoch in (0, 1):
+        docs = docs_from_extraction(
+            spark.read.parquet(f"{out}/epochs/{epoch}/extracted").where(
+                F.col("success")
+            )
+        )
+        capped = D.capped_band_index(docs)
+        undisturbed_bands = (
+            capped
+            if undisturbed_bands is None
+            else undisturbed_bands.unionByName(capped)
+        )
+    band_cols = ("doc_id", "band", "band_hash")
+    assert rows(
+        spark.read.parquet(f"{out}/state/band_index").select(*band_cols)
+    ) == rows(undisturbed_bands.select(*band_cols))
+    assert rows(spark.read.parquet(f"{out}/state/exact_keys")) == rows(
+        spark.read.parquet(f"{ref_out}/state/exact_keys")
+    )
+    assert rows(spark.read.parquet(f"{out}/epochs/1/verdicts")) == rows(
+        spark.read.parquet(f"{ref_out}/epochs/1/verdicts")
+    )

@@ -527,63 +527,6 @@ def test_markdown_sink_writes_frontmatter_files(spark, tmp_path):
         assert row["md_file"].endswith(".md")
 
 
-def test_jsonl_sink_round_trip_and_determinism(spark, tmp_path):
-    """JSONL export e2e: every input row survives a parse round trip,
-    shard assignment is the documented pure function of the id (md5
-    mod n_shards — recomputed here in plain Python), the manifest
-    matches the directory exactly, and a re-run over the same
-    directory is byte-identical (idempotent resume)."""
-    import hashlib
-    import json
-    import os
-
-    from article_extractor_spark.sinks import write_jsonl_shards
-
-    n_shards = 4
-    out_dir = str(tmp_path / "jsonl")
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text", "source")
-        .limit(200)
-    )
-    manifest = sorted(
-        write_jsonl_shards(
-            docs, out_dir, id_col="doc_id", n_shards=n_shards
-        ).collect()
-    )
-    want = {r["doc_id"]: r for r in docs.collect()}
-
-    files = sorted(os.listdir(out_dir))
-    assert files == sorted(r["file"] for r in manifest)
-    assert sum(r["n_docs"] for r in manifest) == len(want)
-
-    seen = {}
-    for row in manifest:
-        path = os.path.join(out_dir, row["file"])
-        assert os.path.getsize(path) == row["n_bytes"]
-        lines = open(path, encoding="utf-8").read().splitlines()
-        assert len(lines) == row["n_docs"]
-        ids_in_file = []
-        for line in lines:
-            obj = json.loads(line)
-            assert list(obj) == ["doc_id", "text", "source"]
-            assert obj["text"] == want[obj["doc_id"]]["text"]
-            ids_in_file.append(str(obj["doc_id"]))
-            # documented pure-function shard assignment
-            h = int(hashlib.md5(str(obj["doc_id"]).encode()).hexdigest()[:15], 16)
-            assert h % n_shards == row["shard"]
-            seen[obj["doc_id"]] = True
-        assert ids_in_file == sorted(ids_in_file)
-    assert len(seen) == len(want)
-
-    before = {f: open(os.path.join(out_dir, f), "rb").read() for f in files}
-    write_jsonl_shards(
-        docs, out_dir, id_col="doc_id", n_shards=n_shards
-    ).collect()
-    after = {f: open(os.path.join(out_dir, f), "rb").read() for f in files}
-    assert before == after
-
-
 def test_markdown_filename_matches_reference_rules(spark):
     """Column-expression filename vs the reference's _url_to_filepath
     semantics (crawler.py:392-423) on edge cases."""
@@ -774,7 +717,7 @@ def test_auto_giant_threshold_resolution_and_routing(spark):
 
 def test_iceberg_probe_and_gated_branch(spark, tmp_path):
     """The real-Iceberg write/read twins are gated on a runtime-jar
-    probe (``has_iceberg``, the ``has_image_codec`` pattern).  This
+    probe (``has_iceberg``).  This
     sandbox ships no Iceberg jar, so the gate must (a) report False,
     (b) raise the documented NotImplementedError from both twins; in
     an Iceberg-enabled session the same test exercises the real
