@@ -131,12 +131,8 @@ def shuffled_pack(
     def _base(mapping: dict[str, int]):
         if not mapping:
             return F.lit(0)
-        return F.coalesce(
-            *[
-                F.when(F.col("bucket") == b, F.lit(off))
-                for b, off in mapping.items()
-            ]
-        )
+        pairs = ", ".join(f"'{b}', {off}L" for b, off in mapping.items())
+        return F.expr(f"map({pairs})")[F.col("bucket")]
 
     w = Window.partitionBy("bucket").orderBy("h", "doc_id")
     wsum = w.rowsBetween(Window.unboundedPreceding, -1)
@@ -352,15 +348,8 @@ def curation_verdicts(
     nd = docs.select("doc_id")
     nd_canon = ["label", "doc_id"]
     if index is not None:
-        # the wave's own rows (stored by a re-run's killed first try)
-        # are not stored matches: they would outrank the wave's labels
         cross = (
             D.incremental_minhash_pairs(docs, index)
-            .join(
-                docs.select(F.col("doc_id").alias("dup_of")),
-                "dup_of",
-                "left_anti",
-            )
             .groupBy("new_doc")
             .agg(F.min("dup_of").alias("cross_canon"))
             .withColumnRenamed("new_doc", "doc_id")
@@ -457,7 +446,7 @@ def run_pipeline(
         spark,
         corpus,
         out,
-        None,
+        {},
         run_id=run_id,
         n_buckets=n_buckets,
         waves=waves,
@@ -473,7 +462,7 @@ def _run_stages(
     spark: SparkSession,
     corpus: DataFrame | str,
     base: str,
-    state: str | None,
+    stored: dict[str, DataFrame],
     *,
     run_id: str,
     n_buckets: int | None,
@@ -488,10 +477,10 @@ def _run_stages(
     """The stage body both pipelines run under ``base``: extraction →
     verdicts → shuffled pack (offset by ``base_pos`` / ``base_tok``) →
     examples, each stage reading back the parquet the previous one
-    wrote.  ``state`` is the committed dedup state directory the
-    verdicts probe (``curation_verdicts(stored_ck=, index=)``), or
-    ``None`` for the full funnel.  Returns the curated (doc_id, text)
-    documents and the stage counts of the manifest."""
+    wrote.  ``stored`` is the committed dedup state the verdicts probe
+    (``read_state``), or ``{}`` for the full funnel.  Returns the
+    curated (doc_id, text) documents and the stage counts of the
+    manifest."""
     from .job import run_extraction_job
 
     ex_stats = run_extraction_job(
@@ -514,12 +503,6 @@ def _run_stages(
     benchmark = (
         spark.read.parquet(benchmark_path) if benchmark_path else None
     )
-    stored = {}
-    if state is not None:
-        stored = {
-            "stored_ck": spark.read.parquet(f"{state}/exact_keys"),
-            "index": spark.read.parquet(f"{state}/band_index"),
-        }
     verdicts = curation_verdicts(
         docs, benchmark=benchmark, bench_ids_below=None, **stored
     )
@@ -593,18 +576,27 @@ def _finish_manifest(
 # - per-epoch outputs: ``out/epochs/<N>/{extracted,verdicts,pack,
 #   examples}`` — committed epochs are NEVER rewritten (a trainer can
 #   consume epoch N while N+1 ingests);
-# - persisted dedup state: ``out/state/exact_keys`` (content-key →
-#   canonical) and ``out/state/band_index`` (the write-time-capped
-#   MinHash band index, ``dedup.write_band_index`` shape).  A wave is
-#   signed ONCE and probes the state with thin equi-joins — the stored
-#   corpus text is never re-read, never re-signed (the reference's
-#   incremental visited-set + change-queue replay, crawler.py:203-212,
+# - persisted dedup state, one directory pair per epoch:
+#   ``out/state/<N>/exact_keys`` (first-seen content key → canonical)
+#   and ``out/state/<N>/band_index`` (the wave's write-time-capped
+#   MinHash band rows, ``dedup.capped_band_index``).  A wave is signed
+#   ONCE and probes the state with thin equi-joins — the stored corpus
+#   text is never re-read, never re-signed (the reference's incremental
+#   visited-set + change-queue replay, crawler.py:203-212,
 #   storage_queue.py:187-224, lifted to dedup state);
 # - epoch packing: wave docs are shuffled among THEMSELVES and appended
 #   after everything committed (``shuffled_pack(base_pos, base_tok)``);
 #   epoch boundaries are HARD CHUNK boundaries (an epoch's short final
 #   chunk stays short), so epoch-0 examples are byte-identical to the
 #   one-shot run on the same corpus, by construction.
+#
+# Commit: a wave overwrites only its own directories, then creates ONE
+# file, ``out/state/_snapshots/<seq>.json``, listing the epochs, their
+# ``chunk_tokens``, the next train position and token, and the live
+# state directories relative to ``out``.  Readers resolve through the
+# latest snapshot, so a killed attempt's directories are never read;
+# compaction is one more snapshot.  Waves and compaction on one ``out``
+# run one at a time.
 #
 # Documented epoch-semantics divergence from the one-shot funnel: a
 # wave-N document that duplicates a stored document is statused
@@ -614,85 +606,109 @@ def _finish_manifest(
 # canonicals use (min stored band match | within-wave cluster label),
 # not the global min over a re-merged cluster.
 
+_SNAPSHOTS = "state/_snapshots"
+_NO_SNAPSHOT = dict(
+    epochs=[], chunk_tokens=None, next_train_pos=0, next_token=0,
+    exact_keys=[], band_index=[],
+)
+
 
 def _epoch_dir(out: str, epoch: int) -> str:
     return f"{out}/epochs/{int(epoch)}"
 
 
-def _state_marker(out: str, epoch: int) -> str:
-    return f"{out}/state/_epoch_{int(epoch)}_committed"
+def _hadoop_fs(spark: SparkSession, path: str):
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
-def _marker_chunk_tokens(
-    spark: SparkSession, out: str, epoch: int
-) -> int | None:
-    """The ``chunk_tokens`` an epoch was packed with, read from its
-    commit marker; ``None`` for an empty (legacy) marker."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(_state_marker(out, epoch))
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+def _delete_dir(spark: SparkSession, path: str) -> None:
+    jpath, fs = _hadoop_fs(spark, path)
+    fs.delete(jpath, True)
+
+
+def _latest_snapshot(spark: SparkSession, out: str) -> tuple[int, dict]:
+    """(seq, body) of the newest state snapshot under ``out`` — one
+    listing and one small file read, no Spark job; (0, empty) before
+    the first commit.  A ``state/`` of the older marker layout is
+    refused: read as empty, it would restart at epoch 0 on top of the
+    committed outputs."""
+    pattern, fs = _hadoop_fs(spark, f"{out}/{_SNAPSHOTS}/*.json")
+    names = {}
+    for status in fs.globStatus(pattern) or []:
+        name = status.getPath().getName()
+        if name[:-5].isdigit():  # skips write_file_atomic's .-temp
+            names[int(name[:-5])] = name
+    if not names:
+        markers, _ = _hadoop_fs(spark, f"{out}/state/_epoch_*_committed")
+        if fs.globStatus(markers):
+            raise ValueError(
+                f"{out}/state holds epoch commit markers and no "
+                "_snapshots/: that state layout is not read"
+            )
+        return 0, dict(_NO_SNAPSHOT)
+    seq = max(names)
+    path, _ = _hadoop_fs(spark, f"{out}/{_SNAPSHOTS}/{names[seq]}")
     stream = fs.open(path)
     try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        )
     finally:
         stream.close()
-    return int(json.loads(text)["chunk_tokens"]) if text.strip() else None
+    return seq, json.loads(text)
+
+
+def _commit_snapshot(
+    spark: SparkSession, out: str, seq: int, snap: dict
+) -> None:
+    tableio.write_file_atomic(
+        spark,
+        f"{out}/{_SNAPSHOTS}/{seq:06d}.json",
+        json.dumps(snap, sort_keys=True).encode(),
+    )
 
 
 def committed_epochs(spark: SparkSession, out: str) -> list[int]:
-    """Epochs whose state commit marker exists — the marker is written
-    LAST in a wave, so a killed wave resumes into the same epoch
-    number (extraction resumes via bucket lineage; verdicts/pack are
-    deterministic overwrites; state appends exactly once)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(
-        f"{out}/state/_epoch_*_committed"
-    )
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    statuses = fs.globStatus(jpath)
-    if statuses is None:
-        return []
-    out_epochs = []
-    for s in statuses:
-        name = s.getPath().getName()
-        out_epochs.append(int(name.split("_")[2]))
-    return sorted(out_epochs)
+    """Epochs the latest state snapshot lists.  The snapshot is created
+    LAST in a wave, so a killed wave resumes into the same epoch number
+    (extraction resumes via bucket lineage; verdicts, pack, examples
+    and the epoch's state directories are deterministic overwrites)."""
+    return _latest_snapshot(spark, out)[1]["epochs"]
 
 
-def _pack_bases(
-    spark: SparkSession, out: str, epochs: list[int], chunk_tokens: int
-) -> tuple[int, int]:
-    """(next train position, next token offset) from the COMMITTED
-    epochs' pack tables — a column-pruned aggregate over two int
-    columns, metadata-scale.  The token base is chunk-aligned
-    (epoch boundaries are hard chunk boundaries)."""
-    if not epochs:
-        return 0, 0
-    packs = spark.read.parquet(
-        *[f"{_epoch_dir(out, e)}/pack" for e in epochs]
-    )
-    agg = packs.agg(
-        F.max("train_pos").alias("mp"), F.max("last_chunk").alias("mc")
-    ).first()
-    base_pos = int(agg["mp"]) + 1 if agg["mp"] is not None else 0
-    base_chunk = int(agg["mc"]) + 1 if agg["mc"] is not None else 0
-    return base_pos, base_chunk * chunk_tokens
+def read_state(
+    spark: SparkSession, out: str, snap: dict | None = None
+) -> dict[str, DataFrame]:
+    """The committed dedup state that ``snap`` (default: the latest
+    snapshot) lists, keyed as ``curation_verdicts``' keywords:
+    ``stored_ck`` (ck, canon) and ``index`` (doc_id, band, band_hash).
+    Empty before the first commit."""
+    if snap is None:
+        snap = _latest_snapshot(spark, out)[1]
+    if not snap["epochs"]:
+        return {}
+    return {
+        kw: spark.read.parquet(*[f"{out}/{p}" for p in snap[key]])
+        for kw, key in (("stored_ck", "exact_keys"), ("index", "band_index"))
+    }
 
 
 def _update_dedup_state(
     spark: SparkSession,
     docs: DataFrame,
     out: str,
+    stored: dict[str, DataFrame],
     epoch: int,
-    chunk_tokens: int,
+    seq: int,
+    snap: dict,
 ) -> None:
-    """Append the wave's content keys and capped band rows to the
-    persisted state, then write the epoch's commit marker, which records
-    the epoch's ``chunk_tokens``.  First-seen keys only (a key already in
-    state keeps its stored canonical).  Both appends skip rows already
-    stored, so a wave killed before its marker re-runs without
-    appending anything twice; the marker lands whole or not at all."""
-    state = f"{out}/state"
+    """Overwrite the epoch's own state directories with the wave's
+    first-seen content keys (a key already stored keeps its stored
+    canonical) and its capped band rows, then commit ``snap`` with
+    those directories added as snapshot ``seq``."""
+    keys = f"state/{int(epoch)}/exact_keys"
+    bands = f"state/{int(epoch)}/band_index"
     ck = (
         docs.select(
             "doc_id", F.md5(D.normalized_text(F.col("text"))).alias("ck")
@@ -700,34 +716,17 @@ def _update_dedup_state(
         .groupBy("ck")
         .agg(F.min("doc_id").alias("canon"))
     )
-    jvm = spark._jvm
-    keys_path = jvm.org.apache.hadoop.fs.Path(f"{state}/exact_keys")
-    fs = keys_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(keys_path):
-        stored = spark.read.parquet(f"{state}/exact_keys").select("ck")
-        ck = ck.join(stored, "ck", "left_anti")
-    ck.write.mode("append").parquet(f"{state}/exact_keys")
-
-    bands = D.capped_band_index(docs)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{state}/band_index")):
-        stored = spark.read.parquet(f"{state}/band_index")
-        bands = bands.join(
-            stored.select("doc_id", "band", "band_hash"),
-            ["doc_id", "band", "band_hash"],
-            "left_anti",
-        )
-    (
-        bands.withColumn("shard", F.pmod(F.col("band_hash"), F.lit(64)))
-        .repartition("shard")
-        .write.mode("append")
-        .partitionBy("shard")
-        .parquet(f"{state}/band_index")
+    if stored:
+        ck = ck.join(stored["stored_ck"].select("ck"), "ck", "left_anti")
+    ck.write.mode("overwrite").parquet(f"{out}/{keys}")
+    D.capped_band_index(docs).write.mode("overwrite").parquet(
+        f"{out}/{bands}"
     )
-    tableio.write_file_atomic(
-        spark,
-        _state_marker(out, epoch),
-        json.dumps({"chunk_tokens": chunk_tokens}).encode(),
-    )
+    _commit_snapshot(spark, out, seq, {
+        **snap,
+        "exact_keys": snap["exact_keys"] + [keys],
+        "band_index": snap["band_index"] + [bands],
+    })
 
 
 def run_pipeline_wave(
@@ -753,43 +752,42 @@ def run_pipeline_wave(
     state with O(wave) work.  Each call consumes one wave corpus (path
     or DataFrame) and auto-assigns the next epoch number; a killed wave
     re-runs into the same epoch (extraction resumes at bucket
-    granularity, the deterministic downstream stages overwrite, state
-    commits once).
+    granularity, the deterministic downstream stages and the epoch's
+    state directories overwrite, and the snapshot commits once).
 
     ``epoch`` pins the epoch number explicitly — the streaming funnel
     passes its micro-batch id so a REPLAYED batch (crash between state
-    commit and stream checkpoint) is recognized by its marker and
-    skipped instead of re-ingesting as a fresh wave (exactly-once).
+    commit and stream checkpoint) is recognized by the latest snapshot
+    and skipped instead of re-ingesting as a fresh wave (exactly-once).
 
-    ``chunk_tokens`` must match the latest committed epoch's (recorded
-    in its commit marker): the token base continues that epoch's chunk
-    grid, so a different size raises ``ValueError`` before anything
-    is written."""
+    ``chunk_tokens`` must match the committed epochs' (recorded in the
+    snapshot): the token base continues their chunk grid, so a
+    different size raises ``ValueError`` before anything is written."""
     t0 = time.time()
-    done = committed_epochs(spark, out)
+    seq, snap = _latest_snapshot(spark, out)
+    done = snap["epochs"]
     if epoch is None:
         epoch = (max(done) + 1) if done else 0
     elif epoch in done:
         return {"epoch": epoch, "skipped": True}
-    prior = [e for e in done if e < epoch]
-    if prior:
+    if done and snap["chunk_tokens"] != chunk_tokens:
         # base_tok counts whole chunks of the committed stream: packing
         # this wave with another chunk size would misalign every offset
-        committed = _marker_chunk_tokens(spark, out, prior[-1])
-        if committed is not None and committed != chunk_tokens:
-            raise ValueError(
-                f"chunk_tokens={chunk_tokens} differs from "
-                f"chunk_tokens={committed} committed by epoch {prior[-1]}"
-            )
+        raise ValueError(
+            f"chunk_tokens={chunk_tokens} differs from "
+            f"chunk_tokens={snap['chunk_tokens']} committed by epoch "
+            f"{max(done)}"
+        )
     run_id = run_id or f"wave-{epoch}"
-    base_pos, base_tok = _pack_bases(spark, out, prior, chunk_tokens)
+    base_pos, base_tok = snap["next_train_pos"], snap["next_token"]
     # the first committed wave runs the full funnel (it IS the corpus)
     # and seeds the dedup state; later waves probe it
+    stored = read_state(spark, out, snap)
     docs, stages = _run_stages(
         spark,
         corpus,
         _epoch_dir(out, epoch),
-        f"{out}/state" if prior else None,
+        stored,
         run_id=run_id,
         n_buckets=n_buckets,
         waves=waves,
@@ -800,7 +798,15 @@ def run_pipeline_wave(
         base_pos=base_pos,
         base_tok=base_tok,
     )
-    _update_dedup_state(spark, docs, out, epoch, chunk_tokens)
+    # chunk ids run contiguously from the chunk-aligned base_tok, so
+    # the next epoch starts n_examples whole chunks later
+    _update_dedup_state(spark, docs, out, stored, epoch, seq + 1, {
+        **snap,
+        "epochs": sorted(done + [epoch]),
+        "chunk_tokens": chunk_tokens,
+        "next_train_pos": base_pos + stages["kept_docs"],
+        "next_token": base_tok + stages["n_examples"] * chunk_tokens,
+    })
     return _finish_manifest(
         {
             "run_id": run_id,
@@ -817,30 +823,22 @@ def run_pipeline_wave(
 def compact_state(spark: SparkSession, out: str) -> dict:
     """Maintenance: re-cap the persisted band index after per-wave
     appends (``dedup.compact_band_index`` — EXACT, reproduces the
-    from-scratch index over the union corpus).  Rewrites atomically:
-    compacted rows land in a fresh directory, then swap via rename —
-    a probe running concurrently sees old or new, never a mix.  Run
-    every ~10 epochs, like ``vacuum_plan`` one table over."""
-    state = f"{out}/state"
-    idx = spark.read.parquet(f"{state}/band_index")
+    from-scratch index over the union corpus).  The compacted rows land
+    in a fresh directory, a new snapshot lists it in place of the band
+    directories it replaces, and only then are those deleted: a crash
+    before the commit leaves the old snapshot live, one after it leaves
+    only unreferenced directories, so there is always a live index.
+    Waves and compaction on one ``out`` run one at a time.  Run every
+    ~10 epochs, like ``vacuum_plan`` one table over."""
+    seq, snap = _latest_snapshot(spark, out)
+    idx = read_state(spark, out, snap)["index"]
     before = idx.count()
-    compacted = D.compact_band_index(idx).withColumn(
-        "shard", F.pmod(F.col("band_hash"), F.lit(64))
+    path = f"state/compacted-{seq + 1}/band_index"
+    D.compact_band_index(idx).write.mode("overwrite").parquet(
+        f"{out}/{path}"
     )
-    tmp = f"{state}/band_index__compacting"
-    (
-        compacted.repartition("shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(tmp)
-    )
-    after = spark.read.parquet(tmp).count()
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(state).getFileSystem(spark._jsc.hadoopConfiguration())
-    old = P(f"{state}/band_index__old")
-    fs.delete(old, True)
-    fs.rename(P(f"{state}/band_index"), old)
-    fs.rename(P(tmp), P(f"{state}/band_index"))
-    fs.delete(old, True)
+    after = spark.read.parquet(f"{out}/{path}").count()
+    _commit_snapshot(spark, out, seq + 1, {**snap, "band_index": [path]})
+    for replaced in snap["band_index"]:
+        _delete_dir(spark, f"{out}/{replaced}")
     return {"rows_before": before, "rows_after": after}

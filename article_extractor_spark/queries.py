@@ -3068,10 +3068,10 @@ def _incremental_packs(spark: SparkSession, sf_dir: str):
     (epoch boundaries are hard chunk boundaries —
     ``pipeline.run_pipeline_wave`` semantics, where committed epochs
     are never rewritten).  The bases come from one column-pruned
-    count/sum aggregate — at 10^12 docs the production path reads them
-    from the committed pack tables' metadata instead
-    (``pipeline._pack_bases``); either way it is metadata-scale, never
-    a re-pack of the stored corpus."""
+    count/sum aggregate — the production path records them at commit
+    instead, in the state snapshot (next train position = base + kept
+    docs, next token = base + examples × chunk), so it never re-reads
+    the stored corpus."""
     from .pipeline import shuffled_pack
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")

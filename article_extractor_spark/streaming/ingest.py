@@ -151,8 +151,8 @@ def streaming_pipeline_job(
     test_streaming_pipeline_matches_batch_waves).
 
     Exactly-once: the micro-batch id IS the epoch number, and
-    ``run_pipeline_wave`` skips an epoch whose state marker already
-    committed — a batch replayed after a crash between state commit
+    ``run_pipeline_wave`` skips an epoch that the latest state snapshot
+    already lists — a batch replayed after a crash between state commit
     and stream checkpoint is recognized instead of re-ingested; a
     crash EARLIER in the batch resumes into the same epoch (bucket
     lineage for extraction, deterministic overwrites downstream).

@@ -1704,49 +1704,6 @@ def test_curation_verdicts_on_adversarial_corpus(spark):
         assert got[22].startswith("quality:"), got[22]
 
 
-def test_curation_verdicts_ignore_the_waves_own_state_rows(spark):
-    """A wave re-run after its state appends (killed before its commit
-    marker) probes a state that already holds the wave's own content
-    keys and band rows.  Those rows must not become canonicals: the
-    verdicts equal the state-free funnel's, flood canonical included."""
-    from pyspark.sql import functions as F
-
-    from article_extractor_spark.functions import dedup as D
-    from article_extractor_spark.pipeline import curation_verdicts
-    from article_extractor_spark.queries import QUERY_FNS, load
-
-    base = load(spark, SF_DIR, "documents").where(F.col("doc_id") < 40)
-    # flood a text the quality rules keep, so its copies reach the
-    # dedup arms
-    kept_id = (
-        QUERY_FNS["quality_filter"](spark, SF_DIR)
-        .where("keep AND doc_id >= 10 AND doc_id < 40")
-        .agg(F.min("doc_id"))
-        .first()[0]
-    )
-    flood_text = base.where(F.col("doc_id") == kept_id).first()["text"]
-    flood = spark.createDataFrame(
-        [(i, flood_text) for i in range(1000, 1005)],
-        "doc_id long, text string",
-    )
-    df = base.select("doc_id", "text").unionByName(flood)
-    own_state = {
-        "stored_ck": df.select(
-            "doc_id",
-            F.md5(D.normalized_text(F.col("text"))).alias("ck"),
-        )
-        .groupBy("ck")
-        .agg(F.min("doc_id").alias("canon")),
-        "index": D.capped_band_index(df),
-    }
-    want = sorted(map(tuple, curation_verdicts(df).collect()))
-    got = sorted(map(tuple, curation_verdicts(df, **own_state).collect()))
-    statuses = dict(want)
-    assert statuses[kept_id].startswith("kept:")
-    assert statuses[1001] == "exact_dup"
-    assert got == want
-
-
 def test_quality_lexical_matches_python_reference(spark):
     """Independent replay of the trained lexical scorer's math —
     labels taken from the (separately oracle-checked) rule filter,

@@ -9,12 +9,16 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from article_extractor_spark import pipeline
 from article_extractor_spark.pipeline import (
     committed_epochs,
+    read_state,
     run_pipeline,
     run_pipeline_wave,
 )
@@ -221,7 +225,7 @@ def test_pipeline_wave_replay_skips_committed_epoch(
     spark, wave_paths, tmp_path
 ):
     """Exactly-once for the streaming funnel: a replayed micro-batch
-    (explicit epoch whose state marker already committed) is skipped,
+    (explicit epoch that the latest snapshot already lists) is skipped,
     leaving every output byte untouched."""
     w1, _ = wave_paths
     out = str(tmp_path / "replay")
@@ -264,7 +268,7 @@ def test_compact_state_equals_from_scratch_index(spark, incremental_out):
     )
     docs = docs_from_extraction(extracted.where(F.col("success")))
     scratch = D.capped_band_index(docs)
-    stored = spark.read.parquet(f"{out}/state/band_index").select(
+    stored = read_state(spark, out)["index"].select(
         "doc_id", "band", "band_hash"
     )
     assert stored.exceptAll(scratch).count() == 0
@@ -272,7 +276,7 @@ def test_compact_state_equals_from_scratch_index(spark, incremental_out):
     # probes still work against the compacted index
     pairs = D.incremental_minhash_pairs(
         docs.where(F.col("doc_id") == "zdup-near"),
-        spark.read.parquet(f"{out}/state/band_index"),
+        read_state(spark, out)["index"],
     )
     assert pairs.count() > 0
 
@@ -280,7 +284,7 @@ def test_compact_state_equals_from_scratch_index(spark, incremental_out):
 def test_wave_chunk_tokens_must_match_committed_epoch(
     spark, wave_paths, incremental_out
 ):
-    """Each epoch's commit marker records its chunk_tokens.  A later
+    """Each epoch's commit snapshot records its chunk_tokens.  A later
     wave with another size would pack on a misaligned token base, so it
     raises — naming both sizes — before writing anything under its
     epoch.  The same size passes (wave 2 of incremental_out)."""
@@ -288,8 +292,8 @@ def test_wave_chunk_tokens_must_match_committed_epoch(
     out, _, m2, _ = incremental_out
     assert m2["epoch"] == 1 and m2["chunk_tokens"] == CHUNK
     for epoch in (0, 1):
-        with open(f"{out}/state/_epoch_{epoch}_committed") as fh:
-            assert json.load(fh) == {"chunk_tokens": CHUNK}
+        with open(f"{out}/state/_snapshots/{epoch + 1:06d}.json") as fh:
+            assert json.load(fh)["chunk_tokens"] == CHUNK
 
     both = rf"chunk_tokens={2 * CHUNK}\b.*chunk_tokens={CHUNK}\b"
     with pytest.raises(ValueError, match=both):
@@ -301,76 +305,118 @@ def test_wave_chunk_tokens_must_match_committed_epoch(
     assert committed_epochs(spark, out) == [0, 1]
 
 
-def test_empty_legacy_epoch_marker_is_accepted(spark, tmp_path):
-    """Markers written before chunk_tokens was recorded are empty files:
-    they carry no size, so no wave is refused on their account."""
-    from article_extractor_spark.pipeline import _marker_chunk_tokens
+def test_legacy_epoch_markers_are_refused(spark, wave_paths, tmp_path):
+    """A state/ directory of the older commit layout (epoch markers, no
+    _snapshots/) is refused, naming the directory, before anything is
+    written: read as empty, it would restart at epoch 0 on top of the
+    committed outputs."""
+    from article_extractor_spark.pipeline import compact_state
 
+    _, w2 = wave_paths
     out = str(tmp_path / "legacy")
     os.makedirs(f"{out}/state")
     open(f"{out}/state/_epoch_0_committed", "w").close()
-    assert committed_epochs(spark, out) == [0]
-    assert _marker_chunk_tokens(spark, out, 0) is None
+    named = re.escape(f"{out}/state")
+    with pytest.raises(ValueError, match=named):
+        run_pipeline_wave(
+            spark, w2, out, n_buckets=N_BUCKETS, waves=2,
+            min_word_count=10, chunk_tokens=CHUNK,
+        )
+    with pytest.raises(ValueError, match=named):
+        compact_state(spark, out)
+    assert os.listdir(out) == ["state"]
+    assert os.listdir(f"{out}/state") == ["_epoch_0_committed"]
 
 
-def test_wave_killed_mid_marker_reruns_to_the_undisturbed_state(
-    spark, wave_paths, incremental_out, tmp_path, monkeypatch
+class _Killed(Exception):
+    pass
+
+
+def _durable_actions(monkeypatch, kill_at=None):
+    """Wrap every durable action of a wave or a compaction — each
+    parquet write, each atomic file write (lineage and snapshot), each
+    state-directory delete — and record it; raise ``_Killed`` right
+    after action number ``kill_at``."""
+    from pyspark.sql import DataFrameWriter
+
+    done = []
+
+    def wrap(owner, name):
+        action = getattr(owner, name)
+
+        def run(*args, **kwargs):
+            result = action(*args, **kwargs)
+            done.append(name)
+            if len(done) == kill_at:
+                raise _Killed(f"killed after {name}, action {kill_at}")
+            return result
+
+        monkeypatch.setattr(owner, name, run)
+
+    wrap(DataFrameWriter, "parquet")
+    wrap(tableio, "write_file_atomic")
+    wrap(pipeline, "_delete_dir")
+    return done
+
+
+def test_every_state_commit_kill_point_reruns_to_the_undisturbed_state(
+    spark, wave_paths, tmp_path, monkeypatch
 ):
-    """Kill point: epoch 1 dies while writing its commit marker, after
-    both state appends.  The half-written marker must not commit the
-    epoch, and re-running the wave must leave the dedup state exactly
-    as an undisturbed run leaves it — no band row appended twice — and
-    reproduce that run's verdicts."""
-    from article_extractor_spark.functions import dedup as D
-    from article_extractor_spark.pipeline import docs_from_extraction
-
+    """Kill-point sweep over the state commit.  A dry run of epoch 1 and
+    one of compact_state count their durable actions.  Then, for each
+    k, a fresh copy of the state the call starts from is killed right
+    after action k, and the same call re-runs.  Every point must
+    converge to the undisturbed run: epochs 0 and 1 committed, and
+    epoch 1's verdicts, pack and examples and the state tables read
+    through the snapshot equal as multisets."""
     w1, w2 = wave_paths
-    ref_out = incremental_out[0]
-    out = str(tmp_path / "killed")
+    # one extraction wave: a second adds kill points in the bucket
+    # lineage, which test_spark_job's resume tests already cover
     kw = dict(
-        n_buckets=N_BUCKETS, waves=2, min_word_count=10, chunk_tokens=CHUNK
+        n_buckets=N_BUCKETS, waves=1, min_word_count=10, chunk_tokens=CHUNK
     )
-    run_pipeline_wave(spark, w1, out, **kw)
+    epoch0 = str(tmp_path / "epoch0")
+    run_pipeline_wave(spark, w1, epoch0, **kw)
 
-    def crash_on_marker(data):
-        # the marker payload goes through the same write helper as the
-        # lineage files, so only the marker's write is killed
-        if b"chunk_tokens" in bytes(data):
-            raise OSError("injected crash mid-marker")
-        return bytearray(data)
+    def wave(out):
+        run_pipeline_wave(spark, w2, out, epoch=1, **kw)
 
-    monkeypatch.setattr(tableio, "bytearray", crash_on_marker, raising=False)
-    with pytest.raises(OSError, match="injected"):
-        run_pipeline_wave(spark, w2, out, **kw)
-    monkeypatch.undo()
-    assert committed_epochs(spark, out) == [0]
-
-    assert run_pipeline_wave(spark, w2, out, **kw)["epoch"] == 1
-    assert committed_epochs(spark, out) == [0, 1]
+    def compact(out):
+        pipeline.compact_state(spark, out)
 
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
-    undisturbed_bands = None
-    for epoch in (0, 1):
-        docs = docs_from_extraction(
-            spark.read.parquet(f"{out}/epochs/{epoch}/extracted").where(
-                F.col("success")
-            )
-        )
-        capped = D.capped_band_index(docs)
-        undisturbed_bands = (
-            capped
-            if undisturbed_bands is None
-            else undisturbed_bands.unionByName(capped)
-        )
-    band_cols = ("doc_id", "band", "band_hash")
-    assert rows(
-        spark.read.parquet(f"{out}/state/band_index").select(*band_cols)
-    ) == rows(undisturbed_bands.select(*band_cols))
-    assert rows(spark.read.parquet(f"{out}/state/exact_keys")) == rows(
-        spark.read.parquet(f"{ref_out}/state/exact_keys")
-    )
-    assert rows(spark.read.parquet(f"{out}/epochs/1/verdicts")) == rows(
-        spark.read.parquet(f"{ref_out}/epochs/1/verdicts")
+    def result(out):
+        assert committed_epochs(spark, out) == [0, 1]
+        got = {
+            name: rows(spark.read.parquet(f"{out}/epochs/1/{name}"))
+            for name in ("verdicts", "pack", "examples")
+        }
+        got.update((k, rows(df)) for k, df in read_state(spark, out).items())
+        return got
+
+    def sweep(start, call):
+        ref = str(tmp_path / f"{call.__name__}-ref")
+        shutil.copytree(start, ref)
+        with monkeypatch.context() as m:
+            actions = _durable_actions(m)
+            call(ref)
+        want = result(ref)
+        for k in range(1, len(actions) + 1):
+            out = str(tmp_path / f"{call.__name__}-{k}")
+            shutil.copytree(start, out)
+            with monkeypatch.context() as m:
+                _durable_actions(m, kill_at=k)
+                with pytest.raises(_Killed):
+                    call(out)
+            call(out)
+            assert result(out) == want, (call.__name__, k, actions[k - 1])
+        return ref, len(actions)
+
+    wave_ref, n_wave = sweep(epoch0, wave)
+    _, n_compact = sweep(wave_ref, compact)
+    print(
+        f"kill points covered: {n_wave} in epoch 1, "
+        f"{n_compact} in compact_state"
     )
