@@ -5,11 +5,11 @@
 Dataflow (one map stage + one tiny metrics shuffle; SURVEY.md §3.1/§4):
 
     read corpus (doc_id, spans)        # bucketed Parquet / Iceberg scan
-      → skip committed buckets         # resume: lineage anti-join
+      → skip committed buckets         # resume: latest bucket snapshot
       → render spans → html            # JVM-side, whole-stage codegen
       → mapInArrow extraction          # the single vectorized UDF stage
       → write bucketed output          # append into wiped bucket dirs
-      → pruned read-back → lineage     # per-bucket metrics commit
+      → pruned read-back → lineage     # per-bucket snapshot commit
                            + HLL       # one grouping-sets aggregate
 
 Wave execution: buckets are processed in ``waves`` groups, each wave
@@ -230,9 +230,10 @@ def _run_waves(
     if "url" not in corpus.columns:
         corpus = corpus.withColumn("url", F.lit(""))
 
-    committed = (
-        tableio.read_committed_buckets(spark, output_path) if resume else set()
-    )
+    # read even without resume: another n_buckets is refused up front
+    committed = tableio.read_committed_buckets(spark, output_path, n_buckets)
+    if not resume:
+        committed = set()
     todo = [b for b in range(n_buckets) if b not in committed]
     # Wipe every uncommitted bucket dir ONCE up front (a no-op on a
     # fresh output; non-empty only when a crashed wave left partial
@@ -353,17 +354,19 @@ def _run_waves(
                 .partitionBy("bucket")
                 .parquet(markdown_dir.rstrip("/") + "/_manifest")
             )
-        # driver-side pyarrow commit (~2 KB of metadata): the Spark
+        # driver-side snapshot commit (one small JSON file): the Spark
         # write job here cost 1.5-2.3 s of fixed scheduler time per
         # wave — see tableio.append_lineage_rows
-        tableio.append_lineage_rows(spark, lineage_rows, output_path)
+        tableio.append_lineage_rows(
+            spark, lineage_rows, output_path, n_buckets
+        )
         docs_done += sum(r[4] for r in lineage_rows)  # docs_in ordinal
         # the committed wave's registers join the run's sketch
         # (register-wise max, the HLL union)
         for j, mx in wave_regs.items():
             run_regs[j] = max(run_regs[j], mx)
         # wave-level stats from the committed lineage rows themselves
-        # (schema ordinals: 4=docs_in, 6=parse_failures, 8=spans)
+        # (LINEAGE_FIELDS ordinals: 4=docs_in, 6=parse_failures, 8=spans)
         observed.append(
             {
                 "wave": wave_idx,

@@ -426,14 +426,15 @@ def run_pipeline(
     curation verdicts → shuffled pack of the kept documents →
     materialized examples, each stage written under ``out``.
 
-    Layout:  ``out/extracted`` (bucketed result table + lineage),
+    Layout:  ``out/extracted`` (bucketed result table + bucket
+    snapshots in ``out/extracted_lineage``),
     ``out/verdicts`` (one status row per document), ``out/pack``
     (per-doc train position + chunk assignment), ``out/examples``
     (chunk_id, example, n_tokens), and a stage-count manifest returned
     (and written to ``manifest_path`` when given).
 
-    Resume rides the extraction job's bucket lineage: a re-run after a
-    kill skips committed buckets, and the downstream stages are
+    Resume rides the extraction job's bucket snapshots: a re-run after
+    a kill skips committed buckets, and the downstream stages are
     deterministic functions of the extraction table, so re-deriving
     them is idempotent (the crawler-manifest analog folds per stage).
     Each downstream stage READS BACK the parquet the previous stage
@@ -595,8 +596,10 @@ def _finish_manifest(
 # ``chunk_tokens``, the next train position and token, and the live
 # state directories relative to ``out``.  Readers resolve through the
 # latest snapshot, so a killed attempt's directories are never read;
-# compaction is one more snapshot.  Waves and compaction on one ``out``
-# run one at a time.
+# compaction is one more snapshot, then deletes every state directory
+# it does not list.  It is the job's bucket log mechanism
+# (``tableio.latest_snapshot`` / ``commit_snapshot``).  Waves and
+# compaction on one ``out`` run one at a time.
 #
 # Documented epoch-semantics divergence from the one-shot funnel: a
 # wave-N document that duplicates a stored document is statused
@@ -606,7 +609,6 @@ def _finish_manifest(
 # canonicals use (min stored band match | within-wave cluster label),
 # not the global min over a re-merged cluster.
 
-_SNAPSHOTS = "state/_snapshots"
 _NO_SNAPSHOT = dict(
     epochs=[], chunk_tokens=None, next_train_pos=0, next_token=0,
     exact_keys=[], band_index=[],
@@ -617,56 +619,21 @@ def _epoch_dir(out: str, epoch: int) -> str:
     return f"{out}/epochs/{int(epoch)}"
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+def _snapshots(out: str) -> str:
+    return f"{out}/state/_snapshots"
+
+
+def _latest_state(spark: SparkSession, out: str) -> tuple[int, dict]:
+    """(seq, body) of the newest state snapshot (refuses old markers)."""
+    seq, snap = tableio.latest_snapshot(
+        spark, _snapshots(out), f"{out}/state/_epoch_*_committed"
+    )
+    return seq, snap or dict(_NO_SNAPSHOT)
 
 
 def _delete_dir(spark: SparkSession, path: str) -> None:
-    jpath, fs = _hadoop_fs(spark, path)
+    jpath, fs = tableio.hadoop_fs(spark, path)
     fs.delete(jpath, True)
-
-
-def _latest_snapshot(spark: SparkSession, out: str) -> tuple[int, dict]:
-    """(seq, body) of the newest state snapshot under ``out`` — one
-    listing and one small file read, no Spark job; (0, empty) before
-    the first commit.  A ``state/`` of the older marker layout is
-    refused: read as empty, it would restart at epoch 0 on top of the
-    committed outputs."""
-    pattern, fs = _hadoop_fs(spark, f"{out}/{_SNAPSHOTS}/*.json")
-    names = {}
-    for status in fs.globStatus(pattern) or []:
-        name = status.getPath().getName()
-        if name[:-5].isdigit():  # skips write_file_atomic's .-temp
-            names[int(name[:-5])] = name
-    if not names:
-        markers, _ = _hadoop_fs(spark, f"{out}/state/_epoch_*_committed")
-        if fs.globStatus(markers):
-            raise ValueError(
-                f"{out}/state holds epoch commit markers and no "
-                "_snapshots/: that state layout is not read"
-            )
-        return 0, dict(_NO_SNAPSHOT)
-    seq = max(names)
-    path, _ = _hadoop_fs(spark, f"{out}/{_SNAPSHOTS}/{names[seq]}")
-    stream = fs.open(path)
-    try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    return seq, json.loads(text)
-
-
-def _commit_snapshot(
-    spark: SparkSession, out: str, seq: int, snap: dict
-) -> None:
-    tableio.write_file_atomic(
-        spark,
-        f"{out}/{_SNAPSHOTS}/{seq:06d}.json",
-        json.dumps(snap, sort_keys=True).encode(),
-    )
 
 
 def committed_epochs(spark: SparkSession, out: str) -> list[int]:
@@ -674,7 +641,7 @@ def committed_epochs(spark: SparkSession, out: str) -> list[int]:
     LAST in a wave, so a killed wave resumes into the same epoch number
     (extraction resumes via bucket lineage; verdicts, pack, examples
     and the epoch's state directories are deterministic overwrites)."""
-    return _latest_snapshot(spark, out)[1]["epochs"]
+    return _latest_state(spark, out)[1]["epochs"]
 
 
 def read_state(
@@ -685,7 +652,7 @@ def read_state(
     ``stored_ck`` (ck, canon) and ``index`` (doc_id, band, band_hash).
     Empty before the first commit."""
     if snap is None:
-        snap = _latest_snapshot(spark, out)[1]
+        snap = _latest_state(spark, out)[1]
     if not snap["epochs"]:
         return {}
     return {
@@ -722,7 +689,7 @@ def _update_dedup_state(
     D.capped_band_index(docs).write.mode("overwrite").parquet(
         f"{out}/{bands}"
     )
-    _commit_snapshot(spark, out, seq, {
+    tableio.commit_snapshot(spark, _snapshots(out), seq, {
         **snap,
         "exact_keys": snap["exact_keys"] + [keys],
         "band_index": snap["band_index"] + [bands],
@@ -764,7 +731,7 @@ def run_pipeline_wave(
     snapshot): the token base continues their chunk grid, so a
     different size raises ``ValueError`` before anything is written."""
     t0 = time.time()
-    seq, snap = _latest_snapshot(spark, out)
+    seq, snap = _latest_state(spark, out)
     done = snap["epochs"]
     if epoch is None:
         epoch = (max(done) + 1) if done else 0
@@ -825,12 +792,12 @@ def compact_state(spark: SparkSession, out: str) -> dict:
     appends (``dedup.compact_band_index`` — EXACT, reproduces the
     from-scratch index over the union corpus).  The compacted rows land
     in a fresh directory, a new snapshot lists it in place of the band
-    directories it replaces, and only then are those deleted: a crash
-    before the commit leaves the old snapshot live, one after it leaves
-    only unreferenced directories, so there is always a live index.
+    directories it replaces, and only then is every state directory it
+    does not list deleted: a crash before the commit leaves the old
+    snapshot live, so there is always a live index.
     Waves and compaction on one ``out`` run one at a time.  Run every
     ~10 epochs, like ``vacuum_plan`` one table over."""
-    seq, snap = _latest_snapshot(spark, out)
+    seq, snap = _latest_state(spark, out)
     idx = read_state(spark, out, snap)["index"]
     before = idx.count()
     path = f"state/compacted-{seq + 1}/band_index"
@@ -838,7 +805,23 @@ def compact_state(spark: SparkSession, out: str) -> dict:
         f"{out}/{path}"
     )
     after = spark.read.parquet(f"{out}/{path}").count()
-    _commit_snapshot(spark, out, seq + 1, {**snap, "band_index": [path]})
-    for replaced in snap["band_index"]:
-        _delete_dir(spark, f"{out}/{replaced}")
+    snap = {**snap, "band_index": [path]}
+    tableio.commit_snapshot(spark, _snapshots(out), seq + 1, snap)
+    _vacuum_state(spark, out, snap["exact_keys"] + snap["band_index"])
     return {"rows_before": before, "rows_after": after}
+
+
+def _vacuum_state(spark: SparkSession, out: str, live: list[str]) -> None:
+    """Delete every state directory outside ``_snapshots/`` that the
+    ``live`` paths do not name: the band directories a compaction
+    replaced, and any a killed wave or compaction left behind."""
+    pattern, fs = tableio.hadoop_fs(spark, f"{out}/state/[!_]*")
+    for top in fs.globStatus(pattern):
+        rel = f"state/{top.getPath().getName()}"
+        paths = [
+            f"{rel}/{t.getPath().getName()}"
+            for t in fs.listStatus(top.getPath())
+        ]
+        for path in paths if set(paths) & set(live) else [rel]:
+            if path not in live:
+                _delete_dir(spark, f"{out}/{path}")

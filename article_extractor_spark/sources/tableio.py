@@ -1,4 +1,4 @@
-"""Bucketed table IO + per-partition lineage (checkpoint/resume).
+"""Bucketed table IO + per-bucket lineage (checkpoint/resume).
 
 Iceberg-shaped layout emulated on Parquet (no Iceberg runtime jar in
 this sandbox — SURVEY.md §7.0): tables are physically partitioned by
@@ -7,17 +7,19 @@ this sandbox — SURVEY.md §7.0): tables are physically partitioned by
 swapping ``.format("parquet")`` for ``.format("iceberg")`` +
 ``PARTITIONED BY (bucket(N, doc_id))`` is a local change.
 
-The lineage table follows the reference's append-only change-queue
-pattern (storage_queue.py:87-293 — ordered, replayable commit records):
-one row per (run, bucket) with extraction metrics; resume = anti-join
-input buckets against committed lineage (SURVEY.md §4 item 5).
+Commits go through one snapshot log (``latest_snapshot``,
+``commit_snapshot``), shared with the wave state: the job's
+``lineage_path(out)/<seq>.json`` lists each committed bucket's metrics
+and the frozen ``n_buckets``; resume skips the buckets the latest
+snapshot lists (SURVEY.md §4 item 5).
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.sketches import HLL_M, hll_rho
 
@@ -38,20 +40,19 @@ DEFAULT_BUCKETS = 32
 # several-groups-per-file ratio at production scale).
 ROW_GROUP_BYTES = 4 << 20
 
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType()),
-        T.StructField("bucket", T.IntegerType()),
-        T.StructField("doc_id_min", T.StringType()),
-        T.StructField("doc_id_max", T.StringType()),
-        T.StructField("docs_in", T.LongType()),
-        T.StructField("docs_ok", T.LongType()),
-        T.StructField("parse_failures", T.LongType()),
-        T.StructField("nodes_scored", T.LongType()),
-        T.StructField("spans_emitted", T.LongType()),
-        T.StructField("cpu_ms", T.LongType()),
-        T.StructField("committed_at", T.TimestampType()),
-    ]
+# Field order of a bucket's lineage entry (``lineage_and_registers``).
+LINEAGE_FIELDS = (
+    "run_id",
+    "bucket",
+    "doc_id_min",
+    "doc_id_max",
+    "docs_in",
+    "docs_ok",
+    "parse_failures",
+    "nodes_scored",
+    "spans_emitted",
+    "cpu_ms",
+    "committed_at",
 )
 
 
@@ -160,15 +161,19 @@ def string_bucket_expr(n_buckets: int, id_col: str = "doc_id"):
     ).cast("int")
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop ``Path``, its ``FileSystem``) for ``path``, any FS."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
 def has_bucket_dirs(spark: SparkSession, path: str, n_buckets: int) -> bool:
     """True when ``path`` is physically laid out as ``bucket=k``
     partition directories (driver-side FS metadata glob).  A table with
     a plain ``bucket`` DATA column in unpartitioned files also exposes
     the column after read, but its task splits span buckets — the
     preshuffled write is only safe against the directory layout."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/bucket=*")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    jpath, fs = hadoop_fs(spark, path.rstrip("/") + "/bucket=*")
     try:
         statuses = fs.globStatus(jpath)
     except Exception:  # pragma: no cover - FS-specific glob failures
@@ -221,15 +226,10 @@ def clear_buckets(spark: SparkSession, path: str, buckets) -> None:
     bucket dirs once up front — a no-op on the happy path, non-empty
     only after a crash — and appends, which commits task files in
     place with no staging move."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return
-    for b in buckets:
-        bpath = jvm.org.apache.hadoop.fs.Path(f"{path}/bucket={int(b)}")
-        if fs.exists(bpath):
-            fs.delete(bpath, True)
+    jpath, fs = hadoop_fs(spark, path)
+    if fs.exists(jpath):
+        for b in buckets:
+            fs.delete(hadoop_fs(spark, f"{path}/bucket={int(b)}")[0], True)
 
 
 def has_iceberg(spark: SparkSession) -> bool:
@@ -293,41 +293,86 @@ def lineage_path(output_path: str) -> str:
     return output_path.rstrip("/") + "_lineage"
 
 
-def table_exists(spark: SparkSession, path: str) -> bool:
-    """Filesystem-agnostic existence check (works for HDFS/S3A too)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
-
-
 def dir_size_bytes(spark: SparkSession, path: str) -> int:
     """Total bytes under a table path (driver-side FS metadata call)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    jpath, fs = hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return 0
     return int(fs.getContentSummary(jpath).getLength())
 
 
-def read_committed_buckets(spark: SparkSession, output_path: str) -> set[int]:
-    """Buckets already committed for this output table (any run)."""
+def latest_snapshot(
+    spark: SparkSession, log_dir: str, legacy_glob: str | None = None
+) -> tuple[int, dict | None]:
+    """(seq, body) of the newest ``<seq>.json`` in the snapshot log
+    ``log_dir`` — one listing and one small read, no Spark job; (0,
+    None) before the first commit.  An empty log beside files matching
+    ``legacy_glob`` (an older commit layout) raises ``ValueError``:
+    read as empty, committed work would be redone over itself."""
+    # the digit glob skips write_file_atomic's .-temp
+    pattern, fs = hadoop_fs(spark, f"{log_dir}/[0-9]*.json")
+    seqs = [int(s.getPath().getName()[:-5]) for s in fs.globStatus(pattern)]
+    if not seqs:
+        if legacy_glob and fs.globStatus(hadoop_fs(spark, legacy_glob)[0]):
+            raise ValueError(
+                f"{legacy_glob} matches files of an older commit layout "
+                f"and {log_dir} holds no snapshot: that layout is not read"
+            )
+        return 0, None
+    seq = max(seqs)
+    stream = fs.open(hadoop_fs(spark, f"{log_dir}/{seq:06d}.json")[0])
+    try:
+        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        )
+    finally:
+        stream.close()
+    return seq, json.loads(text)
+
+
+def commit_snapshot(
+    spark: SparkSession, log_dir: str, seq: int, body: dict
+) -> None:
+    """Commit ``body`` as snapshot ``seq`` of ``log_dir``: one atomic
+    create of ``<seq>.json``, after everything it lists is written."""
+    write_file_atomic(
+        spark,
+        f"{log_dir}/{seq:06d}.json",
+        json.dumps(body, sort_keys=True).encode(),
+    )
+
+
+def _bucket_log(
+    spark: SparkSession, output_path: str, n_buckets: int | None
+) -> tuple[int, dict[int, dict]]:
+    """(seq, bucket → lineage entry) of the latest bucket snapshot.
+    ``n_buckets`` is frozen by the first commit: another count's bucket
+    ids name other documents, so it raises ``ValueError``."""
     lpath = lineage_path(output_path)
-    if not table_exists(spark, lpath):
-        return set()
-    # explicit schema: a commit that died before its rename leaves
-    # only a hidden temp file, and inference over it would throw
-    lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(lpath)
-    rows = lineage.select("bucket").distinct().collect()
-    return {r["bucket"] for r in rows}
+    seq, snap = latest_snapshot(spark, lpath, f"{lpath}/part-*.parquet")
+    if snap is None:
+        return 0, {}
+    if n_buckets is not None and snap["n_buckets"] != n_buckets:
+        raise ValueError(
+            f"n_buckets={n_buckets} differs from n_buckets="
+            f"{snap['n_buckets']} committed in {lpath}"
+        )
+    return seq, {e["bucket"]: e for e in snap["buckets"]}
+
+
+def read_committed_buckets(
+    spark: SparkSession, output_path: str, n_buckets: int | None = None
+) -> set[int]:
+    """Buckets the latest bucket snapshot lists (any run); no Spark
+    job.  With ``n_buckets``, a different committed count raises."""
+    return set(_bucket_log(spark, output_path, n_buckets)[1])
 
 
 def lineage_and_registers(
     readback: DataFrame, run_id: str, item_hash: Column
 ) -> tuple[list[tuple], dict[int, int]]:
     """One aggregate over a wave's read-back of its written output:
-    the per-bucket lineage rows (``LINEAGE_SCHEMA`` order) and the
+    the per-bucket lineage rows (``LINEAGE_FIELDS`` order) and the
     wave's HLL register maxima over ``item_hash`` (a 60-bit
     ``md5_int`` column).
 
@@ -363,7 +408,7 @@ def lineage_and_registers(
         )
         .withColumn("run_id", F.lit(run_id))
         .withColumn("committed_at", F.current_timestamp())
-        .select("gid", "reg", "mx", *[f.name for f in LINEAGE_SCHEMA.fields])
+        .select("gid", "reg", "mx", *LINEAGE_FIELDS)
         .collect()
     )
     lineage = [tuple(r[3:]) for r in rows if r["gid"] == 1]
@@ -372,70 +417,37 @@ def lineage_and_registers(
 
 
 def append_lineage_rows(
-    spark: SparkSession, rows: list[tuple], output_path: str
+    spark: SparkSession, rows: list[tuple], output_path: str, n_buckets: int
 ) -> None:
-    """Driver-side lineage commit: serialize ≤ n_buckets rows to one
-    parquet file with pyarrow and stream it through the JVM Hadoop
-    filesystem handle — zero Spark jobs, any Hadoop FS.
-
-    A Spark ``DataFrame.write`` here launches a full 1-task write job
-    per wave — measured 1.5-2.3 s of scheduler + committer
-    fixed cost, a core-count-independent term that Amdahl-caps the
-    N→4N executor scaling (the dynamic-partition-overwrite lesson one
-    layer down).  A ~2 KB metadata record is driver work — the same
-    shape as Iceberg's manifest commit."""
+    """Commit a wave's buckets as the next bucket snapshot: the latest
+    one's entries plus ``rows`` (a re-run bucket's entry replaces its
+    old one), and ``n_buckets``.  Driver work with zero Spark jobs, the
+    shape of Iceberg's manifest commit: a 1-task Spark write job here
+    cost 1.5-2.3 s of fixed scheduler time per wave."""
     if not rows:
         return
-    import io
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from datetime import timezone
-
-    cols = list(zip(*rows))
-    ts = [
-        (t.replace(tzinfo=timezone.utc) if t.tzinfo is None else t)
-        for t in cols[10]
-    ]
-    table = pa.table(
-        {
-            "run_id": pa.array(cols[0], pa.string()),
-            "bucket": pa.array(cols[1], pa.int32()),
-            "doc_id_min": pa.array(cols[2], pa.string()),
-            "doc_id_max": pa.array(cols[3], pa.string()),
-            "docs_in": pa.array(cols[4], pa.int64()),
-            "docs_ok": pa.array(cols[5], pa.int64()),
-            "parse_failures": pa.array(cols[6], pa.int64()),
-            "nodes_scored": pa.array(cols[7], pa.int64()),
-            "spans_emitted": pa.array(cols[8], pa.int64()),
-            "cpu_ms": pa.array(cols[9], pa.int64()),
-            "committed_at": pa.array(ts, pa.timestamp("us", tz="UTC")),
-        }
-    )
-    buf = io.BytesIO()
-    pq.write_table(table, buf)
-    # a crash mid-write leaves no truncated part file, so the bucket
-    # stays uncommitted and resumable
-    name = f"part-{os.urandom(8).hex()}.parquet"
-    write_file_atomic(
-        spark, f"{lineage_path(output_path)}/{name}", buf.getvalue()
-    )
+    seq, entries = _bucket_log(spark, output_path, n_buckets)
+    for row in rows:
+        entry = dict(zip(LINEAGE_FIELDS, row))
+        entry["committed_at"] = entry["committed_at"].isoformat()
+        entries[entry["bucket"]] = entry
+    buckets = [entries[b] for b in sorted(entries)]
+    body = {"n_buckets": n_buckets, "buckets": buckets}
+    commit_snapshot(spark, lineage_path(output_path), seq + 1, body)
 
 
 def write_file_atomic(spark: SparkSession, path: str, data: bytes) -> None:
     """Write ``data`` to ``path`` through the JVM Hadoop filesystem so
     that ``path`` holds all of it or does not exist: write a hidden
     temp file beside it, then rename it into place.  The temp name
-    starts with ".", which Spark's file listing and the ``_``-prefixed
-    commit-marker globs both skip, so a crash mid-write leaves nothing
-    a reader or a resume can mistake for a commit."""
-    jvm = spark._jvm
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
+    starts with ".", so it is not a ``<seq>.json`` name and
+    ``latest_snapshot`` skips it: a crash mid-write leaves nothing a
+    reader or a resume can mistake for a commit."""
+    dst, fs = hadoop_fs(spark, path)
     fs.mkdirs(dst.getParent())
-    tmp = jvm.org.apache.hadoop.fs.Path(dst.getParent(), f".{dst.getName()}")
+    tmp = spark._jvm.org.apache.hadoop.fs.Path(
+        dst.getParent(), f".{dst.getName()}"
+    )
     out = fs.create(tmp, True)
     try:
         out.write(bytearray(data))

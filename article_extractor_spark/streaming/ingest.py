@@ -107,9 +107,9 @@ def streaming_extraction_job(
 ):
     """The production "new crawl wave arrives as files" shape: every
     micro-batch is one ``run_extraction_job`` into
-    ``output_path/epochs/<batch_id>/extracted`` (lineage beside it in
-    ``extracted_lineage``, run id ``<run_id>-b<batch_id>``) — the same
-    epoch layout as ``run_pipeline_wave``.
+    ``output_path/epochs/<batch_id>/extracted`` (bucket snapshots beside
+    it in ``extracted_lineage``, run id ``<run_id>-b<batch_id>``) — the
+    same epoch layout as ``run_pipeline_wave``.
 
     A replayed batch resumes into its own epoch directory: committed
     buckets are skipped and partial ones wiped, so the table holds one
@@ -154,8 +154,8 @@ def streaming_pipeline_job(
     ``run_pipeline_wave`` skips an epoch that the latest state snapshot
     already lists — a batch replayed after a crash between state commit
     and stream checkpoint is recognized instead of re-ingested; a
-    crash EARLIER in the batch resumes into the same epoch (bucket
-    lineage for extraction, deterministic overwrites downstream).
+    crash EARLIER in the batch resumes into the same epoch (the bucket
+    snapshot log for extraction, deterministic overwrites downstream).
     """
 
     def body(batch_df: DataFrame, batch_id: int) -> None:

@@ -10,8 +10,8 @@ Protocol:
    ``CoarseGrainedExecutorBackend`` JVM of THIS app;
 3. assert the job still completes (Spark re-runs the lost tasks on the
    surviving/replacement executor; partial task files die in the
-   committer's _temporary dir), lineage committed exactly once per
-   bucket, and the output table is row-identical (doc_id + span hash)
+   committer's _temporary dir), each bucket committed by exactly one
+   bucket snapshot, and the output table is row-identical (doc_id + span hash)
    to the clean run.
 
 Prints one ``RESULT {json}`` line; ``SKIP reason`` if no cluster
@@ -142,17 +142,20 @@ def main() -> int:
             tuple(r)
             for r in span_hashes(spark, f"{workdir}/out-chaos").collect()
         }
-        lineage = spark.read.parquet(
-            tableio.lineage_path(f"{workdir}/out-chaos")
-        )
-        from pyspark.sql import functions as F
-
-        lin = lineage.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("commits"),
-            F.sum("docs_in").alias("docs"),
-        )
-        double_commits = lin.where("commits > 1").count()
-        lineage_docs = lin.agg(F.sum("docs")).collect()[0][0]
+        # a bucket's commits: the snapshots, oldest first, in which its
+        # entry appears or changes
+        lineage = Path(tableio.lineage_path(f"{workdir}/out-chaos"))
+        commits: dict[int, int] = {}
+        prev: dict[int, dict] = {}
+        for snap in sorted(lineage.glob("[0-9]*.json")):
+            body = json.loads(snap.read_text())
+            cur = {e["bucket"]: e for e in body["buckets"]}
+            for b, entry in cur.items():
+                if prev.get(b) != entry:
+                    commits[b] = commits.get(b, 0) + 1
+            prev = cur
+        double_commits = sum(1 for n in commits.values() if n > 1)
+        lineage_docs = sum(e["docs_in"] for e in prev.values())
         result = {
             "ok": (
                 not alive

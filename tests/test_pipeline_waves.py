@@ -332,11 +332,14 @@ class _Killed(Exception):
     pass
 
 
-def _durable_actions(monkeypatch, kill_at=None):
-    """Wrap every durable action of a wave or a compaction — each
-    parquet write, each atomic file write (lineage and snapshot), each
-    state-directory delete — and record it; raise ``_Killed`` right
-    after action number ``kill_at``."""
+def _durable_actions(
+    monkeypatch, kill_at=None, delete=(pipeline, "_delete_dir")
+):
+    """Wrap every durable action of a wave, a compaction or an
+    extraction job — each parquet write, each atomic file write (bucket
+    and state snapshots), each ``delete`` (the state-directory delete,
+    or the job's ``tableio.clear_buckets``) — and record it; raise
+    ``_Killed`` right after action number ``kill_at``."""
     from pyspark.sql import DataFrameWriter
 
     done = []
@@ -355,7 +358,7 @@ def _durable_actions(monkeypatch, kill_at=None):
 
     wrap(DataFrameWriter, "parquet")
     wrap(tableio, "write_file_atomic")
-    wrap(pipeline, "_delete_dir")
+    wrap(*delete)
     return done
 
 
@@ -389,6 +392,13 @@ def test_every_state_commit_kill_point_reruns_to_the_undisturbed_state(
 
     def result(out):
         assert committed_epochs(spark, out) == [0, 1]
+        # no state directory outlives the snapshot that stops listing it
+        snap = tableio.latest_snapshot(spark, f"{out}/state/_snapshots")[1]
+        on_disk = set()
+        for top in set(os.listdir(f"{out}/state")) - {"_snapshots"}:
+            names = os.listdir(f"{out}/state/{top}")
+            on_disk |= {f"state/{top}/{n}" for n in names} or {f"state/{top}"}
+        assert on_disk == set(snap["exact_keys"] + snap["band_index"])
         got = {
             name: rows(spark.read.parquet(f"{out}/epochs/1/{name}"))
             for name in ("verdicts", "pack", "examples")
@@ -420,3 +430,57 @@ def test_every_state_commit_kill_point_reruns_to_the_undisturbed_state(
         f"kill points covered: {n_wave} in epoch 1, "
         f"{n_compact} in compact_state"
     )
+
+
+def test_every_bucket_commit_kill_point_resumes_to_the_undisturbed_table(
+    spark, wave_paths, tmp_path, monkeypatch
+):
+    """Kill-point sweep over run_extraction_job alone, two waves.  A dry
+    run counts the job's durable actions (clear_buckets, each wave's
+    bucket write and its snapshot commit).  Then, for each k, a fresh
+    output is killed right after action k and the job re-runs with
+    resume=True.  Every point must converge to the undisturbed run:
+    the same table as a multiset, each doc_id once, every bucket
+    committed, and the latest snapshot's docs_in summing to the
+    corpus."""
+    from article_extractor_spark.job import run_extraction_job
+
+    w1, _ = wave_paths
+
+    def job(out):
+        return run_extraction_job(
+            spark, w1, out, n_buckets=N_BUCKETS, waves=2, min_word_count=10,
+            resume=True,
+        )
+
+    def result(out):
+        df = spark.read.parquet(out).drop("proc_us")  # a timing
+        ids = [r["doc_id"] for r in df.select("doc_id").collect()]
+        assert len(ids) == len(set(ids)) == N_W1
+        assert tableio.read_committed_buckets(spark, out) == set(
+            range(N_BUCKETS)
+        )
+        snap = tableio.latest_snapshot(spark, tableio.lineage_path(out))[1]
+        assert sum(e["docs_in"] for e in snap["buckets"]) == N_W1
+        return sorted(
+            r[0] for r in df.select(F.to_json(F.struct(*df.columns))).collect()
+        )
+
+    delete = (tableio, "clear_buckets")
+    ref = str(tmp_path / "job-ref")
+    with monkeypatch.context() as m:
+        actions = _durable_actions(m, delete=delete)
+        job(ref)
+    want = result(ref)
+    covered = 0
+    for k in range(1, len(actions) + 1):
+        out = str(tmp_path / f"job-{k}")
+        with monkeypatch.context() as m:
+            _durable_actions(m, kill_at=k, delete=delete)
+            with pytest.raises(_Killed):
+                job(out)
+        job(out)
+        assert result(out) == want, (k, actions[k - 1])
+        covered += 1
+    assert covered == len(actions)
+    print(f"kill points covered: {covered} in a 2-wave extraction job")

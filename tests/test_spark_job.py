@@ -4,6 +4,7 @@ extraction job → span equality, lineage metrics, kill-and-resume."""
 from __future__ import annotations
 
 import glob
+import os
 import shutil
 
 import pytest
@@ -31,6 +32,12 @@ def corpus_path(spark, tmp_path_factory):
     df = tableio.with_bucket(df, "doc_id", N_BUCKETS)
     tableio.write_bucketed(df, path, dynamic=False)
     return path
+
+
+def _lineage(spark, out: str) -> list[dict]:
+    """The bucket entries of the output's latest bucket snapshot."""
+    snap = tableio.latest_snapshot(spark, tableio.lineage_path(out))[1]
+    return snap["buckets"]
 
 
 def expected_span_tuples(doc_id: str) -> list[tuple]:
@@ -63,16 +70,11 @@ def test_job_end_to_end_span_equality(spark, corpus_path, tmp_path):
         assert got == expected_span_tuples(row["doc_id"]), row["doc_id"]
 
     # lineage: every bucket committed, totals add up
-    lineage = spark.read.parquet(tableio.lineage_path(out))
-    agg = lineage.agg(
-        F.sum("docs_in").alias("docs"),
-        F.sum("docs_ok").alias("ok"),
-        F.countDistinct("bucket").alias("buckets"),
-    ).collect()[0]
-    assert agg["docs"] == N_DOCS
-    assert agg["ok"] == N_DOCS
-    assert agg["buckets"] == N_BUCKETS
-    assert lineage.where("cpu_ms < 0").count() == 0
+    lineage = _lineage(spark, out)
+    assert sum(e["docs_in"] for e in lineage) == N_DOCS
+    assert sum(e["docs_ok"] for e in lineage) == N_DOCS
+    assert len({e["bucket"] for e in lineage}) == N_BUCKETS
+    assert not [e for e in lineage if e["cpu_ms"] < 0]
 
 
 def test_job_resume_is_noop_when_committed(spark, corpus_path, tmp_path):
@@ -203,7 +205,7 @@ def test_lineage_matches_recount_of_written_output(
         )
         .collect()
     }
-    rows = spark.read.parquet(tableio.lineage_path(out)).collect()
+    rows = _lineage(spark, out)
     lineage = {r["bucket"]: tuple(r[c] for c in cols) for r in rows}
     assert len(rows) == len(lineage) == N_BUCKETS
     assert lineage == recount
@@ -249,7 +251,7 @@ def test_default_wave_count_follows_input_bytes(
         )
         docs_in = {
             r["bucket"]: r["docs_in"]
-            for r in spark.read.parquet(tableio.lineage_path(out)).collect()
+            for r in _lineage(spark, out)
         }
         return len(stats["observed_metrics"]), rows, docs_in
 
@@ -446,16 +448,16 @@ def test_markdown_sink_failure_leaves_bucket_uncommitted(
 def test_lineage_commit_crash_mid_write_leaves_bucket_uncommitted(
     spark, corpus_path, tmp_path, monkeypatch
 ):
-    """Lineage is the commit record, so a crash after its file is
-    opened and before it is closed must leave no truncated part file:
-    the buckets stay uncommitted, the lineage stays readable, and a
-    resume commits every document once."""
+    """The bucket snapshot is the commit record, so a crash after its
+    file is opened and before it is closed must leave no truncated
+    snapshot: the buckets stay uncommitted, the log stays readable, and
+    a resume commits every document once."""
     out = str(tmp_path / "out")
 
     def crash(*_args):
         raise OSError("injected crash mid-write")
 
-    # append_lineage_rows serializes the buffer with ``bytearray``
+    # write_file_atomic serializes the snapshot with ``bytearray``
     # between fs.create() and close()
     monkeypatch.setattr(tableio, "bytearray", crash, raising=False)
     with pytest.raises(OSError, match="injected"):
@@ -470,8 +472,7 @@ def test_lineage_commit_crash_mid_write_leaves_bucket_uncommitted(
     )
     assert stats["buckets_skipped"] == 0
     assert stats["docs_processed"] == N_DOCS
-    lineage = spark.read.parquet(tableio.lineage_path(out))
-    assert lineage.agg(F.sum("docs_in")).first()[0] == N_DOCS
+    assert sum(e["docs_in"] for e in _lineage(spark, out)) == N_DOCS
 
 
 def test_manifest_rerun_converges_no_duplicates(
@@ -865,8 +866,7 @@ def test_misaligned_bucket_corpus_recomputed_and_lineage_sound(
     assert stats["preshuffled"] is False
     assert stats["docs_processed"] == 40
 
-    lineage = spark.read.parquet(tableio.lineage_path(out))
-    assert lineage.agg(F.sum("docs_in")).collect()[0][0] == 40
+    assert sum(e["docs_in"] for e in _lineage(spark, out)) == 40
     result = spark.read.parquet(out)
     assert result.count() == 40
     # every row's partition-dir bucket equals the string-hash bucket
@@ -877,6 +877,49 @@ def test_misaligned_bucket_corpus_recomputed_and_lineage_sound(
     # resume over the same misaligned corpus is a no-op
     stats2 = run_extraction_job(spark, path, out, n_buckets=8, waves=2)
     assert stats2["docs_processed"] == 0
+
+
+def test_resume_with_another_n_buckets_is_refused(spark, tmp_path):
+    """The bucket snapshot freezes n_buckets.  Resumed under another
+    count, the committed bucket ids (of the other layout) would be
+    skipped as if they named the same documents, and the run would
+    report success over a partial table; it is refused before any
+    bucket directory is cleared.  Reading the committed buckets
+    launches no Spark job."""
+    corpus = corpus_dataframe(spark, 40, seed=3, partitions=2)
+    out = str(tmp_path / "out")
+    first = corpus.where(F.col("doc_id") < "synth-000000023")
+    run_extraction_job(spark, first, out, n_buckets=16, waves=1)
+    on_disk = sorted(glob.glob(f"{out}/*"))
+
+    sc = spark.sparkContext
+    sc.setJobGroup("read-committed", "bucket snapshot read")
+    try:
+        committed = tableio.read_committed_buckets(spark, out, 16)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("read-committed")) == []
+    assert committed == {e["bucket"] for e in _lineage(spark, out)}
+    assert len(committed) > 1
+
+    with pytest.raises(ValueError, match="n_buckets=8 differs"):
+        run_extraction_job(spark, corpus, out, n_buckets=8, waves=1)
+    assert sorted(glob.glob(f"{out}/*")) == on_disk
+    assert spark.read.parquet(out).count() == 23
+
+
+def test_legacy_parquet_lineage_is_refused(spark, corpus_path, tmp_path):
+    """A lineage directory of the older layout (parquet part files, no
+    snapshot) is refused before anything is written: read as empty, it
+    would re-extract every committed bucket on top of itself."""
+    out = str(tmp_path / "out")
+    legacy = tableio.lineage_path(out)
+    os.makedirs(legacy)
+    open(f"{legacy}/part-0123.parquet", "wb").close()
+    with pytest.raises(ValueError, match="older commit layout"):
+        run_extraction_job(spark, corpus_path, out, n_buckets=N_BUCKETS)
+    assert not os.path.exists(out)
+    assert os.listdir(legacy) == ["part-0123.parquet"]
 
 
 def test_empty_corpus_wave_does_not_crash_readback(spark, corpus_path, tmp_path):
