@@ -1,7 +1,7 @@
 """Deduplication operators for the documents table.
 
-Exact dedup, MinHash+LSH near-dup candidate pairs, SimHash, and n-gram
-Jaccard — all expressed as built-in Column expressions (JVM-side,
+Exact dedup, MinHash+LSH near-dup candidate pairs, SimHash, and
+line dedup — all expressed as built-in Column expressions (JVM-side,
 whole-stage codegen; per-doc shingling/hashing happens inside array
 lambdas, so no Python ever touches rows and no shuffle happens before
 the band-bucket join).
@@ -491,43 +491,6 @@ def minhash_lsh_pairs(
     )
 
 
-def minhash_verified_pairs(
-    docs: DataFrame, text_col: str = "text", threshold: float = 0.2
-) -> DataFrame:
-    """The full near-dup pipeline: LSH candidate pairs → exact word-set
-    Jaccard verification → keep pairs ≥ threshold.
-
-    The candidate step bounds the quadratic work (LSH buckets), the
-    verify step joins each candidate pair against the two word sets —
-    this candidates-then-verify shape is the one that survives 100 TB.
-    """
-    pairs = minhash_lsh_pairs(docs, text_col)
-    words = docs.select(
-        F.col("doc_id"),
-        F.array_distinct(ws_tokens(normalized_text(F.col(text_col)))).alias(
-            "wordset"
-        ),
-    )
-    wa = words.alias("wa")
-    wb = words.alias("wb")
-    return (
-        pairs.join(wa, pairs.doc_a == F.col("wa.doc_id"))
-        .join(wb, pairs.doc_b == F.col("wb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.size(F.array_intersect("wa.wordset", "wb.wordset")).cast(
-                    "double"
-                )
-                / F.size(F.array_union("wa.wordset", "wb.wordset")),
-                6,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
 SIMHASH_BITS = 16
 
 
@@ -763,35 +726,6 @@ def benchmark_overlap(
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame, text_col: str = "text", stride: int = 1
-) -> DataFrame:
-    """Word-set Jaccard similarity between deterministically paired
-    documents (doc_id, doc_id + stride) — the verification primitive the
-    LSH candidates feed at scale (a co-partitioned equi-join, no
-    cross product)."""
-    words = docs.select(
-        F.col("doc_id"),
-        F.array_distinct(ws_tokens(normalized_text(F.col(text_col)))).alias(
-            "wordset"
-        ),
-    )
-    a = words.alias("a")
-    b = words.alias("b")
-    return (
-        a.join(b, F.col("a.doc_id") + stride == F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.round(
-                F.size(F.array_intersect("a.wordset", "b.wordset")).cast("double")
-                / F.size(F.array_union("a.wordset", "b.wordset")),
-                6,
-            ).alias("jaccard"),
-        )
-    )
-
-
 def _local_union_find(spark, rows: list, schema: str) -> DataFrame:
     """Driver-side exact union-find (path compression + min-root
     labels) for the small-graph fast path of
@@ -949,9 +883,9 @@ def doc_lines(docs: DataFrame, text_col: str = "text", k: int = LINE_TOKENS) -> 
     Returns (doc_id, pos, line) — one row per segment, ``pos`` is the
     0-based segment index inside its document.
 
-    The token array is let-bound (the ``doc_windows`` lesson: HOFs are
-    interpreted with no CSE, so an unbound ``ws_tokens`` re-splits the
-    whole text once per segment — measured 83 s → 11 s for the bare
+    The token array is let-bound (the ``queries.doc_windows`` lesson:
+    HOFs are interpreted with no CSE, so an unbound ``ws_tokens``
+    re-splits the whole text once per segment — measured 83 s → 11 s for the bare
     explode at 500k docs).
     """
     # the empty guard matters twice: a tokenless document must emit NO
@@ -1035,127 +969,4 @@ def line_dedup(docs: DataFrame, text_col: str = "text", k: int = LINE_TOKENS) ->
         "n_lines",
         F.coalesce(F.col("n_kept"), F.lit(0)).alias("n_kept"),
         F.coalesce(F.col("dedup_text"), F.lit("")).alias("dedup_text"),
-    )
-
-
-# Exact-substring dedup window width, in tokens.  Lee et al. 2022
-# ("Deduplicating Training Data Makes Language Models Better") uses 50
-# BPE tokens over a suffix array; the synthetic corpus averages ~60
-# words per doc, so 8 keeps the operator observable at test scale.  At
-# production scale only this constant changes.
-EXSUB_W = 8
-
-
-def doc_windows(
-    docs: DataFrame, text_col: str = "text", w: int = EXSUB_W
-) -> DataFrame:
-    """Every overlapping ``w``-token window of every document:
-    (doc_id, s, win_key) with ``s`` the 0-based start token position
-    and ``win_key`` = md5 of the space-joined window (md5 so the DuckDB
-    oracle reproduces keys bit-identically; at 100 TB the fixed 32-byte
-    key is also what you want shuffling instead of raw token runs).
-
-    Window generation is pure JVM array algebra on the document scan —
-    map-side, zero exchanges before the explode.  The token array is
-    let-bound (HOFs are interpreted with no CSE; an unbound split
-    re-tokenizes per window position — the measured O(n²) trap)."""
-    wins = _let(
-        ws_tokens(F.col(text_col)),
-        lambda toks: F.when(
-            F.size(toks) < w, F.array().cast("array<string>")
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - w),
-                lambda i: F.md5(F.array_join(F.slice(toks, i + 1, w), " ")),
-            )
-        ),
-    )
-    return docs.select("doc_id", F.posexplode(wins).alias("s", "win_key"))
-
-
-def exact_substring_dedup(
-    docs: DataFrame, text_col: str = "text", w: int = EXSUB_W
-) -> DataFrame:
-    """Cross-document exact-substring dedup (ExactSubstr, Lee et al.
-    2022), keep-first-occurrence semantics: any ``w``-token run that
-    also occurs elsewhere in the corpus survives only at its globally
-    first occurrence (min (doc_id, s)); every other occurrence is cut
-    out of its document TOKEN-WISE and the remainder reassembled.
-    Positional removal is what distinguishes this from ``line_dedup``
-    (fixed segmentation) and ``dup_ngram_stats`` (stats only): shared
-    boilerplate is excised mid-document while unique text around it
-    survives.  Reference scope: the reference extracts per-document
-    only; corpus-level dedup is the training-data layer this engine
-    adds.
-
-    Returns (doc_id, n_tokens, n_removed, kept_text).
-
-    Scale shape (100 TB): the paper's suffix array is a single-machine
-    structure; the distributed equivalent is this window-hash shuffle.
-    Window stats aggregate count + min(struct) IN ONE hash-aggregate
-    pass (both partial-aggregable — a boilerplate window repeated 10^9
-    times collapses map-side), and only duplicated window keys
-    (``cnt > 1``) survive the aggregate into the join, so the join's
-    build side is the duplicated subset, not the corpus.  Per-doc
-    removal starts ride one doc_id-keyed shuffle; the final coverage
-    test is a per-row array fold over that doc's own dup starts — no
-    token-level join, no window functions over the corpus.
-
-    The window table feeds both the stats aggregate and the join probe,
-    and its md5-per-window explode is the query's dominant kernel — so
-    it is persisted rather than recomputed per consumer (~2× the md5
-    work otherwise; at 100 TB this is the intermediate you'd
-    materialize between the count and excise stages, exactly the
-    two-pass structure of Lee et al.'s suffix-array dedup)."""
-    wins = doc_windows(docs, text_col, w).persist()
-    stats = (
-        wins.groupBy("win_key")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.min(F.struct("doc_id", "s")).alias("first"),
-        )
-        .where(F.col("cnt") > 1)
-    )
-    dup_starts = (
-        wins.join(stats, "win_key")
-        .where(
-            ~(
-                (F.col("doc_id") == F.col("first.doc_id"))
-                & (F.col("s") == F.col("first.s"))
-            )
-        )
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list("s")).alias("dup_starts"))
-        # eagerly materialize the SMALL side (one row per doc that
-        # contains a duplicate) so the corpus-scale window table can be
-        # unpersisted before this function returns — a session running
-        # many queries (the 126-query sweep) must not keep win-table
-        # cache blocks pinned for its whole lifetime (review r4).
-        # localCheckpoint blocks are ContextCleaner-managed, unlike
-        # CacheManager entries, which live until explicit unpersist.
-        .localCheckpoint(eager=True)
-    )
-    wins.unpersist()
-    joined = docs.join(dup_starts, "doc_id", "left")
-    row = _let(
-        ws_tokens(F.col(text_col)),
-        lambda toks: _let(
-            F.coalesce(F.col("dup_starts"), F.array().cast("array<int>")),
-            lambda ss: _let(
-                F.filter(
-                    toks,
-                    lambda t, p: ~F.exists(
-                        ss, lambda s: (s <= p) & (p < s + w)
-                    ),
-                ),
-                lambda kept: F.struct(
-                    F.size(toks).alias("n_tokens"),
-                    (F.size(toks) - F.size(kept)).alias("n_removed"),
-                    F.array_join(kept, " ").alias("kept_text"),
-                ),
-            ),
-        ),
-    )
-    return joined.select("doc_id", row.alias("r")).select(
-        "doc_id", "r.n_tokens", "r.n_removed", "r.kept_text"
     )

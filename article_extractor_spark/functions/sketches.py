@@ -152,63 +152,3 @@ def estimate_from_registers(regs) -> float:
     if zero > 0 and raw <= HLL_SMALL_RANGE:
         return HLL_LINEAR[zero]
     return round(raw, 6)
-
-
-# ---------------------------------------------------------------------------
-# Misra-Gries heavy hitters (mergeable frequency sketch)
-# ---------------------------------------------------------------------------
-
-HH_K = 64  # counters kept per partition summary
-
-
-def mg_candidates(
-    df: DataFrame, toks_col: str = "toks", k: int = HH_K
-) -> DataFrame:
-    """Per-partition Misra-Gries heavy-hitter CANDIDATES over a token
-    stream (Misra & Gries 1982; merge rule from Agarwal et al. 2012,
-    "Mergeable Summaries").
-
-    Shape at 100 TB: one Arrow-batched pass per partition holding at
-    most ``k`` counters — no shuffle, no global state; the output is
-    ≤ k rows PER PARTITION regardless of corpus size, so the exact
-    verification count that follows joins against a driver-broadcastable
-    candidate set.  Per batch the token mass is folded with pandas
-    ``value_counts`` (C-level), then merged into the running summary;
-    when the summary exceeds ``k`` counters it is shrunk by subtracting
-    the (k+1)-th largest counter from all and dropping the non-positive
-    ones — the mergeable-summaries rule, which keeps the classic MG
-    guarantee additive across batches: any token whose true count in
-    the partition exceeds (partition mass)/(k+1) survives.  Summing
-    over partitions, any token with global count > N/(k+1) survives in
-    at least one partition (averaging argument), so the union of
-    partition survivors is a SUPERSET of the true φ=1/(k+1) heavy
-    hitters — exactness is then restored by the caller's exact recount
-    of candidates only (the LSH candidates-then-verify pattern).
-
-    The final filtered result is therefore deterministic — independent
-    of partitioning, batch sizes, and visit order — which is what makes
-    an exact SQL oracle possible for a sketch-based operator.
-    """
-    import heapq
-
-    import pandas as pd
-
-    def gen(batches):
-        counters: dict[str, int] = {}
-        get = counters.get
-        for pdf in batches:
-            s = pdf[toks_col].explode().dropna()
-            if s.empty:
-                continue
-            for tok, cnt in s.value_counts().items():
-                counters[tok] = get(tok, 0) + int(cnt)
-                get = counters.get
-            if len(counters) > k:
-                pivot = heapq.nlargest(k + 1, counters.values())[-1]
-                counters = {
-                    t: c - pivot for t, c in counters.items() if c > pivot
-                }
-                get = counters.get
-        yield pd.DataFrame({"token": list(counters)})
-
-    return df.select(toks_col).mapInPandas(gen, schema="token string")

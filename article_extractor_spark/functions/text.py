@@ -23,9 +23,6 @@ from .hof import let
 # language-ID heuristic.  These must stay in sync with the SQL oracles.
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 ES_MARKERS = ("el", "la", "de", "que", "los", "una")
-# "BPE-ish" token regex: runs of letters, runs of digits, or a single
-# non-alphanumeric non-space character (subword-style segmentation).
-BPE_TOKEN_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
 
 
 def ws_tokens(col: Column) -> Column:
@@ -38,11 +35,6 @@ def ws_tokens(col: Column) -> Column:
 
 def token_count(col: Column) -> Column:
     return F.size(ws_tokens(col))
-
-
-def bpe_token_count(col: Column) -> Column:
-    """Count of BPE-ish subword tokens (letters / digits / punct)."""
-    return F.regexp_count(col, F.lit(BPE_TOKEN_RE))
 
 
 def _stop_hits(toks: Column, stopwords: tuple[str, ...]) -> Column:
@@ -68,16 +60,6 @@ def _quality_score_from(col: Column, toks: Column) -> Column:
     stop_c = F.least(_stopword_ratio_from(toks) / 0.4, F.lit(1.0))
     punct_c = F.least(punct_ratio(col) / 0.05, F.lit(1.0))
     return F.round(0.4 * length_c + 0.3 * stop_c + 0.3 * punct_c, 6)
-
-
-def quality_score(col: Column) -> Column:
-    """Composite document-quality score in [0, 1]:
-
-    0.4 * length_component (saturates at 2000 chars)
-    + 0.3 * stopword component (saturates at ratio 0.4)
-    + 0.3 * punctuation component (ideal ~0.02..0.1, linear ramp)
-    """
-    return let(ws_tokens(col), lambda t: _quality_score_from(col, t))
 
 
 def _langid_from(toks: Column) -> Column:
@@ -277,163 +259,6 @@ def md5_int(col: Column) -> Column:
     """Deterministic 60-bit integer hash shared with DuckDB oracles:
     first 15 hex chars of md5 → bigint.  (60 bits: no int64 overflow.)"""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def nfc_normalize_pudf():
-    """Unicode NFC normalization as an Arrow-batched scalar pandas UDF
-    — the canonical text-fixing pass every training pipeline runs
-    before tokenization (combining sequences → precomposed forms, so
-    'e'+U+0301 and 'é' dedup/tokenize identically).
-
-    Spark SQL has no built-in normalizer, so this is one of the
-    legitimate Python-kernel cases (the image-decode precedent): the
-    kernel is a C-implemented table lookup (CPython ``unicodedata``),
-    Arrow moves the batches, and the column it runs over should be
-    pruned to (id, text) first.  ASCII fast path: ``str.isascii`` is a
-    C scan, and ASCII is NFC by construction, so pure-ASCII batches
-    skip the normalizer entirely.
-    """
-    import unicodedata
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _nfc(texts):
-        def one(v):
-            if v is None or v.isascii():
-                return v
-            return unicodedata.normalize("NFC", v)
-
-        return texts.map(one)
-
-    _nfc.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    return pandas_udf("string")(_nfc)
-
-
-# Gopher (Rae et al. 2021) document-filter constants.  Symbols are the
-# paper's hash + ellipsis set; bullets are common list markers.  The
-# regexes are shared verbatim with the SQL oracle.
-GOPHER_SYMBOL_RE = "#|\\.\\.\\.|…"
-GOPHER_BULLET_RE = "^[-*•]"
-GOPHER_ELLIPSIS_RE = "(\\.\\.\\.|…)$"
-GOPHER_MIN_WORDS = 50
-GOPHER_MAX_WORDS = 100_000
-GOPHER_MIN_MWL = 3.0
-GOPHER_MAX_MWL = 10.0
-GOPHER_MAX_SYMBOL_RATIO = 0.1
-GOPHER_MAX_BULLET_FRAC = 0.9
-GOPHER_MAX_ELLIPSIS_FRAC = 0.3
-GOPHER_MIN_ALPHA_FRAC = 0.8
-GOPHER_MIN_STOPWORDS = 2
-
-
-def gopher_metrics(col: Column) -> Column:
-    """The Gopher quality-filter rule family (Rae et al. 2021, table
-    A1) as ONE map-side struct: per-rule metrics, per-rule pass flags,
-    and the final ``keep`` verdict.  Complements the repetition rules
-    (``top_word_fraction`` etc. — surfaced by ``repetition_scores``)
-    with the structural rules: word-count bounds, mean word length,
-    symbol-to-word ratio, bullet/ellipsis line fractions, alphabetic
-    word fraction, and the distinct-stopword floor.
-
-    Zero shuffles, zero Python: token and line arrays are ``let``-bound
-    (interpreted HOFs have no CSE), the summed word length is
-    ``length(text minus whitespace)`` (no per-token fold), and every
-    metric is rounded to 6 decimals BEFORE its flag comparison so the
-    DuckDB oracle reproduces each verdict exactly."""
-    stop_lits = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-
-    def body(toks: Column, lines: Column) -> Column:
-        n = F.size(toks)
-        nd = n.cast("double")
-        nl = F.size(lines).cast("double")
-        mwl = F.when(n == 0, F.lit(0.0)).otherwise(
-            F.round(
-                F.length(F.regexp_replace(col, "\\s", "")).cast("double")
-                / nd,
-                6,
-            )
-        )
-        symbol_ratio = F.when(n == 0, F.lit(0.0)).otherwise(
-            F.round(
-                F.regexp_count(col, F.lit(GOPHER_SYMBOL_RE)).cast("double")
-                / nd,
-                6,
-            )
-        )
-        bullet_frac = F.round(
-            F.size(
-                F.filter(
-                    lines, lambda li: F.trim(li).rlike(GOPHER_BULLET_RE)
-                )
-            ).cast("double")
-            / nl,
-            6,
-        )
-        ellipsis_frac = F.round(
-            F.size(
-                F.filter(
-                    lines, lambda li: F.trim(li).rlike(GOPHER_ELLIPSIS_RE)
-                )
-            ).cast("double")
-            / nl,
-            6,
-        )
-        alpha_frac = F.when(n == 0, F.lit(0.0)).otherwise(
-            F.round(
-                F.size(
-                    F.filter(toks, lambda t: t.rlike("[a-zA-Z]"))
-                ).cast("double")
-                / nd,
-                6,
-            )
-        )
-        n_stop = F.size(
-            F.filter(stop_lits, lambda s: F.array_contains(toks, s))
-        )
-        flags = F.struct(
-            n.alias("n_words"),
-            mwl.alias("mean_word_length"),
-            symbol_ratio.alias("symbol_ratio"),
-            bullet_frac.alias("bullet_frac"),
-            ellipsis_frac.alias("ellipsis_frac"),
-            alpha_frac.alias("alpha_frac"),
-            n_stop.alias("n_stopwords"),
-            ((n >= GOPHER_MIN_WORDS) & (n <= GOPHER_MAX_WORDS)).alias(
-                "wc_ok"
-            ),
-            (
-                (mwl >= GOPHER_MIN_MWL) & (mwl <= GOPHER_MAX_MWL)
-            ).alias("mwl_ok"),
-            (symbol_ratio <= GOPHER_MAX_SYMBOL_RATIO).alias("symbol_ok"),
-            (bullet_frac <= GOPHER_MAX_BULLET_FRAC).alias("bullet_ok"),
-            (ellipsis_frac <= GOPHER_MAX_ELLIPSIS_FRAC).alias(
-                "ellipsis_ok"
-            ),
-            (alpha_frac >= GOPHER_MIN_ALPHA_FRAC).alias("alpha_ok"),
-            (n_stop >= GOPHER_MIN_STOPWORDS).alias("stop_ok"),
-        )
-        return let(
-            flags,
-            lambda g: F.struct(
-                *[g[f].alias(f) for f in (
-                    "n_words", "mean_word_length", "symbol_ratio",
-                    "bullet_frac", "ellipsis_frac", "alpha_frac",
-                    "n_stopwords", "wc_ok", "mwl_ok", "symbol_ok",
-                    "bullet_ok", "ellipsis_ok", "alpha_ok", "stop_ok",
-                )],
-                (
-                    g["wc_ok"] & g["mwl_ok"] & g["symbol_ok"]
-                    & g["bullet_ok"] & g["ellipsis_ok"]
-                    & g["alpha_ok"] & g["stop_ok"]
-                ).alias("keep"),
-            ),
-        )
-
-    return let(
-        ws_tokens(col),
-        lambda toks: let(F.split(col, "\n"), lambda lines: body(toks, lines)),
-    )
 
 
 def fingerprint(col: Column) -> Column:

@@ -101,8 +101,11 @@ def run_extraction_job(
       salted extraction branch, or declines to salt
       (``resolve_giant_threshold``; buckets are hash-random, so wave 0
       is an unbiased sample and later waves reuse its answer).  Salting
-      keeps several multi-MB giants off one straggler task (2.45×
-      measured on a skewed corpus, scripts/giant_bench.py).
+      keeps several multi-MB giants off one straggler task.  Its 2.45×
+      (scripts/giant_bench.py) was measured on ``extract_articles``
+      alone over 48 giants clustered in one file, before the job sized
+      its scan splits and waves by input bytes; it has not been
+      re-measured through this job.
     * write path — the bucket-aligned exchange-free write engages only
       when the corpus came from a ``bucket=k``-partitioned PATH
       (physical task↔bucket alignment), a sampled check confirms its

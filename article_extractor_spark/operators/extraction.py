@@ -199,8 +199,11 @@ GIANT_PROBE_REL_ERR = 0.01
 def resolve_giant_threshold(pruned: DataFrame) -> int | None:
     """Derive the giant-doc salting threshold from the corpus's own
     size distribution — SURVEY §4 item 3's "salt chosen from a size
-    histogram", so the 2.45× straggler win (scripts/giant_bench.py)
-    doesn't depend on the caller knowing the corpus.
+    histogram", so the straggler win doesn't depend on the caller
+    knowing the corpus.  That win (2.45×, scripts/giant_bench.py) was
+    measured on this operator alone over 48 giants clustered in one
+    file; through ``job.run_extraction_job``, which sizes its scan
+    splits and waves by input bytes, it has not been re-measured.
 
     One approx-quantile probe over the html lengths (median + max).
     Salting engages only when the tail is REAL: max ≥
@@ -315,31 +318,6 @@ def extract_articles(
         .mapInArrow(runner, schema=out_schema)
     )
     return normal.unionByName(giants)
-
-
-def to_server_response(articles: DataFrame) -> DataFrame:
-    """readability-js-server wire-model view (reference server.py:399-411
-    ExtractionResponse): pure column mapping over the extraction output —
-    run ``extract_articles(..., emit_html=True, emit_markdown=True)``
-    upstream so ``content``/``markdown`` are populated.
-
-    Field mapping mirrors the reference exactly: byline=author,
-    dir='ltr' (hardcoded there too), length=len(content),
-    siteName=None (never populated there either).
-    """
-    return articles.select(
-        "url",
-        "title",
-        F.col("author").alias("byline"),
-        F.lit("ltr").alias("dir"),
-        F.col("content_html").alias("content"),
-        F.length("content_html").alias("length"),
-        "excerpt",
-        F.lit(None).cast("string").alias("siteName"),
-        "markdown",
-        "word_count",
-        "success",
-    )
 
 
 def render_spans_to_html(df: DataFrame, spans_col: str = "spans") -> DataFrame:

@@ -147,40 +147,3 @@ def ensure_compute_parallelism(
     if width:
         return df.repartition(width)
     return df
-
-
-def table_size_bytes(spark, path: str) -> int | None:
-    """Compressed on-disk size of ``path`` via the Hadoop FileSystem
-    API (works for local, HDFS, and object stores alike); None if the
-    path cannot be summed (size hints are best-effort)."""
-    try:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        return int(fs.getContentSummary(p).getLength())
-    except Exception:
-        return None
-
-
-def table_row_count(path: str) -> int | None:
-    """Row count from parquet FOOTER metadata (no data read) — the
-    signal compressed bytes cannot give on highly compressible text.
-    Local-filesystem paths only in this sandbox; a production catalog
-    (Iceberg/Hive) serves the same number from table statistics.
-    None if footers cannot be read (hints are best-effort)."""
-    try:
-        import os
-
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            total = 0
-            for name in os.listdir(path):
-                if name.endswith(".parquet"):
-                    total += pq.read_metadata(
-                        os.path.join(path, name)
-                    ).num_rows
-            return total
-        return pq.read_metadata(path).num_rows
-    except Exception:
-        return None

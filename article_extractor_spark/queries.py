@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import dedup as D
@@ -28,7 +28,6 @@ from .operators.extraction import (
     extract_articles,
     page_metadata,
     render_spans_to_html,
-    to_server_response,
 )
 from .pipeline import (
     DECONTAM_BENCH_IDS,
@@ -52,10 +51,47 @@ Query = Callable[[SparkSession, str], DataFrame]
 
 # Tables whose per-row work is CPU (regex/array/Arrow kernels over
 # text or float vectors), so a compressed-bytes-sized scan starves the
-# cluster — see operators/parallelism.py.  The numeric TPC-H tables
-# scan wide enough on their own and shuffle on their agg/join keys
+# cluster — see operators/parallelism.py.  The numeric ``events`` table
+# scans wide enough on its own and shuffles on its window and agg keys
 # immediately anyway.
 _CPU_TABLES = frozenset({"documents", "embeddings"})
+
+
+def table_size_bytes(spark, path: str) -> int | None:
+    """Compressed on-disk size of ``path`` via the Hadoop FileSystem
+    API (works for local, HDFS, and object stores alike); None if the
+    path cannot be summed (size hints are best-effort)."""
+    try:
+        jvm = spark._jvm
+        p = jvm.org.apache.hadoop.fs.Path(path)
+        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+        return int(fs.getContentSummary(p).getLength())
+    except Exception:
+        return None
+
+
+def table_row_count(path: str) -> int | None:
+    """Row count from parquet FOOTER metadata (no data read) — the
+    signal compressed bytes cannot give on highly compressible text.
+    Local-filesystem paths only in this sandbox; a production catalog
+    (Iceberg/Hive) serves the same number from table statistics.
+    None if footers cannot be read (hints are best-effort)."""
+    try:
+        import os
+
+        import pyarrow.parquet as pq
+
+        if os.path.isdir(path):
+            total = 0
+            for name in os.listdir(path):
+                if name.endswith(".parquet"):
+                    total += pq.read_metadata(
+                        os.path.join(path, name)
+                    ).num_rows
+            return total
+        return pq.read_metadata(path).num_rows
+    except Exception:
+        return None
 
 
 def load(
@@ -75,8 +111,6 @@ def load(
         from .operators.parallelism import (
             ensure_compute_parallelism,
             table_fingerprint,
-            table_row_count,
-            table_size_bytes,
         )
 
         # fingerprint in the memo key: a table regenerated at the same
@@ -93,426 +127,8 @@ def load(
 
 
 # ---------------------------------------------------------------------------
-# Dataflow operators (SURVEY.md §2.2) on the TPC-H-ish tables
+# Dataflow operators (SURVEY.md §2.2): curation funnel and aggregates
 # ---------------------------------------------------------------------------
-
-
-def q_manifest_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D5 manifest fold (crawler.py:549-571): per-status counts + sums.
-
-    Exact decimal sum (map-side partial agg), cast back to double so the
-    value is bit-identical regardless of partition order."""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_value"),
-    )
-
-
-def q_latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D19 last-write-wins merge (storage_queue.py:224): row_number over
-    (key, ts desc) keeps the newest record per key."""
-    from pyspark.sql.window import Window
-
-    ev = load(spark, sf_dir, "events")
-    w = (
-        F.row_number()
-        .over(
-            Window.partitionBy("user_id").orderBy(
-                F.desc("ts"), F.desc("event_id")
-            )
-        )
-        .alias("rn")
-    )
-    return (
-        ev.select("user_id", "event_id", "event_type", w)
-        .where(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.col("event_type").alias("last_event_type"),
-        )
-    )
-
-
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join — each purchase matched to the same user's most
-    recent click at or before it (attribution: "which click led to
-    this purchase").  Spark has no ASOF JOIN; the naive spellings are
-    scale-killers (a range-condition theta-join explodes to a
-    per-user cross product; a per-purchase correlated subquery is a
-    lookup storm).  The distributed spelling is UNION + WINDOW: tag
-    both sides, union them, and carry the last click forward with one
-    running ``last(ignorenulls)`` per user — ONE shuffle on user_id,
-    state bounded by one row, no pair expansion at any key
-    cardinality.  Tie rule: a click at exactly the purchase timestamp
-    matches (sort key (ts, side) puts clicks first), mirroring ASOF's
-    ``>=``; the trailing id column makes the order total so the pick
-    is deterministic even with ts collisions.  The DuckDB oracle is a
-    native ``ASOF LEFT JOIN`` — an independent implementation of the
-    same semantics."""
-    from pyspark.sql.window import Window
-
-    ev = load(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "user_id",
-        "ts",
-        F.lit(0).alias("side"),
-        F.col("event_id").alias("click_id"),
-        F.col("value").alias("click_value"),
-    )
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        "ts",
-        F.lit(1).alias("side"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    u = clicks.unionByName(purchases, allowMissingColumns=True)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "side", F.coalesce("click_id", "purchase_id"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        u.select(
-            "*",
-            F.last("click_id", ignorenulls=True).over(w).alias("c_id"),
-            F.last("click_value", ignorenulls=True)
-            .over(w)
-            .alias("c_value"),
-            F.last(
-                F.when(F.col("side") == 0, F.col("ts")), ignorenulls=True
-            )
-            .over(w)
-            .alias("c_ts"),
-        )
-        .where(F.col("side") == 1)
-        .select(
-            "purchase_id",
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-            F.col("c_id").alias("click_id"),
-            F.col("c_ts").alias("click_ts"),
-            F.col("c_value").alias("click_value"),
-        )
-    )
-
-
-RANGE_BIN_H = 6  # range-join bin width; campaigns span ≤ 11 h → ≤ 3 bins
-
-
-def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range join — each event matched to every campaign window
-    containing its timestamp.  Spark compiles a raw interval
-    predicate into BroadcastNestedLoopJoin (every row against every
-    range — quadratic, the classic range-join scale-killer once the
-    range side outgrows a broadcast).  The scale-honest spelling
-    decomposes each range into the fixed-width time BINS it overlaps
-    (explode — ≤ 3 bins per campaign at these widths), assigns each
-    event its single bin, and EQUI-joins on bin with the interval
-    predicate left as a residual filter: shuffle volume is linear in
-    rows × bins, never |events| × |ranges|.  Campaign windows are
-    synthesized deterministically (60 half-day-spaced windows, 2-11 h
-    spans, overlapping); the oracle is the plain BETWEEN theta-join
-    DuckDB can afford single-node."""
-    base = "TIMESTAMP_NTZ'2024-01-01 00:00:00'"
-    ev = load(spark, sf_dir, "events").select(
-        "event_id",
-        "ts",
-        F.floor(
-            F.expr(f"timestampdiff(HOUR, {base}, ts)") / RANGE_BIN_H
-        ).alias("bin"),
-    )
-    camps = spark.range(60).select(
-        F.col("id").alias("campaign_id"),
-        F.expr(
-            f"timestampadd(HOUR, CAST(12 * id AS INT), {base})"
-        ).alias("start_ts"),
-        F.expr(
-            f"timestampadd(HOUR, CAST(12 * id + 2 + id % 10 AS INT),"
-            f" {base})"
-        ).alias("end_ts"),
-        (F.col("id") * 12).alias("start_h"),
-        (F.col("id") * 12 + 2 + F.col("id") % 10).alias("end_h"),
-    )
-    cbins = camps.select(
-        "campaign_id",
-        "start_ts",
-        "end_ts",
-        F.explode(
-            F.sequence(
-                F.floor(F.col("start_h") / RANGE_BIN_H),
-                F.floor(F.col("end_h") / RANGE_BIN_H),
-            )
-        ).alias("bin"),
-    )
-    return (
-        ev.join(cbins, "bin")
-        .where((F.col("ts") >= F.col("start_ts")) & (F.col("ts") < F.col("end_ts")))
-        .select("event_id", "campaign_id")
-    )
-
-
-SESSION_GAP_US = 6 * 3600 * 1_000_000  # 6 h, microsecond-exact
-
-
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (the other classic
-    awkward-in-a-relational-engine op): events more than
-    ``SESSION_GAP_US`` apart start a new session; emit one summary row
-    per session.  Boundary flags via ``lag`` + running sum — the
-    standard two-window spelling; both windows share the SAME
-    (user_id)×(ts, event_id) spec, so they ride one shuffle and one
-    sort; the per-session rollup then partial-aggregates map-side.
-    Gap arithmetic is ``timestampdiff(MICROSECOND, ...)`` — exact and
-    timezone-independent on the NTZ column (a seconds cast would
-    truncate and disagree with the oracle's microsecond comparison
-    near the threshold)."""
-    from pyspark.sql.window import Window
-
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    base = ev.select(
-        "user_id", "ts", "event_id",
-        F.lag("ts").over(w).alias("prev_ts"),
-    )
-    new_flag = F.when(
-        F.col("prev_ts").isNull()
-        | (
-            F.expr("timestampdiff(MICROSECOND, prev_ts, ts)")
-            > SESSION_GAP_US
-        ),
-        1,
-    ).otherwise(0)
-    sess = F.sum(new_flag).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        base.select("user_id", "ts", sess.alias("session_seq"))
-        .groupBy("user_id", "session_seq")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-    )
-
-
-def q_top_orders_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E13 rank-candidates analog as a relational top-k per group."""
-    from pyspark.sql.window import Window
-
-    orders = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        orders.select(
-            "o_orderpriority",
-            "o_orderkey",
-            "o_totalprice",
-            F.row_number().over(w).alias("rn"),
-        )
-        .where(F.col("rn") <= 5)
-    )
-
-
-def q_region_customer_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D13 allowed-hosts semi-join analog: customer ⋈ nation ⋈ region
-    with both dims broadcast (no shuffle of the big side)."""
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .where(F.col("r_name") == "ASIA")
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.sum(F.col("c_acctbal").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_acctbal"),
-        )
-    )
-
-
-def q_prefix_filter_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D8 allow/deny prefix filter — pushed to the parquet scan."""
-    orders = load(spark, sf_dir, "orders")
-    return (
-        orders.where(
-            F.col("o_orderpriority").startswith("1")
-            & ~F.col("o_orderpriority").startswith("5")
-        )
-        .groupBy("o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
-
-
-def q_dedup_visited(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D7 visited-set dedup as a distinct aggregate."""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("user_id").agg(
-        F.countDistinct("event_type").alias("n_types")
-    )
-
-
-def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D6/D7 frontier anti-join: rows not in the visited set."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
-
-
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classic pricing-summary aggregation over the largest table
-    (lineitem): exact decimal arithmetic so partial-agg order can't
-    perturb the result; demonstrates map-side combine at scale."""
-    li = load(spark, sf_dir, "lineitem")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(18,2)")
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-01"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_qty"),
-            F.sum(price).cast("double").alias("sum_base_price"),
-            F.sum(price * (F.lit(1).cast("decimal(18,2)") - disc))
-            .cast("double")
-            .alias("sum_disc_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-shaped shipping-priority query: customer segment
-    filter → 3-way join (customer ⋈ orders ⋈ lineitem) → per-order
-    revenue rollup → top 10.  The classic multi-join planning shape:
-    the filtered customer side broadcasts (asserted in PLANS.md), the
-    orders⋈lineitem equi-join shuffles on orderkey with both filters
-    pushed to the scans, and the final cut is TakeOrderedAndProject,
-    never a global sort.  Revenue in exact decimal so partial-agg
-    order can't perturb the hash (the pricing_summary discipline)."""
-    cust = load(spark, sf_dir, "customer").where(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = load(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.lit("1997-07-01")
-    )
-    li = load(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.lit("1997-07-01")
-    )
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(18,2)")
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.sum(price * (F.lit(1).cast("decimal(18,2)") - disc))
-            .cast("double")
-            .alias("revenue")
-        )
-        .select(
-            "l_orderkey",
-            "revenue",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias(
-                "o_orderdate"
-            ),
-            "o_orderpriority",
-        )
-        .orderBy(
-            F.desc("revenue"), F.asc("o_orderdate"), F.asc("l_orderkey")
-        )
-        .limit(10)
-    )
-
-
-def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-shaped local-supplier volume: six-way join (region →
-    nation → customer/supplier → orders → lineitem) with the
-    customer-and-supplier-same-nation predicate, revenue per nation in
-    one region-year slice.  The multi-way join-planning showcase: the
-    whole dim chain (region⋈nation⋈supplier, and customer) broadcasts,
-    the orders⋈lineitem fact join shuffles on orderkey with date
-    filters pushed to both scans, and the same-nation condition rides
-    the supplier join as an equi-key, never a post-join filter over a
-    wider product.  Decimal-exact revenue (pricing_summary
-    discipline)."""
-    region = load(spark, sf_dir, "region").where(
-        F.col("r_name") == "ASIA"
-    )
-    nation = load(spark, sf_dir, "nation")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    orders = load(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01"))
-    )
-    li = load(spark, sf_dir, "lineitem")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(18,2)")
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")
-        )
-        .join(
-            F.broadcast(supp),
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(
-            F.broadcast(nation),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .join(
-            F.broadcast(region),
-            F.col("n_regionkey") == F.col("r_regionkey"),
-        )
-        .groupBy("n_name")
-        .agg(
-            F.sum(price * (F.lit(1).cast("decimal(18,2)") - disc))
-            .cast("double")
-            .alias("revenue"),
-            F.count(F.lit(1)).alias("n_lineitems"),
-        )
-    )
-
-
-def q_events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE aggregation over (event_type, iso weekday): all four
-    grouping combinations in one pass via Expand — the grouping-sets
-    family the reference has nowhere (SURVEY §2.3 'no grouping
-    sets/cube/rollup'), completing it alongside lineage_rollup's
-    ROLLUP.  gid = GROUPING(event_type)*2 + GROUPING(dow) labels each
-    stratum; value sums in exact decimal."""
-    ev = load(spark, sf_dir, "events")
-    dow = (F.weekday(F.col("ts")) + 1).alias("dow")  # ISO: Mon=1
-    return (
-        ev.select("event_type", dow, "value")
-        .cube("event_type", "dow")
-        .agg(
-            (F.grouping("event_type") * 2 + F.grouping("dow"))
-            .cast("long")
-            .alias("gid"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select("event_type", "dow", "gid", "n_events", "sum_value")
-    )
 
 
 def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -537,32 +153,6 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME component oracle SQL texts as CTEs, so the funnel can
     only disagree if the composition itself drifts."""
     return curation_verdicts(load(spark, sf_dir, "documents"))
-
-
-def q_event_type_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT / EXCEPT over per-user event-type sets: which event
-    types a user emitted in BOTH calendar months vs ONLY the first —
-    the set-operation family (SURVEY §2.3 lists the reference as
-    union/distinct-only).  Spark compiles INTERSECT to a left-semi +
-    aggregate and EXCEPT to a left-anti + aggregate — both
-    partial-aggregable equi-joins, no cross product."""
-    ev = load(spark, sf_dir, "events")
-    month = F.month(F.col("ts"))
-    first = ev.where(month == 1).select("user_id", "event_type")
-    second = ev.where(month == 2).select("user_id", "event_type")
-    both = first.intersect(second).select(
-        F.lit("both_months").alias("kind"), "user_id", "event_type"
-    )
-    only_first = (
-        first.distinct()
-        .subtract(second.distinct())
-        .select(
-            F.lit("first_month_only").alias("kind"),
-            "user_id",
-            "event_type",
-        )
-    )
-    return both.unionByName(only_first)
 
 
 HIST_BIN_WIDTH = 16  # token-count histogram bin width
@@ -613,23 +203,6 @@ def q_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias(name)
         )
     return cum.groupBy("source").agg(*qs)
-
-
-def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed-rate analog of the reference's rate-limiter event window
-    (rate_limiter.py:111-118): events per user per hour bucket."""
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            "user_id", F.date_trunc("hour", F.col("ts")).alias("hour")
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.date_format("hour", "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "n_events",
-        )
-    )
 
 
 def q_windowed_event_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -845,34 +418,182 @@ def q_doc_slugs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# "BPE-ish" token regex: runs of letters, runs of digits, or a single
+# non-alphanumeric non-space character (subword-style segmentation).
+BPE_TOKEN_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
+
+
+def bpe_token_count(col: Column) -> Column:
+    """Count of BPE-ish subword tokens (letters / digits / punct)."""
+    return F.regexp_count(col, F.lit(BPE_TOKEN_RE))
+
+
 def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E26 word count (utils.py:10-19) + BPE-ish subword token count."""
     docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         X.token_count(F.col("text")).alias("n_ws_tokens"),
-        X.bpe_token_count(F.col("text")).cast("int").alias("n_bpe_tokens"),
+        bpe_token_count(F.col("text")).cast("int").alias("n_bpe_tokens"),
     )
+
+
+def quality_score(col: Column) -> Column:
+    """Composite document-quality score in [0, 1]:
+
+    0.4 * length_component (saturates at 2000 chars)
+    + 0.3 * stopword component (saturates at ratio 0.4)
+    + 0.3 * punctuation component (ideal ~0.02..0.1, linear ramp)
+    """
+    return X.let(X.ws_tokens(col), lambda t: X._quality_score_from(col, t))
 
 
 def q_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     return docs.select(
-        "doc_id", X.quality_score(F.col("text")).alias("quality")
+        "doc_id", quality_score(F.col("text")).alias("quality")
+    )
+
+
+# Gopher (Rae et al. 2021) document-filter constants.  Symbols are the
+# paper's hash + ellipsis set; bullets are common list markers.  The
+# regexes are shared verbatim with the SQL oracle.
+GOPHER_SYMBOL_RE = "#|\\.\\.\\.|…"
+GOPHER_BULLET_RE = "^[-*•]"
+GOPHER_ELLIPSIS_RE = "(\\.\\.\\.|…)$"
+GOPHER_MIN_WORDS = 50
+GOPHER_MAX_WORDS = 100_000
+GOPHER_MIN_MWL = 3.0
+GOPHER_MAX_MWL = 10.0
+GOPHER_MAX_SYMBOL_RATIO = 0.1
+GOPHER_MAX_BULLET_FRAC = 0.9
+GOPHER_MAX_ELLIPSIS_FRAC = 0.3
+GOPHER_MIN_ALPHA_FRAC = 0.8
+GOPHER_MIN_STOPWORDS = 2
+
+
+def gopher_metrics(col: Column) -> Column:
+    """The Gopher quality-filter rule family (Rae et al. 2021, table
+    A1) as ONE map-side struct: per-rule metrics, per-rule pass flags,
+    and the final ``keep`` verdict.  Complements the repetition rules
+    (``top_word_fraction`` etc. — surfaced by ``repetition_scores``)
+    with the structural rules: word-count bounds, mean word length,
+    symbol-to-word ratio, bullet/ellipsis line fractions, alphabetic
+    word fraction, and the distinct-stopword floor.
+
+    Zero shuffles, zero Python: token and line arrays are ``let``-bound
+    (interpreted HOFs have no CSE), the summed word length is
+    ``length(text minus whitespace)`` (no per-token fold), and every
+    metric is rounded to 6 decimals BEFORE its flag comparison so the
+    DuckDB oracle reproduces each verdict exactly."""
+    stop_lits = F.array(*[F.lit(s) for s in X.EN_STOPWORDS])
+
+    def body(toks: Column, lines: Column) -> Column:
+        n = F.size(toks)
+        nd = n.cast("double")
+        nl = F.size(lines).cast("double")
+        mwl = F.when(n == 0, F.lit(0.0)).otherwise(
+            F.round(
+                F.length(F.regexp_replace(col, "\\s", "")).cast("double")
+                / nd,
+                6,
+            )
+        )
+        symbol_ratio = F.when(n == 0, F.lit(0.0)).otherwise(
+            F.round(
+                F.regexp_count(col, F.lit(GOPHER_SYMBOL_RE)).cast("double")
+                / nd,
+                6,
+            )
+        )
+        bullet_frac = F.round(
+            F.size(
+                F.filter(
+                    lines, lambda li: F.trim(li).rlike(GOPHER_BULLET_RE)
+                )
+            ).cast("double")
+            / nl,
+            6,
+        )
+        ellipsis_frac = F.round(
+            F.size(
+                F.filter(
+                    lines, lambda li: F.trim(li).rlike(GOPHER_ELLIPSIS_RE)
+                )
+            ).cast("double")
+            / nl,
+            6,
+        )
+        alpha_frac = F.when(n == 0, F.lit(0.0)).otherwise(
+            F.round(
+                F.size(
+                    F.filter(toks, lambda t: t.rlike("[a-zA-Z]"))
+                ).cast("double")
+                / nd,
+                6,
+            )
+        )
+        n_stop = F.size(
+            F.filter(stop_lits, lambda s: F.array_contains(toks, s))
+        )
+        flags = F.struct(
+            n.alias("n_words"),
+            mwl.alias("mean_word_length"),
+            symbol_ratio.alias("symbol_ratio"),
+            bullet_frac.alias("bullet_frac"),
+            ellipsis_frac.alias("ellipsis_frac"),
+            alpha_frac.alias("alpha_frac"),
+            n_stop.alias("n_stopwords"),
+            ((n >= GOPHER_MIN_WORDS) & (n <= GOPHER_MAX_WORDS)).alias(
+                "wc_ok"
+            ),
+            (
+                (mwl >= GOPHER_MIN_MWL) & (mwl <= GOPHER_MAX_MWL)
+            ).alias("mwl_ok"),
+            (symbol_ratio <= GOPHER_MAX_SYMBOL_RATIO).alias("symbol_ok"),
+            (bullet_frac <= GOPHER_MAX_BULLET_FRAC).alias("bullet_ok"),
+            (ellipsis_frac <= GOPHER_MAX_ELLIPSIS_FRAC).alias(
+                "ellipsis_ok"
+            ),
+            (alpha_frac >= GOPHER_MIN_ALPHA_FRAC).alias("alpha_ok"),
+            (n_stop >= GOPHER_MIN_STOPWORDS).alias("stop_ok"),
+        )
+        return X.let(
+            flags,
+            lambda g: F.struct(
+                *[g[f].alias(f) for f in (
+                    "n_words", "mean_word_length", "symbol_ratio",
+                    "bullet_frac", "ellipsis_frac", "alpha_frac",
+                    "n_stopwords", "wc_ok", "mwl_ok", "symbol_ok",
+                    "bullet_ok", "ellipsis_ok", "alpha_ok", "stop_ok",
+                )],
+                (
+                    g["wc_ok"] & g["mwl_ok"] & g["symbol_ok"]
+                    & g["bullet_ok"] & g["ellipsis_ok"]
+                    & g["alpha_ok"] & g["stop_ok"]
+                ).alias("keep"),
+            ),
+        )
+
+    return X.let(
+        X.ws_tokens(col),
+        lambda toks: X.let(
+            F.split(col, "\n"), lambda lines: body(toks, lines)
+        ),
     )
 
 
 def q_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher structural quality filter (Rae et al. 2021): per-rule
     metrics + pass flags + final keep verdict, one map-side struct per
-    document — see ``functions/text.py::gopher_metrics``.  The
+    document — see ``gopher_metrics`` above.  The
     repetition rule family lives in ``repetition_scores``."""
     docs = load(spark, sf_dir, "documents")
     # inline, not select("g.*"): star-expanding an aliased struct lets
     # Catalyst re-inline the whole metric struct once per extracted
     # field (measured 31.0 s → 27.8 s over 500k docs)
     return docs.select(
-        "doc_id", F.inline(F.array(X.gopher_metrics(F.col("text"))))
+        "doc_id", F.inline(F.array(gopher_metrics(F.col("text"))))
     )
 
 
@@ -2367,12 +2088,68 @@ def q_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+HH_K = 64  # counters kept per partition summary
+
+
+def mg_candidates(
+    df: DataFrame, toks_col: str = "toks", k: int = HH_K
+) -> DataFrame:
+    """Per-partition Misra-Gries heavy-hitter CANDIDATES over a token
+    stream (Misra & Gries 1982; merge rule from Agarwal et al. 2012,
+    "Mergeable Summaries").
+
+    Shape at 100 TB: one Arrow-batched pass per partition holding at
+    most ``k`` counters — no shuffle, no global state; the output is
+    ≤ k rows PER PARTITION regardless of corpus size, so the exact
+    verification count that follows joins against a driver-broadcastable
+    candidate set.  Per batch the token mass is folded with pandas
+    ``value_counts`` (C-level), then merged into the running summary;
+    when the summary exceeds ``k`` counters it is shrunk by subtracting
+    the (k+1)-th largest counter from all and dropping the non-positive
+    ones — the mergeable-summaries rule, which keeps the classic MG
+    guarantee additive across batches: any token whose true count in
+    the partition exceeds (partition mass)/(k+1) survives.  Summing
+    over partitions, any token with global count > N/(k+1) survives in
+    at least one partition (averaging argument), so the union of
+    partition survivors is a SUPERSET of the true φ=1/(k+1) heavy
+    hitters — exactness is then restored by the caller's exact recount
+    of candidates only (the LSH candidates-then-verify pattern).
+
+    The final filtered result is therefore deterministic — independent
+    of partitioning, batch sizes, and visit order — which is what makes
+    an exact SQL oracle possible for a sketch-based operator.
+    """
+    import heapq
+
+    import pandas as pd
+
+    def gen(batches):
+        counters: dict[str, int] = {}
+        get = counters.get
+        for pdf in batches:
+            s = pdf[toks_col].explode().dropna()
+            if s.empty:
+                continue
+            for tok, cnt in s.value_counts().items():
+                counters[tok] = get(tok, 0) + int(cnt)
+                get = counters.get
+            if len(counters) > k:
+                pivot = heapq.nlargest(k + 1, counters.values())[-1]
+                counters = {
+                    t: c - pivot for t, c in counters.items() if c > pivot
+                }
+                get = counters.get
+        yield pd.DataFrame({"token": list(counters)})
+
+    return df.select(toks_col).mapInPandas(gen, schema="token string")
+
+
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy-hitter tokens via a per-partition Misra-Gries sketch plus
     an exact recount of the candidates — hot-domain / hot-token
     detection over a stream too large for an exact full GROUP BY.
 
-    Scale shape (``functions/sketches.py::mg_candidates``): the sketch
+    Scale shape (``mg_candidates`` above): the sketch
     pass is one Arrow-batched map over partitions holding ≤ k counters
     each and emitting ≤ k candidate rows per partition (no shuffle);
     the exact pass recounts ONLY the candidates via a broadcast
@@ -2385,13 +2162,13 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(X.ws_tokens(F.lower(F.col("text"))).alias("toks"))
     total = toks.agg(F.sum(F.size("toks"))).first()[0] or 0  # 1 metadata row
-    cand = K.mg_candidates(toks).distinct()
+    cand = mg_candidates(toks).distinct()
     exploded = toks.select(F.explode("toks").alias("token"))
     counts = exploded.join(F.broadcast(cand), "token").groupBy("token").agg(
         F.count(F.lit(1)).alias("n_occurrences")
     )
     return counts.filter(
-        F.col("n_occurrences") * (K.HH_K + 1) > F.lit(int(total))
+        F.col("n_occurrences") * (HH_K + 1) > F.lit(int(total))
     )
 
 
@@ -3290,21 +3067,180 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.line_dedup(load(spark, sf_dir, "documents"))
 
 
+# Exact-substring dedup window width, in tokens.  Lee et al. 2022
+# ("Deduplicating Training Data Makes Language Models Better") uses 50
+# BPE tokens over a suffix array; the synthetic corpus averages ~60
+# words per doc, so 8 keeps the operator observable at test scale.  At
+# production scale only this constant changes.
+EXSUB_W = 8
+
+
+def doc_windows(
+    docs: DataFrame, text_col: str = "text", w: int = EXSUB_W
+) -> DataFrame:
+    """Every overlapping ``w``-token window of every document:
+    (doc_id, s, win_key) with ``s`` the 0-based start token position
+    and ``win_key`` = md5 of the space-joined window (md5 so the DuckDB
+    oracle reproduces keys bit-identically; at 100 TB the fixed 32-byte
+    key is also what you want shuffling instead of raw token runs).
+
+    Window generation is pure JVM array algebra on the document scan —
+    map-side, zero exchanges before the explode.  The token array is
+    let-bound (HOFs are interpreted with no CSE; an unbound split
+    re-tokenizes per window position — the measured O(n²) trap)."""
+    wins = X.let(
+        X.ws_tokens(F.col(text_col)),
+        lambda toks: F.when(
+            F.size(toks) < w, F.array().cast("array<string>")
+        ).otherwise(
+            F.transform(
+                F.sequence(F.lit(0), F.size(toks) - w),
+                lambda i: F.md5(F.array_join(F.slice(toks, i + 1, w), " ")),
+            )
+        ),
+    )
+    return docs.select("doc_id", F.posexplode(wins).alias("s", "win_key"))
+
+
+def exact_substring_dedup(
+    docs: DataFrame, text_col: str = "text", w: int = EXSUB_W
+) -> DataFrame:
+    """Cross-document exact-substring dedup (ExactSubstr, Lee et al.
+    2022), keep-first-occurrence semantics: any ``w``-token run that
+    also occurs elsewhere in the corpus survives only at its globally
+    first occurrence (min (doc_id, s)); every other occurrence is cut
+    out of its document TOKEN-WISE and the remainder reassembled.
+    Positional removal is what distinguishes this from ``line_dedup``
+    (fixed segmentation) and ``dup_ngram_stats`` (stats only): shared
+    boilerplate is excised mid-document while unique text around it
+    survives.  Reference scope: the reference extracts per-document
+    only; corpus-level dedup is the training-data layer this engine
+    adds.
+
+    Returns (doc_id, n_tokens, n_removed, kept_text).
+
+    Scale shape (100 TB): the paper's suffix array is a single-machine
+    structure; the distributed equivalent is this window-hash shuffle.
+    Window stats aggregate count + min(struct) IN ONE hash-aggregate
+    pass (both partial-aggregable — a boilerplate window repeated 10^9
+    times collapses map-side), and only duplicated window keys
+    (``cnt > 1``) survive the aggregate into the join, so the join's
+    build side is the duplicated subset, not the corpus.  Per-doc
+    removal starts ride one doc_id-keyed shuffle; the final coverage
+    test is a per-row array fold over that doc's own dup starts — no
+    token-level join, no window functions over the corpus.
+
+    The window table feeds both the stats aggregate and the join probe,
+    and its md5-per-window explode is the query's dominant kernel — so
+    it is persisted rather than recomputed per consumer (~2× the md5
+    work otherwise; at 100 TB this is the intermediate you'd
+    materialize between the count and excise stages, exactly the
+    two-pass structure of Lee et al.'s suffix-array dedup)."""
+    wins = doc_windows(docs, text_col, w).persist()
+    stats = (
+        wins.groupBy("win_key")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.min(F.struct("doc_id", "s")).alias("first"),
+        )
+        .where(F.col("cnt") > 1)
+    )
+    dup_starts = (
+        wins.join(stats, "win_key")
+        .where(
+            ~(
+                (F.col("doc_id") == F.col("first.doc_id"))
+                & (F.col("s") == F.col("first.s"))
+            )
+        )
+        .groupBy("doc_id")
+        .agg(F.array_sort(F.collect_list("s")).alias("dup_starts"))
+        # eagerly materialize the SMALL side (one row per doc that
+        # contains a duplicate) so the corpus-scale window table can be
+        # unpersisted before this function returns — a session running
+        # many queries (the registry sweep) must not keep win-table
+        # cache blocks pinned for its whole lifetime (review r4).
+        # localCheckpoint blocks are ContextCleaner-managed, unlike
+        # CacheManager entries, which live until explicit unpersist.
+        .localCheckpoint(eager=True)
+    )
+    wins.unpersist()
+    joined = docs.join(dup_starts, "doc_id", "left")
+    row = X.let(
+        X.ws_tokens(F.col(text_col)),
+        lambda toks: X.let(
+            F.coalesce(F.col("dup_starts"), F.array().cast("array<int>")),
+            lambda ss: X.let(
+                F.filter(
+                    toks,
+                    lambda t, p: ~F.exists(
+                        ss, lambda s: (s <= p) & (p < s + w)
+                    ),
+                ),
+                lambda kept: F.struct(
+                    F.size(toks).alias("n_tokens"),
+                    (F.size(toks) - F.size(kept)).alias("n_removed"),
+                    F.array_join(kept, " ").alias("kept_text"),
+                ),
+            ),
+        ),
+    )
+    return joined.select("doc_id", row.alias("r")).select(
+        "doc_id", "r.n_tokens", "r.n_removed", "r.kept_text"
+    )
+
+
 def q_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr dedup (Lee et al. 2022): duplicated ``EXSUB_W``-token
     runs are excised from every occurrence but the global first, and
-    documents reassembled token-wise.  See
-    ``functions/dedup.py::exact_substring_dedup`` for the
-    one-aggregate-pass + dup-only-join scale shape."""
-    return D.exact_substring_dedup(load(spark, sf_dir, "documents"))
+    documents reassembled token-wise.  See ``exact_substring_dedup``
+    above for the one-aggregate-pass + dup-only-join scale shape."""
+    return exact_substring_dedup(load(spark, sf_dir, "documents"))
 
 
 def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.minhash_lsh_pairs(load(spark, sf_dir, "documents"))
 
 
+def minhash_verified_pairs(
+    docs: DataFrame, text_col: str = "text", threshold: float = 0.2
+) -> DataFrame:
+    """The full near-dup pipeline: LSH candidate pairs → exact word-set
+    Jaccard verification → keep pairs ≥ threshold.
+
+    The candidate step bounds the quadratic work (LSH buckets), the
+    verify step joins each candidate pair against the two word sets —
+    this candidates-then-verify shape is the one that survives 100 TB.
+    """
+    pairs = D.minhash_lsh_pairs(docs, text_col)
+    words = docs.select(
+        F.col("doc_id"),
+        F.array_distinct(
+            X.ws_tokens(D.normalized_text(F.col(text_col)))
+        ).alias("wordset"),
+    )
+    wa = words.alias("wa")
+    wb = words.alias("wb")
+    return (
+        pairs.join(wa, pairs.doc_a == F.col("wa.doc_id"))
+        .join(wb, pairs.doc_b == F.col("wb.doc_id"))
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(
+                F.size(F.array_intersect("wa.wordset", "wb.wordset")).cast(
+                    "double"
+                )
+                / F.size(F.array_union("wa.wordset", "wb.wordset")),
+                6,
+            ).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def q_minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.minhash_verified_pairs(load(spark, sf_dir, "documents"))
+    return minhash_verified_pairs(load(spark, sf_dir, "documents"))
 
 
 def q_wave_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3698,8 +3634,37 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.simhash_hamming_pairs(load(spark, sf_dir, "documents"))
 
 
+def ngram_jaccard_pairs(
+    docs: DataFrame, text_col: str = "text", stride: int = 1
+) -> DataFrame:
+    """Word-set Jaccard similarity between deterministically paired
+    documents (doc_id, doc_id + stride) — the verification primitive the
+    LSH candidates feed at scale (a co-partitioned equi-join, no
+    cross product)."""
+    words = docs.select(
+        F.col("doc_id"),
+        F.array_distinct(
+            X.ws_tokens(D.normalized_text(F.col(text_col)))
+        ).alias("wordset"),
+    )
+    a = words.alias("a")
+    b = words.alias("b")
+    return (
+        a.join(b, F.col("a.doc_id") + stride == F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.round(
+                F.size(F.array_intersect("a.wordset", "b.wordset")).cast("double")
+                / F.size(F.array_union("a.wordset", "b.wordset")),
+                6,
+            ).alias("jaccard"),
+        )
+    )
+
+
 def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.ngram_jaccard_pairs(load(spark, sf_dir, "documents"))
+    return ngram_jaccard_pairs(load(spark, sf_dir, "documents"))
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5611,6 +5576,37 @@ def q_fasttext_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def nfc_normalize_pudf():
+    """Unicode NFC normalization as an Arrow-batched scalar pandas UDF
+    — the canonical text-fixing pass every training pipeline runs
+    before tokenization (combining sequences → precomposed forms, so
+    'e'+U+0301 and 'é' dedup/tokenize identically).
+
+    Spark SQL has no built-in normalizer, so this is one of the
+    legitimate Python-kernel cases (the image-decode precedent): the
+    kernel is a C-implemented table lookup (CPython ``unicodedata``),
+    Arrow moves the batches, and the column it runs over should be
+    pruned to (id, text) first.  ASCII fast path: ``str.isascii`` is a
+    C scan, and ASCII is NFC by construction, so pure-ASCII batches
+    skip the normalizer entirely.
+    """
+    import unicodedata
+
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    def _nfc(texts):
+        def one(v):
+            if v is None or v.isascii():
+                return v
+            return unicodedata.normalize("NFC", v)
+
+        return texts.map(one)
+
+    _nfc.__annotations__ = {"texts": pd.Series, "return": pd.Series}
+    return pandas_udf("string")(_nfc)
+
+
 def q_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unicode NFC text fixing (the ftfy/cleanup pass before
     tokenization): combining sequences fold to precomposed forms so
@@ -5637,7 +5633,7 @@ def q_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(" caf\u00e9 composed"))
     )
     raw = F.concat(F.col("text"), decor)
-    nfc = X.nfc_normalize_pudf()(raw)
+    nfc = nfc_normalize_pudf()(raw)
     t = docs.select("doc_id", raw.alias("raw"), nfc.alias("nfc"))
     return t.select(
         "doc_id",
@@ -5703,6 +5699,31 @@ def q_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "word_count",
         "n_spans",
         F.to_json("spans").alias("spans_json"),
+        "success",
+    )
+
+
+def to_server_response(articles: DataFrame) -> DataFrame:
+    """readability-js-server wire-model view (reference server.py:399-411
+    ExtractionResponse): pure column mapping over the extraction output —
+    run ``extract_articles(..., emit_html=True, emit_markdown=True)``
+    upstream so ``content``/``markdown`` are populated.
+
+    Field mapping mirrors the reference exactly: byline=author,
+    dir='ltr' (hardcoded there too), length=len(content),
+    siteName=None (never populated there either).
+    """
+    return articles.select(
+        "url",
+        "title",
+        F.col("author").alias("byline"),
+        F.lit("ltr").alias("dir"),
+        F.col("content_html").alias("content"),
+        F.length("content_html").alias("length"),
+        "excerpt",
+        F.lit(None).cast("string").alias("siteName"),
+        "markdown",
+        "word_count",
         "success",
     )
 
@@ -5905,13 +5926,13 @@ WITH t AS (
                          AS DOUBLE) / len(w), 6) END AS mean_word_length,
     CASE WHEN len(w) = 0 THEN 0.0
          ELSE round(CAST(len(regexp_extract_all(text,
-                '{X.GOPHER_SYMBOL_RE}')) AS DOUBLE) / len(w), 6)
+                '{GOPHER_SYMBOL_RE}')) AS DOUBLE) / len(w), 6)
          END AS symbol_ratio,
     round(CAST(len(list_filter(ls, x ->
-        regexp_matches(trim(x), '{X.GOPHER_BULLET_RE}'))) AS DOUBLE)
+        regexp_matches(trim(x), '{GOPHER_BULLET_RE}'))) AS DOUBLE)
       / len(ls), 6) AS bullet_frac,
     round(CAST(len(list_filter(ls, x ->
-        regexp_matches(trim(x), '{X.GOPHER_ELLIPSIS_RE}'))) AS DOUBLE)
+        regexp_matches(trim(x), '{GOPHER_ELLIPSIS_RE}'))) AS DOUBLE)
       / len(ls), 6) AS ellipsis_frac,
     CASE WHEN len(w) = 0 THEN 0.0
          ELSE round(CAST(len(list_filter(w, x ->
@@ -5923,24 +5944,24 @@ WITH t AS (
 )
 SELECT doc_id, n_words, mean_word_length, symbol_ratio, bullet_frac,
   ellipsis_frac, alpha_frac, n_stopwords,
-  (n_words >= {X.GOPHER_MIN_WORDS}
-   AND n_words <= {X.GOPHER_MAX_WORDS}) AS wc_ok,
-  (mean_word_length >= {X.GOPHER_MIN_MWL}
-   AND mean_word_length <= {X.GOPHER_MAX_MWL}) AS mwl_ok,
-  (symbol_ratio <= {X.GOPHER_MAX_SYMBOL_RATIO}) AS symbol_ok,
-  (bullet_frac <= {X.GOPHER_MAX_BULLET_FRAC}) AS bullet_ok,
-  (ellipsis_frac <= {X.GOPHER_MAX_ELLIPSIS_FRAC}) AS ellipsis_ok,
-  (alpha_frac >= {X.GOPHER_MIN_ALPHA_FRAC}) AS alpha_ok,
-  (n_stopwords >= {X.GOPHER_MIN_STOPWORDS}) AS stop_ok,
-  (n_words >= {X.GOPHER_MIN_WORDS}
-   AND n_words <= {X.GOPHER_MAX_WORDS}
-   AND mean_word_length >= {X.GOPHER_MIN_MWL}
-   AND mean_word_length <= {X.GOPHER_MAX_MWL}
-   AND symbol_ratio <= {X.GOPHER_MAX_SYMBOL_RATIO}
-   AND bullet_frac <= {X.GOPHER_MAX_BULLET_FRAC}
-   AND ellipsis_frac <= {X.GOPHER_MAX_ELLIPSIS_FRAC}
-   AND alpha_frac >= {X.GOPHER_MIN_ALPHA_FRAC}
-   AND n_stopwords >= {X.GOPHER_MIN_STOPWORDS}) AS keep
+  (n_words >= {GOPHER_MIN_WORDS}
+   AND n_words <= {GOPHER_MAX_WORDS}) AS wc_ok,
+  (mean_word_length >= {GOPHER_MIN_MWL}
+   AND mean_word_length <= {GOPHER_MAX_MWL}) AS mwl_ok,
+  (symbol_ratio <= {GOPHER_MAX_SYMBOL_RATIO}) AS symbol_ok,
+  (bullet_frac <= {GOPHER_MAX_BULLET_FRAC}) AS bullet_ok,
+  (ellipsis_frac <= {GOPHER_MAX_ELLIPSIS_FRAC}) AS ellipsis_ok,
+  (alpha_frac >= {GOPHER_MIN_ALPHA_FRAC}) AS alpha_ok,
+  (n_stopwords >= {GOPHER_MIN_STOPWORDS}) AS stop_ok,
+  (n_words >= {GOPHER_MIN_WORDS}
+   AND n_words <= {GOPHER_MAX_WORDS}
+   AND mean_word_length >= {GOPHER_MIN_MWL}
+   AND mean_word_length <= {GOPHER_MAX_MWL}
+   AND symbol_ratio <= {GOPHER_MAX_SYMBOL_RATIO}
+   AND bullet_frac <= {GOPHER_MAX_BULLET_FRAC}
+   AND ellipsis_frac <= {GOPHER_MAX_ELLIPSIS_FRAC}
+   AND alpha_frac >= {GOPHER_MIN_ALPHA_FRAC}
+   AND n_stopwords >= {GOPHER_MIN_STOPWORDS}) AS keep
 FROM m
 """
 
@@ -6674,159 +6695,6 @@ FROM replay WHERE rn >= 1
 """,
     "transient_prefilter": _TRANSIENT_PREFILTER_SQL,
     "extract_excerpt": _EXTRACT_EXCERPT_SQL,
-    "manifest_fold": """
-SELECT event_type, COUNT(*) AS n_events,
-  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-FROM events GROUP BY event_type
-""",
-    "latest_event_per_user": """
-SELECT user_id, event_id AS last_event_id, event_type AS last_event_type
-FROM (
-  SELECT user_id, event_id, event_type,
-    row_number() OVER (PARTITION BY user_id
-                       ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events
-) WHERE rn = 1
-""",
-    # Native ASOF JOIN — an independent implementation of the
-    # union+window engine spelling's semantics (>= tie rule included).
-    "range_join": """
-WITH campaigns AS (
-  SELECT i AS campaign_id,
-    TIMESTAMP '2024-01-01 00:00:00' + to_hours(12 * i) AS start_ts,
-    TIMESTAMP '2024-01-01 00:00:00' + to_hours(12 * i + 2 + i % 10)
-      AS end_ts
-  FROM range(60) t(i)
-)
-SELECT e.event_id, c.campaign_id
-FROM events e JOIN campaigns c
-  ON e.ts >= c.start_ts AND e.ts < c.end_ts
-""",
-    "asof_join": """
-SELECT p.event_id AS purchase_id, p.user_id, p.ts AS purchase_ts,
-  c.event_id AS click_id, c.ts AS click_ts, c.value AS click_value
-FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-  ON p.user_id = c.user_id AND p.ts >= c.ts
-""",
-    "sessionize": f"""
-WITH o AS (
-  SELECT user_id, ts, event_id,
-    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w
-              > {SESSION_GAP_US}
-         THEN 1 ELSE 0 END AS nf
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), s AS (
-  SELECT user_id, ts,
-    CAST(SUM(nf) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS UNBOUNDED PRECEDING) AS BIGINT)
-      AS session_seq
-  FROM o
-)
-SELECT user_id, session_seq, COUNT(*) AS n_events,
-  MIN(ts) AS session_start, MAX(ts) AS session_end
-FROM s GROUP BY user_id, session_seq
-""",
-    "top_orders_per_priority": """
-SELECT o_orderpriority, o_orderkey, o_totalprice, rn FROM (
-  SELECT o_orderpriority, o_orderkey, o_totalprice,
-    row_number() OVER (PARTITION BY o_orderpriority
-                       ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-  FROM orders
-) WHERE rn <= 5
-""",
-    "region_customer_rollup": """
-SELECT n_name, COUNT(*) AS n_customers,
-  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_acctbal
-FROM customer
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-GROUP BY n_name
-""",
-    "prefix_filter_orders": """
-SELECT o_orderstatus, COUNT(*) AS n_orders
-FROM orders
-WHERE o_orderpriority LIKE '1%' AND o_orderpriority NOT LIKE '5%'
-GROUP BY o_orderstatus
-""",
-    "dedup_visited": """
-SELECT user_id, COUNT(DISTINCT event_type) AS n_types
-FROM events GROUP BY user_id
-""",
-    "pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-    AS sum_base_price,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-           * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-       AS DOUBLE) AS sum_disc_price,
-  COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-""",
-    "shipping_priority": """
-SELECT l_orderkey,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-           * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-       AS DOUBLE) AS revenue,
-  strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-  o_orderpriority
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1997-07-01 00:00:00'
-  AND l_shipdate > TIMESTAMP '1997-07-01 00:00:00'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, o_orderdate ASC, l_orderkey ASC
-LIMIT 10
-""",
-    "local_supplier_volume": """
-SELECT n_name,
-  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-           * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-       AS DOUBLE) AS revenue,
-  COUNT(*) AS n_lineitems
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY n_name
-""",
-    "events_cube": """
-SELECT event_type, dow,
-  (GROUPING(event_type) * 2 + GROUPING(dow))::BIGINT AS gid,
-  COUNT(*) AS n_events,
-  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-FROM (SELECT event_type, isodow(ts) AS dow, value FROM events)
-GROUP BY CUBE (event_type, dow)
-""",
-    "event_type_setops": """
-WITH first AS (
-  SELECT DISTINCT user_id, event_type FROM events
-  WHERE month(ts) = 1
-), second AS (
-  SELECT DISTINCT user_id, event_type FROM events
-  WHERE month(ts) = 2
-)
-SELECT 'both_months' AS kind, user_id, event_type
-FROM (SELECT user_id, event_type FROM first
-      INTERSECT SELECT user_id, event_type FROM second)
-UNION ALL
-SELECT 'first_month_only' AS kind, user_id, event_type
-FROM (SELECT user_id, event_type FROM first
-      EXCEPT SELECT user_id, event_type FROM second)
-""",
     "histogram_quantiles": f"""
 WITH b AS (
   SELECT source,
@@ -6849,12 +6717,6 @@ SELECT source,
   MIN(CASE WHEN cum * 100 >= n * 99
       THEN bin * {HIST_BIN_WIDTH} + {HIST_BIN_WIDTH // 2} END) AS p99
 FROM cum GROUP BY source
-""",
-    "events_hourly": """
-SELECT user_id,
-  strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-  COUNT(*) AS n_events
-FROM events GROUP BY 1, 2
 """,
     "windowed_event_rates": """
 SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
@@ -6944,12 +6806,6 @@ SELECT doc_id,
     || regexp_replace(lower(substr(trim(text), 1, 24)), '[^a-z0-9]+', '-', 'g')
     AS slug
 FROM documents
-""",
-    "customers_without_orders": """
-SELECT c_mktsegment, COUNT(*) AS n_customers
-FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-GROUP BY c_mktsegment
 """,
     "token_counts": f"""
 SELECT doc_id,
@@ -7315,7 +7171,7 @@ WITH t AS (
 )
 SELECT token, COUNT(*) AS n_occurrences FROM e
 GROUP BY token
-HAVING COUNT(*) * {K.HH_K + 1} > (SELECT COUNT(*) FROM e)
+HAVING COUNT(*) * {HH_K + 1} > (SELECT COUNT(*) FROM e)
 """,
     # Integer-quantized idf (round(ln(N/df)*scale)) makes dots/norms
     # exact int sums; ln here and driver-side math.log agree (glibc —
@@ -7427,9 +7283,9 @@ WITH t AS (
   FROM documents
 ), win AS (
   SELECT doc_id, i AS s,
-    md5(array_to_string(w[(i+1):(i+{D.EXSUB_W})], ' ')) AS win_key
-  FROM t, UNNEST(CASE WHEN len(w) >= {D.EXSUB_W}
-                      THEN generate_series(0, len(w) - {D.EXSUB_W})
+    md5(array_to_string(w[(i+1):(i+{EXSUB_W})], ' ')) AS win_key
+  FROM t, UNNEST(CASE WHEN len(w) >= {EXSUB_W}
+                      THEN generate_series(0, len(w) - {EXSUB_W})
                       ELSE [] END) AS u(i)
 ), marked AS (
   SELECT doc_id, s,
@@ -7447,7 +7303,7 @@ WITH t AS (
   WHERE NOT EXISTS (
     SELECT 1 FROM dup
     WHERE dup.doc_id = tok.doc_id
-      AND tok.p >= dup.s AND tok.p < dup.s + {D.EXSUB_W})
+      AND tok.p >= dup.s AND tok.p < dup.s + {EXSUB_W})
 ), agg AS (
   SELECT doc_id, COUNT(*) AS n_kept,
     string_agg(tk, ' ' ORDER BY p) AS kept_text
@@ -8961,18 +8817,6 @@ QUERY_FNS: dict[str, Query] = {
     "pipeline_chunks_incremental": q_pipeline_chunks_incremental,
     "band_index_compact": q_band_index_compact,
     "ivf_append_wave": q_ivf_append_wave,
-    "manifest_fold": q_manifest_fold,
-    "latest_event_per_user": q_latest_event_per_user,
-    "asof_join": q_asof_join,
-    "range_join": q_range_join,
-    "sessionize": q_sessionize,
-    "top_orders_per_priority": q_top_orders_per_priority,
-    "region_customer_rollup": q_region_customer_rollup,
-    "prefix_filter_orders": q_prefix_filter_orders,
-    "dedup_visited": q_dedup_visited,
-    "customers_without_orders": q_customers_without_orders,
-    "pricing_summary": q_pricing_summary,
-    "events_hourly": q_events_hourly,
     "windowed_event_rates": q_windowed_event_rates,
     "url_normalize": q_url_normalize,
     "url_normalize_rich": q_url_normalize_rich,
@@ -8989,10 +8833,6 @@ QUERY_FNS: dict[str, Query] = {
     "zorder_pruned_scan": q_zorder_pruned_scan,
     "compaction_plan": q_compaction_plan,
     "curation_funnel": q_curation_funnel,
-    "shipping_priority": q_shipping_priority,
-    "local_supplier_volume": q_local_supplier_volume,
-    "events_cube": q_events_cube,
-    "event_type_setops": q_event_type_setops,
     "histogram_quantiles": q_histogram_quantiles,
     "langid": q_langid,
     "repetition_scores": q_repetition_scores,

@@ -225,7 +225,18 @@ def clear_buckets(spark: SparkSession, path: str, buckets) -> None:
     that Amdahl-caps job scaling.  The job instead wipes uncommitted
     bucket dirs once up front — a no-op on the happy path, non-empty
     only after a crash — and appends, which commits task files in
-    place with no staging move."""
+    place with no staging move.
+
+    Buckets the latest bucket snapshot lists (a ``resume=False`` run)
+    are uncommitted first by one snapshot without them, so a run
+    killed mid-wipe resumes by redoing them, not by skipping them."""
+    lpath = lineage_path(path)
+    seq, snap = latest_snapshot(spark, lpath)
+    if snap is not None:
+        cleared = {int(b) for b in buckets}
+        kept = [e for e in snap["buckets"] if e["bucket"] not in cleared]
+        if len(kept) < len(snap["buckets"]):
+            commit_snapshot(spark, lpath, seq + 1, {**snap, "buckets": kept})
     jpath, fs = hadoop_fs(spark, path)
     if fs.exists(jpath):
         for b in buckets:

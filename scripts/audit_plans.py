@@ -47,16 +47,6 @@ CHECKS = {
         "plans fewer partitions than cores — the compute-parallelism "
         "floor, operators/parallelism.py; no-op at production scale)",
     ),
-    "region_customer_rollup": (
-        ["BroadcastHashJoin", "PushedFilters"],
-        ["SortMergeJoin"],
-        "dims broadcast; region filter pushed into the parquet scan",
-    ),
-    "prefix_filter_orders": (
-        ["PushedFilters", "StartsWith"],
-        [],
-        "prefix predicate reaches the scan",
-    ),
     "token_counts": (
         ["ReadSchema: struct<doc_id:bigint,text:string>"],
         [],
@@ -76,20 +66,10 @@ CHECKS = {
         "it); one shuffle into band buckets (no self-join)",
         {"ArrowEvalPython": 1},
     ),
-    "latest_event_per_user": (
-        ["WindowGroupLimit"],
-        [],
-        "rank pushdown: window group limit prunes before full sort",
-    ),
     "ivf_ann_topk": (
         ["BroadcastHashJoin", "TakeOrderedAndProject"],
         ["SortMergeJoin"],
         "codebook + query side broadcast; cell probe then global top-k",
-    ),
-    "pricing_summary": (
-        ["HashAggregate", "PushedFilters"],
-        [],
-        "partial aggregation map-side; shipdate filter pushed to scan",
     ),
     "extract_markdown": (
         ["MapInArrow", "ReadSchema"],
@@ -259,35 +239,6 @@ CHECKS = {
         "pure function of the id, not spark_partition_id over a "
         "sampled rangepartitioning exchange that could re-run with "
         "different boundaries; phase-1 totals are metadata-sized",
-    ),
-    "range_join": (
-        ["BroadcastHashJoin"],
-        ["BroadcastNestedLoopJoin", "CartesianProduct"],
-        "range join via bin decomposition: ranges explode into the "
-        "fixed-width bins they overlap, events equi-join on their "
-        "single bin with the interval predicate as residual — an "
-        "EQUI-join (hash, broadcast here; shuffled-hash at scale), "
-        "never the quadratic BroadcastNestedLoopJoin a raw interval "
-        "predicate compiles to",
-    ),
-    "asof_join": (
-        ["Window", "Union"],
-        [
-            "SortMergeJoin",
-            "BroadcastNestedLoopJoin",
-            "CartesianProduct",
-        ],
-        "as-of join via UNION + running last(ignorenulls): ONE "
-        "shuffle on user_id, zero joins — a range theta-join would "
-        "expand per-user cross products; this plan's state is one "
-        "carried row regardless of key cardinality",
-    ),
-    "sessionize": (
-        ["Window", "partial_count"],
-        ["SortMergeJoin", "CartesianProduct"],
-        "gap sessionization: lag + running sum share one window "
-        "spec (one exchange, one sort), session rollup partial-"
-        "aggregates map-side",
     ),
     "split_assign": (
         ["ReadSchema"],
@@ -697,26 +648,6 @@ CHECKS = {
         "shuffle), windows run over the tiny bin table — the "
         "oracle-checkable stand-in for percentile_approx at scale",
     ),
-    "shipping_priority": (
-        ["BroadcastHashJoin", "TakeOrderedAndProject", "PushedFilters"],
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-        "Q3-shaped 3-way join: filtered customer side broadcast, "
-        "date filters pushed to both scans, top-10 is "
-        "TakeOrderedAndProject — no global sort",
-    ),
-    "local_supplier_volume": (
-        ["BroadcastHashJoin", "PushedFilters", "HashAggregate"],
-        ["CartesianProduct", "BroadcastNestedLoopJoin"],
-        "Q5-shaped 6-way join: the whole dim chain broadcasts, date "
-        "filters pushed to the fact scans, same-nation predicate "
-        "rides the supplier join as an equi-key",
-    ),
-    "events_cube": (
-        ["Expand", "HashAggregate"],
-        ["Join", "CartesianProduct"],
-        "CUBE via Expand + partial aggregation (one shuffle for all "
-        "four grouping sets)",
-    ),
     "compaction_plan": (
         ["Window", "Exchange SinglePartition"],
         ["SortMergeJoin", "CartesianProduct"],
@@ -783,8 +714,7 @@ def _exsub_phase1(spark, sf_dir):
     twin."""
     from pyspark.sql import functions as F
 
-    from article_extractor_spark.functions.dedup import doc_windows
-    from article_extractor_spark.queries import load
+    from article_extractor_spark.queries import doc_windows, load
 
     wins = doc_windows(load(spark, sf_dir, "documents"))
     return (

@@ -24,10 +24,7 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+TABLES = ("events", "documents", "embeddings")
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:

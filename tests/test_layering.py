@@ -20,6 +20,10 @@ PKG = "article_extractor_spark"
 ROOT = Path(__file__).resolve().parents[1] / PKG
 REGISTRY = f"{PKG}.queries"
 ENTRY_POINTS = (f"{PKG}.job", f"{PKG}.pipeline", f"{PKG}.streaming.ingest")
+# Lines in the entry points' import closure, as measured when the
+# registry-only definitions moved out of it.  The core may shrink; it
+# may not grow past this.
+CORE_LINE_BUDGET = 7939
 
 
 def _modules() -> dict[str, Path]:
@@ -74,6 +78,10 @@ def import_closure(roots) -> set[str]:
     return seen
 
 
+def _lines(mods: dict[str, Path], names) -> int:
+    return sum(len(mods[m].read_text().splitlines()) for m in names)
+
+
 def test_no_package_module_imports_the_registry():
     mods = _modules()
     assert REGISTRY in mods
@@ -91,14 +99,16 @@ def test_entry_point_closure_excludes_the_registry():
     assert REGISTRY not in closure
 
 
+def test_core_closure_line_budget():
+    closure = import_closure(ENTRY_POINTS)
+    assert _lines(_modules(), closure) <= CORE_LINE_BUDGET
+
+
 if __name__ == "__main__":
     mods = _modules()
     closure = import_closure(ENTRY_POINTS)
-
-    def lines(ms):
-        return sum(len(mods[m].read_text().splitlines()) for m in ms)
-
-    print(f"core closure: {len(closure)} modules, {lines(closure)} lines")
-    print(f"package: {len(mods)} modules, {lines(mods)} lines")
+    n_core = _lines(mods, closure)
+    print(f"core closure: {len(closure)} modules, {n_core} lines")
+    print(f"package: {len(mods)} modules, {_lines(mods, mods)} lines")
     for m in sorted(set(mods) - closure):
-        print(f"  outside: {m} ({lines([m])})")
+        print(f"  outside: {m} ({_lines(mods, [m])})")

@@ -13,10 +13,7 @@ import pytest
 from article_extractor_spark.queries import ORACLE_SQL, QUERY_FNS
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+TABLES = ("events", "documents", "embeddings")
 
 
 @pytest.fixture(scope="module")
@@ -83,8 +80,8 @@ def test_extract_spans_full_is_driver_canonicalizable(spark):
     assert {"kind", "text", "offset"} <= set(spans[0].keys())
 
 
-def test_broadcast_join_in_rollup_plan(spark):
-    plan = QUERY_FNS["region_customer_rollup"](
+def test_broadcast_join_in_blocklist_filter_plan(spark):
+    plan = QUERY_FNS["blocklist_filter"](
         spark, SF_DIR
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
@@ -1045,7 +1042,7 @@ def test_gopher_filter_rules_fire_individually(spark):
     stopwords must keep=True."""
     from pyspark.sql import functions as F
 
-    from article_extractor_spark.functions import text as X
+    from article_extractor_spark import queries as X
 
     # 50 words, mean word length 4.0, stopwords present
     good = ("the quick brown foxes were inside it and of today " * 5).strip()
@@ -1082,9 +1079,7 @@ def test_exact_substring_dedup_excises_mid_document(spark):
     LATER document only — mid-document, with the unique text on both
     sides surviving; the first occurrence and sub-window docs are
     untouched; an exact duplicate doc empties entirely."""
-    from article_extractor_spark.functions.dedup import (
-        exact_substring_dedup,
-    )
+    from article_extractor_spark.queries import exact_substring_dedup
 
     shared = "a b c d e f g h"  # exactly EXSUB_W tokens
     df = spark.createDataFrame(
@@ -1114,9 +1109,7 @@ def test_exact_substring_dedup_adversarial_inputs(spark):
     survives intact), empty text, and below-window-width docs."""
     import time
 
-    from article_extractor_spark.functions.dedup import (
-        exact_substring_dedup,
-    )
+    from article_extractor_spark.queries import exact_substring_dedup
 
     big = ("w%d " % 0) * 20_000
     flood = [(10 + i, "f a b c d e f g h i j k") for i in range(6)]
@@ -1154,9 +1147,7 @@ def test_exact_substring_dedup_matches_brute_force(spark):
 
     from collections import defaultdict
 
-    from article_extractor_spark.functions.dedup import (
-        exact_substring_dedup,
-    )
+    from article_extractor_spark.queries import exact_substring_dedup
 
     w = 3
     rng = random.Random(20260818)
@@ -2919,7 +2910,7 @@ def test_mg_candidates_superset_and_partition_independence(spark):
 
     from pyspark.sql import functions as F
 
-    from article_extractor_spark.functions.sketches import mg_candidates
+    from article_extractor_spark.queries import mg_candidates
 
     # adversarial stream: two dominant tokens, a mid tail, unique noise
     rows = (
@@ -3702,7 +3693,7 @@ def test_nfc_kernel_fuzz_three_way(spark):
     import duckdb
     from pyspark.sql import functions as F
 
-    from article_extractor_spark.functions.text import nfc_normalize_pudf
+    from article_extractor_spark.queries import nfc_normalize_pudf
 
     pieces = [
         "é", "ñ", "Å", "ö", "é", "Å",

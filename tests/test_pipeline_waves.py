@@ -435,22 +435,24 @@ def test_every_state_commit_kill_point_reruns_to_the_undisturbed_state(
 def test_every_bucket_commit_kill_point_resumes_to_the_undisturbed_table(
     spark, wave_paths, tmp_path, monkeypatch
 ):
-    """Kill-point sweep over run_extraction_job alone, two waves.  A dry
-    run counts the job's durable actions (clear_buckets, each wave's
-    bucket write and its snapshot commit).  Then, for each k, a fresh
-    output is killed right after action k and the job re-runs with
-    resume=True.  Every point must converge to the undisturbed run:
-    the same table as a multiset, each doc_id once, every bucket
+    """Kill-point sweep over run_extraction_job alone, two waves, in two
+    legs: a fresh output, and a ``resume=False`` run over a committed
+    one.  A dry run of each counts the job's durable actions
+    (clear_buckets and its uncommit snapshot, each wave's bucket write
+    and its snapshot commit).  Then, for each k, a fresh copy of the
+    leg's start is killed right after action k and the job re-runs
+    with resume=True.  Every point must converge to the undisturbed
+    run: the same table as a multiset, each doc_id once, every bucket
     committed, and the latest snapshot's docs_in summing to the
     corpus."""
     from article_extractor_spark.job import run_extraction_job
 
     w1, _ = wave_paths
 
-    def job(out):
+    def job(out, resume=True):
         return run_extraction_job(
             spark, w1, out, n_buckets=N_BUCKETS, waves=2, min_word_count=10,
-            resume=True,
+            resume=resume,
         )
 
     def result(out):
@@ -466,21 +468,37 @@ def test_every_bucket_commit_kill_point_resumes_to_the_undisturbed_table(
             r[0] for r in df.select(F.to_json(F.struct(*df.columns))).collect()
         )
 
+    def copy(start, out):
+        if start is not None:  # the table and its bucket snapshot log
+            shutil.copytree(start, out)
+            shutil.copytree(
+                tableio.lineage_path(start), tableio.lineage_path(out)
+            )
+
     delete = (tableio, "clear_buckets")
-    ref = str(tmp_path / "job-ref")
-    with monkeypatch.context() as m:
-        actions = _durable_actions(m, delete=delete)
-        job(ref)
-    want = result(ref)
-    covered = 0
-    for k in range(1, len(actions) + 1):
-        out = str(tmp_path / f"job-{k}")
+
+    def sweep(start, resume, tag):
+        ref = str(tmp_path / f"{tag}-ref")
+        copy(start, ref)
         with monkeypatch.context() as m:
-            _durable_actions(m, kill_at=k, delete=delete)
-            with pytest.raises(_Killed):
-                job(out)
-        job(out)
-        assert result(out) == want, (k, actions[k - 1])
-        covered += 1
-    assert covered == len(actions)
-    print(f"kill points covered: {covered} in a 2-wave extraction job")
+            actions = _durable_actions(m, delete=delete)
+            job(ref, resume)
+        want = result(ref)
+        for k in range(1, len(actions) + 1):
+            out = str(tmp_path / f"{tag}-{k}")
+            copy(start, out)
+            with monkeypatch.context() as m:
+                _durable_actions(m, kill_at=k, delete=delete)
+                with pytest.raises(_Killed):
+                    job(out, resume)
+            job(out)
+            assert result(out) == want, (tag, k, actions[k - 1])
+        return ref, want, len(actions)
+
+    fresh_ref, want, n_fresh = sweep(None, True, "fresh")
+    _, rerun_want, n_rerun = sweep(fresh_ref, False, "rerun")
+    assert rerun_want == want
+    print(
+        f"kill points covered: {n_fresh} in a 2-wave extraction job, "
+        f"{n_rerun} in a resume=False re-run of it"
+    )
